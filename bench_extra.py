@@ -8,7 +8,7 @@ stage of real work (guide §1.1/§1.5).
 
 Usage:
   python bench_extra.py                 # time suite queries + job breakdown
-  python bench_extra.py --explain       # also dump plans to plans/r06/
+  python bench_extra.py --explain DIR   # also dump plans + the report to DIR
   python bench_extra.py --only minhash_lsh_dedup --trials 3
 """
 
@@ -56,7 +56,9 @@ def _group_stats(jobs: list[dict], group: str) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--explain", action="store_true")
+    ap.add_argument("--explain", metavar="DIR", default=None,
+                    help="write each query's formatted plan and the "
+                         "_bench_extra_last.json report into DIR")
     ap.add_argument("--only", default=None)
     ap.add_argument("--trials", type=int, default=2)
     ap.add_argument("--skip-build", action="store_true",
@@ -196,9 +198,8 @@ def main() -> None:
 
     names = args.only.split(",") if args.only else list(suite)
     out: dict[str, dict] = {}
-    plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "plans", "r06")
-    os.makedirs(plans_dir, exist_ok=True)
+    if args.explain:
+        os.makedirs(args.explain, exist_ok=True)
 
     for name in names:
         fn, action = suite[name]
@@ -228,7 +229,7 @@ def main() -> None:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 fn().explain("formatted")
-            with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
+            with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
                 f.write(buf.getvalue())
 
     if build_sec is not None:
@@ -242,10 +243,11 @@ def main() -> None:
               f"n_jobs={gs.get('n_jobs')} sum={gs.get('sum_job_sec')}",
               flush=True)
 
-    report = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                          "plans", "r06", "_bench_extra_last.json")
-    with open(report, "w") as f:
-        json.dump({"sf": sf_dir, "cpus": cpus, "results": out}, f, indent=1)
+    if args.explain:
+        report = os.path.join(args.explain, "_bench_extra_last.json")
+        with open(report, "w") as f:
+            json.dump({"sf": sf_dir, "cpus": cpus, "results": out}, f,
+                      indent=1)
     print(json.dumps({k: v["walls"] for k, v in out.items()}))
 
 

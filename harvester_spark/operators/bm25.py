@@ -231,77 +231,40 @@ def _decode_block_rows(pdf: pd.DataFrame, idf_by_term: dict[str, float],
 
 
 class IndexHandle:
-    """An opened index: metadata + (optionally cached) dictionary and
-    postings DataFrames. Re-using a handle across queries removes the
-    per-query parquet re-scan — the engine's equivalent of Solr keeping its
-    searcher open (the reference re-queries one long-lived Solr,
-    harvester/fetcher/solr_fetcher.py:14)."""
+    """An opened index: metadata, the dictionary segment every term lookup
+    reads, and the (optionally cached) postings DataFrame. Re-using a
+    handle across queries removes the per-query parquet re-scan — the
+    engine's equivalent of Solr keeping its searcher open (the reference
+    re-queries one long-lived Solr, harvester/fetcher/solr_fetcher.py:14)."""
 
     def __init__(self, spark: SparkSession, index_dir: str | Path,
-                 cache: bool = True, collect_dictionary_max: int = 2_000_000):
+                 cache: bool = True):
+        from harvester_spark.operators.dictseg import DictSegment, is_committed
+
         self.spark = spark
         self.index_dir = Path(index_dir)
         self.meta = tables.read_meta(self.index_dir / "postings")
-        self.dictionary = tables.read_table(spark,
-                                            self.index_dir / "dictionary")
-        ub_dir = self.index_dir / "term_ub"
-        if tables.is_committed(ub_dir):
-            self.dictionary = self.dictionary.join(
-                tables.read_table(spark, ub_dir), "term", "left")
+        seg_dir = self.index_dir / "dictseg"
+        if not is_committed(seg_dir):
+            raise FileNotFoundError(
+                f"index {self.index_dir} has no committed 'dictseg' stage; "
+                "re-run build_index on it to resume the build")
+        # term lookup: µs per term at any vocabulary size, driver memory =
+        # block leaders only, no Spark job
+        self.dict_segment = DictSegment(seg_dir)
         self.postings = tables.read_table(spark, self.index_dir / "postings")
         if cache:
-            # at 100 TB: cache the dictionary (small) always; postings
-            # caching is a working-set decision left to the deployment
-            self.dictionary = self.dictionary.cache()
+            # postings caching is a working-set decision left to the
+            # deployment at 100 TB
             self.postings = self.postings.cache()
-        # term lookup, best-available tier:
-        # 1. front-coded dictionary segment (index built with the dictseg
-        #    stage): µs lookups at ANY vocabulary size, driver memory =
-        #    block leaders only — removes the old 2M hash-map ceiling
-        # 2. collected hash map when the vocabulary fits the cap
-        # 3. per-query cached-scan job (one tiny Spark job)
-        self.term_info: dict[str, dict] | None = None
-        self.dict_segment = None
-        from harvester_spark.operators import dictseg as _dictseg
-        seg_dir = self.index_dir / "dictseg"
-        if _dictseg.is_committed(seg_dir):
-            self.dict_segment = _dictseg.DictSegment(seg_dir)
-            return
-        if collect_dictionary_max <= 0:
-            return  # ad-hoc path: no vocabulary scan job at all
-        n_terms = self.dictionary.count()
-        if n_terms <= collect_dictionary_max:
-            cols = self.dictionary.columns
-            self.term_info = {
-                r["term"]: {"df": r["df"], "idf": float(r["idf"]),
-                            "max_tfnorm": (float(r["max_tfnorm"])
-                                           if "max_tfnorm" in cols
-                                           and r["max_tfnorm"] is not None
-                                           else None)}
-                for r in self.dictionary.collect()}
 
     def lookup(self, terms: list[str]) -> dict[str, dict]:
         """term → {df, idf, max_tfnorm} for the present query terms."""
-        if self.dict_segment is not None:
-            return self.dict_segment.lookup(terms)
-        if self.term_info is not None:
-            return {t: self.term_info[t] for t in terms
-                    if t in self.term_info}
-        cols = self.dictionary.columns
-        rows = (self.dictionary.filter(F.col("term").isin(terms)).collect())
-        return {r["term"]: {"df": r["df"], "idf": float(r["idf"]),
-                            "max_tfnorm": (float(r["max_tfnorm"])
-                                           if "max_tfnorm" in cols
-                                           and r["max_tfnorm"] is not None
-                                           else None)}
-                for r in rows}
+        return self.dict_segment.lookup(terms)
 
     def unpersist(self) -> None:
-        self.dictionary.unpersist()
         self.postings.unpersist()
-        if self.dict_segment is not None:
-            self.dict_segment.close()
-            self.dict_segment = None
+        self.dict_segment.close()  # parts reopen lazily on the next lookup
 
     # -- interactive serving path ------------------------------------------
     # The reference serves queries from a long-lived Solr at ~ms latency;
@@ -368,8 +331,8 @@ class IndexHandle:
         tie rule). Intended for interactive serving of moderate-df terms; a
         pathological term's postings (~GBs at 10^12 docs) must NOT be
         collected, so when the yet-uncached postings for this query exceed
-        ``local_postings_cap`` entries (dictionary df is already
-        driver-resident — the check is free) the query is AUTO-ROUTED to
+        ``local_postings_cap`` entries (df comes from the segment
+        lookup — the check is free) the query is AUTO-ROUTED to
         the distributed block-max path instead of collecting."""
         k1, b, avgdl = self.meta["k1"], self.meta["b"], self.meta["avgdl"]
         terms = tokenize_query(query)
@@ -410,16 +373,6 @@ def open_index(spark: SparkSession, index_dir: str | Path,
 
 
 _EPS = 1.0 - 1e-12  # slack for ub-vs-decoded float comparisons
-
-
-def _per_term_max_ub(blocks: DataFrame, info: dict, present: list[str],
-                     idf_by_term: dict[str, float]) -> dict[str, float]:
-    """Exact per-term global UB: from the build-time term_ub stage when
-    available, else one aggregation job (pre-term_ub indexes)."""
-    if all(info[t].get("max_tfnorm") is not None for t in present):
-        return {t: idf_by_term[t] * info[t]["max_tfnorm"] for t in present}
-    return {r["term"]: r["mx"] for r in
-            blocks.groupBy("term").agg(F.max("ub").alias("mx")).collect()}
 
 
 def _localized_other_ub(blocks: DataFrame, per_term: dict[str, float],
@@ -757,11 +710,9 @@ def query_topk_index(spark: SparkSession,
     aggregation — nothing decodes twice. ``metrics_out`` (optional dict)
     receives block-skip accounting (costs count jobs — tests/bench only).
     """
-    # ad-hoc (path) calls: no caching, no driver-side dictionary collect —
-    # a filtered lookup job beats materializing the vocabulary once
+    # ad-hoc (path) calls: no postings caching
     handle = (index_dir if isinstance(index_dir, IndexHandle)
-              else IndexHandle(spark, index_dir, cache=False,
-                               collect_dictionary_max=0))
+              else IndexHandle(spark, index_dir, cache=False))
     terms = tokenize_query(query)
     meta = handle.meta
     k1, b, avgdl = meta["k1"], meta["b"], meta["avgdl"]
@@ -856,7 +807,9 @@ def query_topk_index(spark: SparkSession,
             "left_semi")
         blocks = rare_blocks.unionByName(others)
     if prune and mode == "or" and total_postings > prune_min_postings:
-        per_term = _per_term_max_ub(blocks, info, present, idf_by_term)
+        # exact per-term global UB from the segment's term_ub fold
+        per_term = {t: idf_by_term[t] * info[t]["max_tfnorm"]
+                    for t in present}
         # θ: k-th best partial score from the top-UB blocks (driver decode
         # of a handful of rows)
         # r4 sweep (BENCH.md): seed_n = max(8, 4k/bs) left θ short of the

@@ -7,10 +7,18 @@ generalize here to corpus-scale document dedup, all DataFrame-first:
 
 - exact:         sha256 group-by (one shuffle, partial-agg friendly)
 - MinHash + LSH: shingle → 64 permuted min-hashes → banded bucket join.
-  Signatures are computed entirely JVM-side: xxhash64 on shingles, then
-  the 64 permutations as 64 agg expressions in ONE groupBy — no Python,
-  no 64× row blow-up.
-- SimHash:       64-bit sign-sum fingerprint, again as agg expressions.
+  Signatures come from a map-only numpy kernel (``mapInArrow`` over
+  dedup_kernels.py: pyarrow tokenize, bit-exact numpy XXH64 of the
+  shingles, the 64 permutations as vectorized reductions) — one row per
+  doc, no explode and no groupBy. The JVM aggregation form
+  (``use_kernel=False``) stays as the reference the kernel is
+  equality-tested against.
+- SimHash:       64-bit sign-sum fingerprint from the same kernel family;
+  the md5-token oracle form (``hash_expr=md5_hash64_expr``) stays JVM-side
+  so DuckDB can replicate it.
+- Small corpora: both LSH pair ops collect the corpus once and run the
+  same kernels on the driver (``_collect_small_docs`` budgets); larger
+  corpora run the distributed DAG.
 - n-gram Jaccard: exact set overlap via array_intersect (verification of
   LSH candidates, or small probe sets).
 
@@ -411,6 +419,13 @@ def _watch_bucket_drops(sized: DataFrame, max_bucket: int,
     return observed
 
 
+def _check_max_bucket(max_bucket: int) -> None:
+    """A bucket cap below 1 drops every bucket; the driver and distributed
+    paths would then disagree on what they report as dropped."""
+    if max_bucket < 1:
+        raise ValueError(f"max_bucket={max_bucket} must be >= 1")
+
+
 def minhash_lsh_pairs(docs: DataFrame, *, content_col: str = "content",
                       id_col: str = "doc_id", num_hashes: int = 64,
                       bands: int = 16, shingle_n: int = 3, seed: int = 42,
@@ -450,6 +465,7 @@ def minhash_lsh_pairs(docs: DataFrame, *, content_col: str = "content",
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
+    _check_max_bucket(max_bucket)
     rows_per_band = num_hashes // bands
     # small-corpus driver fast path: identical pairs/metrics from the same
     # kernels with two tiny jobs (see _collect_small_docs; equality-tested
@@ -759,6 +775,7 @@ def simhash_near_pairs(docs: DataFrame, *, content_col: str = "content",
     """
     import itertools
 
+    _check_max_bucket(max_bucket)
     k = max_hamming
     # small-corpus driver fast path (default engine only — the md5 oracle
     # form stays JVM so DuckDB parity is byte-for-byte the same exprs):

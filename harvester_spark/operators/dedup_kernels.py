@@ -19,7 +19,9 @@ bucket, candidate pair and verified output stays the same.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
+import threading
 from typing import Iterator
 
 import numpy as np
@@ -38,27 +40,39 @@ DRIVER_KERNEL_THREADS = int(_os.environ.get(
     str(min(8, _os.cpu_count() or 1))))
 
 
-def _driver_pa_pool():
-    """Context manager raising pyarrow's thread pool for the driver-side
-    pair kernels. session.py pins OMP_NUM_THREADS=1 before pyarrow
-    initializes (right for executor workers, which share cores with 32
-    sibling tasks), but the driver fast path runs while NO Spark job is
-    active — its tokenize/join/cast kernels may use the idle cores. The
-    pool is restored on exit so nothing else inherits it."""
-    import contextlib
+# concurrent driver-kernel calls share ONE raise of the process-global
+# pyarrow pool: the first caller in saves the baseline, the last one out
+# restores it (unguarded save/restore pairs could interleave and leave the
+# pool raised for good)
+_PA_POOL_LOCK = threading.Lock()
+_pa_pool_users = 0
+_pa_pool_baseline = 0
 
+
+@contextlib.contextmanager
+def _driver_pa_pool():
+    """Raise pyarrow's thread pool for the driver-side pair kernels.
+    session.py pins OMP_NUM_THREADS=1 before pyarrow initializes (right
+    for executor workers, which share cores with sibling tasks), but the
+    driver fast path runs while NO Spark job is active — its
+    tokenize/join/cast kernels may use the idle cores. The pool is
+    restored when the last concurrent user exits, so nothing else inherits
+    it."""
     import pyarrow as pa
 
-    @contextlib.contextmanager
-    def cm():
-        prev = pa.cpu_count()
-        try:
-            pa.set_cpu_count(max(prev, DRIVER_KERNEL_THREADS))
-            yield
-        finally:
-            pa.set_cpu_count(prev)
-
-    return cm()
+    global _pa_pool_users, _pa_pool_baseline
+    with _PA_POOL_LOCK:
+        if _pa_pool_users == 0:
+            _pa_pool_baseline = pa.cpu_count()
+            pa.set_cpu_count(max(_pa_pool_baseline, DRIVER_KERNEL_THREADS))
+        _pa_pool_users += 1
+    try:
+        yield
+    finally:
+        with _PA_POOL_LOCK:
+            _pa_pool_users -= 1
+            if _pa_pool_users == 0:
+                pa.set_cpu_count(_pa_pool_baseline)
 
 
 def _tokens_flat(content_arr):

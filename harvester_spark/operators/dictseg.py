@@ -1,42 +1,45 @@
-"""Prefix-compressed dictionary segment: interactive term lookup without a
-driver-resident hash map.
+"""Prefix-compressed dictionary segment: the one term-lookup tier of an
+opened index.
 
 The reference serves term stats from Solr's in-memory term dictionary (its
-queries hit a long-lived Solr searcher,
-/root/reference/harvester/fetcher/solr_fetcher.py:12-14); our previous
-analogue collected the whole dictionary into a Python dict, capped
-at 2M terms (``IndexHandle.collect_dictionary_max``) — at 10^9 terms that
-map is the next driver-memory ceiling (r3 verdict #7). This module writes
+queries hit a long-lived Solr searcher). Every index directory here carries
 the dictionary as a SORTED, front-coded segment (the Lucene terms-dict
-shape, public knowledge) and serves lookups by binary search over block
-leaders + a one-block linear decode.
+shape, public knowledge), and ``IndexHandle.lookup`` serves df, idf and the
+term's score upper bound from it by binary search over block leaders + a
+one-block linear decode. No hash map of the vocabulary is ever collected,
+so driver memory does not grow with the vocabulary.
 
 Layout (``manifest.json`` + one or more part files)::
 
     part-N.seg = [blocks][footer index][footer_offset u64][magic]
     block (default 128 terms): per term ``varint(shared_prefix_len),
       varint(suffix_len), suffix_utf8, varint(df), f64 idf, f64 max_tfnorm``
-      (NaN when the build had no term_ub stage)
+      (NaN when the writer was given no max_tfnorm)
     footer: per block ``varint(leader_len), leader_utf8, u64 offset,
       varint(n_entries)``
 
-Two writers, one reader:
+One writer entry point, one size switch: :func:`write_index_segment` reads
+the committed ``dictionary`` and ``term_ub`` stages of an index directory,
+counts terms from the parquet footers, and then
 
-- :func:`write_dict_segment` — driver-streamed single part. Right below
-  ~10^5 terms (``small_threshold``), where a Spark job is all overhead.
-- :func:`write_dict_segment_spark` — DISTRIBUTED: range-repartition on
-  term, each task front-codes its range into its own part file, driver
-  writes only the tiny manifest. This is the scale path: the driver-
-  streamed writer runs ~300k terms/s, a 53-MINUTE serial stage at 10^9
-  terms (and an Amdahl drag on build scaling at any size); the
-  distributed writer is one narrow shuffle + embarrassingly-parallel
-  encode. Tasks write to the index directory, which at cluster scale must
-  be a shared filesystem (same assumption every stage's parquet commit
-  already makes).
+- at ≤ :data:`DRIVER_MAX_TERMS` terms encodes a single part on the driver
+  from pyarrow reads, with zero Spark jobs;
+- above it runs :func:`write_dict_segment_spark`, which range-partitions on
+  term so each task front-codes its range into its own part file while the
+  driver writes only the manifest. The driver encoder runs ~300k terms/s,
+  a 53-minute serial stage at 10^9 terms; the distributed writer is one
+  range shuffle + parallel encode. Tasks write to the index directory,
+  which at cluster scale must be a shared filesystem (the same assumption
+  every stage's parquet commit already makes).
+
+:func:`write_dict_segment` is the encoder both paths share, usable on its
+own for rows already sorted by term.
 
 Lookup: bisect over part first-terms, bisect over that part's block
 leaders, decode ≤ block_size entries — microseconds, no Spark job. Driver
-memory is leaders only (1/128th of terms; 10^7 → ~78k leaders).
+memory is leaders only (1/128th of terms; 10^7 → ~78k leaders). The reader
+mmaps local files, so the driver must see the index directory as a local
+(or POSIX shared) filesystem.
 
 All term comparisons happen on UTF-8 bytes: Spark's string ordering is
 byte-wise UTF-8 (UTF8String.compareTo), which matches code-point order, so
@@ -49,13 +52,14 @@ import json
 import mmap
 import struct
 from bisect import bisect_right
+from collections import OrderedDict
 from pathlib import Path
 from typing import Iterable, Iterator
 
 MAGIC = b"HSDSEG1\n"
 # the tables module's marker, imported (not re-declared) so stage-resume
 # treats the segment like any other stage output even if the name changes
-from harvester_spark.tables import SUCCESS_MARKER  # noqa: E402
+from harvester_spark.tables import SUCCESS_MARKER, read_table  # noqa: E402
 
 MANIFEST = "manifest.json"
 
@@ -239,89 +243,72 @@ def write_dict_segment(rows: Iterable, out_dir: str | Path, *,
                    block_size)
 
 
-def write_dict_segment_from_parquet(dict_dir: str | Path,
-                                    ub_dir: str | Path | None,
-                                    out_dir: str | Path, *,
-                                    block_size: int = 128,
-                                    small_threshold: int = 262_144
-                                    ) -> dict | None:
-    """ZERO-Spark-job small-dictionary path: read the committed
-    ``dictionary`` and ``term_ub`` stage tables straight from parquet
-    (pyarrow, driver-local), merge on term, encode.
+# Dictionaries up to this many terms are encoded on the driver. Measured
+# crossover: the driver encode runs ~300k terms/s (≈0.8 s at the cap)
+# while the distributed writer's FIXED cost (range sampling, shuffle,
+# python-worker spawn) is 1-2 s at any core count.
+DRIVER_MAX_TERMS = 262_144
 
-    The Spark small path costs 2-3 fixed-overhead jobs (a count + a
-    join + a collect) — measured ~2 s of the build tail at ANY core
-    count, a pure Amdahl drag on scaling (the r5 paired-efficiency runs
-    put the whole term_ub→dictseg chain at 2.8 s serial). At ≤262k terms
-    the same work is ~0.5 s of driver pyarrow+encode. Returns the commit
-    info, or None when not applicable (dirs not locally readable, above
-    threshold, pyarrow missing) — the caller then falls back to
-    :func:`write_dict_segment_spark`. Only valid on a driver that can
-    read the index directory as a local filesystem (true for local mode
-    and POSIX shared-fs clusters; object-store layouts fall back)."""
-    try:
-        import pandas as pd
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow ships with pyspark
-        return None
-    d = Path(dict_dir)
-    dfiles = sorted(d.glob("*.parquet")) if d.exists() else []
-    if not dfiles:
-        return None
-    try:
-        # read/convert guarded BROADLY: any pyarrow/layout surprise
-        # (ArrowInvalid on an unsupported encoding, schema drift, IO
-        # errors) means "not applicable here" — the Spark writer reads
-        # the same tables through the JVM and handles them fine
-        n = sum(pq.ParquetFile(f).metadata.num_rows for f in dfiles)
-        if n > small_threshold:
-            return None
-        dt = pq.read_table(dfiles, columns=["term", "df", "idf"]).to_pandas()
-        u = Path(ub_dir) if ub_dir is not None else None
-        ufiles = sorted(u.glob("*.parquet")) if u is not None and u.exists() \
-            else []
-        if ufiles:
-            ub = pq.read_table(ufiles,
-                               columns=["term", "max_tfnorm"]).to_pandas()
-            dt = dt.merge(ub, on="term", how="left")
-        else:
-            dt["max_tfnorm"] = float("nan")
-    except Exception:
-        return None  # unreadable layout: let the Spark writer handle it
-    # encode OUTSIDE the guard: an encoder error here (mis-sorted input,
-    # commit failure) is a real bug/IO fault that must surface, not be
-    # silently retried through the distributed path
-    dt = dt.sort_values("term", kind="mergesort")  # == UTF-8 byte order
-    rows = ((t, int(df_), float(idf), None if pd.isna(mt) else float(mt))
-            for t, df_, idf, mt in zip(dt["term"], dt["df"], dt["idf"],
-                                       dt["max_tfnorm"]))
-    return write_dict_segment(rows, out_dir, block_size=block_size)
+
+def write_index_segment(spark, index_dir: str | Path, out_dir: str | Path,
+                        *, block_size: int = 128) -> dict:
+    """Write the segment of an index directory from its committed
+    ``dictionary`` and ``term_ub`` stages — the one segment writer every
+    build calls.
+
+    The term count comes from the dictionary's parquet footers (no job);
+    at most :data:`DRIVER_MAX_TERMS` terms go through the driver encode,
+    more through :func:`write_dict_segment_spark`. Returns the commit info
+    plus ``writer`` (``"driver"`` or ``"distributed"``). Raises
+    ``FileNotFoundError`` naming the stage when an input stage is absent."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    index_dir = Path(index_dir)
+    files = {}
+    for stage in ("dictionary", "term_ub"):
+        d = index_dir / stage
+        if not d.is_dir():
+            raise FileNotFoundError(
+                f"cannot write the dictionary segment: stage {stage!r} is "
+                f"missing under {index_dir}")
+        files[stage] = sorted(d.glob("*.parquet"))
+    n_terms = sum(pq.ParquetFile(f).metadata.num_rows
+                  for f in files["dictionary"])
+    if n_terms <= DRIVER_MAX_TERMS:
+        dt = pq.read_table(files["dictionary"],
+                           columns=["term", "df", "idf"]).to_pandas()
+        ub = pq.read_table(files["term_ub"],
+                           columns=["term", "max_tfnorm"]).to_pandas()
+        dt = (dt.merge(ub, on="term", how="left")
+              .sort_values("term", kind="mergesort"))  # == UTF-8 byte order
+        rows = ((t, int(df_), float(idf), None if pd.isna(mt) else float(mt))
+                for t, df_, idf, mt in zip(dt["term"], dt["df"], dt["idf"],
+                                           dt["max_tfnorm"]))
+        info = write_dict_segment(rows, out_dir, block_size=block_size)
+        return {**info, "writer": "driver"}
+    dic = read_table(spark, index_dir / "dictionary")
+    ub = read_table(spark, index_dir / "term_ub").select("term", "max_tfnorm")
+    info = write_dict_segment_spark(
+        dic.join(ub, "term", "left").select("term", "df", "idf",
+                                            "max_tfnorm"),
+        out_dir, block_size=block_size, n_terms=n_terms)
+    return {**info, "writer": "distributed"}
 
 
 def write_dict_segment_spark(df, out_dir: str | Path, *,
                              block_size: int = 128,
                              terms_per_part: int = 65_536,
-                             n_terms: int | None = None,
-                             small_threshold: int = 262_144) -> dict:
+                             n_terms: int | None = None) -> dict:
     """Distributed writer: each task encodes one term range into its own
     part file (shared filesystem, like every other stage commit); the
     driver only validates ranges and writes the manifest.
 
     ``df``: DataFrame with term/df/idf/max_tfnorm columns (max_tfnorm
     optional). One narrow range-shuffle; encode is per-task CPU.
-    ``n_terms``: pass the term count when the caller has it cheaply (e.g.
-    a parquet-metadata count of the one-row-per-term table) to skip a
-    count() job. It sizes parts and PRE-gates the small-dictionary path,
-    but the driver collect below is self-guarding (limit N+1), so an
-    underestimate cannot pull a huge dictionary onto the driver.
-
-    Below ``small_threshold`` terms the writer itself drops to ONE bounded
-    collect + a driver sort/encode. Measured crossover: the driver encode
-    runs ~300k terms/s (≈0.8 s at the threshold) while the distributed
-    path's FIXED cost — range-sampling pass, shuffle, python-worker spawn
-    — is 1–2 s at any core count, so below ~2.5×10^5 terms the driver
-    path wins everywhere. Python str sort is code-point order == Spark's
-    UTF-8 byte order, so the segment binary-searches identically."""
+    ``n_terms``: the term count when the caller has it cheaply (a
+    parquet-footer count of the one-row-per-term table); it only sizes the
+    parts, and a ``count()`` job supplies it otherwise."""
     import pandas as pd
     from pyspark import TaskContext
     from pyspark.sql import functions as F
@@ -331,20 +318,11 @@ def write_dict_segment_spark(df, out_dir: str | Path, *,
     cols = df.columns
     if "max_tfnorm" not in cols:
         df = df.withColumn("max_tfnorm", F.lit(None).cast("double"))
-    n_terms_est = n_terms if n_terms is not None else df.count()
-    if n_terms_est <= small_threshold:
-        # limit N+1: a wrong n_terms estimate can't collect an unbounded
-        # dictionary — one extra row proves the estimate low and we fall
-        # through to the distributed encode instead
-        got = df.limit(small_threshold + 1).collect()
-        if len(got) <= small_threshold:
-            rows = sorted(((r["term"], r["df"], r["idf"], r["max_tfnorm"])
-                           for r in got), key=lambda t: t[0])
-            return write_dict_segment(rows, out, block_size=block_size)
-        n_terms_est = max(n_terms_est, df.count())
+    if n_terms is None:
+        n_terms = df.count()
     tmp = _stage_tmp(out)
     n_parts = max(1, min(1024,
-                         (n_terms_est + terms_per_part - 1)
+                         (n_terms + terms_per_part - 1)
                          // terms_per_part))
     src = (df.select("term", "df", "idf", "max_tfnorm")
            .repartitionByRange(n_parts, "term")
@@ -479,38 +457,36 @@ class _Part:
             m += j                # entry < tb; tb now shares m+j with it
         return None
 
-    def get(self, tb: bytes, cache: "dict | None" = None,
-            cache_key: int | None = None) -> dict | None:
+    def get(self, tb: bytes, cache: OrderedDict, cache_key: int
+            ) -> dict | None:
         bi = bisect_right(self.leaders, tb) - 1
         if bi < 0:
             return None
-        if cache is not None:
-            # decoded-block LRU (shared across parts, owned by the
-            # DictSegment): serving workloads repeat hot terms, and a
-            # cached block turns the per-entry varint loop into one list
-            # scan. Keyed by the caller's STABLE part index (id(self)
-            # would alias across close()/reopen when CPython reuses a
-            # freed object address). OrderedDict move_to_end = true LRU.
-            key = (cache_key, bi)
-            ents = cache.get(key)
-            if ents is not None:
-                cache.move_to_end(key)
-                return _find_entry(ents, tb)
-            # cold probe: the allocation-free scan serves it ~4× faster
-            # than a full decode; a block decodes into the LRU only once
-            # it proves HOT (second touch) so one-shot probes over a huge
-            # vocabulary never pay decode or evict real hot blocks
-            touched = self._touch.get(bi, 0) + 1
-            if touched < 2:
-                self._touch[bi] = touched
-                return self.scan_block(bi, tb)
-            self._touch.pop(bi, None)
-            ents = list(self.block(bi))
-            cache[key] = ents
-            while len(cache) > _BLOCK_CACHE_MAX:
-                cache.popitem(last=False)
+        # decoded-block LRU (shared across parts, owned by the
+        # DictSegment): serving workloads repeat hot terms, and a cached
+        # block turns the per-entry varint loop into one list scan. Keyed
+        # by the caller's STABLE part index (id(self) would alias across
+        # close()/reopen when CPython reuses a freed object address).
+        # OrderedDict move_to_end = true LRU.
+        key = (cache_key, bi)
+        ents = cache.get(key)
+        if ents is not None:
+            cache.move_to_end(key)
             return _find_entry(ents, tb)
-        return _find_entry(self.block(bi), tb)
+        # cold probe: the allocation-free scan serves it ~4× faster than a
+        # full decode; a block decodes into the LRU only once it proves HOT
+        # (second touch) so one-shot probes over a huge vocabulary never
+        # pay decode or evict real hot blocks
+        touched = self._touch.get(bi, 0) + 1
+        if touched < 2:
+            self._touch[bi] = touched
+            return self.scan_block(bi, tb)
+        self._touch.pop(bi, None)
+        ents = list(self.block(bi))
+        cache[key] = ents
+        while len(cache) > _BLOCK_CACHE_MAX:
+            cache.popitem(last=False)
+        return _find_entry(ents, tb)
 
 
 def _find_entry(entries, tb: bytes) -> dict | None:
@@ -535,8 +511,6 @@ class DictSegment:
     leaders, then one linear block decode (hot blocks LRU-cached)."""
 
     def __init__(self, seg_dir: str | Path):
-        from collections import OrderedDict
-
         d = Path(seg_dir)
         man = json.loads((d / MANIFEST).read_text())
         self.n_terms = man["n_terms"]
@@ -564,15 +538,6 @@ class DictSegment:
                 p.close()
         self._parts = [None] * len(self._files)
         self._block_cache.clear()  # decoded blocks die with their parts
-
-    @property
-    def leaders(self) -> list[bytes]:
-        """All block leaders across parts (diagnostics / sizing — opens
-        every part)."""
-        out: list[bytes] = []
-        for i in range(len(self._files)):
-            out.extend(self._part(i).leaders)
-        return out
 
     def get(self, term: str) -> dict | None:
         """{df, idf, max_tfnorm} or None — two bisects + one block."""

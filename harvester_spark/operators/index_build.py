@@ -13,7 +13,10 @@ harvester/fetcher/controller.py:159-212, solr_updater.py:776-791):
   S3 dictionary  (term, df, cf, idf)        tiny agg over pack metadata
   S4 postings    term-sharded merge of packs → final delta+varint blocks
                  with block-max metadata; hot terms salted
-  S5 lineage     per-partition build provenance
+  S5 term_ub     per-term score upper bound (max block_max_tfnorm)
+  S6 dictseg     front-coded term dictionary (operators/dictseg.py), the
+                 lookup every query starts with
+  S7 lineage     per-partition build provenance (concurrent with S5→S6)
 
 Why map-side packing (S3) instead of shuffling (doc_id, term, tf) rows:
 a code corpus at 10^12 files produces ~10^14 posting rows; shuffling them
@@ -95,12 +98,6 @@ class IndexConfig:
     # snappy file wins (page-cache + memory-bandwidth bound), so None
     # (session default = snappy) is the measured best.
     pack_compression: str | None = None
-    # front-coded dictionary segment stage (operators/dictseg.py): the
-    # interactive-lookup tier. Skipped for tiny throwaway indexes whose
-    # dictionaries fit the hash-map tier anyway (CDC delta batches pass
-    # False — one fewer job per micro-batch; IndexHandle degrades
-    # gracefully when the stage is absent)
-    build_dictseg: bool = True
 
 
 PACKED_SCHEMA = StructType([
@@ -507,8 +504,8 @@ def build_index_from_rows(spark: SparkSession, rows: DataFrame,
                           cfg: IndexConfig | None = None,
                           run_id: str = "merge0") -> None:
     """Materialize a full index directory (stats/dictionary/postings/
-    term_ub/lineage, same layout as :func:`build_index`) from raw posting
-    rows — the segment-merge path: no document content needed.
+    term_ub/dictseg/lineage, same layout as :func:`build_index`) from raw
+    posting rows — the segment-merge path: no document content needed.
 
     Stats note: N counts distinct posting-bearing docs; a zero-token doc
     (unqueryable either way) that was counted by its original segment's
@@ -545,46 +542,59 @@ def build_index_from_rows(spark: SparkSession, rows: DataFrame,
                        index_dir / "postings", sort_cols=["term"], meta=meta)
     rows.unpersist()
 
-    postings = tables.read_table(spark, index_dir / "postings")
-    ub = postings.groupBy("term").agg(
-        F.max("block_max_tfnorm").alias("max_tfnorm"),
-        F.count("*").alias("n_blocks"))
-    tables.write_table(ub, index_dir / "term_ub", sort_cols=["term"])
+    # no resume here: the caller builds into a fresh directory
+    write_index_tail(spark, index_dir, run_id,
+                     lambda name, fn: fn(index_dir / name))
 
-    lin = (postings.groupBy("part_id")
-           .agg(F.min("term").alias("term_min"),
-                F.max("term").alias("term_max"),
-                F.countDistinct("term").alias("terms"),
-                F.sum("doc_count").alias("postings"),
-                F.count("*").alias("blocks"),
-                F.sum(F.length("deltas") + F.length("tfs")
-                      + F.length("dls")).alias("bytes_encoded"))
-           .withColumn("run_id", F.lit(run_id))
-           .withColumn("status", F.lit("complete")))
-    tables.write_table(lin, index_dir / "lineage")
 
-    # compacted bases serve interactive queries like any other index —
-    # they get the front-coded dictionary segment too (without it the
-    # handle silently degrades to the capped hash-map tier)
-    if cfg.build_dictseg:
-        from harvester_spark.operators.dictseg import (
-            write_dict_segment_from_parquet, write_dict_segment_spark)
-        # zero-job pyarrow path first (small vocab; see build_index s7)
-        if write_dict_segment_from_parquet(index_dir / "dictionary",
-                                           index_dir / "term_ub",
-                                           index_dir / "dictseg") is not None:
-            return
-        # read the just-committed tables back (recomputing `dic` would
-        # re-run the rows aggregation over the now-unpersisted lineage)
-        dic_t = tables.read_table(spark, index_dir / "dictionary")
-        ub_t = (tables.read_table(spark, index_dir / "term_ub")
-                .select("term", "max_tfnorm"))
-        write_dict_segment_spark(
-            dic_t.join(ub_t, "term", "left")
-            .select("term", "df", "idf", "max_tfnorm"),
-            index_dir / "dictseg",
-            # metadata-only count — counting the join would run it twice
-            n_terms=dic_t.count())
+def write_index_tail(spark: SparkSession, index_dir: Path, run_id: str,
+                     stage) -> None:
+    """The stages every index directory ends with, all derived from its
+    committed ``postings``: ``term_ub`` (exact per-term score upper bound,
+    so queries prune without a per-query aggregation job), ``dictseg``
+    (the front-coded term dictionary every query looks terms up in) and
+    ``lineage`` (per-build-partition provenance).
+
+    ``stage(name, fn)`` runs ``fn(index_dir / name)`` as one atomic commit
+    (:func:`build_index` skips stages a resumed build already committed).
+    term_ub → dictseg is a chain (the segment folds ``max_tfnorm``), and it
+    runs CONCURRENTLY with lineage: all three are small metadata-sized jobs
+    dominated by fixed per-job overhead, so Spark's scheduler interleaves
+    them across the same executors."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from harvester_spark.operators.dictseg import write_index_segment
+
+    def term_ub(out: Path) -> None:
+        postings = tables.read_table(spark, index_dir / "postings")
+        ub = postings.groupBy("term").agg(
+            F.max("block_max_tfnorm").alias("max_tfnorm"),
+            F.count("*").alias("n_blocks"))
+        tables.write_table(ub, out, sort_cols=["term"])
+
+    def lineage(out: Path) -> None:
+        postings = tables.read_table(spark, index_dir / "postings")
+        lin = (postings.groupBy("part_id")
+               .agg(F.min("term").alias("term_min"),
+                    F.max("term").alias("term_max"),
+                    F.countDistinct("term").alias("terms"),
+                    F.sum("doc_count").alias("postings"),
+                    F.count("*").alias("blocks"),
+                    F.sum(F.length("deltas") + F.length("tfs")
+                          + F.length("dls")).alias("bytes_encoded"))
+               .withColumn("run_id", F.lit(run_id))
+               .withColumn("status", F.lit("complete")))
+        tables.write_table(lin, out)
+
+    def ub_then_seg() -> None:
+        stage("term_ub", term_ub)
+        stage("dictseg", lambda out: write_index_segment(spark, index_dir,
+                                                         out))
+
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        futs = [ex.submit(ub_then_seg), ex.submit(stage, "lineage", lineage)]
+        for f in futs:
+            f.result()
 
 
 # --------------------------------------------------------------------------
@@ -736,77 +746,7 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str | Path, *,
         tables.write_table(union, out, sort_cols=["term"], meta=meta)
     stage("postings", s5)
 
-    # S5/S6 — term_ub + lineage: two independent small aggregations over the
-    # postings metadata columns. Each is dominated by fixed per-job overhead
-    # at high core counts, so they run CONCURRENTLY (Spark's scheduler
-    # interleaves both jobs across the same executors); each remains its own
-    # atomic, resumable commit.
-    def s5b(out: Path) -> None:
-        # exact per-term score upper bound (max block_max_tfnorm) folded
-        # into the dictionary side so the query path gets block-max pruning
-        # bounds without a per-query aggregation job
-        postings = tables.read_table(spark, index_dir / "postings")
-        ub = postings.groupBy("term").agg(
-            F.max("block_max_tfnorm").alias("max_tfnorm"),
-            F.count("*").alias("n_blocks"))
-        tables.write_table(ub, out, sort_cols=["term"])
-
-    def s6(out: Path) -> None:
-        # lineage: per-build-partition provenance
-        postings = tables.read_table(spark, index_dir / "postings")
-        lin = (postings.groupBy("part_id")
-               .agg(F.min("term").alias("term_min"),
-                    F.max("term").alias("term_max"),
-                    F.countDistinct("term").alias("terms"),
-                    F.sum("doc_count").alias("postings"),
-                    F.count("*").alias("blocks"),
-                    F.sum(F.length("deltas") + F.length("tfs")
-                          + F.length("dls")).alias("bytes_encoded"))
-               .withColumn("run_id", F.lit(run_id))
-               .withColumn("status", F.lit("complete")))
-        tables.write_table(lin, out)
-
-    # S7 — front-coded dictionary segment: interactive term lookup with
-    # driver memory = leaders only (1/128th of terms), no hash-map cap.
-    # Written DISTRIBUTED (range-partitioned part files + driver manifest):
-    # a driver-streamed writer is a serial ~300k terms/s stage — 53 min at
-    # 10^9 terms and an Amdahl drag on build scaling at any size.
-    def s7(out: Path) -> None:
-        from harvester_spark.operators.dictseg import (
-            write_dict_segment_from_parquet, write_dict_segment_spark)
-        # small-vocabulary fast path: BOTH inputs are committed sorted
-        # parquet stages, so the driver can pyarrow-read + merge + encode
-        # with ZERO Spark jobs — the Spark join+collect alternative is
-        # ~2 s of fixed job overhead at any core count (pure Amdahl drag;
-        # r5 scaling runs measured the term_ub→dictseg chain at 2.8 s of
-        # the 21.7 s local[8] build)
-        if write_dict_segment_from_parquet(index_dir / "dictionary",
-                                           index_dir / "term_ub",
-                                           out) is not None:
-            return
-        ub_table = tables.read_table(spark, index_dir / "term_ub")
-        # part sizing from a metadata-only parquet count (term_ub is one
-        # row per term) — counting the join would run the join twice; the
-        # writer itself picks driver vs distributed encode from n_terms
-        n_terms = ub_table.count()
-        write_dict_segment_spark(
-            dictionary.join(ub_table.select("term", "max_tfnorm"),
-                            "term", "left")
-            .select("term", "df", "idf", "max_tfnorm"),
-            out, n_terms=n_terms)
-
-    # term_ub → dictseg is a chain (the segment folds max_tfnorm), but the
-    # chain runs CONCURRENTLY with lineage — all three are small
-    # metadata-sized jobs dominated by fixed per-job overhead
-    def _ub_then_seg() -> None:
-        stage("term_ub", s5b)
-        if cfg.build_dictseg:
-            stage("dictseg", s7)
-
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        futs = [ex.submit(_ub_then_seg), ex.submit(stage, "lineage", s6)]
-        for f in futs:
-            f.result()
+    # S5-S7 — term_ub → dictseg, concurrently with lineage
+    write_index_tail(spark, index_dir, run_id, stage)
 
     return report

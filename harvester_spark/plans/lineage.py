@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from harvester_spark import tables
 
-STAGES = ["packed", "stats", "dictionary", "postings", "term_ub", "lineage"]
+STAGES = ["packed", "stats", "dictionary", "postings", "term_ub", "dictseg",
+          "lineage"]
 
 
 def build_status(index_dir: str | Path) -> dict:

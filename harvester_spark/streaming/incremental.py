@@ -140,11 +140,8 @@ def apply_changes(spark: SparkSession, root: str | Path, changes: DataFrame,
     n_deletes = int(obs.get["n_deletes"] or 0)
     upserts = changes.filter(~F.col("deleted")).select("doc_id", content_col)
     if n_changes - n_deletes > 0:
-        # delta dictionaries are micro-batch-sized: skip the dictseg stage
-        # (hash-map lookup tier covers them; one fewer job per batch)
-        from dataclasses import replace
         build_index(spark, upserts, delta_dir, content_col=content_col,
-                    cfg=replace(cfg or IndexConfig(), build_dictseg=False))
+                    cfg=cfg)
         _write_segments(root, [d.name for d in _delta_dirs(root)]
                         + [delta_dir.name])
     # commit point: last_seq advance (a crash before this point re-applies

@@ -94,7 +94,8 @@ for k in range(SCALE):
     t = li
     if k:
         ok = t.column("l_orderkey").to_numpy() + k * maxkey
-        t = t.set_column(0, "l_orderkey", pa.array(ok, type=pa.int64()))
+        t = t.set_column(t.column_names.index("l_orderkey"), "l_orderkey",
+                         pa.array(ok, type=pa.int64()))
     parts.append(t)
 pq.write_table(pa.concat_tables(parts), f"{OUT}/lineitem.parquet",
                row_group_size=1 << 20)

@@ -142,6 +142,10 @@ def test_minhash_lsh_drop_metrics(spark):
                                          with_metrics=True)
     assert metrics2.collect()[0]["dropped_buckets"] == 0
     assert pairs2.count() == 30 * 29 // 2
+    # a cap below 1 would drop every bucket: rejected up front by both ops
+    for op in (minhash_lsh_pairs, simhash_near_pairs):
+        with pytest.raises(ValueError, match="max_bucket"):
+            op(docs, max_bucket=0)
 
 
 def test_minhash_identical_cluster_collapses(spark):
@@ -660,3 +664,45 @@ def test_unique_table_kernels_match_direct_form():
         want_fp |= np.where(ones * np.uint64(2) > n_occ,
                             np.uint64(1) << np.uint64(bit), np.uint64(0))
     assert np.array_equal(got_fp, want_fp)
+
+
+def test_driver_pa_pool_overlapping_threads_restore_baseline(monkeypatch):
+    """Concurrent driver-kernel calls share one raise of the process-global
+    pyarrow pool: with overlapping enter/exit (A in, B in, A out, B out)
+    the pool stays raised while anyone is inside and is back at the
+    baseline once the last caller leaves."""
+    import threading
+
+    import pyarrow as pa
+
+    from harvester_spark.operators import dedup_kernels as dk
+
+    saved = pa.cpu_count()
+    pa.set_cpu_count(1)
+    monkeypatch.setattr(dk, "DRIVER_KERNEL_THREADS", 4)
+    a_in, b_in, a_out = (threading.Event() for _ in range(3))
+    seen = {}
+
+    def a():
+        with dk._driver_pa_pool():
+            a_in.set()
+            b_in.wait(10)
+        a_out.set()
+
+    def b():
+        a_in.wait(10)
+        with dk._driver_pa_pool():
+            b_in.set()
+            a_out.wait(10)
+            seen["b_after_a_left"] = pa.cpu_count()
+
+    try:
+        ts = [threading.Thread(target=f) for f in (a, b)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(20)
+        assert seen["b_after_a_left"] == 4
+        assert pa.cpu_count() == 1
+    finally:
+        pa.set_cpu_count(saved)

@@ -1,5 +1,5 @@
-"""Front-coded dictionary segment: roundtrip, edge cases, and parity with
-the collected-hash-map lookup tier inside IndexHandle."""
+"""Front-coded dictionary segment: roundtrip, edge cases, both writers on
+the same input, and IndexHandle lookups served from it."""
 
 import math
 import struct
@@ -149,13 +149,13 @@ def test_index_handle_uses_segment(spark, tmp_path):
                 cfg=IndexConfig(salt_df_threshold=200, salt_range_docs=500))
     h = open_index(spark, d)
     assert h.dict_segment is not None
-    assert h.term_info is None  # the hash-map tier was never built
     seg_info = h.lookup(["import", "def", "qqzz_absent"])
     assert "qqzz_absent" not in seg_info and "import" in seg_info
 
     # parity with the dictionary table the segment was written from
-    rows = (h.dictionary.filter(h.dictionary.term.isin(["import", "def"]))
-            .collect())
+    from harvester_spark import tables
+    dic = tables.read_table(spark, f"{d}/dictionary")
+    rows = dic.filter(dic.term.isin(["import", "def"])).collect()
     want = {r["term"]: r for r in rows}
     for t in ("import", "def"):
         assert seg_info[t]["df"] == want[t]["df"]
@@ -164,17 +164,22 @@ def test_index_handle_uses_segment(spark, tmp_path):
     got = h.topk_local("import numpy", 5)
     assert len(got) == 5
     h.unpersist()
+    # without a committed segment the index cannot be opened
+    (tmp_path / "idx" / "dictseg" / tables.SUCCESS_MARKER).unlink()
+    with pytest.raises(FileNotFoundError, match="dictseg"):
+        open_index(spark, d)
 
 
-def test_parquet_fast_path_matches_spark_writer(spark, tmp_path):
-    """The zero-Spark-job pyarrow path (small-vocab builds) must produce
-    a segment with identical lookups to the Spark join+collect writer,
-    including absent max_tfnorm and the above-threshold fallback."""
+def test_parquet_fast_path_matches_spark_writer(spark, tmp_path,
+                                                monkeypatch):
+    """The zero-Spark-job pyarrow writer (small vocabularies) and the
+    distributed writer must produce segments with identical lookups on the
+    same stage tables, including absent max_tfnorm; the dispatcher picks
+    the distributed writer above its term cap and raises when the
+    dictionary stage is missing."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from harvester_spark.operators.dictseg import (
-        write_dict_segment_from_parquet, write_dict_segment_spark)
+    from harvester_spark.operators import dictseg
 
     terms = [f"t{i:05d}" for i in range(997)]
     dic = pd.DataFrame({"term": terms,
@@ -183,19 +188,19 @@ def test_parquet_fast_path_matches_spark_writer(spark, tmp_path):
     ub = pd.DataFrame({"term": terms[::2],   # half the terms have a UB
                        "max_tfnorm": [0.25 + (i % 3) for i in
                                       range(len(terms[::2]))]})
-    ddir, udir = tmp_path / "dictionary", tmp_path / "term_ub"
-    spark.createDataFrame(dic).write.parquet(str(ddir))
-    spark.createDataFrame(ub).write.parquet(str(udir))
+    spark.createDataFrame(dic).write.parquet(str(tmp_path / "dictionary"))
+    spark.createDataFrame(ub).write.parquet(str(tmp_path / "term_ub"))
 
     out_a = tmp_path / "seg_pyarrow"
-    info = write_dict_segment_from_parquet(ddir, udir, out_a)
-    assert info is not None and info["n_terms"] == 997
+    info = dictseg.write_index_segment(spark, tmp_path, out_a)
+    assert info["writer"] == "driver" and info["n_terms"] == 997
 
-    sdf = (spark.read.parquet(str(ddir))
-           .join(spark.read.parquet(str(udir)), "term", "left")
+    sdf = (spark.read.parquet(str(tmp_path / "dictionary"))
+           .join(spark.read.parquet(str(tmp_path / "term_ub")), "term",
+                 "left")
            .select("term", "df", "idf", "max_tfnorm"))
     out_b = tmp_path / "seg_spark"
-    write_dict_segment_spark(sdf, out_b, n_terms=997)
+    dictseg.write_dict_segment_spark(sdf, out_b, n_terms=997)
 
     sa, sb = DictSegment(out_a), DictSegment(out_b)
     for t in terms:
@@ -203,12 +208,18 @@ def test_parquet_fast_path_matches_spark_writer(spark, tmp_path):
     assert sa.get(terms[1])["max_tfnorm"] is None  # odd index: no UB row
     sa.close(), sb.close()
 
-    # above threshold: not applicable -> None (caller falls back)
-    assert write_dict_segment_from_parquet(
-        ddir, udir, tmp_path / "x", small_threshold=100) is None
-    # missing dir -> None
-    assert write_dict_segment_from_parquet(
-        tmp_path / "nope", udir, tmp_path / "y") is None
+    # above the term cap: the dispatcher takes the distributed writer
+    monkeypatch.setattr(dictseg, "DRIVER_MAX_TERMS", 100)
+    out_c = tmp_path / "seg_dispatched"
+    info = dictseg.write_index_segment(spark, tmp_path, out_c)
+    assert info["writer"] == "distributed" and info["n_terms"] == 997
+    sc = DictSegment(out_c)
+    assert all(sc.get(t) == sb.get(t) for t in terms)
+    sc.close()
+    # a missing dictionary stage raises, naming the stage
+    with pytest.raises(FileNotFoundError, match="dictionary"):
+        dictseg.write_index_segment(spark, tmp_path / "nope",
+                                    tmp_path / "y")
 
 
 def test_distributed_writer_matches_driver_writer(spark, tmp_path):
@@ -229,8 +240,7 @@ def test_distributed_writer_matches_driver_writer(spark, tmp_path):
                                      "max_tfnorm double")
     d2 = tmp_path / "spark"
     info = write_dict_segment_spark(df.orderBy(F.rand(seed=1)), d2,
-                                    block_size=16, terms_per_part=500,
-                                    small_threshold=0)
+                                    block_size=16, terms_per_part=500)
     assert info["n_terms"] == len(terms)
     assert info["n_parts"] > 1, "want a real multi-part segment"
     assert is_committed(d2)

@@ -372,3 +372,35 @@ def test_apply_changes_counters_and_auto_compact(spark, base_docs, tmp_path):
         [(1, True, None)], "doc_id long, deleted boolean, content string"),
         seq=2, cfg=CFG)
     assert again == {"seq": 2, "skipped": True}
+
+
+def test_delta_has_segment_and_query_reads_no_dictionary(spark, base_docs,
+                                                         tmp_path,
+                                                         monkeypatch):
+    """CDC deltas commit a dictionary segment like every other index dir,
+    so an incremental query looks terms up in the segments and never scans
+    a ``dictionary`` table (no per-query dictionary-scan job)."""
+    from harvester_spark import tables
+    from harvester_spark.operators.dictseg import is_committed
+
+    root = tmp_path / "segroot"
+    inc.init_root(spark, base_docs, root, cfg=CFG)
+    changes = spark.createDataFrame(
+        [(3, True, None), (901, False, "zz_seg_token import def")],
+        "doc_id long, deleted boolean, content string")
+    inc.apply_changes(spark, root, changes, seq=1, cfg=CFG)
+    delta = root / "delta_00000001"
+    assert is_committed(delta / "dictseg")
+
+    reads = []
+    real_read = tables.read_table
+
+    def spy(spark_, path):
+        reads.append(str(path))
+        return real_read(spark_, path)
+
+    monkeypatch.setattr(tables, "read_table", spy)
+    got = inc.query_topk_incremental(spark, root, "zz_seg_token",
+                                     5).toPandas()
+    assert list(got["doc_id"]) == [901]
+    assert reads and not [p for p in reads if p.endswith("dictionary")]

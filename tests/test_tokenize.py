@@ -83,12 +83,14 @@ def test_doc_len_expr(spark):
     assert [r[0] for r in df.select(doc_len_expr("content")).collect()] == [3, 0]
 
 
-def test_xxh64_numpy_matches_spark(spark):
+def test_xxh64_numpy_matches_spark(spark, monkeypatch):
     """The vectorized numpy XXH64 must be BIT-EXACT vs Spark's xxhash64
     (seed 42) — every length class (empty, <4, 4..7, 8..31, exact 32,
     multi-stripe, stripe+every tail combination) plus unicode and random
-    fuzz. Exactness is what lets the dedup kernels swap in without moving
-    a single signature."""
+    fuzz, on both the generic padded path and the length-class fast path
+    that real shingle batches (≥2048 strings in few lengths) take.
+    Exactness is what lets the dedup kernels swap in without moving a
+    single signature."""
     import random
     import string
 
@@ -109,4 +111,25 @@ def test_xxh64_numpy_matches_spark(spark):
     want = [r["h"] for r in
             df.select(F.xxhash64("s").alias("h")).collect()]
     got = xxh64_arrow(pa.array(vals, type=pa.string())).tolist()
+    assert got == want
+
+    # length-class fast path: ≥2048 strings bunched in a few lengths
+    from harvester_spark.functions import xxh64 as xx
+    lengths = [0, 3, 7, 8, 31, 32, 33, 45, 70]
+    bunched = ["".join(rng.choice(string.ascii_letters + "_ 0")
+                       for _ in range(lengths[i % len(lengths)]))
+               for i in range(2304)]
+    by_length = xx._xxh64_by_length
+    calls = []
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return by_length(*a, **kw)
+
+    monkeypatch.setattr(xx, "_xxh64_by_length", spy)
+    df = spark.createDataFrame([(v,) for v in bunched], "s string")
+    want = [r["h"] for r in
+            df.select(F.xxhash64("s").alias("h")).collect()]
+    got = xxh64_arrow(pa.array(bunched, type=pa.string())).tolist()
+    assert calls, "the length-class fast path did not run"
     assert got == want
