@@ -24,8 +24,7 @@ from harvester_spark.functions.text import (add_slash, ark_extract,
 from harvester_spark.functions.tokenize import doc_len_expr, tokens_expr
 from harvester_spark.operators.bm25 import (bm25_scores, query_topk_index,
                                             tokenize_query)
-from harvester_spark.operators.dedup import (md5_hash64_expr,
-                                             minhash_lsh_pairs, shingles_expr,
+from harvester_spark.operators.dedup import (minhash_lsh_pairs, shingles_expr,
                                              simhash_near_pairs)
 from harvester_spark.operators.index_build import IndexConfig, build_index
 from harvester_spark.operators.similarity import (cosine_topk, lsh_cosine_topk)
@@ -248,12 +247,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def simhash_pairs(spark, sf):
         # oracle-checkable: fingerprints built on the md5-prefix token
-        # hash (bit-identical in DuckDB — md5_hash64_expr), and Manku
+        # hash (bit-identical in DuckDB — token_hash="md5"), and Manku
         # blocking is exhaustive-recall by pigeonhole, so pairs equal the
         # oracle's all-pairs popcount scan. Output is component-complete:
         # identical fingerprints collapse to star pairs (hamming 0).
         return simhash_near_pairs(_docs(spark, sf), content_col="text",
-                                  max_hamming=3, hash_expr=md5_hash64_expr)
+                                  max_hamming=3, token_hash="md5")
     q["simhash_pairs"] = simhash_pairs
 
     # ---- text analysis ----
@@ -869,8 +868,8 @@ j AS (
 SELECT doc_a, doc_b, {X10K.format(v='jac')} AS jaccard_x10k FROM j
 """
 
-    # simhash on the md5-prefix token hash (bit-identical to Spark's
-    # md5_hash64_expr); fingerprint kept as two 32-bit halves because
+    # simhash on the md5-prefix token hash (bit-identical to the Spark
+    # op's token_hash="md5"); fingerprint kept as two 32-bit halves because
     # DuckDB's << overflows at bit 63. Star pairs mirror the Spark op's
     # identical-fingerprint rep-collapse (component-complete output).
     o["simhash_pairs"] = f"""

@@ -23,6 +23,8 @@ Scoring (fixed, matches the numpy oracle bit-for-bit in float64):
 
 from __future__ import annotations
 
+import threading
+from collections import deque
 from pathlib import Path
 from typing import Iterator
 
@@ -35,6 +37,30 @@ from pyspark.sql.types import (DoubleType, LongType, StructField, StructType)
 from harvester_spark import tables
 from harvester_spark.functions.tokenize import (doc_len_expr, tokenize_pandas,
                                                 tokens_expr)
+
+# per-query projections the scorers cache: each session keeps its newest
+# few and unpersists older ones (a released query still answers — it
+# recomputes), so a serving session's cache does not grow per query
+_QUERY_CACHE_KEEP = 4
+_QUERY_CACHE_LOCK = threading.Lock()
+
+
+def _cache_per_query(df: DataFrame) -> DataFrame:
+    """``df`` persisted MEMORY_ONLY in its session's ring of the newest
+    ``_QUERY_CACHE_KEEP`` per-query caches (the ring hangs off the session
+    object, so it dies with the session)."""
+    from pyspark import StorageLevel
+
+    df = df.persist(StorageLevel.MEMORY_ONLY)
+    with _QUERY_CACHE_LOCK:
+        ring = df.sparkSession.__dict__.setdefault(
+            "_harvester_query_cache", deque())
+        ring.append(df)
+        old = [ring.popleft() for _ in range(len(ring) - _QUERY_CACHE_KEEP)]
+    for o in old:
+        o.unpersist()
+    return df
+
 
 SCORE_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -97,14 +123,9 @@ def bm25_scores(docs: DataFrame, query: str, *, id_col: str = "doc_id",
             lc, F.lit(rf"(?<![a-z0-9_])\Q{t}\E(?![a-z0-9_])"))
         .cast("double").alias(f"__tf{i}")
         for i, t in enumerate(terms)]
-    # MEMORY_ONLY: per-query cache entry with no unpersist hook — must be
-    # evictable under LRU pressure (worst case: recompute), not
-    # disk-accumulating across a serving session's queries
-    from pyspark import StorageLevel
-    proj = (src.select("doc_id",
-                       F.regexp_count(lc, F.lit(r"[a-z0-9_]+"))
-                       .cast("double").alias("dl"), *tf_cols)
-            .persist(StorageLevel.MEMORY_ONLY))
+    proj = _cache_per_query(src.select(
+        "doc_id", F.regexp_count(lc, F.lit(r"[a-z0-9_]+"))
+        .cast("double").alias("dl"), *tf_cols))
     # global stats straight to the driver (one tiny row) instead of a
     # broadcast-exchange crossJoin: idf/avgdl become plan literals that
     # Catalyst constant-folds with the SAME JVM double ops (F.log over
@@ -161,9 +182,8 @@ def _bm25_scores_tokens(docs: DataFrame, terms: list[str], *, id_col: str,
             F.size(toks).alias("dl"),
             F.filter(toks, lambda t: t.isin(terms)).alias("matched"))
 
-    from pyspark import StorageLevel
-    tok0 = (src.select("doc_id", tokens_bundle("content", match))
-            .persist(StorageLevel.MEMORY_ONLY))
+    tok0 = _cache_per_query(
+        src.select("doc_id", tokens_bundle("content", match)))
     stats = tok0.agg(F.count("*").alias("N"),
                      F.avg("dl").alias("avgdl"))
     tok = (tok0.filter(F.size("matched") > 0)
@@ -599,18 +619,14 @@ def _refine_theta_or(blocks: DataFrame, theta: float, k: int,
     decoded contributions are cached and reused in the final aggregation
     (pre_agg), so nothing is decoded twice.
     Returns (θ, remaining blocks, pre-aggregated probe contributions)."""
-    from pyspark import StorageLevel
-
     cut = blocks.approxQuantile("ub", [1.0 - probe_frac], 0.01)
     if not cut or cut[0] is None:
         return theta, blocks, None
     probe = blocks.filter(F.col("ub") >= cut[0])
     rest = blocks.filter(F.col("ub") < cut[0])
-    # MEMORY_ONLY: one cache entry per refined query with no unpersist
-    # hook (the handle outlives this function inside the final
-    # aggregation plan) — evictable beats disk-accumulating
-    probe_agg = (_decode_agg(probe, idf_by_term, k1, b, avgdl)
-                 .persist(StorageLevel.MEMORY_ONLY))
+    # cached: the final aggregation reuses the probe's decoded blocks
+    probe_agg = _cache_per_query(_decode_agg(probe, idf_by_term, k1, b,
+                                             avgdl))
     cand = probe_agg
     if exclude_ids is not None:
         cand = cand.join(F.broadcast(exclude_ids.select("doc_id")),

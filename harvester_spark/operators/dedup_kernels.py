@@ -1,26 +1,25 @@
-"""Vectorized per-partition kernels for the dedup fingerprint stages.
+"""Vectorized kernels of the LSH dedup ops, shared by both placements.
 
-The JVM shapes (explode token/shingle rows → 64 aggregate expressions →
-groupBy exchange) spend their time in per-row expression evaluation and
-in shuffling rows whose aggregation is per-doc LOCAL anyway — every
-token/shingle of a doc lives in the doc's partition. These mapInArrow
-kernels compute the same per-doc results inside the partition (pyarrow
-tokenize → bit-exact numpy XXH64 → numpy reductions), so the map stage is
-a few vectorized passes and the downstream exchange carries one row per
-doc with NO groupBy at all (guide §4.2, §8).
+Each step runs on executors inside ``mapInArrow`` (one partition at a
+time, threads=1) and on the driver over a collected small corpus (same
+functions, small thread pool): pyarrow tokenize → bit-exact numpy XXH64
+(or md5) → minhash signatures / simhash fingerprints → bucket keys
+(:func:`minhash_band_keys`, :func:`simhash_block_keys`) → candidate pairs
+(:func:`bucket_pairs`, which streams rows sorted by bucket key).
 
 Bit-exactness contract: signatures and fingerprints are VALUE-IDENTICAL
-to the JVM expressions (same xxhash64 — functions/xxh64.py parity-tested
-against Spark; same Carter-Wegman arithmetic; same sha2 hex), asserted by
-kernel-vs-JVM equality tests in tests/test_dedup.py. That is what makes
-these kernels optimizations rather than semantic changes: every LSH
-bucket, candidate pair and verified output stays the same.
+to the Spark SQL forms (same xxhash64 — functions/xxh64.py parity-tested
+against Spark; same Carter-Wegman arithmetic; same sha2 hex; the md5
+prefix DuckDB computes), asserted against test-local SQL references in
+tests/test_dedup.py.
 """
 
 from __future__ import annotations
 
 import contextlib
 import hashlib
+import itertools
+import os
 import threading
 from typing import Iterator
 
@@ -33,11 +32,14 @@ MERSENNE_P = (1 << 31) - 1
 # thread count for the DRIVER-side pair kernels only (executor kernels
 # always run threads=1 — their sibling tasks own the cores); the heavy
 # ufuncs release the GIL so a small pool gets real parallelism
-import os as _os
+DRIVER_KERNEL_THREADS = min(8, os.cpu_count() or 1)
 
-DRIVER_KERNEL_THREADS = int(_os.environ.get(
-    "SPARK_GRAFT_DEDUP_DRIVER_THREADS",
-    str(min(8, _os.cpu_count() or 1))))
+# the two token hashes simhash fingerprints can be built on
+TOKEN_HASHES = ("xxhash64", "md5")
+
+# pairs materialized per bucket_pairs yield (bounds the kernel's output
+# buffers when one batch holds many large buckets)
+_PAIR_BLOCK = 1 << 20
 
 
 # concurrent driver-kernel calls share ONE raise of the process-global
@@ -100,59 +102,30 @@ def _tokens_flat(content_arr):
     return flat, pnp, counts
 
 
-def _shingle_hashes(flat, pnp: np.ndarray, counts: np.ndarray,
-                    shingle_n: int):
+def _shingle_hashes(flat, counts: np.ndarray, shingle_n: int):
     """Flat tokens → (shingle hash ∈ [0, P) int64 ndarray, shingle parent
-    row ids int64). Shingle construction matches shingles_from_tokens:
-    docs with ≥ n tokens get every n-gram position (duplicates retained —
-    min-hash is duplicate-insensitive, so the JVM path's array_distinct
-    changes nothing); docs with 1..n-1 tokens get ONE whole-text shingle;
-    zero-token docs get none."""
+    row ids int64, doc-grouped). Shingle construction matches
+    shingles_from_tokens: docs with ≥ n tokens get every n-gram position
+    (duplicates retained — min-hash is duplicate-insensitive, so the SQL
+    form's array_distinct changes nothing); docs with 1..n-1 tokens get ONE
+    whole-text shingle; zero-token docs get none. All shingles are joined
+    in one pass over a ListArray of their token slices."""
+    import pyarrow as pa
     import pyarrow.compute as pc
 
-    n = shingle_n
-    N = len(flat)
-    parts = []
-    parents = []
-    if N >= n:
-        L = N - (n - 1)
-        cols = [flat.slice(j, L) for j in range(n)]
-        joined = pc.binary_join_element_wise(*cols, " ")
-        full_mask = pnp[:L] == pnp[n - 1:]
-        parts.append((joined, full_mask))
-        parents.append(pnp[:L][full_mask])
-    # short docs (1..n-1 tokens): one whole-text shingle each
-    short_rows = np.nonzero((counts > 0) & (counts < n))[0]
-    short_shingles = []
-    if short_rows.size:
-        starts = np.concatenate(([0], np.cumsum(counts)))
-        for r in short_rows:
-            toks = flat.slice(starts[r], counts[r]).to_pylist()
-            short_shingles.append(" ".join(toks))
-    # hash full shingles (filtered) and short shingles
-    import pyarrow as pa
-
-    hashes = []
-    hash_parents = []
-    if parts:
-        joined, full_mask = parts[0]
-        h = xxh64_arrow(joined)
-        hashes.append(h[full_mask])
-        hash_parents.append(parents[0])
-    if short_shingles:
-        hashes.append(xxh64_arrow(pa.array(short_shingles,
-                                           type=pa.string())))
-        hash_parents.append(short_rows)
-    if not hashes:
-        return (np.empty(0, np.int64), np.empty(0, np.int64))
-    h = np.concatenate(hashes)
-    par = np.concatenate(hash_parents)
-    # doc-grouped order for reduceat (full and short doc sets are
-    # disjoint, but short rows must interleave back into doc order)
-    order = np.argsort(par, kind="stable")
-    h = h[order]
+    npos = np.where(counts > 0, np.maximum(counts - shingle_n + 1, 1), 0)
+    par = np.repeat(np.arange(counts.size), npos)
+    # first token of every shingle, then every shingle's token indices
+    first = (np.repeat(np.cumsum(counts) - counts - np.cumsum(npos) + npos,
+                       npos) + np.arange(par.size))
+    length = np.minimum(counts, shingle_n)[par]
+    offs = np.concatenate(([0], np.cumsum(length)))
+    idx = np.repeat(first - offs[:-1], length) + np.arange(offs[-1])
+    lists = pa.ListArray.from_arrays(pa.array(offs, type=pa.int32()),
+                                     flat.take(pa.array(idx)))
+    h = xxh64_arrow(pc.binary_join(lists, " "))
     h %= MERSENNE_P  # in-place: h is already our private copy
-    return h, par[order]
+    return h, par
 
 
 def _run_blocks(fn, total: int, block: int, threads: int) -> None:
@@ -251,105 +224,309 @@ def _simhash_fingerprints(h: np.ndarray, starts: np.ndarray,
     return fp
 
 
+def _token_hashes(flat, token_hash: str) -> np.ndarray:
+    """Flat token array → uint64 token hashes: Spark's ``xxhash64``, or
+    for ``"md5"`` the first 8 md5 bytes read big-endian (what DuckDB's
+    ``('0x' || substr(md5(t), 1|9, 8))::BIGINT`` pair spells), hashed once
+    per distinct token."""
+    import pyarrow.compute as pc
+
+    if token_hash == "xxhash64":
+        return xxh64_arrow(flat).view(np.uint64)
+    enc = pc.dictionary_encode(flat)
+    uniq = np.frombuffer(b"".join(
+        hashlib.md5(t.encode("utf-8")).digest()[:8]
+        for t in enc.dictionary.to_pylist()), dtype=">u8").astype(np.uint64)
+    return uniq[enc.indices.to_numpy(zero_copy_only=False)]
+
+
+def minhash_band_keys(sig: np.ndarray, bands: int) -> np.ndarray:
+    """(n × bands) int64 LSH band keys from an (n × num_hashes) signature
+    matrix: band i's key is xxhash64 of its ``num_hashes // bands`` values
+    joined as decimal strings with ``,``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows = sig.shape[1] // bands
+    keys = np.empty((sig.shape[0], bands), dtype=np.int64)
+    for i in range(bands):
+        cols = [pc.cast(pa.array(sig[:, i * rows + r]), pa.string())
+                for r in range(rows)]
+        keys[:, i] = xxh64_arrow(pc.binary_join_element_wise(*cols, ",")
+                                 if len(cols) > 1 else cols[0])
+    return keys
+
+
+def simhash_block_keys(fp: np.ndarray, chunks: int,
+                       max_hamming: int) -> np.ndarray:
+    """(n × comb(chunks, max_hamming)) int64 Manku block keys: the 64
+    fingerprint bits split into ``chunks`` near-equal chunks, one table per
+    (chunks - max_hamming)-chunk subset, keyed on the fingerprint masked
+    to that subset's bits."""
+    sizes = [64 // chunks + (i < 64 % chunks) for i in range(chunks)]
+    offs = np.cumsum([0] + sizes[:-1]).tolist()
+    masks = [sum(((1 << sizes[c]) - 1) << offs[c] for c in combo)
+             for combo in itertools.combinations(range(chunks),
+                                                 chunks - max_hamming)]
+    return (fp.view(np.uint64)[:, None]
+            & np.array(masks, dtype=np.uint64)).view(np.int64)
+
+
+def _minhash_sigs(content, a: np.ndarray, b: np.ndarray, shingle_n: int,
+                  threads: int = 1):
+    """Content array → (rows with ≥1 token, their (rows × num_hashes)
+    minhash signature matrix)."""
+    flat, _, counts = _tokens_flat(content)
+    keep = np.nonzero(counts > 0)[0]
+    if keep.size == 0:
+        return keep, np.empty((0, a.size), dtype=np.int64)
+    h, par = _shingle_hashes(flat, counts, shingle_n)
+    # reduceat starts: first index of each doc's shingle run (par is
+    # sorted; every kept doc has ≥1 shingle)
+    starts = np.nonzero(np.concatenate(([True], par[1:] != par[:-1])))[0]
+    return keep, _minhash_sig_matrix(h, starts, a.astype(np.int64),
+                                     b.astype(np.int64), threads=threads)
+
+
+def _content_sha(content, rows: np.ndarray) -> list:
+    """sha256 hex of the UTF-8 content of ``rows`` (== Spark ``sha2(c,
+    256)``)."""
+    texts = content.to_pylist()
+    return [hashlib.sha256((texts[r] or "").encode("utf-8")).hexdigest()
+            for r in rows]
+
+
+def _simhash_fps(content, token_hash: str, bits: int = 64,
+                 threads: int = 1):
+    """Content array → (rows with ≥1 token, int64 simhash per row): each
+    token occurrence votes on every bit of its hash, bit set ⟺
+    2·ones > n (the sign of the ±1 vote sum)."""
+    flat, pnp, counts = _tokens_flat(content)
+    keep = np.nonzero(counts > 0)[0]
+    if keep.size == 0:
+        return keep, np.empty(0, dtype=np.int64)
+    # pnp is sorted by construction (list_parent_indices)
+    starts = np.nonzero(np.concatenate(([True], pnp[1:] != pnp[:-1])))[0]
+    fp = _simhash_fingerprints(_token_hashes(flat, token_hash), starts,
+                               counts[keep].astype(np.uint64), bits,
+                               threads=threads)
+    return keep, fp.view(np.int64)
+
+
 def minhash_sig_batches(batches, *, a: np.ndarray, b: np.ndarray,
-                        shingle_n: int, with_sha: bool,
-                        perm_block: int = 16) -> Iterator:
-    """mapInArrow kernel: (doc_id, content) record batches →
-    (doc_id[, csha], sig array<long>) batches. One row per doc with ≥1
-    token; signature values identical to the JVM aggregation."""
+                        shingle_n: int, bands: int | None = None) -> Iterator:
+    """mapInArrow kernel: (doc_id, content) record batches → (doc_id, sig
+    array<long>), or with ``bands`` → (doc_id, csha, keys array<long>):
+    the content sha256 hex and the :func:`minhash_band_keys`. One row per
+    doc with ≥1 token."""
     import pyarrow as pa
 
-    a = a.astype(np.int64)
-    b = b.astype(np.int64)
-    num_hashes = a.size
     for batch in batches:
-        doc_ids = batch.column(0).to_numpy(zero_copy_only=False)
         content = batch.column(1)
-        flat, pnp, counts = _tokens_flat(content)
-        h, par = _shingle_hashes(flat, pnp, counts, shingle_n)
-        keep_rows = np.nonzero(counts > 0)[0]
-        if keep_rows.size == 0:
+        keep, sig = _minhash_sigs(content, a, b, shingle_n)
+        if keep.size == 0:
             continue
-        # reduceat starts: first index of each doc's shingle run (par is
-        # sorted; every kept doc has ≥1 shingle)
-        starts = np.nonzero(np.concatenate(
-            ([True], par[1:] != par[:-1])))[0]
-        nd = starts.size
-        sig = _minhash_sig_matrix(h, starts, a, b, perm_block)
-        cols = [pa.array(doc_ids[keep_rows], type=pa.int64())]
-        names = ["doc_id"]
-        if with_sha:
-            sha_src = content.to_pylist()
-            cols.append(pa.array(
-                [hashlib.sha256(
-                    (sha_src[r] or "").encode("utf-8")).hexdigest()
-                 for r in keep_rows], type=pa.string()))
-            names.append("csha")
+        cols = [batch.column(0).take(pa.array(keep))]
+        names = ["doc_id", "sig"]
+        if bands is not None:
+            names = ["doc_id", "csha", "keys"]
+            cols.append(pa.array(_content_sha(content, keep), pa.string()))
+            sig = minhash_band_keys(sig, bands)
         cols.append(pa.ListArray.from_arrays(
-            np.arange(nd + 1, dtype=np.int32) * num_hashes,
+            np.arange(keep.size + 1, dtype=np.int32) * sig.shape[1],
             pa.array(sig.ravel(), type=pa.int64())))
-        names.append("sig")
         yield pa.RecordBatch.from_arrays(cols, names=names)
 
 
 def simhash_batches(batches, *, bits: int = 64,
-                    bit_block: int = 16) -> Iterator:
-    """mapInArrow kernel: (doc_id, content) → (doc_id, simhash long).
-    Fingerprints identical to the JVM sign-sum aggregation over
-    xxhash64 token votes (bit set ⟺ 2·ones > n)."""
+                    token_hash: str) -> Iterator:
+    """mapInArrow kernel: (doc_id, content) → (doc_id, simhash long), one
+    row per doc with ≥1 token."""
     import pyarrow as pa
 
     for batch in batches:
-        doc_ids = batch.column(0).to_numpy(zero_copy_only=False)
-        flat, pnp, counts = _tokens_flat(batch.column(1))
-        keep_rows = np.nonzero(counts > 0)[0]
-        if keep_rows.size == 0:
-            continue
-        h = xxh64_arrow(flat).view(np.uint64)
-        # pnp is sorted by construction (list_parent_indices)
-        starts = np.nonzero(np.concatenate(
-            ([True], pnp[1:] != pnp[:-1])))[0]
-        n_occ = counts[keep_rows].astype(np.uint64)
-        fp = _simhash_fingerprints(h, starts, n_occ, bits, bit_block)
+        keep, fp = _simhash_fps(batch.column(1), token_hash, bits)
+        if keep.size:
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(pa.array(keep)), pa.array(fp)],
+                names=["doc_id", "simhash"])
+
+
+def _keyed_rows(keys: np.ndarray, ids: np.ndarray, fp=None) -> list:
+    """(n × tables) key matrix → bucket_pairs rows [tbl, key, doc_id, fp],
+    one row per (table, doc), table-major."""
+    n_tbl = keys.shape[1]
+    return [np.repeat(np.arange(n_tbl, dtype=np.int32), ids.size),
+            keys.T.ravel(), np.tile(ids, n_tbl),
+            None if fp is None else np.tile(fp, n_tbl)]
+
+
+def simhash_key_batches(batches, *, chunks: int,
+                        max_hamming: int) -> Iterator:
+    """mapInArrow kernel: (doc_id, simhash) → (tbl, key, doc_id, fp), one
+    row per doc and :func:`simhash_block_keys` table."""
+    import pyarrow as pa
+
+    for batch in batches:
+        ids, fp = (c.to_numpy(zero_copy_only=False) for c in batch.columns)
         yield pa.RecordBatch.from_arrays(
-            [pa.array(doc_ids[keep_rows], type=pa.int64()),
-             pa.array(fp.view(np.int64), type=pa.int64())],
-            names=["doc_id", "simhash"])
+            [pa.array(c) for c in _keyed_rows(
+                simhash_block_keys(fp, chunks, max_hamming), ids, fp)],
+            names=["tbl", "key", "doc_id", "fp"])
 
 
 # ---------------------------------------------------------------------------
-# Driver-local pair computation (small-corpus fast path)
-#
-# The distributed LSH DAGs are ~10-14 AQE micro-jobs (kernel scan → rep
-# window → banding/blocking explode → capped bucket agg → pair explode →
-# verify joins); below a few hundred MB of text the whole computation fits
-# comfortably on the driver, where the SAME vectorized kernels run as a
-# handful of numpy passes with zero exchanges and exactly two tiny Spark
-# jobs (a bounded probe + one collect). Same pattern as the BM25
-# small-query driver path. Outputs are IDENTICAL to the distributed DAGs
-# (equality-tested in tests/test_dedup.py): same tokenizer, same xxh64,
-# same Carter-Wegman arithmetic, same band-hash strings, same bucket caps
-# and drop accounting, same rep-collapse star pairs, same exact-verify
-# jaccard / hamming values.
+# LSH buckets → candidate pairs
 # ---------------------------------------------------------------------------
 
 
-def _group_spans(keys: np.ndarray):
-    """Sorted-key group spans: returns (order, starts, ends) such that
-    keys[order[s:e]] is one equal-key group per (s, e)."""
-    order = np.argsort(keys, kind="stable")
-    sk = keys[order]
-    starts = np.nonzero(np.concatenate(([True], sk[1:] != sk[:-1])))[0]
-    ends = np.append(starts[1:], sk.size)
-    return order, starts, ends
+_POPCOUNT16 = np.array([bin(i).count("1") for i in range(1 << 16)],
+                       dtype=np.int64)
 
 
 def _popcount64(x: np.ndarray) -> np.ndarray:
     """Per-element popcount of an int64/uint64 array (numpy<2 has no
-    bitwise_count)."""
-    b = np.unpackbits(x.astype(np.uint64, copy=False).view(np.uint8)
-                      .reshape(-1, 8), axis=1)
-    return b.sum(axis=1).astype(np.int64)
+    bitwise_count): four 16-bit table lookups, ~2× faster than
+    unpackbits."""
+    u = x.view(np.uint64)
+    return (_POPCOUNT16[u & np.uint64(0xFFFF)]
+            + _POPCOUNT16[(u >> np.uint64(16)) & np.uint64(0xFFFF)]
+            + _POPCOUNT16[(u >> np.uint64(32)) & np.uint64(0xFFFF)]
+            + _POPCOUNT16[u >> np.uint64(48)])
+
+
+def _close_buckets(ids, fp, starts, sizes, max_bucket: int,
+                   max_hamming: int | None):
+    """Pairs of complete buckets ``ids[starts[i]:starts[i] + sizes[i]]``
+    (members sorted by id); a bucket over ``max_bucket`` contributes only
+    its size and needs no members. Yields bucket_pairs tuples."""
+    none = np.empty(0, dtype=np.int64)
+    if (sizes > max_bucket).any():
+        yield none, none, none, sizes[sizes > max_bucket]
+    ok = (sizes > 1) & (sizes <= max_bucket)
+    starts, sizes = starts[ok], sizes[ok]
+    # buckets of one size form one (buckets × size) member matrix, so the
+    # pair indices come from one triu_indices per distinct size
+    for s in np.unique(sizes).tolist():
+        st = starts[sizes == s]
+        ix, jx = np.triu_indices(s, 1)
+        step = max(1, _PAIR_BLOCK // ix.size)
+        for i0 in range(0, st.size, step):
+            m = st[i0:i0 + step, None] + np.arange(s)
+            ia, ib = m[:, ix].ravel(), m[:, jx].ravel()
+            sel = ids[ia] < ids[ib]
+            ham = none
+            if max_hamming is not None:
+                ham = _popcount64(fp[ia] ^ fp[ib])
+                sel &= ham <= max_hamming
+                ham = ham[sel]
+            yield ids[ia[sel]], ids[ib[sel]], ham, none
+
+
+def bucket_pairs(chunks, *, max_bucket: int,
+                 max_hamming: int | None = None) -> Iterator:
+    """The LSH bucket → pair kernel of both pair ops and both placements.
+
+    ``chunks``: iterable of ``[tbl, key, doc_id, fp]`` arrays (``fp`` None
+    for minhash) whose concatenation is sorted by ``(tbl, key, doc_id)``;
+    a bucket is one ``(tbl, key)`` run and may span chunks. Yields
+    ``(doc_a, doc_b, hamming, dropped_sizes)`` arrays: every
+    ``doc_a < doc_b`` pair inside each bucket of 2..``max_bucket`` members
+    (simhash: only those with ``hamming ≤ max_hamming``; minhash: empty
+    ``hamming``) and the exact size of every bucket over ``max_bucket``.
+    Pairs repeat across tables; callers dedup them.
+
+    Memory: each chunk's complete buckets are paired vectorized; only its
+    last bucket stays open, as at most ``max_bucket + 1`` member rows plus
+    a count of the rest, so a bucket of any size costs O(max_bucket)
+    across chunks."""
+    cap = max_bucket + 1
+    head, extra = None, 0  # open bucket: ≤ cap rows + members not kept
+    for rows in chunks:
+        if head is not None:
+            rows = [None if r is None else np.concatenate((h, r))
+                    for h, r in zip(head, rows)]
+        tbl, key, ids, fp = rows
+        if ids.size == 0:
+            continue
+        starts = np.flatnonzero(np.concatenate(
+            ([True], (tbl[1:] != tbl[:-1]) | (key[1:] != key[:-1]))))
+        sizes = np.diff(np.append(starts, ids.size))
+        sizes[0] += extra
+        last = starts[-1]
+        head = [None if r is None else r[last:last + cap].copy()
+                for r in rows]
+        extra = int(sizes[-1]) - head[2].size
+        yield from _close_buckets(ids, fp, starts[:-1], sizes[:-1],
+                                  max_bucket, max_hamming)
+    if head is not None:
+        yield from _close_buckets(head[2], head[3], np.zeros(1, np.int64),
+                                  np.array([head[2].size + extra]),
+                                  max_bucket, max_hamming)
+
+
+def bucket_pair_batches(batches, *, max_bucket: int,
+                        max_hamming: int | None = None) -> Iterator:
+    """mapInArrow form of :func:`bucket_pairs` over one partition sorted by
+    (tbl, key, doc_id): (tbl, key, doc_id[, fp]) batches → (doc_a, doc_b
+    [, hamming], dropped) batches. Pair rows have a null ``dropped``; each
+    dropped bucket is one row with null ids and its size in ``dropped``."""
+    import pyarrow as pa
+
+    names = ["doc_a", "doc_b", "hamming", "dropped"]
+    types = [pa.int64(), pa.int64(), pa.int32(), pa.int64()]
+    if max_hamming is None:
+        del names[2], types[2]
+    chunks = ([c.to_numpy(zero_copy_only=False) for c in b.columns]
+              + [None] * (max_hamming is None) for b in batches)
+    for a, b, ham, drops in bucket_pairs(chunks, max_bucket=max_bucket,
+                                         max_hamming=max_hamming):
+        vals = [a, b, ham, None] if a.size else [None, None, None, drops]
+        if max_hamming is None:
+            del vals[2]
+        n = a.size or drops.size
+        if n:
+            yield pa.RecordBatch.from_arrays(
+                [pa.nulls(n, t) if v is None else pa.array(v, type=t)
+                 for v, t in zip(vals, types)], names=names)
+
+
+def _pairs_from_keys(keys: np.ndarray, ids: np.ndarray, *, max_bucket: int,
+                     fp: np.ndarray | None = None,
+                     max_hamming: int | None = None):
+    """Driver form of :func:`bucket_pairs` over an (n × tables) key matrix,
+    as one chunk. Returns (distinct pairs [(doc_a, doc_b[, hamming])...],
+    drop metrics dict)."""
+    by_id = np.argsort(ids, kind="stable")
+    ids, keys = ids[by_id], keys[by_id]
+    fp = None if fp is None else fp[by_id]
+    # stable per-table key sort keeps each bucket's ids ascending
+    order = np.concatenate([t * ids.size + np.argsort(keys[:, t],
+                                                      kind="stable")
+                            for t in range(keys.shape[1])])
+    rows = [None if r is None else r[order]
+            for r in _keyed_rows(keys, ids, fp)]
+    parts = list(zip(*bucket_pairs([rows], max_bucket=max_bucket,
+                                   max_hamming=max_hamming)))
+    a, b, ham, drops = (np.concatenate(c) for c in
+                        parts or [[np.empty(0, dtype=np.int64)]] * 4)
+    cols = [a, b] + ([ham] if max_hamming is not None else [])
+    # hamming is a function of the pair: distinct rows = distinct pairs
+    pairs = np.unique(np.stack(cols, axis=1), axis=0).tolist()
+    return list(map(tuple, pairs)), drop_metrics(drops)
+
+
+def drop_metrics(drops: np.ndarray) -> dict:
+    """Pair-op drop metrics from the sizes of the buckets the cap dropped."""
+    return {"dropped_buckets": int(drops.size),
+            "dropped_doc_entries": int(drops.sum()),
+            "max_dropped_size": int(drops.max(initial=0))}
+
+
+# ---------------------------------------------------------------------------
+# Driver placement (small-corpus fast path): the whole corpus is collected
+# once and the same kernels run on it, with no Spark job after the collect.
+# ---------------------------------------------------------------------------
 
 
 def _rep_collapse(kept_ids: np.ndarray, keys) -> tuple:
@@ -357,202 +534,79 @@ def _rep_collapse(kept_ids: np.ndarray, keys) -> tuple:
     the sorted groups; star members = rows whose id isn't their group
     min). Returns (is_rep bool mask, star list[(rep, member)],
     n_groups_with_extras, n_extra_docs)."""
-    order, starts, ends = _group_spans(np.asarray(keys))
-    gmins = np.minimum.reduceat(kept_ids[order], starts)
+    keys = np.asarray(keys)
+    if keys.size == 0:
+        return np.zeros(0, dtype=bool), [], 0, 0
+    order = np.argsort(keys, kind="stable")
+    sk = keys[order]
+    starts = np.nonzero(np.concatenate(([True], sk[1:] != sk[:-1])))[0]
+    sizes = np.diff(np.append(starts, sk.size))
     rep_of = np.empty(kept_ids.size, dtype=np.int64)
-    rep_of[order] = np.repeat(gmins, ends - starts)
+    rep_of[order] = np.repeat(np.minimum.reduceat(kept_ids[order], starts),
+                              sizes)
     member = kept_ids != rep_of
     star = list(zip(rep_of[member].tolist(), kept_ids[member].tolist()))
-    n_groups = int(np.count_nonzero(ends - starts > 1))
-    return ~member, star, n_groups, len(star)
+    return ~member, star, int(np.count_nonzero(sizes > 1)), len(star)
 
 
 def minhash_pairs_local(ids: np.ndarray, texts, *, a: np.ndarray,
                         b: np.ndarray, bands: int, shingle_n: int,
                         max_bucket: int,
-                        jaccard_threshold: float | None,
-                        perm_block: int = 16) -> dict:
-    """Driver-side MinHash-LSH near-dup pairs over a collected corpus.
-    Value-identical to the distributed ``minhash_lsh_pairs`` DAG.
-
-    Returns {"pairs": [(doc_a, doc_b[, jaccard])...],
-             "metrics": {dropped_buckets, dropped_doc_entries,
-                         max_dropped_size, identical_content_groups,
-                         identical_content_extra_docs}}."""
-    import hashlib
-
+                        jaccard_threshold: float | None) -> tuple:
+    """Driver placement of ``minhash_lsh_pairs`` over a collected corpus:
+    ([(doc_a, doc_b[, jaccard])...], metrics dict), value-identical to the
+    distributed path."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
-    num_hashes = int(a.size)
-    rows_per_band = num_hashes // bands
-    flat, pnp, counts = _tokens_flat(texts)
-    keep = np.nonzero(counts > 0)[0]
-    metrics = {"dropped_buckets": 0, "dropped_doc_entries": 0,
-               "max_dropped_size": 0, "identical_content_groups": 0,
-               "identical_content_extra_docs": 0}
-    if keep.size == 0:
-        return {"pairs": [], "metrics": metrics}
-    kept_ids = ids[keep]
-    texts_py = texts.to_pylist()
-    sha = [hashlib.sha256((texts_py[r] or "").encode("utf-8")).hexdigest()
-           for r in keep]
-    is_rep, star, n_groups, n_extra = _rep_collapse(
-        kept_ids, np.asarray(sha, dtype="S64"))  # fixed-width: C-speed sort
-    metrics["identical_content_groups"] = n_groups
-    metrics["identical_content_extra_docs"] = n_extra
-
-    # signatures for every kept doc (same arithmetic as the mapInArrow
-    # kernel; rows line up with `keep` order)
-    h, par = _shingle_hashes(flat, pnp, counts, shingle_n)
-    sig_starts = np.nonzero(np.concatenate(
-        ([True], par[1:] != par[:-1])))[0]
-    sig = _minhash_sig_matrix(h, sig_starts, a.astype(np.int64),
-                              b.astype(np.int64), perm_block,
+    keep, sig = _minhash_sigs(texts, a, b, shingle_n,
                               threads=DRIVER_KERNEL_THREADS)
-
-    rep_rows = np.nonzero(is_rep)[0]
-    sig_r = sig[rep_rows]
-    rep_ids = kept_ids[rep_rows]
-    cand: set = set()
-    for band_i in range(bands):
-        cols = [pc.cast(pa.array(sig_r[:, band_i * rows_per_band + r]),
-                        pa.string())
-                for r in range(rows_per_band)]
-        joined = (pc.binary_join_element_wise(*cols, ",")
-                  if len(cols) > 1 else cols[0])
-        bh = xxh64_arrow(joined)
-        order, starts, ends = _group_spans(bh)
-        # vectorized group selection: almost every bucket is a singleton,
-        # so iterate only the (few) multi-member ones
-        bsizes = ends - starts
-        for gi in np.nonzero(bsizes > 1)[0]:
-            s, e = starts[gi], ends[gi]
-            sz = e - s
-            if sz > max_bucket:
-                metrics["dropped_buckets"] += 1
-                metrics["dropped_doc_entries"] += int(sz)
-                metrics["max_dropped_size"] = max(
-                    metrics["max_dropped_size"], int(sz))
-                continue
-            members = np.sort(rep_ids[order[s:e]])
-            ix, jx = np.triu_indices(sz, 1)
-            cand.update(zip(members[ix].tolist(), members[jx].tolist()))
-
+    kept_ids = ids[keep]
+    is_rep, star, n_groups, n_extra = _rep_collapse(
+        kept_ids, np.asarray(_content_sha(texts, keep), dtype="S64"))
+    cand, metrics = _pairs_from_keys(
+        minhash_band_keys(sig[is_rep], bands), kept_ids[is_rep],
+        max_bucket=max_bucket)
+    metrics.update(identical_content_groups=n_groups,
+                   identical_content_extra_docs=n_extra)
     if jaccard_threshold is None:
-        pairs = list(cand)
-        pairs.extend(star)
-        return {"pairs": pairs, "metrics": metrics}
+        return cand + star, metrics
 
     # exact-verify candidates on DISTINCT shingle STRING sets (the hashes
     # above are mod-P and could collide; the distributed verify uses
     # shingles_expr strings, so the driver path must too)
-    tok_starts = np.concatenate(([0], np.cumsum(counts)))
-    row_of_id = {int(kept_ids[i]): int(keep[i])
-                 for i in range(keep.size)}
-    sh_cache: dict = {}
-
-    def shingle_set(doc_id: int) -> set:
-        got = sh_cache.get(doc_id)
-        if got is None:
-            r = row_of_id[doc_id]
-            toks = flat.slice(tok_starts[r], counts[r]).to_pylist()
-            if len(toks) < shingle_n:
-                got = {" ".join(toks)}
-            else:
-                got = {" ".join(toks[i:i + shingle_n])
-                       for i in range(len(toks) - shingle_n + 1)}
-            sh_cache[doc_id] = got
-        return got
-
-    pairs = []
-    for (x, y) in cand:
-        sx = shingle_set(x)
-        sy = shingle_set(y)
-        j = len(sx & sy) / len(sx | sy)
-        if j >= jaccard_threshold:
-            pairs.append((x, y, j))
+    row_of = dict(zip(kept_ids.tolist(), keep.tolist()))
+    cand_ids = sorted({d for pair in cand for d in pair})
+    flat, _, counts = _tokens_flat(
+        texts.take(pa.array([row_of[d] for d in cand_ids], pa.int64())))
+    toks = flat.to_pylist()
+    offs = np.cumsum(counts) - counts
+    n = shingle_n
+    sets = {}
+    for d, o, c in zip(cand_ids, offs.tolist(), counts.tolist()):
+        t = toks[o:o + c]  # < n tokens: one whole-text shingle
+        sets[d] = {" ".join(t[i:i + n]) for i in range(max(1, c - n + 1))}
+    pairs = [(x, y, len(sets[x] & sets[y]) / len(sets[x] | sets[y]))
+             for x, y in cand]
+    pairs = [p for p in pairs if p[2] >= jaccard_threshold]
     pairs.extend((ra, rb, 1.0) for ra, rb in star)
-    return {"pairs": pairs, "metrics": metrics}
+    return pairs, metrics
 
 
 def simhash_pairs_local(ids: np.ndarray, texts, *, max_hamming: int,
                         chunks: int, max_bucket: int,
-                        bits: int = 64, bit_block: int = 16) -> dict:
-    """Driver-side SimHash near-dup pairs over a collected corpus.
-    Value-identical to the distributed ``simhash_near_pairs`` DAG (default
-    xxhash64 engine).
-
-    Returns {"pairs": [(doc_a, doc_b, hamming)...],
-             "metrics": {dropped_buckets, dropped_doc_entries,
-                         max_dropped_size, identical_fp_groups,
-                         identical_fp_extra_docs}}."""
-    import itertools
-
-    k = max_hamming
-    flat, pnp, counts = _tokens_flat(texts)
-    keep = np.nonzero(counts > 0)[0]
-    metrics = {"dropped_buckets": 0, "dropped_doc_entries": 0,
-               "max_dropped_size": 0, "identical_fp_groups": 0,
-               "identical_fp_extra_docs": 0}
-    if keep.size == 0:
-        return {"pairs": [], "metrics": metrics}
+                        token_hash: str) -> tuple:
+    """Driver placement of ``simhash_near_pairs`` over a collected corpus:
+    ([(doc_a, doc_b, hamming)...], metrics dict), value-identical to the
+    distributed path."""
+    keep, fp = _simhash_fps(texts, token_hash,
+                            threads=DRIVER_KERNEL_THREADS)
     kept_ids = ids[keep]
-
-    # fingerprints: same bit-vote arithmetic as simhash_batches
-    h = xxh64_arrow(flat).view(np.uint64)
-    starts = np.nonzero(np.concatenate(([True], pnp[1:] != pnp[:-1])))[0]
-    n_occ = counts[keep].astype(np.uint64)
-    fp = _simhash_fingerprints(h, starts, n_occ, bits, bit_block,
-                               threads=DRIVER_KERNEL_THREADS)
-
-    is_rep, star, n_groups, n_extra = _rep_collapse(
-        kept_ids, fp.view(np.int64))
-    metrics["identical_fp_groups"] = n_groups
-    metrics["identical_fp_extra_docs"] = n_extra
-    zero_pairs = [(ra, rb, 0) for ra, rb in star]
-
-    rep_rows = np.nonzero(is_rep)[0]
-    rep_ids = kept_ids[rep_rows]
-    u = fp[rep_rows]
-
-    sizes = [bits // chunks + (1 if i < bits % chunks else 0)
-             for i in range(chunks)]
-    offs = [sum(sizes[:i]) for i in range(chunks)]
-    cand: dict = {}
-    for combo in itertools.combinations(range(chunks), chunks - k):
-        cv = np.zeros(u.size, dtype=np.uint64)
-        shift = 0
-        for c in combo:
-            cv |= (((u >> np.uint64(offs[c]))
-                    & np.uint64((1 << sizes[c]) - 1))
-                   << np.uint64(shift))
-            shift += sizes[c]
-        order, gstarts, gends = _group_spans(cv.view(np.int64))
-        bsizes = gends - gstarts
-        for gi in np.nonzero(bsizes > 1)[0]:
-            s, e = gstarts[gi], gends[gi]
-            sz = e - s
-            if sz > max_bucket:
-                metrics["dropped_buckets"] += 1
-                metrics["dropped_doc_entries"] += int(sz)
-                metrics["max_dropped_size"] = max(
-                    metrics["max_dropped_size"], int(sz))
-                continue
-            rows = order[s:e]
-            srt = np.argsort(rep_ids[rows], kind="stable")
-            rows = rows[srt]
-            bids = rep_ids[rows]
-            bfp = u[rows]
-            # all a<b pairs at once; hamming-filter BEFORE the python
-            # dict so per-pair python cost is paid only by survivors
-            ix, jx = np.triu_indices(sz, 1)
-            ham = _popcount64(bfp[ix] ^ bfp[jx])
-            ok = ham <= k
-            cand.update(zip(
-                zip(bids[ix[ok]].tolist(), bids[jx[ok]].tolist()),
-                ham[ok].tolist()))
-
-    pairs = [(x, y, hm) for (x, y), hm in cand.items()]
-    pairs.extend(zero_pairs)
-    return {"pairs": pairs, "metrics": metrics}
+    is_rep, star, n_groups, n_extra = _rep_collapse(kept_ids, fp)
+    pairs, metrics = _pairs_from_keys(
+        simhash_block_keys(fp[is_rep], chunks, max_hamming),
+        kept_ids[is_rep], max_bucket=max_bucket, fp=fp[is_rep],
+        max_hamming=max_hamming)
+    metrics.update(identical_fp_groups=n_groups,
+                   identical_fp_extra_docs=n_extra)
+    pairs.extend((ra, rb, 0) for ra, rb in star)
+    return pairs, metrics

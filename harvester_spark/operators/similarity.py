@@ -427,8 +427,6 @@ def embedding_near_dup_pairs(emb: DataFrame, *, threshold: float = 0.95,
     Returns (id_a, id_b, cosine ≥ threshold) [, metrics DataFrame]."""
     from pyspark import StorageLevel
 
-    from harvester_spark.operators.dedup import _bucket_drop_metrics
-
     sample = emb.select(vec_col).first()
     dim = len(sample[0])
     planes = hyperplanes(dim, n_planes, seed)
@@ -437,7 +435,13 @@ def embedding_near_dup_pairs(emb: DataFrame, *, threshold: float = 0.95,
     withb = (_ann_build_frame(emb, planes, id_col, vec_col)
              .persist(StorageLevel.MEMORY_ONLY))
     sized = withb.groupBy("bucket").agg(F.count("*").alias("sz"))
-    metrics = _bucket_drop_metrics(sized, max_bucket, ["bucket"])
+    # one-row accounting of the buckets the max_bucket guard dropped
+    metrics = (sized.filter(F.col("sz") > max_bucket)
+               .agg(F.count("*").alias("dropped_buckets"),
+                    F.coalesce(F.sum("sz"), F.lit(0)).cast("long")
+                    .alias("dropped_doc_entries"),
+                    F.coalesce(F.max("sz"), F.lit(0)).cast("long")
+                    .alias("max_dropped_size")))
     keep = (sized.filter((F.col("sz") > 1) & (F.col("sz") <= max_bucket))
             .select("bucket"))
     joinable = withb.join(F.broadcast(keep), "bucket")

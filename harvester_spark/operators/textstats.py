@@ -246,8 +246,8 @@ def hash_split(docs: DataFrame, *, id_col: str = "doc_id",
     is reproducible across runs, machines and engines (no RNG state, no
     sampling order dependence — the property `sample()` cannot give).
 
-    The bucket hash is the md5-prefix form (:func:`~harvester_spark.
-    operators.dedup.md5_hash64_expr` pattern) — bit-identical in DuckDB,
+    The bucket hash is the md5 hex prefix (the pattern of the simhash
+    ``token_hash="md5"`` token hash) — bit-identical in DuckDB,
     so the split is oracle-checkable. The test FRACTION is always
     ``test_per_10k`` / 10,000 regardless of ``buckets`` (the cutoff is
     rescaled to the bucket space — overriding ``buckets`` for finer or

@@ -18,6 +18,34 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
            "NUMEXPR_NUM_THREADS", "VECLIB_MAXIMUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
+# local mode runs every task thread in the driver JVM: the default heap is
+# half of physical RAM (the rest is left to Python workers and the page
+# cache), capped at the size the 32-thread sort/write stages were tuned on
+_DRIVER_HEAP_CAP_MB = 48 << 10
+# shuffle scratch goes to RAM-backed /dev/shm only with this much free
+# space; a nearly full tmpfs fails tasks with ENOSPC instead of spilling
+_SHM_MIN_FREE_BYTES = 4 << 30
+
+
+def default_driver_memory(sysconf=os.sysconf) -> str:
+    """Driver heap for ``spark.driver.memory``: half of physical RAM,
+    at most 48g."""
+    ram = sysconf("SC_PAGE_SIZE") * sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, min(_DRIVER_HEAP_CAP_MB, ram // 2 >> 20))}m"
+
+
+def default_local_dir(statvfs=os.statvfs) -> str | None:
+    """``/dev/shm/spark-local`` when /dev/shm is writable and has at least
+    4 GiB free, else None (Spark's default scratch directory)."""
+    try:
+        st = statvfs("/dev/shm")
+    except OSError:
+        return None
+    if (st.f_bavail * st.f_frsize >= _SHM_MIN_FREE_BYTES
+            and os.access("/dev/shm", os.W_OK)):
+        return "/dev/shm/spark-local"
+    return None
+
 
 def get_spark(
     app_name: str = "harvester_spark",
@@ -46,10 +74,7 @@ def get_spark(
     # tmpfs, pure fixed overhead multiplied by every exchange in a query.
     # On a real cluster spark.local.dir comes from the cluster manager
     # (NVMe mounts); the env override is the deployment knob here.
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm") and os.access(
-            "/dev/shm", os.W_OK):
-        local_dir = "/dev/shm/spark-local"
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR", default_local_dir())
 
     builder = (
         SparkSession.builder.master(os.environ.get("SPARK_MASTER", f"local[{cores}]"))
@@ -73,9 +98,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # local mode: the driver JVM runs every task thread — size the heap
-        # for the concurrency (32 threads sorting/writing on 8g = GC storm)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()))
         .config("spark.ui.enabled", "false")
         # Arrow-native UDF execution path (Spark 4): faster pandas UDF serde.
         .config("spark.sql.execution.pythonUDF.arrow.enabled", "true")

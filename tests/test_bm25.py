@@ -299,3 +299,29 @@ def test_pruning_metrics_deterministic_across_runs(spark, index_dir):
             runs.append((m.get("blocks_scored"), m.get("blocks_total"),
                          [(r.doc_id, round(r.score, 9)) for r in rows]))
         assert runs[0] == runs[1], (q, mode, runs)
+
+
+def test_per_query_caches_bounded(spark, corpus_df, oracle):
+    """Each bm25_scores query caches one projection; a session keeps only
+    the 4 newest (older ones are unpersisted), and a query whose cache was
+    released still answers correctly."""
+    from harvester_spark.operators.bm25 import bm25_scores
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    results = [bm25_scores(corpus_df, f"import ident_{i}")
+               for i in range(10)]
+    kept = set(jsc.getPersistentRDDs().keys()) - before
+    assert 1 <= len(kept) <= 4, kept
+
+    def cached(df):  # is df's own projection (tf columns) a cached relation?
+        plan = df.select("*")._jdf.queryExecution().withCachedData()
+        return any("InMemoryRelation" in line and "__tf0" in line
+                   for line in plan.toString().splitlines())
+
+    assert cached(results[-1])
+    assert not cached(results[0])
+    got = (results[0].orderBy(results[0].score.desc(), "doc_id").limit(10)
+           .toPandas())
+    assert_rank_identical(got, oracle.topk(tokenize_query("import ident_0"),
+                                           10), "released cache")

@@ -189,27 +189,6 @@ def test_minhash_identical_cluster_bounded_output(spark, monkeypatch):
     assert m["identical_content_extra_docs"] == 9_999
 
 
-def test_capped_bucket_agg_bounds_buffer(spark):
-    """The collect_list agg buffer must hold at most max_bucket+1 entries
-    even for a mega-bucket — the row_number pre-cap runs BEFORE the
-    aggregation (r4 verdict #1: the old post-agg filter still built the
-    full array on one reducer first)."""
-    from harvester_spark.operators.dedup import _capped_bucket_agg
-    rows = spark.range(5_000).select(F.lit(1).alias("k"),
-                                     F.col("id").alias("doc_id"))
-    out = _capped_bucket_agg(rows, ["k"], "doc_id", F.col("doc_id"), "ids",
-                             10).collect()
-    assert len(out) == 1
-    assert out[0]["sz"] == 5_000                # exact, uncapped count
-    assert out[0]["ids"] == list(range(11))     # max_bucket+1 witness
-    # under-cap buckets keep their full membership
-    small = spark.range(5).select(F.lit(2).alias("k"),
-                                  F.col("id").alias("doc_id"))
-    out2 = _capped_bucket_agg(small, ["k"], "doc_id", F.col("doc_id"),
-                              "ids", 10).collect()
-    assert out2[0]["ids"] == list(range(5)) and out2[0]["sz"] == 5
-
-
 def test_simhash_manku_blocking_recall(spark):
     """Multi-table blocking (C>k+1) must recover every planted near-dup
     pair at a corpus 10x the unit-test scale, with zero silent drops."""
@@ -271,24 +250,26 @@ def test_simhash_components_preserved_under_collapse(spark):
 
 
 def test_lsh_metrics_do_not_recompute_banding(spark, monkeypatch):
-    """VERDICT r2: with_metrics=True must cache the bucket table so that
-    consuming pairs AND metrics runs shingling+banding once (the pairs
-    plan reads the cache). Distributed-path property (the driver fast
-    path has no bucket table to cache)."""
+    """The distributed path checkpoints the bucket kernel's output before
+    it returns: consuming pairs AND metrics afterwards reads that
+    checkpoint (and a local metrics row) and never runs the bucket kernel,
+    or the exchange on its bucket key, again."""
     from harvester_spark.operators import dedup as dd
     monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 0)
-    same = "import numpy def main return value data result"
-    docs = spark.createDataFrame([(i, same) for i in range(8)],
-                                 "doc_id long, content string")
-    pairs, metrics = minhash_lsh_pairs(docs, max_bucket=100,
-                                       with_metrics=True)
-    metrics.collect()  # materializes the cached bucket table
-    assert "InMemoryTableScan" in pairs._jdf.queryExecution().executedPlan() \
-        .toString() or "InMemoryRelation" in pairs._jdf.queryExecution() \
-        .toString()
-    sp, sm = simhash_near_pairs(docs, chunks=4, with_metrics=True)
-    sm.collect()
-    assert "InMemoryRelation" in sp._jdf.queryExecution().toString()
+    docs = spark.createDataFrame(
+        [(i, f"import numpy def main return value data result tok{i % 3}")
+         for i in range(8)], "doc_id long, content string")
+    for pairs, metrics in (minhash_lsh_pairs(docs, max_bucket=100,
+                                             with_metrics=True),
+                           simhash_near_pairs(docs, chunks=4,
+                                              with_metrics=True)):
+        metrics.collect()
+        pairs.collect()
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" in plan             # the checkpointed output
+        assert "hashpartitioning(tbl" not in plan, plan
+        assert "MapInArrow" not in metrics._jdf.queryExecution() \
+            .executedPlan().toString()
 
 
 def _uf_components(edges):
@@ -371,14 +352,13 @@ def test_simhash_chunk_plan_scales():
 
 def test_bucket_drop_warning_fires_without_metrics(spark, monkeypatch):
     """with_metrics=False must still surface max_bucket drops (r3 ADVICE:
-    silent recall regression) — the daemon watcher warns after the first
-    action over the candidate plan."""
-    import time
+    silent recall regression): the distributed path warns before the call
+    returns, with no action on the result and no waiting."""
     import warnings
 
     from harvester_spark.operators import dedup as dd
 
-    monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 0)  # watcher path
+    monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 0)  # distributed
 
     docs = spark.createDataFrame(
         [(i, f"the same boilerplate text repeated everywhere tok{i}")
@@ -386,41 +366,10 @@ def test_bucket_drop_warning_fires_without_metrics(spark, monkeypatch):
         "doc_id long, content string")
     with warnings.catch_warnings(record=True) as rec:
         warnings.simplefilter("always")
-        simhash_near_pairs(docs, max_bucket=2, n_docs=30).count()
-        deadline = time.time() + 20
-        while time.time() < deadline:
-            if any("simhash_near_pairs: max_bucket=2 dropped"
-                   in str(x.message) for x in rec):
-                break
-            time.sleep(0.25)
+        simhash_near_pairs(docs, max_bucket=2, n_docs=30)
     msgs = [str(x.message) for x in rec
             if issubclass(x.category, RuntimeWarning)]
     assert any("simhash_near_pairs: max_bucket=2 dropped" in m for m in msgs)
-
-
-def test_abandoned_plan_releases_watcher(spark, monkeypatch):
-    """r4 ADVICE: a candidate plan that is never executed must not park a
-    watcher daemon for the session lifetime — the poller exits at the
-    timeout."""
-    import threading
-    import time
-
-    from harvester_spark.operators import dedup as dd
-
-    monkeypatch.setattr(dd, "_WATCH_TIMEOUT_S", 2.0)
-    monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 0)  # watcher path
-    before = {id(t) for t in threading.enumerate()}
-    docs = spark.createDataFrame([(i, f"words tok{i}") for i in range(5)],
-                                 "doc_id long, content string")
-    dd.simhash_near_pairs(docs, max_bucket=2, n_docs=5)  # plan abandoned
-    new = [t for t in threading.enumerate()
-           if id(t) not in before and t.name.endswith("bucket-drop-watch")]
-    assert new, "watcher thread was not started"
-    deadline = time.time() + 15
-    while time.time() < deadline and any(t.is_alive() for t in new):
-        time.sleep(0.25)
-    assert not any(t.is_alive() for t in new), \
-        "watcher still parked after the abandoned-plan timeout"
 
 
 def test_exact_duplicates_bounded_group_payload(spark):
@@ -492,17 +441,60 @@ def _kernel_parity_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, content string")
 
 
+def _jvm_minhash_signatures(docs, shingle_n, num_hashes=64, seed=42):
+    """Spark SQL reference for minhash_signatures: explode the shingles,
+    then one min aggregate per permutation."""
+    from harvester_spark.operators.dedup import (MERSENNE_P, _perm_params,
+                                                 shingles_expr)
+
+    a, b = _perm_params(num_hashes, seed)
+    sh = (docs.select("doc_id", F.explode(shingles_expr("content", shingle_n))
+                      .alias("sh"))
+          .withColumn("h", F.pmod(F.xxhash64("sh"), F.lit(MERSENNE_P))))
+    sig = sh.groupBy("doc_id").agg(*[
+        F.min((F.col("h") * F.lit(int(a[i])) + F.lit(int(b[i])))
+              % F.lit(MERSENNE_P))
+        .alias(f"h{i}") for i in range(num_hashes)])
+    return sig.select("doc_id", F.array(*[f"h{i}" for i in range(num_hashes)])
+                      .alias("sig"))
+
+
+def _md5_hash64(c):
+    """64-bit token hash from the md5 hex prefix, as DuckDB computes it
+    with ``('0x' || substr(md5(t), 1|9, 8))::BIGINT``."""
+    hi = F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
+    lo = F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long")
+    return F.shiftleft(hi, 32).bitwiseOR(lo)
+
+
+def _jvm_simhash(docs, hash_expr):
+    """Spark SQL reference for simhash: explode the tokens, count the set
+    bits per position; bit set ⟺ 2·ones > occurrences."""
+    from harvester_spark.functions.tokenize import tokens_expr
+
+    tok = (docs.select("doc_id", F.explode(tokens_expr("content")).alias("t"))
+           .withColumn("h", hash_expr(F.col("t"))))
+    agg = tok.groupBy("doc_id").agg(F.count("*").alias("n_occ"), *[
+        F.sum(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)))
+        .alias(f"b{i}") for i in range(64)])
+    return agg.select("doc_id", sum(
+        (F.when(F.col(f"b{i}") * 2 > F.col("n_occ"),
+                F.shiftleft(F.lit(1).cast("long"), i))
+         .otherwise(F.lit(0).cast("long")) for i in range(64)),
+        start=F.lit(0).cast("long")).alias("simhash"))
+
+
 def test_minhash_kernel_matches_jvm_signatures(spark):
     """r6: the mapInArrow signature kernel must produce VALUE-IDENTICAL
-    (doc_id, sig) rows to the JVM explode+aggregate form — bit-exact
+    (doc_id, sig) rows to the Spark SQL explode+aggregate form — bit-exact
     xxhash64 + same Carter-Wegman arithmetic — across every doc edge
     (empty/null/short/duplicate-shingle/unicode)."""
     docs = _kernel_parity_docs(spark)
     for n in (1, 2, 3):
-        jvm = {r["doc_id"]: r["sig"] for r in minhash_signatures(
-            docs, shingle_n=n, use_kernel=False).collect()}
+        jvm = {r["doc_id"]: r["sig"]
+               for r in _jvm_minhash_signatures(docs, n).collect()}
         ker = {r["doc_id"]: r["sig"] for r in minhash_signatures(
-            docs, shingle_n=n, use_kernel=True).collect()}
+            docs, shingle_n=n).collect()}
         assert ker == jvm, f"shingle_n={n}"
 
 
@@ -515,22 +507,25 @@ def test_minhash_kernel_sha_matches_spark_sha2(spark):
         "doc_id", F.sha2(F.col("content"), 256).alias("s")).collect()}
     got = {r["doc_id"]: r["csha"] for r in _minhash_signatures_kernel(
         docs, content_col="content", id_col="doc_id", num_hashes=8,
-        shingle_n=3, seed=42, with_sha=True).collect()}
+        shingle_n=3, seed=42, bands=4).collect()}
     for d, sha in got.items():  # kernel drops zero-token docs
         assert sha == want[d]
 
 
 def test_simhash_kernel_matches_jvm(spark):
-    """r6: the default-path simhash kernel must emit identical
-    (doc_id, simhash) rows to the JVM sign-sum aggregation."""
-    from pyspark.sql import functions as F
-
+    """r6: the simhash kernel must emit identical (doc_id, simhash) rows to
+    the Spark SQL sign-sum aggregation, for both token hashes; an unknown
+    token hash is rejected."""
     docs = _kernel_parity_docs(spark)
-    jvm_fp = simhash(docs, hash_expr=lambda c: F.xxhash64(c))  # JVM form
-    ker_fp = simhash(docs)                                     # kernel
-    jvm = {r["doc_id"]: r["simhash"] for r in jvm_fp.collect()}
-    ker = {r["doc_id"]: r["simhash"] for r in ker_fp.collect()}
-    assert ker == jvm
+    for token_hash, hash_expr in (("xxhash64", F.xxhash64),
+                                  ("md5", _md5_hash64)):
+        jvm = {r["doc_id"]: r["simhash"]
+               for r in _jvm_simhash(docs, hash_expr).collect()}
+        ker = {r["doc_id"]: r["simhash"]
+               for r in simhash(docs, token_hash=token_hash).collect()}
+        assert ker == jvm, token_hash
+    with pytest.raises(ValueError, match="token_hash"):
+        simhash(docs, token_hash="sha1")
 
 
 # --- r6: driver small-corpus fast path must equal the distributed DAG ---
@@ -556,21 +551,40 @@ def _rows_set(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _both_placements(spark, monkeypatch, op, docs, kwargs):
+    """(driver result, distributed result) of one pair op. An
+    ``arrow_batch`` entry in kwargs sets Arrow's records-per-batch for both
+    runs, so the distributed bucket kernel sees buckets split across
+    batches."""
+    from harvester_spark.operators import dedup as dd
+
+    kwargs = dict(kwargs)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, str(kwargs.pop("arrow_batch", saved)))
+    try:
+        got = op(docs, **kwargs)                        # driver path
+        monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 0)
+        want = op(docs, **kwargs)                       # distributed
+    finally:
+        spark.conf.set(conf, saved)
+    return got, want
+
+
 @pytest.mark.parametrize("kwargs", [
     dict(jaccard_threshold=0.5, with_metrics=True),
     dict(jaccard_threshold=None, with_metrics=True),
     dict(jaccard_threshold=0.3, with_metrics=True, max_bucket=1),
     dict(jaccard_threshold=0.5, with_metrics=False, shingle_n=2),
+    dict(jaccard_threshold=0.5, with_metrics=True, max_bucket=2,
+         shingle_n=1, arrow_batch=3),
 ])
 def test_minhash_driver_path_equals_distributed(spark, monkeypatch, kwargs):
     """The small-corpus driver path must produce EXACTLY the rows (incl.
-    float-identical jaccard) and metrics of the distributed DAG."""
-    from harvester_spark.operators import dedup as dd
-
+    float-identical jaccard) and metrics of the distributed path."""
     docs = _fastpath_docs(spark)
-    got = dd.minhash_lsh_pairs(docs, **kwargs)          # driver path
-    monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 0)
-    want = dd.minhash_lsh_pairs(docs, **kwargs)         # distributed
+    got, want = _both_placements(spark, monkeypatch, minhash_lsh_pairs,
+                                 docs, kwargs)
     if kwargs.get("with_metrics"):
         got, gm = got
         want, wm = want
@@ -586,14 +600,14 @@ def test_minhash_driver_path_equals_distributed(spark, monkeypatch, kwargs):
     dict(max_hamming=6, chunks=8, with_metrics=True),
     dict(max_hamming=3, with_metrics=True, max_bucket=1),
     dict(max_hamming=16, chunks=17, with_metrics=False),
+    dict(max_hamming=16, chunks=17, with_metrics=True, max_bucket=3,
+         arrow_batch=3),
+    dict(max_hamming=6, chunks=8, with_metrics=True, token_hash="md5"),
 ])
 def test_simhash_driver_path_equals_distributed(spark, monkeypatch, kwargs):
-    from harvester_spark.operators import dedup as dd
-
     docs = _fastpath_docs(spark)
-    got = dd.simhash_near_pairs(docs, **kwargs)         # driver path
-    monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 0)
-    want = dd.simhash_near_pairs(docs, **kwargs)        # distributed
+    got, want = _both_placements(spark, monkeypatch, simhash_near_pairs,
+                                 docs, kwargs)
     if kwargs.get("with_metrics"):
         got, gm = got
         want, wm = want
@@ -627,6 +641,54 @@ def test_driver_path_respects_byte_budget(spark, monkeypatch):
     monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 5)
     monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_BYTES", 1 << 30)
     assert dd._collect_small_docs(docs, "content", "doc_id") is None
+
+
+def test_bucket_pairs_streams_buckets_across_batches():
+    """The bucket kernel on a lazily generated sorted row stream in small
+    batches: buckets of 1, 2, 5, 13 and 10^5 members (the last crossing
+    thousands of batches), max_bucket=8. Pairs and drop sizes equal a
+    brute-force group-by, and peak memory stays far below the big
+    bucket's own footprint (only one open bucket, capped at max_bucket+1
+    rows, is carried between batches)."""
+    import tracemalloc
+    from itertools import combinations
+
+    from harvester_spark.operators.dedup_kernels import bucket_pairs
+
+    bounds = np.cumsum([1, 2, 5, 13, 100_000, 2, 1])
+    max_bucket, k = 8, 1
+
+    def stream(batch):  # row r: bucket searchsorted(bounds, r), id = fp = r
+        for r0 in range(0, int(bounds[-1]), batch):
+            r = np.arange(r0, min(r0 + batch, int(bounds[-1])))
+            yield [np.zeros(r.size, np.int32),
+                   np.searchsorted(bounds, r, side="right"), r, r]
+
+    want, want_drops = set(), []
+    for lo, hi in zip(np.append(0, bounds[:-1]).tolist(), bounds.tolist()):
+        if hi - lo > max_bucket:
+            want_drops.append(hi - lo)
+            continue
+        want |= {(x, y, bin(x ^ y).count("1"))
+                 for x, y in combinations(range(lo, hi), 2)
+                 if bin(x ^ y).count("1") <= k}
+
+    def run(batch):
+        got, drops = set(), []
+        for a, b, ham, d in bucket_pairs(stream(batch), max_bucket=max_bucket,
+                                         max_hamming=k):
+            got.update(zip(a.tolist(), b.tolist(), ham.tolist()))
+            drops.extend(d.tolist())
+        assert got == want and sorted(drops) == sorted(want_drops), batch
+
+    run(3)  # every small bucket split across batches
+    tracemalloc.start()  # traced separately: tracing slows numpy a lot
+    try:
+        run(64)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 100_000 * 4 * 8 / 10, peak  # vs the bucket's 4 columns
 
 
 def test_unique_table_kernels_match_direct_form():
