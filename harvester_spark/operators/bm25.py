@@ -109,7 +109,7 @@ def bm25_scores(docs: DataFrame, query: str, *, id_col: str = "doc_id",
     terms = tokenize_query(query)
     spark = docs.sparkSession
     if not terms:
-        return spark.createDataFrame([], SCORE_SCHEMA)
+        return tables.empty_frame(spark, SCORE_SCHEMA)
     if len(terms) > _SCORES_MAX_TF_COLS:
         return _bm25_scores_tokens(docs, terms, id_col=id_col,
                                    content_col=content_col, mode=mode,
@@ -138,7 +138,7 @@ def bm25_scores(docs: DataFrame, query: str, *, id_col: str = "doc_id",
     if not row["N"] or row["avgdl"] is None:
         # empty corpus, or every content NULL (all tf null → no doc can
         # ever pass the nt filter) — same empty result the lazy form gave
-        return spark.createDataFrame([], SCORE_SCHEMA)
+        return tables.empty_frame(spark, SCORE_SCHEMA)
     n_lit = F.lit(row["N"])
     avgdl_lit = F.lit(float(row["avgdl"]))
     parts = []
@@ -667,7 +667,7 @@ def _topk_small_query(spark: SparkSession, blocks: DataFrame,
     pdf = (blocks.select("term", "doc_id_first", "doc_count",
                          "deltas", "tfs", "dls").toPandas())
     if not len(pdf):
-        return spark.createDataFrame([], SCORE_SCHEMA)
+        return tables.empty_frame(spark, SCORE_SCHEMA)
     frames = []
     for t, grp in pdf.groupby("term"):
         dec = _decode_block_rows(grp, idf_by_term, k1, b, avgdl)
@@ -734,13 +734,13 @@ def query_topk_index(spark: SparkSession,
     k1, b, avgdl = meta["k1"], meta["b"], meta["avgdl"]
 
     if not terms:
-        return spark.createDataFrame([], SCORE_SCHEMA)
+        return tables.empty_frame(spark, SCORE_SCHEMA)
 
     info = handle.lookup(terms)
     idf_by_term = {t: v["idf"] for t, v in info.items()}
     present = [t for t in terms if t in idf_by_term]
     if not present or (mode == "and" and len(present) < len(terms)):
-        return spark.createDataFrame([], SCORE_SCHEMA)
+        return tables.empty_frame(spark, SCORE_SCHEMA)
 
     postings = (handle.postings
                 .filter(F.col("term").isin(present)))  # pushed to scan

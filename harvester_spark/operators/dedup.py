@@ -15,10 +15,11 @@ generalize here to corpus-scale document dedup, all DataFrame-first:
   LSH candidates, or small probe sets).
 
 Both LSH pair ops run the kernels of dedup_kernels.py in one of two
-placements, picked by corpus size (``_collect_small_docs``): on the
-driver over the collected corpus (two small jobs), or distributed, where
-the keyed rows are repartitioned and sorted on the bucket key and the same
-``bucket_pairs`` kernel streams each partition. Either way the drop
+placements, picked by corpus size against the driver budget the index
+build shares (``tables.collect_small``): on the driver over the collected
+corpus (two small jobs), or distributed, where the keyed rows are
+repartitioned and sorted on the bucket key and the same ``bucket_pairs``
+kernel streams each partition. Either way the drop
 metrics exist before the call returns: buckets over ``max_bucket`` are
 dropped, never silently.
 """
@@ -29,49 +30,18 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from harvester_spark import tables
 from harvester_spark.functions.tokenize import tokens_expr
-
-# Small-corpus driver placement (minhash_lsh_pairs / simhash_near_pairs):
-# below these budgets the whole corpus is collected once and the pairs are
-# computed by the SAME kernels on the driver — two tiny jobs instead of the
-# distributed stages, whose fixed per-stage costs dominate wall time at
-# sub-GB corpus sizes (measured in OPTIMIZATION_r06.md; same pattern as
-# bm25's small_query_postings path). The byte cap sits at the MEASURED
-# crossover, not a memory limit: the local kernels cost ~0.2-0.35 s/MB
-# single-core while the distributed path pays ~5-8 s of fixed
-# stage/scheduling overhead before its parallelism helps (numbers in
-# OPTIMIZATION_r06.md), so ≤32 MB of text is where the driver wins
-# outright. Above the caps the distributed path runs, which is the only
-# path a 100 TB corpus can ever take — the probe job reads at most cap+1
-# rows before falling back.
-_DRIVER_PAIRS_MAX_DOCS = 262_144
-_DRIVER_PAIRS_MAX_BYTES = 32 << 20
 
 
 def _collect_small_docs(docs: DataFrame, content_col: str, id_col: str):
-    """(ids int64 ndarray, texts pa.Array, n_docs) when the corpus fits
-    the driver budgets, else None. One bounded probe job (reads ≤ cap+1
-    rows) + one collect."""
-    cap = _DRIVER_PAIRS_MAX_DOCS
-    # limit().collect() executes as an INCREMENTAL take (executeTake: one
-    # partition, then 4x more per round) — a 100 TB corpus finds its
-    # cap+1-th row after a handful of partitions and falls through; a
-    # limit().agg() form would instead run a LocalLimit task in EVERY
-    # partition. Only byte lengths travel, not content.
-    lens = (docs.select(F.coalesce(F.octet_length(F.col(content_col)),
-                                   F.lit(0)).alias("nb"))
-            .limit(cap + 1).collect())
-    if len(lens) > cap or sum(r["nb"] for r in lens) > _DRIVER_PAIRS_MAX_BYTES:
+    """(ids int64 ndarray, texts chunked pa array, n_docs) when the corpus
+    fits the shared driver budget (``tables.collect_small``), else None."""
+    tbl = tables.collect_small(docs, id_col, content_col)
+    if tbl is None:
         return None
-    tbl = docs.select(F.col(id_col).cast("long").alias("doc_id"),
-                      F.col(content_col).alias("content")).toArrow()
-    ids = tbl.column("doc_id").to_numpy(
-        zero_copy_only=False).astype(np.int64)
-    # keep the column CHUNKED (one chunk per collected batch): pyarrow
-    # compute parallelizes across chunks, so the driver-path tokenizer
-    # runs on the raised thread pool instead of one core
-    texts = tbl.column("content")
-    return ids, texts, int(ids.size)
+    ids = tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
+    return ids, tbl.column("content"), int(ids.size)
 
 
 def _pairs_drop_warning(metrics: dict, max_bucket: int, what: str) -> None:
@@ -255,7 +225,7 @@ def _pairs_df(spark, rows: list, schema: str):
 
     names = [f.split()[0] for f in schema.split(",")]
     if not rows:
-        return spark.createDataFrame([], schema)
+        return tables.empty_frame(spark, schema)
     pdf = pd.DataFrame(rows, columns=names)
     return spark.createDataFrame(pdf, schema)
 

@@ -59,7 +59,8 @@ from typing import Iterable, Iterator
 MAGIC = b"HSDSEG1\n"
 # the tables module's marker, imported (not re-declared) so stage-resume
 # treats the segment like any other stage output even if the name changes
-from harvester_spark.tables import SUCCESS_MARKER, read_table  # noqa: E402
+from harvester_spark.tables import (SUCCESS_MARKER, num_rows,  # noqa: E402
+                                    read_arrow, read_table)
 
 MANIFEST = "manifest.json"
 
@@ -262,24 +263,19 @@ def write_index_segment(spark, index_dir: str | Path, out_dir: str | Path,
     plus ``writer`` (``"driver"`` or ``"distributed"``). Raises
     ``FileNotFoundError`` naming the stage when an input stage is absent."""
     import pandas as pd
-    import pyarrow.parquet as pq
 
     index_dir = Path(index_dir)
-    files = {}
     for stage in ("dictionary", "term_ub"):
-        d = index_dir / stage
-        if not d.is_dir():
+        if not (index_dir / stage).is_dir():
             raise FileNotFoundError(
                 f"cannot write the dictionary segment: stage {stage!r} is "
                 f"missing under {index_dir}")
-        files[stage] = sorted(d.glob("*.parquet"))
-    n_terms = sum(pq.ParquetFile(f).metadata.num_rows
-                  for f in files["dictionary"])
+    n_terms = num_rows(index_dir / "dictionary")
     if n_terms <= DRIVER_MAX_TERMS:
-        dt = pq.read_table(files["dictionary"],
-                           columns=["term", "df", "idf"]).to_pandas()
-        ub = pq.read_table(files["term_ub"],
-                           columns=["term", "max_tfnorm"]).to_pandas()
+        dt = read_arrow(index_dir / "dictionary",
+                        columns=["term", "df", "idf"]).to_pandas()
+        ub = read_arrow(index_dir / "term_ub",
+                        columns=["term", "max_tfnorm"]).to_pandas()
         dt = (dt.merge(ub, on="term", how="left")
               .sort_values("term", kind="mergesort"))  # == UTF-8 byte order
         rows = ((t, int(df_), float(idf), None if pd.isna(mt) else float(mt))

@@ -6,36 +6,57 @@ Pipeline (each stage a materialized, resumable checkpoint — the analogue of
 the reference's per-run ingest doc + ``last_seq`` watermark,
 harvester/fetcher/controller.py:159-212, solr_updater.py:776-791):
 
-  S1 packed      map-side posting packs: per (term, arrow-batch) varint
-                 sub-lists — THE shuffle-volume optimization (see below);
-                 one pass over content, no shuffle
-  S2 stats       N, avgdl — derived from pack metadata, no second pass
+  S1 packed      posting packs: per (term, pack set) varint sub-lists —
+                 THE shuffle-volume optimization (see below); one pass
+                 over content
+  S2 stats       N, avgdl, text bytes — no second pass over content
   S3 dictionary  (term, df, cf, idf)        tiny agg over pack metadata
-  S4 postings    term-sharded merge of packs → final delta+varint blocks
-                 with block-max metadata; hot terms salted
+  S4 postings    term-grouped merge of packs → final delta+varint blocks
+                 with block-max metadata
   S5 term_ub     per-term score upper bound (max block_max_tfnorm)
   S6 dictseg     front-coded term dictionary (operators/dictseg.py), the
                  lookup every query starts with
-  S7 lineage     per-partition build provenance (concurrent with S5→S6)
+  S7 lineage     per-partition build provenance
 
-Why map-side packing (S3) instead of shuffling (doc_id, term, tf) rows:
-a code corpus at 10^12 files produces ~10^14 posting rows; shuffling them
-as rows costs ~40 B each (columns + shuffle framing) while the same posting
-packed map-side costs ~4-6 B (varint gap + tf + dl). Pre-aggregation into
-packs cuts the only unavoidable shuffle by ~7× AND removes the need to
+Two placements of one kernel chain (``pack_batch`` → ``_decode_packs`` →
+``_encode_blocks``), picked by input size against the driver budget the
+dedup ops share (``tables.collect_small``):
+
+- **driver** (≤ 262,144 docs and 32 MB of text): the input is collected
+  once, the chain runs once over it as a single pack set, and every stage
+  is written with pyarrow through the same atomic commits — no Spark job
+  after the probe and the collect. A CDC delta or a fixture-sized corpus
+  builds in a fraction of a second instead of paying each distributed
+  stage's fixed cost. The idf uses an fdlibm port (:func:`fdlibm_log`) so
+  the dictionary equals the distributed one bit for bit.
+- **distributed**: S1 packs map-side inside ``mapInPandas`` tasks, S4 is a
+  shuffle of packs by (term, salt) and a streaming merge; hot terms are
+  salted and the merge can be split into resumable shard groups.
+
+The tail (S5-S7) runs on the driver with pyarrow up to
+``dictseg.DRIVER_MAX_TERMS`` terms and as Spark jobs above, for either
+placement. Segment merges (:func:`build_index_from_rows` and
+:func:`write_rows_index`) reuse the same encoder and tail.
+
+Why packing (S1) instead of shuffling (doc_id, term, tf) rows: a code
+corpus at 10^12 files produces ~10^14 posting rows; shuffling them as rows
+costs ~40 B each (columns + shuffle framing) while the same posting packed
+map-side costs ~4-6 B (varint gap + tf + dl). Pre-aggregation into packs
+cuts the only unavoidable shuffle by ~7× AND removes the need to
 materialize a row-form term-doc table at all. Measured on this sandbox the
 row-shuffle saturated memory bandwidth at 4 cores; packs restore scaling.
 
-Skew: pack merge groups by (term, salt) where hot terms (df above
-threshold, detected from pack metadata — the heavy-hitter pass) spread
-their packs across ``s(term) = ceil(df / salt_range_docs)`` salts by
+Skew (distributed side): pack merge groups by (term, salt) where hot terms
+(df above threshold, detected from pack metadata — the heavy-hitter pass)
+spread their packs across ``s(term) = ceil(df / salt_range_docs)`` salts by
 pack partition id. Merged blocks of different salts may overlap in doc-id
 range; scoring accumulates per doc_id so overlap is harmless, and tests
 enforce decoded-content equality salted vs unsalted.
 
 Vectorization: tokenization + TF via pyarrow kernels; pack/merge encode via
-numpy (single varint stream per batch, sliced per pack/block). No per-row
-Python anywhere.
+numpy (single varint stream per batch, sliced per pack/block), on either
+placement. The only Python loops run once per pack or block (byte
+slicing), never once per posting.
 
 INVARIANT: ``doc_id`` must be UNIQUE across the corpus (use
 operators/docids.assign_doc_ids). Duplicate ids silently merge distinct
@@ -48,6 +69,7 @@ way: a corpus produced by the pre-fix nondeterministic assign_doc_ids had
 
 from __future__ import annotations
 
+import functools
 import json
 import time
 from dataclasses import dataclass, field
@@ -132,6 +154,27 @@ POSTINGS_SCHEMA = StructType([
     StructField("part_id", IntegerType()),
 ])
 
+DICTIONARY_SCHEMA = StructType([
+    StructField("term", StringType()),
+    StructField("df", LongType()),
+    StructField("cf", LongType()),
+    StructField("idf", DoubleType()),
+])
+
+
+def _arrow(pdf: pd.DataFrame | None, schema: StructType):
+    """A kernel's pandas output as a ``pa.Table`` of the Spark stage's
+    schema (None → empty), so driver-written stages read back exactly like
+    Spark-written ones."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    sch = to_arrow_schema(schema)
+    if pdf is None or not len(pdf):
+        return sch.empty_table()
+    return pa.Table.from_pandas(pdf[sch.names], schema=sch,
+                                preserve_index=False)
+
 
 # --------------------------------------------------------------------------
 # vectorized helpers
@@ -159,6 +202,66 @@ def _slice_stream(values: np.ndarray, starts: np.ndarray,
 def _tfnorm(tf: np.ndarray, dl: np.ndarray, k1: float, b: float,
             avgdl: float) -> np.ndarray:
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
+_LN2_HI, _LN2_LO = 6.93147180369123816490e-01, 1.90821492927058770002e-10
+_LG1, _LG2, _LG3, _LG4, _LG5, _LG6, _LG7 = (
+    6.666666666666735130e-01, 3.999999999940941908e-01,
+    2.857142874366239149e-01, 2.222219843214978396e-01,
+    1.818357216161805012e-01, 1.531383769920937332e-01,
+    1.479819860511658591e-01)
+
+
+def fdlibm_log(x: np.ndarray) -> np.ndarray:
+    """Natural log of positive finite doubles, bit-identical to fdlibm's
+    ``__ieee754_log`` — which is what ``StrictMath.log``, and so Spark's
+    ``F.log``, computes. ``np.log`` is not fdlibm and differs by an ulp on
+    a few percent of arguments, which would move BM25 scores between the
+    two build placements. A line-for-line vectorization of e_log.c: every
+    branch is evaluated and the C control flow picks per element."""
+    x = np.array(x, dtype=np.float64)
+    k = np.zeros(x.shape, np.int64)
+    sub = x < 2.2250738585072014e-308                  # subnormal: scale up
+    x[sub] *= 1.80143985094819840000e+16
+    k[sub] -= 54
+    bits = x.view(np.int64)
+    hx = bits >> 32
+    k += (hx >> 20) - 1023
+    hx &= 0x000fffff
+    i = (hx + 0x95f64) & 0x100000
+    x = (((hx | (i ^ 0x3ff00000)) << 32) | (bits & 0xffffffff)).view(
+        np.float64)                                    # normalize x or x/2
+    k += i >> 20
+    f = x - 1.0
+    dk = k.astype(np.float64)
+    k0 = k == 0
+    # |f| < 2**-20
+    r = f * f * (0.5 - 0.33333333333333333 * f)
+    tiny = np.where(f == 0.0, np.where(k0, 0.0, dk * _LN2_HI + dk * _LN2_LO),
+                    np.where(k0, f - r, dk * _LN2_HI - ((r - dk * _LN2_LO)
+                                                        - f)))
+    s = f / (2.0 + f)
+    z = s * s
+    w = z * z
+    t1 = w * (_LG2 + w * (_LG4 + w * _LG6))
+    t2 = z * (_LG1 + w * (_LG3 + w * (_LG5 + w * _LG7)))
+    r = t2 + t1
+    hfsq = 0.5 * f * f
+    upper = np.where(k0, f - (hfsq - s * (hfsq + r)),
+                     dk * _LN2_HI - ((hfsq - (s * (hfsq + r) + dk * _LN2_LO))
+                                     - f))
+    lower = np.where(k0, f - s * (f - r),
+                     dk * _LN2_HI - ((s * (f - r) - dk * _LN2_LO) - f))
+    main = np.where(((hx - 0x6147a) | (0x6b851 - hx)) > 0, upper, lower)
+    return np.where((0x000fffff & (2 + hx)) < 3, tiny, main)
+
+
+def idf(df: np.ndarray, n: int) -> np.ndarray:
+    """BM25 idf ``ln(1 + (N - df + 0.5) / (df + 0.5))``, bit-identical to
+    the distributed dictionary's ``F.log`` expression (same operation
+    order, fdlibm log)."""
+    df = np.asarray(df, dtype=np.float64)
+    return fdlibm_log(1.0 + ((float(n) - df) + 0.5) / (df + 0.5))
 
 
 # --------------------------------------------------------------------------
@@ -502,14 +605,17 @@ def rows_to_blocks(rows: DataFrame, avgdl: float,
 def build_index_from_rows(spark: SparkSession, rows: DataFrame,
                           index_dir: str | Path, *,
                           cfg: IndexConfig | None = None,
-                          run_id: str = "merge0") -> None:
+                          run_id: str = "merge0",
+                          text_bytes: int | None = None) -> None:
     """Materialize a full index directory (stats/dictionary/postings/
     term_ub/dictseg/lineage, same layout as :func:`build_index`) from raw
-    posting rows — the segment-merge path: no document content needed.
+    posting rows — the distributed segment merge: no document content
+    needed. :func:`write_rows_index` is its driver placement.
 
     Stats note: N counts distinct posting-bearing docs; a zero-token doc
     (unqueryable either way) that was counted by its original segment's
-    build drops out of the merged stats."""
+    build drops out of the merged stats. ``text_bytes`` (the inputs' sum,
+    an upper bound) is recorded when given."""
     cfg = cfg or IndexConfig()
     index_dir = Path(index_dir)
     index_dir.mkdir(parents=True, exist_ok=True)
@@ -519,15 +625,8 @@ def build_index_from_rows(spark: SparkSession, rows: DataFrame,
         F.count_distinct("doc_id").alias("n"),
         F.sum("tf").alias("total")).collect()[0]
     n_docs = int(stats["n"] or 0)
-    total = int(stats["total"] or 0)
-    avgdl = (total / n_docs) if n_docs else 0.0
-
-    st = index_dir / "stats"
-    st.mkdir(parents=True, exist_ok=True)
-    (st / "_table_meta.json").write_text(json.dumps(
-        {"N": n_docs, "avgdl": avgdl, "total_tokens": total,
-         "k1": cfg.k1, "b": cfg.b}))
-    (st / tables.SUCCESS_MARKER).touch()
+    avgdl = _write_stats(index_dir / "stats", n_docs,
+                         int(stats["total"] or 0), text_bytes, cfg)
 
     dic = (rows.groupBy("term")
            .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
@@ -536,15 +635,84 @@ def build_index_from_rows(spark: SparkSession, rows: DataFrame,
                / (F.col("df") + 0.5))))
     tables.write_table(dic, index_dir / "dictionary", sort_cols=["term"])
 
-    meta = {"avgdl": avgdl, "N": n_docs, "k1": cfg.k1, "b": cfg.b,
-            "block_size": cfg.block_size, "merged": True}
     tables.write_table(rows_to_blocks(rows, avgdl, cfg),
-                       index_dir / "postings", sort_cols=["term"], meta=meta)
+                       index_dir / "postings", sort_cols=["term"],
+                       meta=_merged_meta(avgdl, n_docs, cfg))
     rows.unpersist()
 
     # no resume here: the caller builds into a fresh directory
     write_index_tail(spark, index_dir, run_id,
                      lambda name, fn: fn(index_dir / name))
+
+
+def write_rows_index(spark: SparkSession, rows: pd.DataFrame,
+                     index_dir: str | Path, *,
+                     cfg: IndexConfig | None = None, run_id: str = "merge0",
+                     text_bytes: int | None = None) -> None:
+    """:func:`build_index_from_rows` on the driver: ``rows`` is a pandas
+    frame of (term, salt, doc_id, tf, dl) sorted by (term, salt, doc_id),
+    and every stage is written with pyarrow through the same encoder and
+    the same stage layout. Salts are kept."""
+    cfg = cfg or IndexConfig()
+    index_dir = Path(index_dir)
+    index_dir.mkdir(parents=True, exist_ok=True)
+    ids = rows["doc_id"].to_numpy(np.int64)
+    tf = rows["tf"].to_numpy(np.int64)
+    n_docs = int(np.unique(ids).size)
+    avgdl = _write_stats(index_dir / "stats", n_docs, int(tf.sum()),
+                         text_bytes, cfg)
+    tables.write_arrow(
+        _dictionary_table(rows["term"].to_numpy(), np.ones(tf.size, np.int64),
+                          tf, n_docs),
+        index_dir / "dictionary")
+    tables.write_arrow(_postings_table(rows, avgdl, cfg),
+                       index_dir / "postings",
+                       meta=_merged_meta(avgdl, n_docs, cfg))
+    write_index_tail(spark, index_dir, run_id,
+                     lambda name, fn: fn(index_dir / name))
+
+
+def _merged_meta(avgdl: float, n_docs: int, cfg: IndexConfig) -> dict:
+    return {"avgdl": avgdl, "N": n_docs, "k1": cfg.k1, "b": cfg.b,
+            "block_size": cfg.block_size, "merged": True}
+
+
+def _write_stats(out: Path, n_docs: int, total: int, text_bytes: int | None,
+                 cfg: IndexConfig) -> float:
+    """Commit the ``stats`` stage (a meta-only table); returns avgdl.
+    ``text_bytes`` is the content size the driver budget compares against
+    when deltas merge (absent when unknown)."""
+    avgdl = (float(total) / n_docs) if n_docs else 0.0
+    meta = {"N": int(n_docs), "avgdl": avgdl, "total_tokens": int(total)}
+    if text_bytes is not None:
+        meta["text_bytes"] = int(text_bytes)
+    out.mkdir(parents=True, exist_ok=True)
+    (out / "_table_meta.json").write_text(json.dumps(
+        {**meta, "k1": cfg.k1, "b": cfg.b}))
+    (out / tables.SUCCESS_MARKER).touch()
+    return avgdl
+
+
+def _dictionary_table(terms: np.ndarray, doc_counts: np.ndarray,
+                      sum_tfs: np.ndarray, n_docs: int):
+    """The ``dictionary`` stage from term-sorted rows of per-term partial
+    counts (packs, or one row per posting): df = Σ doc_count, cf = Σ sum_tf
+    per term, idf by the fdlibm port (bit-equal to the Spark stage)."""
+    new = np.ones(terms.size, dtype=bool)
+    new[1:] = terms[1:] != terms[:-1]
+    starts = np.nonzero(new)[0]
+    df = np.add.reduceat(doc_counts, starts)
+    return _arrow(pd.DataFrame({
+        "term": terms[starts], "df": df,
+        "cf": np.add.reduceat(sum_tfs, starts), "idf": idf(df, n_docs)}),
+        DICTIONARY_SCHEMA)
+
+
+def _postings_table(rows: pd.DataFrame, avgdl: float, cfg: IndexConfig):
+    """(term, salt, doc_id)-sorted posting rows → the ``postings`` stage as
+    one pyarrow table (part_id 0)."""
+    return _arrow(_encode_blocks(rows, cfg.k1, cfg.b, avgdl, cfg.block_size,
+                                 0) if len(rows) else None, POSTINGS_SCHEMA)
 
 
 def write_index_tail(spark: SparkSession, index_dir: Path, run_id: str,
@@ -557,13 +725,25 @@ def write_index_tail(spark: SparkSession, index_dir: Path, run_id: str,
 
     ``stage(name, fn)`` runs ``fn(index_dir / name)`` as one atomic commit
     (:func:`build_index` skips stages a resumed build already committed).
-    term_ub → dictseg is a chain (the segment folds ``max_tfnorm``), and it
-    runs CONCURRENTLY with lineage: all three are small metadata-sized jobs
-    dominated by fixed per-job overhead, so Spark's scheduler interleaves
-    them across the same executors."""
+    Up to ``dictseg.DRIVER_MAX_TERMS`` terms — the switch the segment
+    writer itself uses — all three are computed on the driver with pyarrow
+    over the committed postings' columns, with no Spark job, whichever
+    placement wrote the postings. Above it term_ub → dictseg is a chain
+    of Spark jobs (the segment folds ``max_tfnorm``) that runs
+    CONCURRENTLY with lineage: small metadata-sized jobs dominated by
+    fixed per-job overhead, which Spark's scheduler interleaves across the
+    same executors."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from harvester_spark.operators.dictseg import write_index_segment
+    from harvester_spark.operators.dictseg import (DRIVER_MAX_TERMS,
+                                                   write_index_segment)
+
+    def segment(out: Path) -> None:
+        write_index_segment(spark, index_dir, out)
+
+    if tables.num_rows(index_dir / "dictionary") <= DRIVER_MAX_TERMS:
+        _driver_tail(index_dir, run_id, stage, segment)
+        return
 
     def term_ub(out: Path) -> None:
         postings = tables.read_table(spark, index_dir / "postings")
@@ -588,13 +768,60 @@ def write_index_tail(spark: SparkSession, index_dir: Path, run_id: str,
 
     def ub_then_seg() -> None:
         stage("term_ub", term_ub)
-        stage("dictseg", lambda out: write_index_segment(spark, index_dir,
-                                                         out))
+        stage("dictseg", segment)
 
     with ThreadPoolExecutor(max_workers=2) as ex:
         futs = [ex.submit(ub_then_seg), ex.submit(stage, "lineage", lineage)]
         for f in futs:
             f.result()
+
+
+def _driver_tail(index_dir: Path, run_id: str, stage, segment) -> None:
+    """:func:`write_index_tail`'s pyarrow side: the same three stages and
+    columns as its Spark aggregations."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    @functools.cache
+    def postings():
+        return tables.read_arrow(
+            index_dir / "postings",
+            columns=["term", "part_id", "doc_count", "block_max_tfnorm",
+                     "deltas", "tfs", "dls"])
+
+    def group(tbl, key: str, **aggs):
+        """Spark-style ``groupBy(key).agg(name=...)``: key first, then
+        one column per ``name=(column, function)``."""
+        g = tbl.group_by(key).aggregate(list(aggs.values()))
+        return pa.table([g[key]] + [g[f"{c}_{fn}" if c else fn]
+                                    for c, fn in aggs.values()],
+                        names=[key, *aggs])
+
+    def term_ub(out: Path) -> None:
+        tables.write_arrow(group(postings(), "term",
+                                 max_tfnorm=("block_max_tfnorm", "max"),
+                                 n_blocks=([], "count_all")),
+                           out, sort_cols=["term"])
+
+    def lineage(out: Path) -> None:
+        p = postings()
+        nbytes = pc.add(pc.add(pc.binary_length(p["deltas"]),
+                               pc.binary_length(p["tfs"])),
+                        pc.binary_length(p["dls"]))
+        lin = group(p.append_column("nb", nbytes), "part_id",
+                    term_min=("term", "min"), term_max=("term", "max"),
+                    terms=("term", "count_distinct"),
+                    postings=("doc_count", "sum"), blocks=([], "count_all"),
+                    bytes_encoded=("nb", "sum"))
+        n = lin.num_rows
+        tables.write_arrow(
+            lin.append_column("run_id", pa.array([run_id] * n, pa.string()))
+               .append_column("status", pa.array(["complete"] * n,
+                                                 pa.string())), out)
+
+    stage("term_ub", term_ub)
+    stage("dictseg", segment)
+    stage("lineage", lineage)
 
 
 # --------------------------------------------------------------------------
@@ -607,6 +834,10 @@ class BuildReport:
     stages: list[dict] = field(default_factory=list)
     n_docs: int = 0
     avgdl: float = 0.0
+    # the placement the build took: {"side": "driver" | "distributed",
+    # "docs", "text_bytes" (what the probe saw: lower bounds when over
+    # budget), "max_docs", "max_bytes" (the budget it compared against)}
+    placement: dict = field(default_factory=dict)
 
     def metric(self, stage: str, **kw) -> None:
         self.stages.append({"stage": stage, **kw})
@@ -623,7 +854,12 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str | Path, *,
     ``last_seq`` resume, harvester/solr_updater.py:776-791). Per-stage
     wall-clock + row counts are emitted into the returned report and the
     ``lineage`` table (the SNS-report analogue, harvester/sns_message.py:29-41).
-    """
+
+    Inputs within the driver budget (``tables.collect_small``) are
+    collected once and built on the driver; larger ones run the
+    distributed stages. Both write the same stages."""
+    import pyarrow.parquet as pq
+
     cfg = cfg or IndexConfig()
     index_dir = Path(index_dir)
     index_dir.mkdir(parents=True, exist_ok=True)
@@ -639,6 +875,96 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str | Path, *,
         report.metric(name, seconds=round(time.time() - t0, 3))
         return out
 
+    pk_path = index_dir / "packed"
+    if (not force and tables.is_committed(pk_path) and "payload" not in
+            pq.read_schema(tables.parquet_files(pk_path)[0]).names):
+        # resuming over a packed table committed by the pre-payload layout
+        # would otherwise surface as a KeyError deep inside the merge
+        raise RuntimeError(
+            f"packed stage at {pk_path} predates the single-payload pack "
+            "layout (has ids/tfs/dls columns) — delete that directory to "
+            "rebuild it under the current format")
+
+    probed: dict = {}
+    small = tables.collect_small(docs, id_col, content_col, probed=probed)
+    report.placement = {
+        "side": "distributed" if small is None else "driver", **probed,
+        "max_docs": tables.DRIVER_MAX_DOCS,
+        "max_bytes": tables.DRIVER_MAX_BYTES}
+    if small is None:
+        _distributed_stages(spark, docs, index_dir, cfg, stage, report,
+                            id_col=id_col, content_col=content_col,
+                            force=force)
+    else:
+        _driver_stages(small, index_dir, cfg, stage, report)
+
+    # S5-S7 — term_ub → dictseg, and lineage
+    write_index_tail(spark, index_dir, run_id, stage)
+
+    return report
+
+
+def _driver_stages(tbl, index_dir: Path, cfg: IndexConfig, stage,
+                   report: BuildReport) -> None:
+    """S1-S4 on the driver over the collected ``(doc_id, content)`` table:
+    the same kernels the distributed stages wrap (``pack_batch`` →
+    ``_decode_packs`` → ``_encode_blocks``), run once over the whole input
+    as one pack set (part_id 0), and written with pyarrow. No salting: it
+    only spreads merge work across tasks, and there is one."""
+    import pyarrow.compute as pc
+
+    held = {}
+
+    def s1(out: Path) -> None:
+        pk = _arrow(pack_batch(tbl.to_pandas(), 0) if tbl.num_rows else None,
+                    PACKED_SCHEMA)
+        held["packs"] = pk.sort_by([("term", "ascending"),
+                                    ("doc_id_first", "ascending")])
+        tables.write_arrow(held["packs"], out)
+    stage("packed", s1)
+    # a resumed build reads back the committed packs, which may hold several
+    # packs per term (a distributed S1): every consumer below folds them
+    packs = held.get("packs")
+    if packs is None:
+        packs = tables.read_arrow(index_dir / "packed").sort_by(
+            [("term", "ascending"), ("doc_id_first", "ascending")])
+
+    def s2(out: Path) -> None:
+        text_bytes = pc.sum(pc.binary_length(tbl.column("content"))).as_py()
+        _write_stats(out, tbl.num_rows,
+                     pc.sum(packs.column("sum_tf")).as_py() or 0,
+                     text_bytes or 0, cfg)
+    st_path = stage("stats", s2)
+    stats_meta = tables.read_meta(st_path)
+    n_docs, avgdl = stats_meta["N"], stats_meta["avgdl"]
+    report.n_docs, report.avgdl = n_docs, avgdl
+
+    def s3(out: Path) -> None:
+        tables.write_arrow(_dictionary_table(
+            packs.column("term").to_numpy(zero_copy_only=False),
+            packs.column("doc_count").to_numpy().astype(np.int64),
+            packs.column("sum_tf").to_numpy(), n_docs), out)
+    stage("dictionary", s3)
+
+    def s4(out: Path) -> None:
+        pk = packs.to_pandas().assign(salt=np.int32(0))
+        rows = _decode_packs(_split_payload(pk)) if len(pk) else pk
+        tables.write_arrow(_postings_table(rows, avgdl, cfg), out, meta={
+            "avgdl": avgdl, "N": n_docs, "k1": cfg.k1, "b": cfg.b,
+            "block_size": cfg.block_size,
+            "salt_df_threshold": cfg.salt_df_threshold,
+            "salt_range_docs": cfg.salt_range_docs, "hot_terms": 0,
+            "shard_groups": 1})
+    stage("postings", s4)
+
+
+def _distributed_stages(spark: SparkSession, docs: DataFrame,
+                        index_dir: Path, cfg: IndexConfig, stage,
+                        report: BuildReport, *, id_col: str,
+                        content_col: str, force: bool) -> None:
+    """S1-S4 as Spark jobs: map-side packing, a pack shuffle by
+    (term, salt) and a streaming merge — the only placement a corpus above
+    the driver budget can take."""
     src = docs.select(F.col(id_col).cast("long").alias("doc_id"),
                       F.col(content_col).alias("content"))
     # Input parallelism guard: a source packed into few files would
@@ -648,17 +974,20 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str | Path, *,
         spark.conf.get("spark.sql.shuffle.partitions"))
     if src.rdd.getNumPartitions() < n_input:
         src = src.repartition(n_input, "doc_id")
+    text_bytes = F.sum(F.coalesce(F.octet_length("content"), F.lit(0)))
 
     # S1 — packed postings (map-side; one pass over content; the resumable
-    # bulk checkpoint). The SAME write job carries two observe() metrics —
-    # N (count of source rows, zero-token docs included) and total tokens
-    # (Σ pack.sum_tf) — so S2 needs NO jobs of its own on a fresh build.
+    # bulk checkpoint). The SAME write job carries observe() metrics — N
+    # (count of source rows, zero-token docs included), text bytes and
+    # total tokens (Σ pack.sum_tf) — so S2 needs NO jobs of its own on a
+    # fresh build.
     from pyspark.sql import Observation
     src_obs = Observation()
     pk_obs = Observation()
 
     def s1(out: Path) -> None:
-        observed = src.observe(src_obs, F.count(F.lit(1)).alias("n_docs"))
+        observed = src.observe(src_obs, F.count(F.lit(1)).alias("n_docs"),
+                               text_bytes.alias("text_bytes"))
         pk = build_packs(observed, cfg, content_col="content")
         pk = pk.observe(pk_obs, F.sum("sum_tf").alias("total_tokens"))
         tables.write_table(pk, out, compression=cfg.pack_compression)
@@ -666,30 +995,19 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str | Path, *,
     packed_was_committed = tables.is_committed(index_dir / "packed")
     pk_path = stage("packed", s1)
     packs = tables.read_table(spark, pk_path)
-    if "payload" not in packs.columns:
-        # resuming over a packed table committed by the pre-payload layout
-        # would otherwise surface as a KeyError deep inside the merge UDF
-        raise RuntimeError(
-            f"packed stage at {pk_path} predates the single-payload pack "
-            "layout (has ids/tfs/dls columns) — delete that directory to "
-            "rebuild it under the current format")
 
     # S2 — global stats. Fresh build: free (observed during the S1 write).
     # Resumed build (S1 skipped → observations never fire): recompute with
-    # the old two tiny jobs.
+    # two tiny jobs.
     def s2(out: Path) -> None:
         s1_ran = force or not packed_was_committed
         if s1_ran:
-            n = src_obs.get["n_docs"]
+            n, nb = src_obs.get["n_docs"], src_obs.get["text_bytes"]
             total = pk_obs.get["total_tokens"] or 0
         else:
-            n = src.select("doc_id").count()
+            n, nb = src.agg(F.count(F.lit(1)), text_bytes).collect()[0]
             total = packs.agg(F.sum("sum_tf")).collect()[0][0] or 0
-        out.mkdir(parents=True, exist_ok=True)
-        (out / "_table_meta.json").write_text(json.dumps(
-            {"N": int(n), "avgdl": (float(total) / n) if n else 0.0,
-             "total_tokens": int(total), "k1": cfg.k1, "b": cfg.b}))
-        (out / tables.SUCCESS_MARKER).touch()
+        _write_stats(out, n, total, nb or 0, cfg)
     st_path = stage("stats", s2)
     stats_meta = tables.read_meta(st_path)
     n_docs, avgdl = stats_meta["N"], stats_meta["avgdl"]
@@ -697,7 +1015,7 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str | Path, *,
 
     # S3 — dictionary from pack metadata (rows: |terms|×|partitions|, tiny
     # next to postings; partial agg absorbs the skew)
-    def s4(out: Path) -> None:
+    def s3(out: Path) -> None:
         dic = (packs.groupBy("term")
                .agg(F.sum("doc_count").alias("df"),
                     F.sum("sum_tf").alias("cf"))
@@ -705,13 +1023,13 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str | Path, *,
                    F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5)
                    / (F.col("df") + 0.5))))
         tables.write_table(dic, out, sort_cols=["term"])
-    dic_path = stage("dictionary", s4)
+    dic_path = stage("dictionary", s3)
     dictionary = tables.read_table(spark, dic_path)
 
     # S4 — postings (the one real shuffle — of PACKS, not posting rows).
     # With postings_shard_groups > 1 each term-shard group is its own
     # atomic commit: a killed merge resumes at the first incomplete group.
-    def s5(out: Path) -> None:
+    def s4(out: Path) -> None:
         hot = (dictionary.filter(F.col("df") > cfg.salt_df_threshold)
                .select("term", "df").collect())
         hot_salts = {r["term"]: max(2, int(np.ceil(
@@ -744,9 +1062,4 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str | Path, *,
         union = spark.read.parquet(
             *[str(parts_dir / f"group={g}") for g in range(groups)])
         tables.write_table(union, out, sort_cols=["term"], meta=meta)
-    stage("postings", s5)
-
-    # S5-S7 — term_ub → dictseg, concurrently with lineage
-    write_index_tail(spark, index_dir, run_id, stage)
-
-    return report
+    stage("postings", s4)

@@ -22,8 +22,12 @@ equivalent:
 - :func:`compact` — full rebuild from the live doc set; after compaction
   results are rank-identical to a from-scratch build.
 
-At scale each delta build is a normal (small) distributed index build; the
-tombstone anti-join is a broadcast join while tombstones are sparse.
+A delta build is a normal :func:`~harvester_spark.operators.index_build.build_index`
+call: a CDC batch within the driver budget builds on the driver with no
+Spark job after its probe and collect, a larger one distributed. Delta
+merges pick their placement the same way, from the deltas' recorded
+``N`` and ``text_bytes``. Queries drop tombstoned docs with a broadcast
+anti-join while tombstones are sparse.
 """
 
 from __future__ import annotations
@@ -180,7 +184,7 @@ def query_topk_incremental(spark: SparkSession, root: str | Path, query: str,
     root = Path(root)
     parts: list[DataFrame] = []
     segs: list[tuple[Path, int]] = [(root / "base", 0)]
-    segs += [(d, int(d.name.split("_")[1])) for d in _delta_dirs(root)]
+    segs += [(d, _seq_of(d)) for d in _delta_dirs(root)]
     for seg, seq in segs:
         if not tables.is_committed(seg / "postings"):
             continue
@@ -190,7 +194,7 @@ def query_topk_incremental(spark: SparkSession, root: str | Path, query: str,
         parts.append(query_topk_index(spark, seg, query, k, mode=mode,
                                       exclude_ids=excl))
     if not parts:
-        return spark.createDataFrame([], SCORE_SCHEMA)
+        return tables.empty_frame(spark, SCORE_SCHEMA)
     allscores = parts[0]
     for p in parts[1:]:
         allscores = allscores.unionByName(p)
@@ -215,36 +219,94 @@ def merge_deltas(spark: SparkSession, root: str | Path, *,
     Returns the merged dir (None when <2 deltas)."""
     import shutil
 
-    from harvester_spark.operators.index_build import (
-        build_index_from_rows, decode_postings)
-
     root = Path(root)
     deltas = _delta_dirs(root)
     if len(deltas) < 2:
         return None
     gen = len(list(root.glob("delta_*_m*"))) + 1
-    max_seq = max(int(d.name.split("_")[1]) for d in deltas)
+    max_seq = max(_seq_of(d) for d in deltas)
     out = root / f"delta_{max_seq:08d}_m{gen}"
 
-    parts = []
-    for d in deltas:
-        seq = int(d.name.split("_")[1])
-        rows = decode_postings(tables.read_table(spark, d / "postings"))
-        tomb = tombstoned_ids(spark, root, after_seq=seq)
-        if tomb is not None:
-            rows = rows.join(F.broadcast(tomb), "doc_id", "left_anti")
-        parts.append(rows)
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-
-    build_index_from_rows(spark, merged, out, cfg=cfg,
-                          run_id=f"merge{gen}")
+    # the merged segment's text_bytes is the inputs' sum (an upper bound:
+    # tombstoned docs still count); a delta without it — written before
+    # the stats recorded it — sends the merge to the distributed side
+    stats = [tables.read_meta(d / "stats") for d in deltas]
+    text_bytes = (sum(m["text_bytes"] for m in stats)
+                  if all("text_bytes" in m for m in stats) else None)
+    if text_bytes is not None and tables.fits_driver(
+            sum(m["N"] for m in stats), text_bytes):
+        _merge_on_driver(spark, root, deltas, out, cfg=cfg,
+                         run_id=f"merge{gen}", text_bytes=text_bytes)
+    else:
+        _merge_distributed(spark, root, deltas, out, cfg=cfg,
+                           run_id=f"merge{gen}", text_bytes=text_bytes)
     # commit point: supersede the old deltas in one pointer swap
     _write_segments(root, [out.name])
     for d in deltas:
         shutil.rmtree(d, ignore_errors=True)
     return out
+
+
+def _seq_of(delta_dir: Path) -> int:
+    return int(delta_dir.name.split("_")[1])
+
+
+def _merge_distributed(spark: SparkSession, root: Path, deltas: list[Path],
+                       out: Path, **kw) -> None:
+    """Decode every delta's postings, anti-join the ids tombstoned after
+    it, and rebuild from the union of rows as Spark jobs."""
+    from harvester_spark.operators.index_build import (build_index_from_rows,
+                                                       decode_postings)
+
+    merged = None
+    for d in deltas:
+        rows = decode_postings(tables.read_table(spark, d / "postings"))
+        tomb = tombstoned_ids(spark, root, after_seq=_seq_of(d))
+        if tomb is not None:
+            rows = rows.join(F.broadcast(tomb), "doc_id", "left_anti")
+        merged = rows if merged is None else merged.unionByName(rows)
+    build_index_from_rows(spark, merged, out, **kw)
+
+
+def _merge_on_driver(spark: SparkSession, root: Path, deltas: list[Path],
+                     out: Path, **kw) -> None:
+    """:func:`_merge_distributed` on the driver: each delta's postings and
+    its later tombstone segments are read with pyarrow, decoded by the
+    build's block decoder, filtered with ``np.isin`` and written by the
+    same encoder (``index_build.write_rows_index``)."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from harvester_spark.operators.index_build import (_decode_packs,
+                                                       write_rows_index)
+
+    by = [("term", "ascending"), ("salt", "ascending")]
+    frames = []
+    for d in deltas:
+        blocks = tables.read_arrow(
+            d / "postings", columns=["term", "salt", "doc_count",
+                                     "doc_id_first", "deltas", "tfs", "dls"])
+        if not blocks.num_rows:
+            continue
+        rows = _decode_packs(
+            blocks.sort_by(by + [("doc_id_first", "ascending")])
+            .rename_columns(["term", "salt", "doc_count", "doc_id_first",
+                             "ids", "tfs", "dls"]).to_pandas())
+        segs = [p for p, s in _tombstone_segments(root) if s > _seq_of(d)]
+        if segs:
+            dead = np.concatenate([
+                tables.read_arrow(p, columns=["doc_id"]).column(0)
+                .to_numpy(zero_copy_only=False) for p in segs])
+            rows = rows[~np.isin(rows["doc_id"].to_numpy(), dead)]
+        frames.append(pa.Table.from_pandas(rows, preserve_index=False))
+    if frames:
+        rows = (pa.concat_tables(frames)
+                .sort_by(by + [("doc_id", "ascending")]).to_pandas())
+    else:
+        rows = pd.DataFrame({"term": [], "salt": [], "doc_id": [], "tf": [],
+                             "dl": []})
+    write_rows_index(spark, rows, out, **kw)
 
 
 def maybe_compact(spark: SparkSession, root: str | Path, *,

@@ -118,6 +118,25 @@ def test_and_mode_absent_term_empty(spark, corpus_df, index_dir):
     assert query_topk_index(spark, index_dir, q, 5, mode="and").count() == 0
 
 
+def test_absent_term_query_launches_no_job(spark, index_dir):
+    """An absent-term query answers from the dictionary segment with an
+    empty local relation: collecting it runs no Spark job, and the result
+    keeps SCORE_SCHEMA."""
+    from harvester_spark.operators.bm25 import SCORE_SCHEMA
+
+    sc = spark.sparkContext
+    group = "absent-term-query"
+    for q, mode in (("qqqzzz_absent", "or"), ("import qqqzzz_absent", "and")):
+        res = query_topk_index(spark, index_dir, q, 5, mode=mode)
+        sc.setJobGroup(group, "absent-term query")
+        try:
+            assert res.collect() == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert res.schema == SCORE_SCHEMA
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_tie_break_doc_id_asc(oracle):
     # duplicate docs exist in synthetic corpora rarely; enforce the rule on
     # the oracle itself: equal scores must be ordered by doc_id

@@ -3,6 +3,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from harvester_spark import tables
 from harvester_spark.operators.dedup import (exact_duplicates, minhash_lsh_pairs,
                                              minhash_signatures, ngram_jaccard,
                                              simhash, simhash_near_pairs)
@@ -172,8 +173,7 @@ def test_minhash_identical_cluster_bounded_output(spark, monkeypatch):
     with O(m) output and a BOUNDED bucket agg buffer (banding sees one
     representative; the capped collect_list never materializes a
     mega-array)."""
-    from harvester_spark.operators import dedup as dd
-    monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 0)  # distributed path
+    monkeypatch.setattr(tables, "DRIVER_MAX_DOCS", 0)  # distributed path
     same = "the same boilerplate payload repeated in every doc"
     rows = [(i, same) for i in range(10_000)]
     rows += [(20_000, "completely different content here xyz")]
@@ -214,8 +214,7 @@ def test_simhash_identical_cluster_bounded_output(spark, monkeypatch):
     """VERDICT r2: a 10^4-doc identical-fingerprint cluster must complete
     with O(m) output (star pairs via rep-collapse), not O(m²) through the
     bucket explode — and the collapse must be reported in metrics."""
-    from harvester_spark.operators import dedup as dd
-    monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 0)  # distributed path
+    monkeypatch.setattr(tables, "DRIVER_MAX_DOCS", 0)  # distributed path
     same = "import numpy def main return value data result"
     rows = [(i, same) for i in range(10_000)]
     rows += [(20_000, "completely different content here xyz")]
@@ -254,8 +253,7 @@ def test_lsh_metrics_do_not_recompute_banding(spark, monkeypatch):
     it returns: consuming pairs AND metrics afterwards reads that
     checkpoint (and a local metrics row) and never runs the bucket kernel,
     or the exchange on its bucket key, again."""
-    from harvester_spark.operators import dedup as dd
-    monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 0)
+    monkeypatch.setattr(tables, "DRIVER_MAX_DOCS", 0)
     docs = spark.createDataFrame(
         [(i, f"import numpy def main return value data result tok{i % 3}")
          for i in range(8)], "doc_id long, content string")
@@ -356,9 +354,7 @@ def test_bucket_drop_warning_fires_without_metrics(spark, monkeypatch):
     returns, with no action on the result and no waiting."""
     import warnings
 
-    from harvester_spark.operators import dedup as dd
-
-    monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 0)  # distributed
+    monkeypatch.setattr(tables, "DRIVER_MAX_DOCS", 0)  # distributed
 
     docs = spark.createDataFrame(
         [(i, f"the same boilerplate text repeated everywhere tok{i}")
@@ -556,15 +552,13 @@ def _both_placements(spark, monkeypatch, op, docs, kwargs):
     ``arrow_batch`` entry in kwargs sets Arrow's records-per-batch for both
     runs, so the distributed bucket kernel sees buckets split across
     batches."""
-    from harvester_spark.operators import dedup as dd
-
     kwargs = dict(kwargs)
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     saved = spark.conf.get(conf)
     spark.conf.set(conf, str(kwargs.pop("arrow_batch", saved)))
     try:
         got = op(docs, **kwargs)                        # driver path
-        monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 0)
+        monkeypatch.setattr(tables, "DRIVER_MAX_DOCS", 0)
         want = op(docs, **kwargs)                       # distributed
     finally:
         spark.conf.set(conf, saved)
@@ -632,15 +626,13 @@ def test_driver_path_warns_on_drops(spark):
 def test_driver_path_respects_byte_budget(spark, monkeypatch):
     """Corpora over the byte budget must fall back to the distributed
     path (the probe job reads at most cap+1 rows first)."""
-    from harvester_spark.operators import dedup as dd
-
-    monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_BYTES", 10)
+    monkeypatch.setattr(tables, "DRIVER_MAX_BYTES", 10)
     docs = _fastpath_docs(spark)
-    small = dd._collect_small_docs(docs, "content", "doc_id")
+    small = tables.collect_small(docs, "doc_id", "content")
     assert small is None
-    monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_DOCS", 5)
-    monkeypatch.setattr(dd, "_DRIVER_PAIRS_MAX_BYTES", 1 << 30)
-    assert dd._collect_small_docs(docs, "content", "doc_id") is None
+    monkeypatch.setattr(tables, "DRIVER_MAX_DOCS", 5)
+    monkeypatch.setattr(tables, "DRIVER_MAX_BYTES", 1 << 30)
+    assert tables.collect_small(docs, "doc_id", "content") is None
 
 
 def test_bucket_pairs_streams_buckets_across_batches():

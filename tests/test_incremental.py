@@ -204,13 +204,24 @@ def test_tombstone_segments_survive_partial_batch(spark, base_docs, tmp_path):
     assert not ({1, 2} & set(res["doc_id"]))
 
 
-def test_merge_deltas_rank_identical_to_fresh_build(spark, base_docs, tmp_path):
+def test_merge_deltas_rank_identical_to_fresh_build(spark, base_docs, tmp_path,
+                                                    build_side, monkeypatch):
     """Size-tiered delta merge: N delta segments fold into one WITHOUT
     content; querying the merged segment is rank-identical to a fresh
     index built over the same live docs, and incremental queries stay
-    correct afterward."""
+    correct afterward. On both placements; the driver merge leaves
+    pyarrow's thread pool as it was."""
+    import pyarrow as pa
+
     from harvester_spark.operators.bm25 import query_topk_index
 
+    other = ("_merge_distributed" if build_side == "driver"
+             else "_merge_on_driver")
+
+    def wrong_side(*a, **kw):
+        raise AssertionError(f"{other} ran on the {build_side} side")
+
+    monkeypatch.setattr(inc, other, wrong_side)
     root = tmp_path / "root_merge"
     inc.init_root(spark, base_docs, root, cfg=CFG)
 
@@ -225,7 +236,9 @@ def test_merge_deltas_rank_identical_to_fresh_build(spark, base_docs, tmp_path):
         inc.apply_changes(spark, root, ch, seq=i, cfg=CFG)
     before = inc.query_topk_incremental(spark, root, "zz_m", 10).toPandas()
 
+    threads = pa.cpu_count()
     assert inc.maybe_compact(spark, root, max_deltas=3, cfg=CFG)
+    assert pa.cpu_count() == threads
     deltas = inc._delta_dirs(root)
     assert len(deltas) == 1 and "_m1" in deltas[0].name
 
@@ -257,6 +270,60 @@ def test_merge_deltas_rank_identical_to_fresh_build(spark, base_docs, tmp_path):
     inc.apply_changes(spark, root, ch, seq=4, cfg=CFG)
     res = inc.query_topk_incremental(spark, root, "zz_m", 10).toPandas()
     assert 303 not in set(res["doc_id"]) and 0 not in set(res["doc_id"])
+
+
+def test_merge_placements_write_equal_stages(spark, base_docs, tmp_path,
+                                             pin_distributed):
+    """The driver merge and the distributed merge of the same deltas write
+    equal stages — stats, dictionary (idf bit for bit), term_ub, postings
+    block for block — with tombstoned docs dropped and the salts of a
+    salted delta kept."""
+    import shutil
+
+    from harvester_spark import tables
+
+    root = tmp_path / "root_eq"
+    inc.init_root(spark, base_docs, root, cfg=CFG)
+    batches = [
+        [(300 + i, False, f"zz_e import def w{i % 4} common") for i in range(60)],
+        [(302, False, "zz_e gamma import"), (0, True, None), (310, True, None)],
+        [(301, False, "zz_e beta UPDATED import"), (303, False, "delta zz_e"),
+         (304, False, "")],
+    ]
+    salted = IndexConfig(salt_df_threshold=8, salt_range_docs=8, block_size=32)
+    with pytest.MonkeyPatch.context() as mp:
+        # the first delta is built on the distributed side, the only one
+        # that salts hot terms
+        mp.setattr(tables, "DRIVER_MAX_DOCS", 0)
+        inc.apply_changes(spark, root, spark.createDataFrame(
+            batches[0], "doc_id long, deleted boolean, content string"),
+            seq=1, cfg=salted)
+    for i, rows in enumerate(batches[1:], start=2):
+        inc.apply_changes(spark, root, spark.createDataFrame(
+            rows, "doc_id long, deleted boolean, content string"),
+            seq=i, cfg=CFG)
+    first = tables.read_arrow(root / "delta_00000001" / "postings")
+    assert max(first.column("salt").to_pylist()) > 0
+
+    dist_root = tmp_path / "root_eq_dist"
+    shutil.copytree(root, dist_root)
+    drv = inc.merge_deltas(spark, root, cfg=CFG)
+    pin_distributed()
+    dist = inc.merge_deltas(spark, dist_root, cfg=CFG)
+
+    for name in ("stats", "postings"):
+        assert tables.read_meta(drv / name) == tables.read_meta(dist / name)
+    # live posting-bearing docs: 55 of the first delta, 302, 301 and 303
+    assert tables.read_meta(drv / "stats")["N"] == 58
+    for name, key in (("dictionary", ["term"]), ("term_ub", ["term"]),
+                      ("postings", ["term", "salt", "block_id"])):
+        a, b = ((tables.read_arrow(d / name).to_pandas()
+                 .drop(columns=["part_id"], errors="ignore")
+                 .sort_values(key).reset_index(drop=True))
+                for d in (drv, dist))
+        pd.testing.assert_frame_equal(a, b, check_exact=True)
+    post = tables.read_arrow(drv / "postings").to_pandas()
+    assert post["salt"].max() > 0
 
 
 def test_streaming_exact_dedup(spark, tmp_path):

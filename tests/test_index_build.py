@@ -1,5 +1,6 @@
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from harvester_spark import tables
@@ -131,8 +132,9 @@ def test_block_max_invariant(spark, index_dir):
         assert abs(r.block_max_tfnorm - tfn.max()) < 1e-9
 
 
-def test_build_is_resumable(spark, corpus_df, tmp_path):
-    """Kill-and-restart: stages already committed are skipped; output equal."""
+def test_build_is_resumable(spark, corpus_df, tmp_path, build_side):
+    """Kill-and-restart: stages already committed are skipped; output
+    equal. On both placements."""
     from harvester_spark.operators.index_build import IndexConfig, build_index
     cfg = IndexConfig(salt_df_threshold=50, salt_range_docs=100, block_size=32)
     d = tmp_path / "idx"
@@ -155,11 +157,13 @@ def test_build_is_resumable(spark, corpus_df, tmp_path):
     assert (lin["status"] == "complete").all()
 
 
-def test_sharded_merge_resume(spark, corpus_df, tmp_path):
+def test_sharded_merge_resume(spark, corpus_df, tmp_path, pin_distributed):
     """Term-shard-group resume: kill after one group → restart completes
-    only the missing groups; final index identical to single-shot."""
+    only the missing groups; final index identical to single-shot. Shard
+    groups exist only on the distributed side."""
     import shutil
     from harvester_spark.operators.index_build import IndexConfig, build_index
+    pin_distributed()
     cfg = IndexConfig(salt_df_threshold=50, salt_range_docs=100,
                       block_size=32, postings_shard_groups=3)
     d = tmp_path / "sharded"
@@ -195,16 +199,21 @@ def test_sharded_merge_resume(spark, corpus_df, tmp_path):
     assert decoded(d) == decoded(d2)
 
 
-def test_salted_equals_unsalted(spark, corpus_df, tmp_path):
+def test_salted_equals_unsalted(spark, corpus_df, tmp_path, pin_distributed):
     """Byte-level invariant: postings content identical with/without salting
-    after normalizing block boundaries (decode-and-compare)."""
+    after normalizing block boundaries (decode-and-compare). The unsalted
+    index is built on the driver; the salted one on the distributed side,
+    the only side that salts."""
     from harvester_spark.operators.index_build import IndexConfig, build_index
     d1, d2 = tmp_path / "salted", tmp_path / "unsalted"
+    build_index(spark, corpus_df, d2,
+                cfg=IndexConfig(salt_df_threshold=10**9, block_size=32))
+    pin_distributed()
     build_index(spark, corpus_df, d1,
                 cfg=IndexConfig(salt_df_threshold=50, salt_range_docs=64,
                                 block_size=32))
-    build_index(spark, corpus_df, d2,
-                cfg=IndexConfig(salt_df_threshold=10**9, block_size=32))
+    post = tables.read_table(spark, d1 / "postings")
+    assert post.filter(F.col("salt") > 0).count() > 0
 
     def decoded(d):
         post = tables.read_table(spark, d / "postings").toPandas()
@@ -249,3 +258,127 @@ def test_unicode_content_build(spark, tmp_path):
     got = [r["doc_id"] for r in
            query_topk_index(spark, d, "test_underscore", 5).collect()]
     assert got == [2]
+
+
+def test_idf_kernel_bit_exact_with_spark_log(spark):
+    """The driver build's idf equals the distributed dictionary's
+    ``F.log(1 + (N - df + 0.5) / (df + 0.5))`` bit for bit (fdlibm port),
+    on 10^6 arguments: random df at N=10^7, x in (1, 2), x within 10^-6 of
+    1 (fdlibm's |f| < 2^-20 branch) and a wide exponent range. np.log
+    differs on the same set, so the equality is not trivial."""
+    import pyarrow as pa
+
+    from harvester_spark.operators.index_build import fdlibm_log, idf
+
+    rng = np.random.default_rng(11)
+    n = 10**7
+    dfs = rng.integers(1, n + 1, 400_000)
+    xs = np.concatenate([
+        1.0 + rng.random(200_000),
+        1.0 + (rng.random(200_000) - 0.5) * 2e-6,
+        np.exp(rng.uniform(-700.0, 700.0, 200_000)),
+        [5e-324, 1e-310, 1.0, 2.0, np.nextafter(1.0, 2.0)]])
+
+    want_idf = (spark.createDataFrame(pa.table({"df": dfs}))
+                .select(F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df")
+                                            + 0.5) / (F.col("df") + 0.5)))
+                .toArrow().column(0).to_numpy())
+    want_log = (spark.createDataFrame(pa.table({"x": xs}))
+                .select(F.log("x")).toArrow().column(0).to_numpy())
+
+    def bits(a):
+        return np.asarray(a, dtype=np.float64).view(np.int64)
+
+    assert (bits(idf(dfs, n)) == bits(want_idf)).all()
+    assert (bits(fdlibm_log(xs)) == bits(want_log)).all()
+    naive = np.log(1.0 + ((float(n) - dfs) + 0.5) / (dfs + 0.5))
+    assert (bits(naive) != bits(want_idf)).sum() > 0
+    assert (bits(np.log(xs)) != bits(want_log)).sum() > 0
+
+
+def _placement_corpus(spark, corpus_df, name):
+    rows = {
+        "empty": [],
+        "zero_token_and_null": [(0, ""), (1, None), (2, "!!! --- ..."),
+                                (3, "alpha beta alpha"), (4, None),
+                                (5, "beta")],
+        "repeated_terms": [(i, " ".join(["x"] * (i + 1) + ["y"] * (7 - i % 7)))
+                           for i in range(40)],
+        # one term in every doc: 10 blocks of 32
+        "one_term_many_blocks": [(3 * i, f"common word{i % 5} common")
+                                 for i in range(300)],
+        "non_ascii": [(0, "héllo wörld naïve café"),
+                      (1, "日本語のテキスト 漢字 abc"),
+                      (2, "emoji 🎉 test_underscore mixed123"),
+                      (3, "ПРИВЕТ мир abc"), (4, "ünïcödé abc test_underscore")],
+    }
+    if name == "session":
+        return corpus_df
+    return spark.createDataFrame(rows[name], "doc_id long, content string")
+
+
+@pytest.mark.parametrize("corpus", ["session", "empty", "zero_token_and_null",
+                                    "repeated_terms", "one_term_many_blocks",
+                                    "non_ascii"])
+def test_build_placements_write_equal_stages(spark, corpus_df, tmp_path,
+                                             pin_distributed, corpus):
+    """The driver build and the distributed build of the same corpus write
+    equal stages: stats, dictionary (idf bit for bit), term_ub, and
+    postings block for block (metadata and encoded bytes; only the
+    build-partition id differs) — so both query paths rank identically."""
+    from harvester_spark.operators.bm25 import IndexHandle, query_topk_index
+    from harvester_spark.operators.index_build import IndexConfig, build_index
+
+    docs = _placement_corpus(spark, corpus_df, corpus)
+    cfg = IndexConfig(salt_df_threshold=10**9, block_size=32)
+    drv, dist = tmp_path / "driver", tmp_path / "distributed"
+    assert build_index(spark, docs, drv, cfg=cfg).placement["side"] == "driver"
+    pin_distributed()
+    assert build_index(spark, docs, dist,
+                       cfg=cfg).placement["side"] == "distributed"
+
+    for name in ("stats", "postings"):
+        assert tables.read_meta(drv / name) == tables.read_meta(dist / name)
+    for name, key in (("dictionary", ["term"]), ("term_ub", ["term"]),
+                      ("postings", ["term", "salt", "block_id"])):
+        a, b = ((tables.read_arrow(d / name).to_pandas()
+                 .drop(columns=["part_id"], errors="ignore")
+                 .sort_values(key).reset_index(drop=True))
+                for d in (drv, dist))
+        pd.testing.assert_frame_equal(a, b, check_exact=True)
+        if name == "dictionary":
+            assert (a["idf"].to_numpy().view(np.int64)
+                    == b["idf"].to_numpy().view(np.int64)).all()
+
+    for q in ("import def", "def class return", "alpha", "x y", "common",
+              "abc test_underscore", "qqq_absent"):
+        for mode in ("or", "and"):
+            got, want = (query_topk_index(spark, d, q, 10, mode=mode)
+                         .toPandas() for d in (drv, dist))
+            pd.testing.assert_frame_equal(got, want, check_exact=True)
+        got, want = (IndexHandle(spark, d, cache=False).topk_local(q, 10)
+                     for d in (drv, dist))
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
+def test_build_reports_placement_and_keeps_process_state(spark, corpus_df,
+                                                         tmp_path,
+                                                         monkeypatch):
+    """``BuildReport.placement`` names the side and the budget it compared
+    against; a driver build leaves pyarrow's thread pool as it was."""
+    import pyarrow as pa
+
+    from harvester_spark.operators.index_build import build_index
+
+    threads = pa.cpu_count()
+    rep = build_index(spark, corpus_df, tmp_path / "drv")
+    assert pa.cpu_count() == threads
+    assert rep.placement == {
+        "side": "driver", "docs": 400,
+        "text_bytes": tables.read_meta(tmp_path / "drv" / "stats")["text_bytes"],
+        "max_docs": tables.DRIVER_MAX_DOCS,
+        "max_bytes": tables.DRIVER_MAX_BYTES}
+    monkeypatch.setattr(tables, "DRIVER_MAX_DOCS", 0)
+    rep = build_index(spark, corpus_df, tmp_path / "dist")
+    assert rep.placement["side"] == "distributed"
+    assert rep.placement["max_docs"] == 0
