@@ -9,10 +9,13 @@ role natively:
   built-ins (tokenize → filter-to-query-terms → tf/df aggregates → score →
   TakeOrderedAndProject). 100% SQL-expressible, used as the driver-oracle
   path and for ad-hoc queries without a prebuilt index.
-- :func:`query_topk_index` — the scale path: dictionary lookup → parquet
-  predicate pushdown on ``term`` → block-max upper-bound pruning (safe:
-  provably never drops a true top-k doc) → vectorized block decode →
-  per-doc accumulation → global top-k.
+- :func:`query_topk_index` / :meth:`IndexHandle.topk_local` — the index.
+  Small queries run ONE zero-job driver chain on both: pyarrow read of
+  the terms' blocks → ``codec.decode_blocks`` → :func:`_block_parts`
+  (idf · ``index_build._tfnorm``) → :func:`_topk`. The scale path: parquet
+  pushdown on ``term`` → block-max upper-bound pruning (safe: provably
+  never drops a true top-k doc) → the same decode and score per Arrow
+  batch on executors → per-doc accumulation → global top-k.
 
 Scoring (fixed, matches the numpy oracle bit-for-bit in float64):
   idf(t)  = ln(1 + (N - df + 0.5) / (df + 0.5))          [Lucene-style]
@@ -24,19 +27,24 @@ Scoring (fixed, matches the numpy oracle bit-for-bit in float64):
 from __future__ import annotations
 
 import threading
-from collections import deque
+from collections import OrderedDict, deque
+from functools import cached_property
 from pathlib import Path
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, LongType, StructField, StructType)
 
 from harvester_spark import tables
-from harvester_spark.functions.tokenize import (doc_len_expr, tokenize_pandas,
-                                                tokens_expr)
+from harvester_spark.functions.tokenize import tokenize_pandas
+from harvester_spark.operators.codec import decode_blocks
+from harvester_spark.operators.index_build import _tfnorm
 
 # per-query projections the scorers cache: each session keeps its newest
 # few and unpersists older ones (a released query still answers — it
@@ -147,9 +155,7 @@ def bm25_scores(docs: DataFrame, query: str, *, id_col: str = "doc_id",
         tf = F.col(f"__tf{i}")
         dfc = F.lit(float(row[f"__df{i}"]))
         idf = F.log(F.lit(1.0) + (n_lit - dfc + 0.5) / (dfc + 0.5))
-        parts.append(idf * tf * (k1 + 1.0)
-                     / (tf + k1 * (1.0 - b + b * F.col("dl")
-                                   / avgdl_lit)))
+        parts.append(idf * _tfnorm(tf, F.col("dl"), k1, b, avgdl_lit))
     # nt counts terms present in the doc (== the old per-doc row count)
     for i in range(len(terms)):
         hits.append((F.col(f"__tf{i}") > 0).cast("int"))
@@ -196,9 +202,8 @@ def _bm25_scores_tokens(docs: DataFrame, terms: list[str], *, id_col: str,
               .withColumn("idf", F.log(F.lit(1.0)
                                        + (F.col("N") - F.col("df") + 0.5)
                                        / (F.col("df") + 0.5)))
-              .withColumn("part", F.col("idf") * F.col("tf") * (k1 + 1.0)
-                          / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl")
-                                                 / F.col("avgdl")))))
+              .withColumn("part", F.col("idf") * _tfnorm(
+                  F.col("tf"), F.col("dl"), k1, b, F.col("avgdl"))))
     agg = scored.groupBy("doc_id").agg(F.sum("part").alias("score"),
                                        F.count("*").alias("nt"))
     if mode == "and":
@@ -224,38 +229,54 @@ def query_topk_dataframe(docs: DataFrame, query: str, k: int, *,
 # Path B: prebuilt compressed index + block-max pruning
 # --------------------------------------------------------------------------
 
-def _decode_block_rows(pdf: pd.DataFrame, idf_by_term: dict[str, float],
-                       k1: float, b: float, avgdl: float) -> pd.DataFrame:
-    """Decode a batch of posting-block rows → (doc_id, score_part) rows."""
-    from harvester_spark.operators.codec import decode_doc_ids, varint_decode
+# the posting-block columns the query kernel decodes
+_BLOCK_COLS = ["term", "doc_id_first", "doc_count", "deltas", "tfs", "dls"]
 
-    ids_out: list[np.ndarray] = []
-    parts_out: list[np.ndarray] = []
-    for row in pdf.itertuples(index=False):
-        n = int(row.doc_count)
-        ids = decode_doc_ids(int(row.doc_id_first), bytes(row.deltas), n)
-        tf = varint_decode(bytes(row.tfs)).astype(np.float64)
-        dl = varint_decode(bytes(row.dls)).astype(np.float64)
-        idf = idf_by_term[row.term]
-        # parenthesized identically to the encoder's tfnorm so that
-        # part <= idf * block_max_tfnorm holds bit-exactly
-        tfnorm = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        part = idf * tfnorm
-        ids_out.append(ids)
-        parts_out.append(part)
-    if not ids_out:
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float64")})
-    return pd.DataFrame({"doc_id": np.concatenate(ids_out),
-                         "score": np.concatenate(parts_out)})
+
+def _block_parts(blocks, idf_by_term: dict[str, float], k1: float, b: float,
+                 avgdl: float) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Arrow posting blocks → ``(doc_id, part, postings per term)``, the
+    parts ``idf · _tfnorm`` (the encoder's expression, so ``part ≤ idf ·
+    block_max_tfnorm`` holds bit-exactly) grouped by term in the key order
+    of ``idf_by_term`` — query-term order on every caller, so a doc's
+    parts always sum in one order."""
+    terms = list(idf_by_term)
+    rank = np.asarray(pc.index_in(blocks["term"],
+                                  value_set=pa.array(terms, pa.string())))
+    order = np.argsort(rank, kind="stable")
+    blocks, rank = blocks.take(order), rank[order]
+    counts = np.asarray(blocks["doc_count"], dtype=np.int64)
+    ids, tf, dl = decode_blocks(*(blocks[c] for c in _BLOCK_COLS[1:]))
+    idf = np.repeat(np.array([idf_by_term[t] for t in terms])[rank], counts)
+    parts = idf * _tfnorm(tf.astype(np.float64), dl.astype(np.float64),
+                          k1, b, avgdl)
+    sizes = np.bincount(rank, weights=counts, minlength=len(terms))
+    return ids, parts, sizes.astype(np.int64)
+
+
+def _topk(ids: np.ndarray, parts: np.ndarray, n_required: int,
+          exclude: np.ndarray | None, k: int
+          ) -> tuple[np.ndarray, np.ndarray]:
+    """The one top-k scorer: each doc's parts summed in array order, docs
+    with fewer than ``n_required`` parts (AND mode: one per query term) or
+    in ``exclude`` dropped, then the ``k`` best as ``(doc ids, scores)``,
+    score desc, doc_id asc."""
+    uniq, inv = np.unique(ids, return_inverse=True)
+    scores = np.bincount(inv, weights=parts, minlength=uniq.size)
+    keep = np.bincount(inv, minlength=uniq.size) >= n_required
+    if exclude is not None and exclude.size:
+        keep &= ~np.isin(uniq, exclude)
+    uniq, scores = uniq[keep], scores[keep]
+    order = np.lexsort((uniq, -scores))[:k]
+    return uniq[order], scores[order]
 
 
 class IndexHandle:
-    """An opened index: metadata, the dictionary segment every term lookup
-    reads, and the (optionally cached) postings DataFrame. Re-using a
-    handle across queries removes the per-query parquet re-scan — the
-    engine's equivalent of Solr keeping its searcher open (the reference
-    re-queries one long-lived Solr, harvester/fetcher/solr_fetcher.py:14)."""
+    """An opened index (no Spark job): metadata, the dictionary segment
+    every term lookup reads, and the postings. Re-using a handle across
+    queries keeps its term cache and cached postings — the engine's
+    equivalent of Solr keeping its searcher open (the reference re-queries
+    one long-lived Solr, harvester/fetcher/solr_fetcher.py:14)."""
 
     def __init__(self, spark: SparkSession, index_dir: str | Path,
                  cache: bool = True):
@@ -272,119 +293,103 @@ class IndexHandle:
         # term lookup: µs per term at any vocabulary size, driver memory =
         # block leaders only, no Spark job
         self.dict_segment = DictSegment(seg_dir)
-        self.postings = tables.read_table(spark, self.index_dir / "postings")
-        if cache:
-            # postings caching is a working-set decision left to the
-            # deployment at 100 TB
-            self.postings = self.postings.cache()
+        self._cache_postings = cache
+        self._term_cache: OrderedDict[str, tuple] = OrderedDict()
+        self._term_cache_entries = 0
+
+    @cached_property
+    def postings(self) -> DataFrame:
+        """The postings DataFrame of the pruned path, opened on first use
+        (caching is a working-set decision left to the deployment)."""
+        postings = tables.read_table(self.spark, self.index_dir / "postings")
+        return postings.cache() if self._cache_postings else postings
 
     def lookup(self, terms: list[str]) -> dict[str, dict]:
         """term → {df, idf, max_tfnorm} for the present query terms."""
         return self.dict_segment.lookup(terms)
 
     def unpersist(self) -> None:
-        self.postings.unpersist()
+        if "postings" in self.__dict__:
+            self.postings.unpersist()
         self.dict_segment.close()  # parts reopen lazily on the next lookup
+
+    def _read_blocks(self, terms: list[str]) -> pa.Table:
+        """``terms``' posting blocks: ONE pyarrow scan, no Spark job."""
+        return pq.read_table(tables.parquet_files(self.index_dir / "postings"),
+                             columns=_BLOCK_COLS,
+                             filters=[("term", "in", terms)],
+                             partitioning=None)
 
     # -- interactive serving path ------------------------------------------
     # The reference serves queries from a long-lived Solr at ~ms latency;
     # Spark's job model floors any distributed query at ~100s of ms. For
-    # interactive use, a query node pulls the (compressed) postings of the
-    # query's terms once — a pushed-down scan — and scores in-process.
+    # interactive use, a query node reads the (compressed) postings of the
+    # query's missed terms once, keeps them decoded, and scores in-process.
 
-    # resident decoded-postings budget for the serving cache: ~24 B/entry
-    # (three float64/int64 arrays), so 8M entries ≈ 200 MB — a serving
-    # node's hot working set, NOT unbounded lifetime growth (r4 verdict
-    # #4: a long-lived node querying a wide vocabulary accumulated GBs).
+    # resident decoded-postings budget for the serving cache: 16 B/entry
+    # (doc id + score part), so 8M entries ≈ 128 MB — a serving node's
+    # hot working set, NOT unbounded lifetime growth (r4 verdict #4: a
+    # long-lived node querying a wide vocabulary accumulated GBs).
     # Override per-handle by assigning the attribute.
     term_cache_max_entries: int = 8_000_000
 
-    def _term_postings(self, term: str):
-        if not hasattr(self, "_term_cache"):
-            from collections import OrderedDict
-            self._term_cache: "OrderedDict[str, tuple]" = OrderedDict()
-            self._term_cache_entries = 0
+    def _term_parts(self, terms: list[str], info: dict[str, dict]
+                    ) -> tuple[np.ndarray, np.ndarray]:
+        """``(doc_id, part)`` of ``terms`` concatenated in their order:
+        hits from the LRU cache, all misses from one read, then cached."""
         cache = self._term_cache
-        if term not in cache:
-            from harvester_spark.operators.codec import (decode_doc_ids,
-                                                         varint_decode)
-            rows = (self.postings.filter(F.col("term") == term)
-                    .select("doc_id_first", "doc_count", "deltas", "tfs",
-                            "dls").collect())
-            ids_l, tf_l, dl_l = [], [], []
-            for r in rows:
-                ids_l.append(decode_doc_ids(int(r["doc_id_first"]),
-                                            bytes(r["deltas"]),
-                                            int(r["doc_count"])))
-                tf_l.append(varint_decode(bytes(r["tfs"])))
-                dl_l.append(varint_decode(bytes(r["dls"])))
-            if ids_l:
-                cache[term] = (
-                    np.concatenate(ids_l),
-                    np.concatenate(tf_l).astype(np.float64),
-                    np.concatenate(dl_l).astype(np.float64))
-            else:
-                cache[term] = (np.empty(0, np.int64),
-                               np.empty(0), np.empty(0))
-            # charge a small constant floor per cached term: absent/rare
-            # terms decode to ~empty postings but still cost an
-            # OrderedDict slot + three array objects, so a workload
-            # probing many distinct absent terms must still trigger
-            # eviction (the accounting floor mirrors the real overhead)
-            self._term_cache_entries += max(len(cache[term][0]), 64)
-            # entries-bounded LRU (dictseg block-cache pattern): evict the
-            # coldest term, but never the one just decoded — a single
-            # term wider than the whole budget still gets served
-            while (self._term_cache_entries > self.term_cache_max_entries
-                   and len(cache) > 1):
-                _, old = cache.popitem(last=False)
-                self._term_cache_entries -= max(len(old[0]), 64)
-        else:
-            cache.move_to_end(term)
-        return cache[term]
+        got = {t: cache[t] for t in terms if t in cache}
+        for t in got:
+            cache.move_to_end(t)
+        missed = [t for t in terms if t not in got]
+        if missed:
+            k1, b, avgdl = self.meta["k1"], self.meta["b"], self.meta["avgdl"]
+            ids, parts, sizes = _block_parts(
+                self._read_blocks(missed),
+                {t: info[t]["idf"] for t in missed}, k1, b, avgdl)
+            bounds = np.cumsum(sizes)[:-1]
+            for t, entry in zip(missed, zip(np.split(ids, bounds),
+                                            np.split(parts, bounds))):
+                got[t] = cache[t] = entry
+                # charge a small constant floor per cached term: rare
+                # terms decode to a handful of postings but still cost an
+                # OrderedDict slot + two array objects, so a workload
+                # probing many distinct rare terms must still trigger
+                # eviction (the accounting floor mirrors the real overhead)
+                self._term_cache_entries += max(len(entry[0]), 64)
+                # entries-bounded LRU (dictseg block-cache pattern): evict
+                # the coldest term, but never the one just decoded — a
+                # single term wider than the whole budget still gets served
+                while (self._term_cache_entries > self.term_cache_max_entries
+                       and len(cache) > 1):
+                    _, old = cache.popitem(last=False)
+                    self._term_cache_entries -= max(len(old[0]), 64)
+        return (np.concatenate([got[t][0] for t in terms]),
+                np.concatenate([got[t][1] for t in terms]))
 
     def topk_local(self, query: str, k: int, *, mode: str = "or",
                    local_postings_cap: int = 2_000_000) -> pd.DataFrame:
-        """ms-latency top-k served driver-side from cached term postings.
-
-        Rank-identical to the distributed path (same float64 formula, same
-        tie rule). Intended for interactive serving of moderate-df terms; a
-        pathological term's postings (~GBs at 10^12 docs) must NOT be
-        collected, so when the yet-uncached postings for this query exceed
-        ``local_postings_cap`` entries (df comes from the segment
-        lookup — the check is free) the query is AUTO-ROUTED to
-        the distributed block-max path instead of collecting."""
-        k1, b, avgdl = self.meta["k1"], self.meta["b"], self.meta["avgdl"]
+        """ms-latency top-k on the driver, no Spark job: the small-query
+        chain of :func:`query_topk_index` (same ids, bit-equal scores) with
+        decoded terms kept in the LRU cache. A pathological term's postings
+        (~GBs at 10^12 docs) must NOT be read on the driver: when the
+        query's uncached postings exceed ``local_postings_cap`` entries (df
+        from the segment lookup — free), the query is AUTO-ROUTED to the
+        distributed block-max path instead."""
         terms = tokenize_query(query)
         info = self.lookup(terms)
         present = [t for t in terms if t in info]
         if not present or (mode == "and" and len(present) < len(terms)):
             return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
                                  "score": pd.Series(dtype="float64")})
-        cached = getattr(self, "_term_cache", {})
-        pending = sum(int(info[t]["df"]) for t in present if t not in cached)
+        pending = sum(int(info[t]["df"]) for t in present
+                      if t not in self._term_cache)
         if pending > local_postings_cap:
-            dist = query_topk_index(self.spark, self, query, k, mode=mode)
-            pdf = dist.toPandas()
-            return pd.DataFrame({
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "score": pdf["score"].astype("float64")})
-        all_ids, all_parts = [], []
-        for t in present:
-            ids, tf, dl = self._term_postings(t)
-            tfnorm = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-            all_ids.append(ids)
-            all_parts.append(info[t]["idf"] * tfnorm)
-        ids = np.concatenate(all_ids)
-        parts = np.concatenate(all_parts)
-        uniq, inv = np.unique(ids, return_inverse=True)
-        scores = np.bincount(inv, weights=parts)
-        if mode == "and":
-            nt = np.bincount(inv)
-            keep = nt == len(present)
-            uniq, scores = uniq[keep], scores[keep]
-        order = np.lexsort((uniq, -scores))[:k]
-        return pd.DataFrame({"doc_id": uniq[order], "score": scores[order]})
+            return query_topk_index(self.spark, self, query, k, mode=mode,
+                                    small_query_postings=0).toPandas()
+        ids, scores = _topk(*self._term_parts(present, info),
+                            len(present) if mode == "and" else 1, None, k)
+        return pd.DataFrame({"doc_id": ids, "score": scores})
 
 
 def open_index(spark: SparkSession, index_dir: str | Path,
@@ -509,8 +514,8 @@ def _and_range_prune(spark: SparkSession, blocks: DataFrame, rarest: str,
     if n_rng == 0:
         return None
     ranges = spark.createDataFrame(
-        [(int(r.doc_id_first), int(r.doc_id_last), i)
-         for i, r in enumerate(rng_pdf.itertuples(index=False))],
+        [(int(lo), int(hi), i) for i, (lo, hi) in enumerate(
+            zip(rng_pdf["doc_id_first"], rng_pdf["doc_id_last"]))],
         "lo long, hi long, ridx int")
 
     # per-range complement sums: max UB per (range, other term) from ONE
@@ -526,10 +531,9 @@ def _and_range_prune(spark: SparkSession, blocks: DataFrame, rarest: str,
         & (F.col("doc_id_first") <= F.col("hi")))
         .groupBy("ridx", "term").agg(F.max("ub").alias("mx"))
         .toPandas())
-    other_sum = np.zeros(n_rng)
-    if len(per_rt):
-        sums = per_rt.groupby("ridx")["mx"].sum()
-        other_sum[sums.index.to_numpy()] = sums.to_numpy()
+    other_sum = np.bincount(per_rt["ridx"].to_numpy(np.int64),
+                            weights=per_rt["mx"].to_numpy(np.float64),
+                            minlength=n_rng)
     bound = rng_pdf["ub"].to_numpy() + other_sum
 
     # seed window: decode ALL terms' blocks overlapping the best-bound
@@ -541,7 +545,7 @@ def _and_range_prune(spark: SparkSession, blocks: DataFrame, rarest: str,
         [(int(rng_pdf["doc_id_first"].iat[i]),
           int(rng_pdf["doc_id_last"].iat[i])) for i in top],
         "slo long, shi long")
-    seed_pdf = (blocks.join(
+    seed = (blocks.join(
         F.broadcast(seed_ranges),
         (F.col("doc_id_last") >= F.col("slo"))
         & (F.col("doc_id_first") <= F.col("shi")), "left_semi")
@@ -549,27 +553,17 @@ def _and_range_prune(spark: SparkSession, blocks: DataFrame, rarest: str,
         # an arbitrary first-seen prefix) so θ is reproducible run-to-run
         .orderBy(F.col("ub").desc(), "term", "doc_id_first")
         .limit(seed_block_cap)
-        .select("term", "doc_id_first", "doc_count", "deltas", "tfs", "dls")
-        .toPandas())
-    if not len(seed_pdf):
-        return None
-    per_term_frames = []
-    for t, grp in seed_pdf.groupby("term"):
-        dec = _decode_block_rows(grp, idf_by_term, k1, b, avgdl)
-        dec["term"] = t
-        per_term_frames.append(dec)
-    dec_all = pd.concat(per_term_frames, ignore_index=True)
-    agg = dec_all.groupby("doc_id").agg(score=("score", "sum"),
-                                        nt=("term", "nunique"))
-    if exclude is not None and exclude.size:
-        # θ must be the k-th best among docs that can actually be
-        # RETURNED: seeding θ from an excluded doc would overshoot the
-        # true k-th live score and prune blocks holding live top-k docs
-        agg = agg[~agg.index.isin(exclude)]
-    inter = agg[agg["nt"] == len(present)]["score"].to_numpy()
+        .select(*_BLOCK_COLS)
+        .toArrow())
+    # a doc has one block per term, so its part count is its term count;
+    # θ must be the k-th best among docs that can actually be RETURNED:
+    # seeding θ from an excluded doc would overshoot the true k-th live
+    # score and prune blocks holding live top-k docs
+    ids, parts, _ = _block_parts(seed, idf_by_term, k1, b, avgdl)
+    _, inter = _topk(ids, parts, len(present), exclude, k)
     if inter.size < k:
         return None
-    theta = float(np.partition(inter, -k)[-k])
+    theta = float(inter[k - 1])
 
     keep_mask = bound >= theta * _EPS - 1e-300
     if keep_mask.all():
@@ -588,18 +582,19 @@ def _and_range_prune(spark: SparkSession, blocks: DataFrame, rarest: str,
 
 def _decode_agg(blocks: DataFrame, idf_by_term: dict[str, float],
                 k1: float, b: float, avgdl: float) -> DataFrame:
-    """Decode posting blocks → per-doc partial sums: (doc_id, score, nt).
+    """Decode posting blocks → per-doc partial sums: (doc_id, score, nt),
+    each Arrow batch through the driver's kernel (:func:`_block_parts`).
     nt counts decoded blocks per doc; a doc has exactly one block per
     matched term, so nt == n_terms ⟺ every posting of the doc was in the
     decoded set ⟺ its score is EXACT (the probe-θ safety argument)."""
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield _decode_block_rows(pdf, idf_by_term, k1, b, avgdl)
+    def decode(batches: Iterator[pa.RecordBatch]
+               ) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            ids, parts, _ = _block_parts(batch, idf_by_term, k1, b, avgdl)
+            yield pa.record_batch({"doc_id": ids, "score": parts})
 
-    return (blocks.select("term", "doc_id_first", "doc_count", "deltas",
-                          "tfs", "dls")
-            .mapInPandas(decode, SCORE_SCHEMA)
+    return (blocks.select(*_BLOCK_COLS)
+            .mapInArrow(decode, SCORE_SCHEMA)
             .groupBy("doc_id").agg(F.sum("score").alias("score"),
                                    F.count("*").alias("nt")))
 
@@ -645,47 +640,31 @@ def _collect_exclude_ids(exclude_ids: DataFrame,
     exclusion set exceeds ``cap`` (then callers must fall back to paths
     that don't need it driver-side). Tombstone sets are O(recent deletes)
     — tiny next to the corpus — so the cap exists only as a safety rail."""
-    rows = (exclude_ids.select(F.col("doc_id").cast("long"))
-            .limit(cap + 1).collect())
-    if len(rows) > cap:
-        return None
-    return np.asarray([r["doc_id"] for r in rows], dtype=np.int64)
+    ids = (exclude_ids.select(F.col("doc_id").cast("long")).limit(cap + 1)
+           .toArrow().column(0).to_numpy())
+    return None if ids.size > cap else ids
 
 
-def _topk_small_query(spark: SparkSession, blocks: DataFrame,
-                      present: list[str], idf_by_term: dict[str, float],
-                      k: int, mode: str, k1: float, b: float,
-                      avgdl: float,
-                      exclude: np.ndarray | None = None) -> DataFrame:
-    """Small-query fast path: when the candidate posting volume is tiny
-    (known from the dictionary — no extra job), ONE collect job fetches
-    the blocks and the driver decodes/scores them, skipping the
-    mapInPandas python-worker round and the aggregation shuffle. Same
-    float64 formula + tie rule as the distributed path → rank-identical
-    (enforced by the same rank-identity tests, which flow through here
-    at test-corpus sizes)."""
-    pdf = (blocks.select("term", "doc_id_first", "doc_count",
-                         "deltas", "tfs", "dls").toPandas())
-    if not len(pdf):
-        return tables.empty_frame(spark, SCORE_SCHEMA)
-    frames = []
-    for t, grp in pdf.groupby("term"):
-        dec = _decode_block_rows(grp, idf_by_term, k1, b, avgdl)
-        dec["term"] = t
-        frames.append(dec)
-    allrows = pd.concat(frames, ignore_index=True)
-    agg = allrows.groupby("doc_id").agg(score=("score", "sum"),
-                                        nt=("term", "nunique"))
-    if mode == "and":
-        agg = agg[agg["nt"] == len(present)]
-    if exclude is not None and exclude.size:
-        agg = agg[~agg.index.isin(exclude)]
-    ids = agg.index.to_numpy()
-    scores = agg["score"].to_numpy()
-    order = np.lexsort((ids, -scores))[:k]
-    out = pd.DataFrame({"doc_id": ids[order].astype("int64"),
-                        "score": scores[order]})
-    return spark.createDataFrame(out, SCORE_SCHEMA)
+def _topk_small_query(spark: SparkSession, handle: IndexHandle,
+                      idf_by_term: dict[str, float], k: int, mode: str,
+                      exclude: np.ndarray | None,
+                      metrics_out: dict | None) -> DataFrame:
+    """Small-query path, the serving path's chain (so both agree bit for
+    bit): :meth:`IndexHandle._read_blocks` → :func:`_block_parts` →
+    :func:`_topk` → a local relation. No Spark job, collect included.
+    ``metrics_out`` reports every fetched block as scored."""
+    meta = handle.meta
+    blocks = handle._read_blocks(list(idf_by_term))
+    ids, parts, _ = _block_parts(blocks, idf_by_term, meta["k1"], meta["b"],
+                                 meta["avgdl"])
+    ids, scores = _topk(ids, parts, len(idf_by_term) if mode == "and" else 1,
+                        exclude, k)
+    if metrics_out is not None:
+        metrics_out.update(blocks_total=blocks.num_rows,
+                           blocks_scored=blocks.num_rows,
+                           block_skip_ratio=0.0)
+    return spark.createDataFrame(pa.table({"doc_id": ids, "score": scores}),
+                                 SCORE_SCHEMA)
 
 
 def query_topk_index(spark: SparkSession,
@@ -723,8 +702,11 @@ def query_topk_index(spark: SparkSession,
     (AND — probe docs are fully covered, certified by block count) is a
     valid θ, tighter than the driver-seed θ, so late blocks prune
     against it. Probe contributions are cached and reused in the final
-    aggregation — nothing decodes twice. ``metrics_out`` (optional dict)
-    receives block-skip accounting (costs count jobs — tests/bench only).
+    aggregation — nothing decodes twice.
+
+    Queries of ≤ ``small_query_postings`` postings run the zero-job driver
+    chain of :func:`_topk_small_query` instead. ``metrics_out`` (optional
+    dict) receives block-skip accounting (count jobs on the pruned path).
     """
     # ad-hoc (path) calls: no postings caching
     handle = (index_dir if isinstance(index_dir, IndexHandle)
@@ -737,18 +719,11 @@ def query_topk_index(spark: SparkSession,
         return tables.empty_frame(spark, SCORE_SCHEMA)
 
     info = handle.lookup(terms)
-    idf_by_term = {t: v["idf"] for t, v in info.items()}
-    present = [t for t in terms if t in idf_by_term]
+    present = [t for t in terms if t in info]
     if not present or (mode == "and" and len(present) < len(terms)):
         return tables.empty_frame(spark, SCORE_SCHEMA)
-
-    postings = (handle.postings
-                .filter(F.col("term").isin(present)))  # pushed to scan
-
-    idf_map = F.create_map(*[x for t in present
-                             for x in (F.lit(t), F.lit(idf_by_term[t]))])
-    blocks = postings.withColumn("ub", idf_map[F.col("term")]
-                                 * F.col("block_max_tfnorm"))
+    # keyed in query-term order: the order the driver scorer sums in
+    idf_by_term = {t: info[t]["idf"] for t in present}
 
     total_postings = sum(info[t]["df"] for t in present)
 
@@ -764,19 +739,22 @@ def query_topk_index(spark: SparkSession,
                         else _collect_exclude_ids(exclude_ids))
         return _exc[0]
 
-    # small queries (candidate volume known from the dictionary, no extra
-    # job) score driver-side in ONE collect — skips the python-worker
-    # decode round + aggregation shuffle; rank-identical. The cap is a
-    # driver budget, not a tuning constant: 262k postings ≈ 3 MB of
-    # compressed blocks collected + ~6 MB decoded + single-digit ms of
-    # numpy scoring, vs 10+ sequential micro-jobs (seed/θ/probe/decode
-    # collects) on the distributed path — measured 2.4 s → 0.25 s for a
-    # two-term AND query at sf1.0. Corpus-scale common-term queries blow
-    # past the cap immediately and keep the pruned distributed path.
-    if (metrics_out is None and 0 < total_postings <= small_query_postings
+    # small queries (candidate volume known from the dictionary) score on
+    # the driver with zero jobs. The cap is a driver budget, not a tuning
+    # constant: 262k postings ≈ 3 MB of compressed blocks read + ~4 MB
+    # decoded + ms of numpy, vs 10+ sequential micro-jobs (seed/θ/probe/
+    # decode collects) on the distributed path.
+    if (0 < total_postings <= small_query_postings
             and (exclude_ids is None or exclude_set() is not None)):
-        return _topk_small_query(spark, blocks, present, idf_by_term, k,
-                                 mode, k1, b, avgdl, exclude=exclude_set())
+        return _topk_small_query(spark, handle, idf_by_term, k, mode,
+                                 exclude_set(), metrics_out)
+
+    postings = (handle.postings
+                .filter(F.col("term").isin(present)))  # pushed to scan
+    idf_map = F.create_map(*[x for t in present
+                             for x in (F.lit(t), F.lit(idf_by_term[t]))])
+    blocks = postings.withColumn("ub", idf_map[F.col("term")]
+                                 * F.col("block_max_tfnorm"))
     if exclude_ids is not None and prune:
         # pruning with exclusions is safe only when the θ seed can be
         # cleaned of excluded docs driver-side; otherwise exactness wins
@@ -794,6 +772,7 @@ def query_topk_index(spark: SparkSession,
         # block metadata (small: df_rare/block_size rows)
         max_rare_ranges = 50_000
         n_rare_blocks = info[rarest]["df"] // meta.get("block_size", 128) + 1
+        kept = None
         if n_rare_blocks <= max_rare_ranges:
             rng_pdf = (rare_blocks
                        .select("doc_id_first", "doc_id_last", "ub")
@@ -804,12 +783,8 @@ def query_topk_index(spark: SparkSession,
                                     idf_by_term, k, k1, b, avgdl,
                                     exclude=exclude_set(),
                                     probe_frac=probe_frac if refine else 0.0)
-            if kept is not None:
-                rare_blocks, ranges = kept
-            else:
-                ranges = (rare_blocks
-                          .select(F.col("doc_id_first").alias("lo"),
-                                  F.col("doc_id_last").alias("hi")))
+        if kept is not None:
+            rare_blocks, ranges = kept
         else:
             ranges = (rare_blocks
                       .select(F.col("doc_id_first").alias("lo"),
@@ -834,15 +809,12 @@ def query_topk_index(spark: SparkSession,
         # UB blocks here — while 8×/16× add nothing. Driver cost is
         # decoding ~4k postings: negligible against one pruned block.
         seed_n = max(32, (16 * k) // max(meta.get("block_size", 128), 1) + 2)
-        seed = blocks.orderBy(F.desc("ub")).limit(seed_n).toPandas()
-        seed_sum = (_decode_block_rows(seed, idf_by_term, k1, b, avgdl)
-                    .groupby("doc_id")["score"].sum())
-        exc = exclude_set()
-        if exc is not None and exc.size:
-            seed_sum = seed_sum[~seed_sum.index.isin(exc)]
-        seed_scores = seed_sum.to_numpy()
+        seed = (blocks.orderBy(F.desc("ub")).limit(seed_n)
+                .select(*_BLOCK_COLS).toArrow())
+        ids, parts, _ = _block_parts(seed, idf_by_term, k1, b, avgdl)
+        _, seed_scores = _topk(ids, parts, 1, exclude_set(), k)
         if seed_scores.size >= k:
-            theta = float(np.partition(seed_scores, -k)[-k])
+            theta = float(seed_scores[k - 1])
             all_blocks = blocks
 
             def theta_filter(blks: DataFrame, th: float) -> DataFrame:

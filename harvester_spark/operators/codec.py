@@ -9,7 +9,9 @@ Wire format per block:
 - ``doc_id_first`` stored in a table column (int64);
 - ``deltas``: varint stream of ``doc_count - 1`` gaps ``id[i] - id[i-1]``
   (strictly positive — doc ids are unique and sorted);
-- ``tfs``: varint stream of ``doc_count`` term frequencies.
+- ``tfs``/``dls``: varint streams of ``doc_count`` tfs / doc lengths.
+
+:func:`decode_blocks` is the one block decoder (build, merges, queries).
 
 Varint = unsigned LEB128: 7 payload bits per byte, high bit = continuation.
 """
@@ -54,7 +56,7 @@ def varint_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def varint_decode(buf: bytes) -> np.ndarray:
+def varint_decode(buf) -> np.ndarray:
     """Decode an LEB128 byte stream back to a uint64 array."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
@@ -97,3 +99,39 @@ def decode_doc_ids(doc_id_first: int, gaps_varint: bytes, doc_count: int) -> np.
         gaps = varint_decode(gaps_varint).astype(np.int64)
         out[1:] = doc_id_first + np.cumsum(gaps)
     return out
+
+
+def _stream(cells) -> bytes | np.ndarray:
+    """Varint cells as one byte stream: an Arrow binary column's value
+    buffer from its first to its last offset (no copy), else a join."""
+    import pyarrow as pa
+
+    if isinstance(cells, pa.ChunkedArray):
+        cells = cells.combine_chunks()
+    if not isinstance(cells, pa.Array):
+        return b"".join(cells)
+    _, offsets, data = cells.buffers()
+    lo, hi = np.frombuffer(offsets, np.int32)[cells.offset:][[0, len(cells)]]
+    return np.frombuffer(data, np.uint8)[lo:hi]
+
+
+def decode_blocks(doc_id_first, doc_count, deltas, tfs, dls
+                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Posting blocks → ``(doc_id, tf, dl)`` int64 per posting, in block
+    order. Per-block first ids and counts (≥ 1); varint cells as Arrow
+    binary columns or bytes-like sequences. One varint call per field for
+    all blocks, doc ids by a segmented cumulative sum (a per-block loop
+    dies on the millions of single-posting blocks rare terms make)."""
+    firsts = np.asarray(doc_id_first, dtype=np.int64)
+    counts = np.asarray(doc_count, dtype=np.int64)
+    starts = np.cumsum(counts) - counts
+    vals = np.zeros(int(counts.sum()), dtype=np.int64)
+    is_start = np.zeros(vals.size, dtype=bool)
+    is_start[starts] = True
+    vals[is_start] = firsts
+    vals[~is_start] = varint_decode(_stream(deltas)).astype(np.int64)
+    # int64 wrap-around in the running sum cancels in the subtraction
+    cum = np.cumsum(vals)
+    doc_id = cum - np.repeat(cum[starts] - firsts, counts)
+    return (doc_id, varint_decode(_stream(tfs)).astype(np.int64),
+            varint_decode(_stream(dls)).astype(np.int64))

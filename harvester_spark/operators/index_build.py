@@ -84,7 +84,7 @@ from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from harvester_spark import tables
-from harvester_spark.operators.codec import (BLOCK_SIZE, varint_decode,
+from harvester_spark.operators.codec import (BLOCK_SIZE, decode_blocks,
                                              varint_encode, varint_sizes)
 
 K1 = 1.2
@@ -201,6 +201,8 @@ def _slice_stream(values: np.ndarray, starts: np.ndarray,
 
 def _tfnorm(tf: np.ndarray, dl: np.ndarray, k1: float, b: float,
             avgdl: float) -> np.ndarray:
+    """BM25 tf normalization, the one copy (numpy arrays or Spark Columns);
+    its parenthesization keeps block-max UB ≥ decoded score bit-exact."""
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
@@ -459,29 +461,11 @@ def _split_payload(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def _decode_packs(pdf: pd.DataFrame) -> pd.DataFrame:
     """Pack rows → (term, salt, doc_id, tf, dl) rows, sorted
-    (term, salt, doc_id).
-
-    Fully vectorized across packs: every pack's varint stream is joined and
-    decoded in ONE call, then doc ids are reconstructed with a segmented
-    cumulative sum. (A per-pack loop dies here: rare identifiers create
-    millions of single-posting packs.)
-    """
+    (term, salt, doc_id); the packs decode together in
+    :func:`~harvester_spark.operators.codec.decode_blocks`."""
     counts = pdf["doc_count"].to_numpy(np.int64)
-    firsts = pdf["doc_id_first"].to_numpy(np.int64)
-    total = int(counts.sum())
-    starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
-
-    gaps = varint_decode(b"".join(pdf["ids"])).astype(np.int64)
-    vals = np.zeros(total, dtype=np.int64)
-    is_start = np.zeros(total, dtype=bool)
-    is_start[starts] = True
-    vals[is_start] = firsts
-    vals[~is_start] = gaps
-    cum = np.cumsum(vals)
-    doc_id = cum - np.repeat(cum[starts] - firsts, counts)
-
-    tf = varint_decode(b"".join(pdf["tfs"])).astype(np.int64)
-    dl = varint_decode(b"".join(pdf["dls"])).astype(np.int64)
+    doc_id, tf, dl = decode_blocks(pdf["doc_id_first"], counts, pdf["ids"],
+                                   pdf["tfs"], pdf["dls"])
 
     # rows arrive sorted by (term, salt, doc_id_first) → pack index order
     # is already the (term, salt) order; encode terms as codes for lexsort

@@ -58,6 +58,7 @@ def main() -> None:
                                         range_docs=max(2048, n // 150),
                                         refine_theta=refine,
                                         refine_min_postings=0,
+                                        small_query_postings=0,
                                         metrics_out=m).collect()
                 assert [(r.doc_id, round(r.score, 9)) for r in rows] == \
                        [(r.doc_id, round(r.score, 9)) for r in full], \

@@ -127,14 +127,47 @@ def test_absent_term_query_launches_no_job(spark, index_dir):
     sc = spark.sparkContext
     group = "absent-term-query"
     for q, mode in (("qqqzzz_absent", "or"), ("import qqqzzz_absent", "and")):
-        res = query_topk_index(spark, index_dir, q, 5, mode=mode)
         sc.setJobGroup(group, "absent-term query")
         try:
+            res = query_topk_index(spark, index_dir, q, 5, mode=mode)
             assert res.collect() == []
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert res.schema == SCORE_SCHEMA
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+@pytest.mark.parametrize("q,k", QUERY_SET)
+@pytest.mark.parametrize("mode", ["or", "and"])
+def test_small_queries_launch_no_job_and_agree(spark, index_dir, q, k, mode):
+    """Small queries run one driver chain (pyarrow read → block decode →
+    top-k scorer) on both query paths: the serving path on a fresh handle
+    (cold term cache), the Spark path opened by path and on a handle all
+    launch no Spark job — opening included — and return the same ids with
+    bit-equal scores. ``metrics_out`` does not move a query off that
+    chain."""
+    from harvester_spark.operators.bm25 import open_index
+
+    sc = spark.sparkContext
+    group = f"small-query-{mode}-{q}"
+    m: dict = {}
+    sc.setJobGroup(group, "small query")
+    try:
+        local = open_index(spark, index_dir).topk_local(q, k, mode=mode)
+        by_path = query_topk_index(spark, index_dir, q, k,
+                                   mode=mode).collect()
+        by_handle = query_topk_index(spark, open_index(spark, index_dir), q,
+                                     k, mode=mode, metrics_out=m).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    for rows in (by_path, by_handle):
+        assert [r["doc_id"] for r in rows] == list(local["doc_id"])
+        np.testing.assert_allclose([r["score"] for r in rows],
+                                   local["score"].to_numpy(), rtol=0)
+    if m:  # a query with no present term returns before any block read
+        assert m["blocks_scored"] == m["blocks_total"] > 0
+        assert m["block_skip_ratio"] == 0.0
 
 
 def test_tie_break_doc_id_asc(oracle):
@@ -226,6 +259,7 @@ def test_range_localized_pruning_exact(spark, index_dir, oracle, q, mode):
     m: dict = {}
     pruned = query_topk_index(spark, index_dir, q, 3, mode=mode, prune=True,
                               prune_min_postings=0, range_docs=64,
+                              small_query_postings=0,
                               metrics_out=m).toPandas()
     want = oracle.topk(tokenize_query(q), 3, mode=mode)
     assert_rank_identical(pruned, want, f"localized {mode} {q!r}")
@@ -242,10 +276,10 @@ def test_local_serving_hot_term_auto_fallback(spark, index_dir, oracle):
     h = open_index(spark, index_dir)
     q, k = "import def", 10
 
-    def _no_collect(term):
-        raise AssertionError("hot-term query collected postings driver-side")
+    def _no_read(terms):
+        raise AssertionError("hot-term query read postings driver-side")
 
-    h._term_postings = _no_collect
+    h._read_blocks = _no_read
     got = h.topk_local(q, k, local_postings_cap=0)  # every term is "hot"
     want = oracle.topk(tokenize_query(q), k)
     assert_rank_identical(got, want, "auto-fallback")
@@ -253,16 +287,17 @@ def test_local_serving_hot_term_auto_fallback(spark, index_dir, oracle):
     # warm cache path still honored: cached terms don't count toward cap
     h2 = open_index(spark, index_dir)
     h2.topk_local(q, k)  # populates the term cache
-    h2._orig = h2._term_postings
+    h2._orig = h2._read_blocks
     calls = []
 
-    def _spy(term):
-        calls.append(term)
-        return h2._orig(term)
+    def _spy(terms):
+        calls.append(terms)
+        return h2._orig(terms)
 
-    h2._term_postings = _spy
+    h2._read_blocks = _spy
     got2 = h2.topk_local(q, k, local_postings_cap=0)
     assert_rank_identical(got2, want, "warm-cache-under-cap")
+    assert calls == []  # served from the cache, nothing read
 
 
 def test_term_cache_lru_bounded(spark, index_dir, oracle):
@@ -280,9 +315,9 @@ def test_term_cache_lru_bounded(spark, index_dir, oracle):
              tables.read_table(spark, f"{index_dir}/dictionary")
              .select("term").limit(40).collect()]
     for t in vocab:  # serving loop over > cap distinct terms
-        h._term_postings(t)
-        # accounting charges max(len, 64) per term (r5 ADVICE: empty/rare
-        # postings still cost a cache slot + three array objects, so they
+        h._term_parts([t], h.lookup([t]))
+        # accounting charges max(len, 64) per term (r5 ADVICE: rare
+        # postings still cost a cache slot + two array objects, so they
         # must count toward eviction pressure)
         charged = sum(max(len(v[0]), 64) for v in h._term_cache.values())
         assert charged == h._term_cache_entries
@@ -297,7 +332,7 @@ def test_term_cache_lru_bounded(spark, index_dir, oracle):
     assert_rank_identical(got, want, "lru-churn")
     # LRU order: re-touching a term moves it to the hot end
     t0 = next(iter(h._term_cache))
-    h._term_postings(t0)
+    h._term_parts([t0], h.lookup([t0]))
     assert next(reversed(h._term_cache)) == t0
 
 

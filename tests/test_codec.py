@@ -1,10 +1,11 @@
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from harvester_spark.operators.codec import (decode_doc_ids, encode_doc_ids,
-                                             varint_decode, varint_encode,
-                                             varint_sizes)
+from harvester_spark.operators.codec import (decode_blocks, decode_doc_ids,
+                                             encode_doc_ids, varint_decode,
+                                             varint_encode, varint_sizes)
 
 
 def test_varint_roundtrip_basic():
@@ -37,6 +38,69 @@ def test_docid_delta_roundtrip(ids):
     first, gaps = encode_doc_ids(arr)
     out = decode_doc_ids(first, gaps, len(arr))
     assert (out == arr).all()
+
+
+def _random_blocks(rng, n_blocks):
+    """Encoded posting blocks of 1..128 postings (first, last and full
+    sizes always present), with gaps up to 2^40 and tf/dl up to 2^31."""
+    sizes = [1, 128] + list(rng.integers(1, 129, max(n_blocks - 2, 0)))
+    rows = []
+    for n in sizes[:n_blocks]:
+        gaps = rng.integers(1, 1 << int(rng.choice([3, 20, 40])), n - 1)
+        ids = int(rng.integers(0, 1 << 36)) + np.concatenate(
+            ([0], np.cumsum(gaps))).astype(np.int64)
+        tf, dl = (rng.integers(1, 1 << int(rng.choice([4, 31])), n)
+                  for _ in range(2))
+        first, deltas = encode_doc_ids(ids)
+        rows.append((first, n, deltas, varint_encode(tf), varint_encode(dl)))
+    return rows
+
+
+def _reference_decode(rows):
+    """The per-block decode the batched decoder replaces."""
+    if not rows:
+        return (np.empty(0, np.int64),) * 3
+    ids = [decode_doc_ids(f, d, n) for f, n, d, _, _ in rows]
+    tf = [varint_decode(t).astype(np.int64) for *_, t, _ in rows]
+    dl = [varint_decode(x).astype(np.int64) for *_, x in rows]
+    return tuple(np.concatenate(a) for a in (ids, tf, dl))
+
+
+@pytest.mark.parametrize("n_blocks", [0, 1, 2, 40])
+def test_decode_blocks_matches_per_block_decode(n_blocks):
+    """decode_blocks over whole columns equals the per-block decoders, for
+    Python byte cells, Arrow binary columns (chunked or not) and an Arrow
+    slice whose offsets do not start at 0; multi-byte varints included
+    (gaps ≥ 2^35, tf/dl ≥ 2^28)."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(n_blocks)
+    pad = _random_blocks(rng, 3)
+    rows = _random_blocks(rng, n_blocks)
+    want = _reference_decode(rows)
+    if n_blocks == 40:
+        assert want[0].size > 128 and np.diff(want[0]).max() >= 1 << 35
+        assert want[1].max() >= 1 << 28 and want[2].max() >= 1 << 28
+    firsts, counts, *cells = (list(c) for c in zip(*rows)) \
+        if rows else ([], [], [], [], [])
+    pad_cells = [[r[i] for r in pad] for i in (2, 3, 4)]
+    forms = {
+        "bytes": cells,
+        "arrow": [pa.array(c, pa.binary()) for c in cells],
+        "chunked": [pa.chunked_array([pa.array(c[:1], pa.binary()),
+                                      pa.array(c[1:], pa.binary())])
+                    for c in cells],
+        # the same cells behind three padding cells
+        "sliced": [pa.array(p + c, pa.binary()).slice(len(pad))
+                   for p, c in zip(pad_cells, cells)],
+    }
+    assert all(c.offset == len(pad) for c in forms["sliced"])
+    for name, cols in forms.items():
+        got = decode_blocks(np.array(firsts, np.int64),
+                            np.array(counts, np.int64), *cols)
+        for g, w in zip(got, want):
+            assert g.dtype == np.int64, name
+            np.testing.assert_array_equal(g, w, err_msg=name)
 
 
 def test_jpeg_bit_accumulators_stay_small():

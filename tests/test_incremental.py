@@ -446,7 +446,8 @@ def test_delta_has_segment_and_query_reads_no_dictionary(spark, base_docs,
                                                          monkeypatch):
     """CDC deltas commit a dictionary segment like every other index dir,
     so an incremental query looks terms up in the segments and never scans
-    a ``dictionary`` table (no per-query dictionary-scan job)."""
+    a ``dictionary`` table (no per-query dictionary-scan job), neither
+    through Spark nor through the driver's pyarrow reads."""
     from harvester_spark import tables
     from harvester_spark.operators.dictseg import is_committed
 
@@ -460,13 +461,18 @@ def test_delta_has_segment_and_query_reads_no_dictionary(spark, base_docs,
     assert is_committed(delta / "dictseg")
 
     reads = []
-    real_read = tables.read_table
+    real_read, real_files = tables.read_table, tables.parquet_files
 
     def spy(spark_, path):
         reads.append(str(path))
         return real_read(spark_, path)
 
+    def spy_files(path):
+        reads.append(str(path))
+        return real_files(path)
+
     monkeypatch.setattr(tables, "read_table", spy)
+    monkeypatch.setattr(tables, "parquet_files", spy_files)
     got = inc.query_topk_incremental(spark, root, "zz_seg_token",
                                      5).toPandas()
     assert list(got["doc_id"]) == [901]
