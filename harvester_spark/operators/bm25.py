@@ -44,7 +44,7 @@ from pyspark.sql.types import (DoubleType, LongType, StructField, StructType)
 from harvester_spark import tables
 from harvester_spark.functions.tokenize import tokenize_pandas
 from harvester_spark.operators.codec import decode_blocks
-from harvester_spark.operators.index_build import _tfnorm
+from harvester_spark.operators.index_build import POSTINGS_SCHEMA, _tfnorm
 
 # per-query projections the scorers cache: each session keeps its newest
 # few and unpersists older ones (a released query still answers — it
@@ -300,8 +300,10 @@ class IndexHandle:
     @cached_property
     def postings(self) -> DataFrame:
         """The postings DataFrame of the pruned path, opened on first use
+        with the known schema, so opening runs no schema-inference job
         (caching is a working-set decision left to the deployment)."""
-        postings = tables.read_table(self.spark, self.index_dir / "postings")
+        postings = (self.spark.read.schema(POSTINGS_SCHEMA)
+                    .parquet(str(self.index_dir / "postings")))
         return postings.cache() if self._cache_postings else postings
 
     def lookup(self, terms: list[str]) -> dict[str, dict]:
@@ -376,12 +378,11 @@ class IndexHandle:
         query's uncached postings exceed ``local_postings_cap`` entries (df
         from the segment lookup — free), the query is AUTO-ROUTED to the
         distributed block-max path instead."""
-        terms = tokenize_query(query)
-        info = self.lookup(terms)
-        present = [t for t in terms if t in info]
-        if not present or (mode == "and" and len(present) < len(terms)):
+        idf_by_term, info = query_terms(self, tokenize_query(query), mode)
+        if not idf_by_term:
             return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
                                  "score": pd.Series(dtype="float64")})
+        present = list(idf_by_term)
         pending = sum(int(info[t]["df"]) for t in present
                       if t not in self._term_cache)
         if pending > local_postings_cap:
@@ -634,35 +635,59 @@ def _refine_theta_or(blocks: DataFrame, theta: float, k: int,
     return theta, rest, probe_agg
 
 
-def _collect_exclude_ids(exclude_ids: DataFrame,
-                         cap: int = 2_000_000) -> np.ndarray | None:
-    """Tombstoned doc_ids as a driver-side array, or ``None`` when the
-    exclusion set exceeds ``cap`` (then callers must fall back to paths
-    that don't need it driver-side). Tombstone sets are O(recent deletes)
-    — tiny next to the corpus — so the cap exists only as a safety rail."""
-    ids = (exclude_ids.select(F.col("doc_id").cast("long")).limit(cap + 1)
-           .toArrow().column(0).to_numpy())
-    return None if ids.size > cap else ids
+# driver budget of an exclusion set: tombstone sets are O(recent
+# deletes) — tiny next to the corpus — so the cap is only a safety rail
+EXCLUDE_CAP = 2_000_000
+
+# the small-query gate: a query of at most this many postings (Σ df of its
+# present terms) scores on the driver with no Spark job. A driver budget,
+# not a tuning constant: 262k postings ≈ 3 MB of compressed blocks read +
+# ~4 MB decoded + ms of numpy, vs 10+ sequential micro-jobs (seed/θ/probe/
+# decode collects) on the distributed path
+SMALL_QUERY_POSTINGS = 262_144
 
 
-def _topk_small_query(spark: SparkSession, handle: IndexHandle,
-                      idf_by_term: dict[str, float], k: int, mode: str,
-                      exclude: np.ndarray | None,
-                      metrics_out: dict | None) -> DataFrame:
-    """Small-query path, the serving path's chain (so both agree bit for
+def _collect_exclude_ids(exclude_ids: DataFrame) -> np.ndarray | None:
+    """Excluded doc_ids as a driver-side array, or ``None`` when the set
+    exceeds :data:`EXCLUDE_CAP` (then callers must fall back to paths that
+    don't need it driver-side)."""
+    ids = (exclude_ids.select(F.col("doc_id").cast("long"))
+           .limit(EXCLUDE_CAP + 1).toArrow().column(0).to_numpy())
+    return None if ids.size > EXCLUDE_CAP else ids
+
+
+def query_terms(handle: IndexHandle, terms: list[str], mode: str
+                ) -> tuple[dict[str, float], dict[str, dict]]:
+    """``(idf by present term, lookup info)`` of a query on one index,
+    keyed in query-term order — the order the driver scorer sums in. The
+    idf map is empty when no doc of the index can match."""
+    info = handle.lookup(terms)
+    present = [t for t in terms if t in info]
+    if mode == "and" and len(present) < len(terms):
+        present = []
+    return {t: info[t]["idf"] for t in present}, info
+
+
+def driver_topk(handle: IndexHandle, idf_by_term: dict[str, float], k: int,
+                mode: str, exclude: np.ndarray | None
+                ) -> tuple[np.ndarray, np.ndarray, int]:
+    """The small-query chain, the serving path's (so both agree bit for
     bit): :meth:`IndexHandle._read_blocks` → :func:`_block_parts` →
-    :func:`_topk` → a local relation. No Spark job, collect included.
-    ``metrics_out`` reports every fetched block as scored."""
+    :func:`_topk`, ``exclude`` dropped before the cut. Returns ``(doc ids,
+    scores, blocks read)``; no Spark job."""
     meta = handle.meta
     blocks = handle._read_blocks(list(idf_by_term))
     ids, parts, _ = _block_parts(blocks, idf_by_term, meta["k1"], meta["b"],
                                  meta["avgdl"])
     ids, scores = _topk(ids, parts, len(idf_by_term) if mode == "and" else 1,
                         exclude, k)
-    if metrics_out is not None:
-        metrics_out.update(blocks_total=blocks.num_rows,
-                           blocks_scored=blocks.num_rows,
-                           block_skip_ratio=0.0)
+    return ids, scores, blocks.num_rows
+
+
+def scores_frame(spark: SparkSession, ids: np.ndarray,
+                 scores: np.ndarray) -> DataFrame:
+    """``(doc_id, score)`` arrays as a local relation: collecting it
+    launches no Spark job."""
     return spark.createDataFrame(pa.table({"doc_id": ids, "score": scores}),
                                  SCORE_SCHEMA)
 
@@ -672,11 +697,11 @@ def query_topk_index(spark: SparkSession,
                      k: int, *, mode: str = "or", prune: bool = True,
                      prune_min_postings: int = 50_000,
                      range_docs: int = 1 << 20,
-                     small_query_postings: int = 262_144,
+                     small_query_postings: int | None = None,
                      refine_theta: bool = True,
                      probe_frac: float = 0.10,
                      refine_min_postings: int = 262_144,
-                     exclude_ids: DataFrame | None = None,
+                     exclude_ids: DataFrame | np.ndarray | None = None,
                      metrics_out: dict | None = None) -> DataFrame:
     """Top-k BM25 over the prebuilt index with block-max pruning.
 
@@ -704,9 +729,13 @@ def query_topk_index(spark: SparkSession,
     against it. Probe contributions are cached and reused in the final
     aggregation — nothing decodes twice.
 
-    Queries of ≤ ``small_query_postings`` postings run the zero-job driver
-    chain of :func:`_topk_small_query` instead. ``metrics_out`` (optional
-    dict) receives block-skip accounting (count jobs on the pruned path).
+    Queries of ≤ ``small_query_postings`` postings (default
+    :data:`SMALL_QUERY_POSTINGS`) run the zero-job driver chain of
+    :func:`driver_topk` instead and return a local relation. ``exclude_ids`` — doc ids dropped
+    before the top-k cut, as a DataFrame with a ``doc_id`` column or as
+    an int64 array already on the driver (which saves its collect job).
+    ``metrics_out`` (optional dict) receives block-skip accounting (count
+    jobs on the pruned path).
     """
     # ad-hoc (path) calls: no postings caching
     handle = (index_dir if isinstance(index_dir, IndexHandle)
@@ -718,20 +747,20 @@ def query_topk_index(spark: SparkSession,
     if not terms:
         return tables.empty_frame(spark, SCORE_SCHEMA)
 
-    info = handle.lookup(terms)
-    present = [t for t in terms if t in info]
-    if not present or (mode == "and" and len(present) < len(terms)):
+    idf_by_term, info = query_terms(handle, terms, mode)
+    if not idf_by_term:
         return tables.empty_frame(spark, SCORE_SCHEMA)
-    # keyed in query-term order: the order the driver scorer sums in
-    idf_by_term = {t: info[t]["idf"] for t in present}
-
+    present = list(idf_by_term)
     total_postings = sum(info[t]["df"] for t in present)
 
-    # exclusion set (tombstones), collected lazily AT MOST once: the
-    # small-query and θ-seed paths need it driver-side so that θ is the
-    # k-th best score among docs that can actually be returned (seeding
-    # from an excluded doc could overshoot and prune live top-k blocks)
+    # exclusion set (tombstones) on the driver, collected lazily AT MOST
+    # once unless it came as an array: the small-query and θ-seed paths
+    # need it driver-side so that θ is the k-th best score among docs that
+    # can actually be returned (seeding from an excluded doc could
+    # overshoot and prune live top-k blocks)
     _exc: list = []
+    if isinstance(exclude_ids, np.ndarray):
+        _exc.append(exclude_ids if exclude_ids.size <= EXCLUDE_CAP else None)
 
     def exclude_set() -> np.ndarray | None:
         if not _exc:
@@ -740,14 +769,19 @@ def query_topk_index(spark: SparkSession,
         return _exc[0]
 
     # small queries (candidate volume known from the dictionary) score on
-    # the driver with zero jobs. The cap is a driver budget, not a tuning
-    # constant: 262k postings ≈ 3 MB of compressed blocks read + ~4 MB
-    # decoded + ms of numpy, vs 10+ sequential micro-jobs (seed/θ/probe/
-    # decode collects) on the distributed path.
+    # the driver with zero jobs
+    if small_query_postings is None:
+        small_query_postings = SMALL_QUERY_POSTINGS
     if (0 < total_postings <= small_query_postings
             and (exclude_ids is None or exclude_set() is not None)):
-        return _topk_small_query(spark, handle, idf_by_term, k, mode,
-                                 exclude_set(), metrics_out)
+        ids, scores, n_blocks = driver_topk(handle, idf_by_term, k, mode,
+                                            exclude_set())
+        if metrics_out is not None:  # every fetched block is scored
+            metrics_out.update(blocks_total=n_blocks, blocks_scored=n_blocks,
+                               block_skip_ratio=0.0)
+        return scores_frame(spark, ids, scores)
+    if isinstance(exclude_ids, np.ndarray):
+        exclude_ids = spark.createDataFrame(pa.table({"doc_id": exclude_ids}))
 
     postings = (handle.postings
                 .filter(F.col("term").isin(present)))  # pushed to scan

@@ -15,10 +15,19 @@ equivalent:
   failure mode of a single rewritten table does not exist here);
 - :func:`apply_changes` — one batch of ``(doc_id, deleted, content)`` change
   events → new delta index + tombstones + advanced ``last_seq`` checkpoint;
+- :func:`open_root` — a :class:`SegmentedReader` over the root: one
+  ``IndexHandle`` per active segment (``base`` plus the deltas named in
+  ``segments.json``) and every committed tombstone segment loaded once
+  with pyarrow. Each segment gets its exclusion array, the tombstones of
+  later seqs. Opening runs no Spark job; :meth:`SegmentedReader.refresh`
+  reopens only what changed (Lucene's ``DirectoryReader.openIfChanged``);
 - :func:`query_topk_incremental` — queries the union of base+deltas minus
   tombstones. Stats convention matches Lucene/Solr: documents deleted since
   the last compaction still count in N/avgdl/df until :func:`compact` runs
-  (exactly how Solr behaves between commits with deletes pending merge);
+  (exactly how Solr behaves between commits with deletes pending merge).
+  Small queries score every segment on the driver and merge the
+  per-segment top-k there, with no Spark job; larger ones run one
+  distributed query per segment;
 - :func:`compact` — full rebuild from the live doc set; after compaction
   results are rank-identical to a from-scratch build.
 
@@ -26,8 +35,7 @@ A delta build is a normal :func:`~harvester_spark.operators.index_build.build_in
 call: a CDC batch within the driver budget builds on the driver with no
 Spark job after its probe and collect, a larger one distributed. Delta
 merges pick their placement the same way, from the deltas' recorded
-``N`` and ``text_bytes``. Queries drop tombstoned docs with a broadcast
-anti-join while tombstones are sparse.
+``N`` and ``text_bytes``.
 """
 
 from __future__ import annotations
@@ -35,10 +43,13 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from harvester_spark import tables
+from harvester_spark.operators import bm25
 from harvester_spark.operators.bm25 import SCORE_SCHEMA, tokenize_query
 from harvester_spark.operators.index_build import IndexConfig, build_index
 
@@ -96,16 +107,11 @@ def _tombstone_segments(root: Path) -> list[tuple[Path, int]]:
     return out
 
 
-def tombstoned_ids(spark: SparkSession, root: str | Path,
-                   after_seq: int = -1) -> DataFrame | None:
-    """doc_ids tombstoned at any seq > ``after_seq`` (None if no segments).
-
-    Reads only the relevant segments; duplicates across segments are fine
-    for the anti-join consumer (no dedup shuffle needed)."""
-    segs = [p for p, s in _tombstone_segments(Path(root)) if s > after_seq]
-    if not segs:
-        return None
-    return spark.read.parquet(*[str(p) for p in segs]).select("doc_id")
+def _read_tombstones(seg: Path) -> np.ndarray:
+    """One tombstone segment's doc_ids, sorted and unique, read with
+    pyarrow (no job)."""
+    return np.unique(tables.read_arrow(seg, columns=["doc_id"]).column(0)
+                     .to_numpy().astype(np.int64, copy=False))
 
 
 def apply_changes(spark: SparkSession, root: str | Path, changes: DataFrame,
@@ -160,45 +166,147 @@ def apply_changes(spark: SparkSession, root: str | Path, changes: DataFrame,
             "n_upserts": n_changes - n_deletes, "compacted": compacted}
 
 
-def live_doc_filter(spark: SparkSession, root: str | Path,
-                    scores: DataFrame, segment_seq: int) -> DataFrame:
-    """Drop docs tombstoned AFTER the segment that produced them."""
-    tomb = tombstoned_ids(spark, root, after_seq=segment_seq)
-    if tomb is None:
-        return scores
-    return scores.join(F.broadcast(tomb), "doc_id", "left_anti")
+def _stamp(seg: Path) -> tuple[int, int] | None:
+    """Identity of a segment's committed postings: a rebuilt dir (the
+    base after :func:`compact`) gets a new one."""
+    try:
+        st = (seg / "postings" / tables.SUCCESS_MARKER).stat()
+    except FileNotFoundError:
+        return None
+    return st.st_ino, st.st_mtime_ns
 
 
-def query_topk_incremental(spark: SparkSession, root: str | Path, query: str,
+class SegmentedReader:
+    """A point-in-time view of an incremental root, opened with no Spark
+    job: ``segments`` holds ``(IndexHandle, exclusion array)`` for ``base``
+    and each active delta, where the exclusion array is the sorted union
+    of the tombstones with a seq above the segment's — the docs upserted
+    or deleted after it was written. Tombstone segments are read once,
+    with pyarrow.
+
+    :meth:`refresh` is Lucene's ``DirectoryReader.openIfChanged``: it
+    reopens only when ``last_seq``, ``segments.json``, the committed
+    tombstone segments or a segment's postings commit changed, and keeps
+    the handles of unchanged segment dirs. The postings stamp catches a
+    :func:`compact`, which rebuilds ``base`` without touching the rest."""
+
+    def __init__(self, spark: SparkSession, root: str | Path):
+        self.spark = spark
+        self.root = Path(root)
+        self.segments: list[tuple[bm25.IndexHandle, np.ndarray]] = []
+        self._version: tuple | None = None
+        self._handles: dict[tuple, bm25.IndexHandle] = {}
+        self._tombs: dict[Path, tuple[int, np.ndarray]] = {}
+        self.refresh()
+
+    def refresh(self) -> bool:
+        """Pick up the root's current state; True when anything changed."""
+        root = self.root
+        segs = [(root / "base", 0)] + [(d, _seq_of(d))
+                                       for d in _delta_dirs(root)]
+        stamps = [(d, seq, _stamp(d)) for d, seq in segs]
+        stamps = [x for x in stamps if x[2] is not None]
+        tomb_segs = _tombstone_segments(root)
+        version = (last_seq(root), _read_segments(root),
+                   tuple(tomb_segs), tuple(stamps))
+        if version == self._version:
+            return False
+        self._tombs = {p: self._tombs.get(p) or (seq, _read_tombstones(p))
+                       for p, seq in tomb_segs}
+        handles = {(d, st): self._handles.get((d, st))
+                   or bm25.IndexHandle(self.spark, d, cache=False)
+                   for d, _, st in stamps}
+        for key, h in self._handles.items():
+            if key not in handles:
+                h.unpersist()
+        self._handles = handles
+        self.segments = [(handles[(d, st)], self._exclusions(seq))
+                         for d, seq, st in stamps]
+        self._version = version
+        return True
+
+    def _exclusions(self, seq: int) -> np.ndarray:
+        later = [ids for s, ids in self._tombs.values() if s > seq]
+        if not later:
+            return np.empty(0, np.int64)
+        return np.unique(np.concatenate(later))
+
+    def close(self) -> None:
+        """Release the segments' open dictionary files."""
+        for h in self._handles.values():
+            h.unpersist()
+
+    def topk(self, query: str, k: int, *, mode: str = "or") -> DataFrame:
+        """:func:`query_topk_incremental` on this reader."""
+        spark = self.spark
+        terms = tokenize_query(query)
+        if not terms:
+            return tables.empty_frame(spark, SCORE_SCHEMA)
+        work = []
+        small = True
+        for handle, excl in self.segments:
+            idf_by_term, info = bm25.query_terms(handle, terms, mode)
+            if idf_by_term:
+                work.append((handle, idf_by_term, excl))
+                small &= (sum(info[t]["df"] for t in idf_by_term)
+                          <= bm25.SMALL_QUERY_POSTINGS
+                          and excl.size <= bm25.EXCLUDE_CAP)
+        if not work:
+            return tables.empty_frame(spark, SCORE_SCHEMA)
+        if small:
+            tops = [bm25.driver_topk(h, idf, k, mode, excl)[:2]
+                    for h, idf, excl in work]
+            ids = np.concatenate([t[0] for t in tops])
+            scores = np.concatenate([t[1] for t in tops])
+            order = np.lexsort((ids, -scores))[:k]
+            return bm25.scores_frame(spark, ids[order], scores[order])
+        # prune=True is safe with exclusions since the θ seed drops excluded
+        # docs before the threshold is set (bm25.exclude_set)
+        parts = [bm25.query_topk_index(spark, handle, query, k, mode=mode,
+                                       exclude_ids=excl if excl.size
+                                       else None)
+                 for handle, _, excl in work]
+        allscores = parts[0]
+        for p in parts[1:]:
+            allscores = allscores.unionByName(p)
+        return allscores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def open_root(spark: SparkSession, root: str | Path) -> SegmentedReader:
+    """Open an incremental root for querying (no Spark job)."""
+    return SegmentedReader(spark, root)
+
+
+def query_topk_incremental(spark: SparkSession,
+                           root: str | Path | SegmentedReader, query: str,
                            k: int, *, mode: str = "or") -> DataFrame:
     """Top-k over base + deltas, tombstones filtered per segment.
 
-    Each segment is scored with its own stats (Lucene per-segment scoring
-    convention); the newest version of a doc wins by construction because
-    older versions are tombstoned at upsert time. The tombstone anti-join
-    is pushed INSIDE each segment's scoring, before its top-k cut — a
-    post-limit filter would silently lose live docs ranked below a
-    tombstoned one inside the segment's top-k window.
+    ``root`` is a path (opened fresh, no job, closed after the query) or
+    an open reader. Each segment is scored with its own stats (Lucene
+    per-segment scoring convention); the newest version of a doc wins by
+    construction because older versions are tombstoned at upsert time. A
+    segment's exclusions are dropped INSIDE its scoring, before its top-k
+    cut — a post-limit filter would silently lose live docs ranked below
+    a tombstoned one inside the segment's top-k window.
+
+    Where each side runs: when every segment passes the small-query gate
+    of :func:`~harvester_spark.operators.bm25.query_topk_index` (Σ df of
+    the present terms ≤ ``bm25.SMALL_QUERY_POSTINGS``, exclusions ≤
+    ``bm25.EXCLUDE_CAP``), each segment runs the driver chain
+    (``bm25.driver_topk``), the per-segment lists merge with one
+    ``lexsort`` (score desc, doc_id asc), and the result is a local
+    relation — no Spark job, collect included. Otherwise every segment
+    runs ``query_topk_index`` with its exclusion array, and the
+    per-segment results are unioned and sorted by Spark.
     """
-    from harvester_spark.operators.bm25 import query_topk_index
-    root = Path(root)
-    parts: list[DataFrame] = []
-    segs: list[tuple[Path, int]] = [(root / "base", 0)]
-    segs += [(d, _seq_of(d)) for d in _delta_dirs(root)]
-    for seg, seq in segs:
-        if not tables.is_committed(seg / "postings"):
-            continue
-        excl = tombstoned_ids(spark, root, after_seq=seq)
-        # prune=True is safe with exclusions since the θ seed now drops
-        # tombstoned docs before the threshold is set (bm25.exclude_set)
-        parts.append(query_topk_index(spark, seg, query, k, mode=mode,
-                                      exclude_ids=excl))
-    if not parts:
-        return tables.empty_frame(spark, SCORE_SCHEMA)
-    allscores = parts[0]
-    for p in parts[1:]:
-        allscores = allscores.unionByName(p)
-    return (allscores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+    if isinstance(root, SegmentedReader):
+        return root.topk(query, k, mode=mode)
+    reader = open_root(spark, root)
+    try:
+        return reader.topk(query, k, mode=mode)
+    finally:
+        reader.close()
 
 
 def merge_deltas(spark: SparkSession, root: str | Path, *,
@@ -261,8 +369,10 @@ def _merge_distributed(spark: SparkSession, root: Path, deltas: list[Path],
     merged = None
     for d in deltas:
         rows = decode_postings(tables.read_table(spark, d / "postings"))
-        tomb = tombstoned_ids(spark, root, after_seq=_seq_of(d))
-        if tomb is not None:
+        segs = [str(p) for p, s in _tombstone_segments(root)
+                if s > _seq_of(d)]
+        if segs:
+            tomb = spark.read.schema("doc_id long").parquet(*segs)
             rows = rows.join(F.broadcast(tomb), "doc_id", "left_anti")
         merged = rows if merged is None else merged.unionByName(rows)
     build_index_from_rows(spark, merged, out, **kw)
@@ -274,9 +384,7 @@ def _merge_on_driver(spark: SparkSession, root: Path, deltas: list[Path],
     its later tombstone segments are read with pyarrow, decoded by the
     build's block decoder, filtered with ``np.isin`` and written by the
     same encoder (``index_build.write_rows_index``)."""
-    import numpy as np
     import pandas as pd
-    import pyarrow as pa
 
     from harvester_spark.operators.index_build import (_decode_packs,
                                                        write_rows_index)
@@ -295,11 +403,10 @@ def _merge_on_driver(spark: SparkSession, root: Path, deltas: list[Path],
                              "ids", "tfs", "dls"]).to_pandas())
         segs = [p for p, s in _tombstone_segments(root) if s > _seq_of(d)]
         if segs:
-            dead = np.concatenate([
-                tables.read_arrow(p, columns=["doc_id"]).column(0)
-                .to_numpy(zero_copy_only=False) for p in segs])
+            dead = np.concatenate([_read_tombstones(p) for p in segs])
             rows = rows[~np.isin(rows["doc_id"].to_numpy(), dead)]
-        frames.append(pa.Table.from_pandas(rows, preserve_index=False))
+        if len(rows):  # an all-tombstoned delta has no typed columns left
+            frames.append(pa.Table.from_pandas(rows, preserve_index=False))
     if frames:
         rows = (pa.concat_tables(frames)
                 .sort_by(by + [("doc_id", "ascending")]).to_pandas())

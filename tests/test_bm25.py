@@ -2,6 +2,7 @@
 across the full reference query set (FIXTURES.md §2)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from harvester_spark.fixtures.corpus import KEYWORDS, QUERY_SET
@@ -168,6 +169,58 @@ def test_small_queries_launch_no_job_and_agree(spark, index_dir, q, k, mode):
     if m:  # a query with no present term returns before any block read
         assert m["blocks_scored"] == m["blocks_total"] > 0
         assert m["block_skip_ratio"] == 0.0
+
+
+def test_postings_read_with_known_schema(spark, corpus_df, tmp_path,
+                                         pin_distributed):
+    """``IndexHandle.postings`` reads with ``POSTINGS_SCHEMA``: on a driver
+    build and on a distributed build it equals the inferred read row for
+    row, opening it launches no job, and the first pruned query on a fresh
+    handle launches one job fewer than with the inferred read (its schema
+    inference job)."""
+    from harvester_spark import tables
+    from harvester_spark.operators.bm25 import open_index
+    from harvester_spark.operators.index_build import IndexConfig, build_index
+
+    cfg = IndexConfig(salt_df_threshold=50, salt_range_docs=100,
+                      block_size=32)
+    build_index(spark, corpus_df, tmp_path / "drv", cfg=cfg)
+    pin_distributed()
+    build_index(spark, corpus_df, tmp_path / "dist", cfg=cfg)
+    sc = spark.sparkContext
+    key = ["term", "salt", "block_id"]
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for side in ("drv", "dist"):
+        d = tmp_path / side
+        handle = open_index(spark, d, cache=False)
+        assert jobs(f"open-postings-{side}", lambda: handle.postings) == 0
+        inferred = tables.read_table(spark, d / "postings")
+        assert handle.postings.schema == inferred.schema
+        got, want = (df.toPandas().sort_values(key).reset_index(drop=True)
+                     for df in (handle.postings, inferred))
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+        def pruned(h):
+            return lambda: query_topk_index(
+                spark, h, "import ident_3", 10, small_query_postings=0,
+                prune_min_postings=0).collect()
+
+        known = jobs(f"first-pruned-{side}",
+                     pruned(open_index(spark, d, cache=False)))
+        old = open_index(spark, d, cache=False)
+        n_old = jobs(f"first-pruned-inferred-{side}", lambda: (
+            old.__dict__.setdefault(
+                "postings", tables.read_table(spark, d / "postings")),
+            pruned(old)()))
+        assert n_old == known + 1
 
 
 def test_tie_break_doc_id_asc(oracle):

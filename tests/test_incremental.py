@@ -1,11 +1,13 @@
 """CDC / incremental-index semantics (solr_updater.main analogue)."""
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from harvester_spark.fixtures.corpus import make_corpus
+from harvester_spark.fixtures.corpus import QUERY_SET, make_corpus
 from harvester_spark.fixtures.oracle import OracleBM25
+from harvester_spark.operators import bm25
 from harvester_spark.operators.bm25 import tokenize_query
 from harvester_spark.operators.docids import assign_doc_ids
 from harvester_spark.operators.index_build import IndexConfig
@@ -477,3 +479,147 @@ def test_delta_has_segment_and_query_reads_no_dictionary(spark, base_docs,
                                      5).toPandas()
     assert list(got["doc_id"]) == [901]
     assert reads and not [p for p in reads if p.endswith("dictionary")]
+
+
+def _run_in_group(spark, group, fn):
+    """``fn()`` and the ids of the Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _changes(spark, rows):
+    return spark.createDataFrame(
+        rows, "doc_id long, deleted boolean, content string")
+
+
+@pytest.fixture(scope="module")
+def cdc_root(spark, base_docs, tmp_path_factory):
+    """base + three deltas: the base top hit of ``import`` deleted, doc
+    300 inserted in one delta and upserted in two later ones, base docs
+    upserted and deleted."""
+    root = tmp_path_factory.mktemp("cdc") / "root"
+    inc.init_root(spark, base_docs, root, cfg=CFG)
+    top = int(inc.query_topk_incremental(spark, root, "import", 1)
+              .collect()[0]["doc_id"])
+    batches = [
+        [(top, True, None), (300, False, "import ident_3 def class"),
+         (301, False, "value data result import")],
+        [(300, False, "import import def return self"),
+         (7, False, "ident_7 value")],
+        [(300, False, "def class return import ident_3"), (8, True, None),
+         (302, False, "self data import import import")],
+    ]
+    for seq, rows in enumerate(batches, start=1):
+        inc.apply_changes(spark, root, _changes(spark, rows), seq=seq,
+                          cfg=CFG)
+    assert len(inc._delta_dirs(root)) == 3
+    return root, top
+
+
+@pytest.mark.parametrize("q,k", QUERY_SET)
+@pytest.mark.parametrize("mode", ["or", "and"])
+def test_incremental_small_queries_launch_no_job_and_agree(
+        spark, cdc_root, monkeypatch, q, k, mode):
+    """Below the small-query gate an incremental query scores every
+    segment on the driver and merges their top-k there: no Spark job,
+    opening and collect included, and the ids and order of the
+    per-segment Spark path above the gate."""
+    root, top = cdc_root
+    rows, jobs = _run_in_group(
+        spark, f"cdc-small-{mode}-{q}",
+        lambda: inc.query_topk_incremental(spark, root, q, k,
+                                           mode=mode).collect())
+    assert jobs == []
+    assert top not in {r["doc_id"] for r in rows}
+
+    # one constant gates both the reader and query_topk_index's default
+    monkeypatch.setattr(bm25, "SMALL_QUERY_POSTINGS", 0)
+    big, big_jobs = _run_in_group(
+        spark, f"cdc-big-{mode}-{q}",
+        lambda: inc.query_topk_incremental(spark, root, q, k,
+                                           mode=mode).collect())
+    if big:
+        assert big_jobs
+    assert [r["doc_id"] for r in rows] == [r["doc_id"] for r in big]
+    np.testing.assert_allclose([r["score"] for r in rows],
+                               [r["score"] for r in big], rtol=1e-12)
+
+
+def _segment_oracle(segments, query, k, mode="or"):
+    """Per-segment numpy BM25 (each segment's own stats, its excluded docs
+    dropped before the cut), merged score desc, doc_id asc."""
+    terms = tokenize_query(query)
+    tops = []
+    for docs, excluded in segments:
+        got = OracleBM25(docs, content_col="content").topk(
+            terms, len(docs), mode=mode)
+        tops.append(got[~got["doc_id"].isin(excluded)])
+    res = pd.concat(tops, ignore_index=True)
+    order = np.lexsort((res["doc_id"].to_numpy(), -res["score"].to_numpy()))
+    return res.iloc[order[:k]].reset_index(drop=True)
+
+
+def test_reader_refresh_picks_up_applies_and_merges(spark, base_docs,
+                                                    tmp_path):
+    """One reader across an upsert of the current top hit plus a delete, a
+    second batch and a delta merge: each ``refresh()`` reopens only what
+    changed and then answers like a freshly opened reader and like the
+    per-segment oracle over the live docs; a ``refresh()`` with nothing
+    changed reopens nothing."""
+    import pyarrow as pa
+
+    threads = pa.cpu_count()
+    root = tmp_path / "root_refresh"
+    inc.init_root(spark, base_docs, root, cfg=CFG)
+    reader = inc.open_root(spark, root)
+    q, k = "import def", 10
+    base = base_docs.select("doc_id", "content").toPandas()
+
+    def check(segments):
+        got = inc.query_topk_incremental(spark, reader, q, k).toPandas()
+        fresh = inc.query_topk_incremental(spark, root, q, k).toPandas()
+        want = _segment_oracle(segments, q, k)
+        assert list(got["doc_id"]) == list(fresh["doc_id"])
+        np.testing.assert_array_equal(got["score"], fresh["score"])
+        assert list(got["doc_id"]) == list(want["doc_id"])
+        np.testing.assert_allclose(got["score"], want["score"], rtol=1e-6)
+        handles = [h for h, _ in reader.segments]
+        assert not reader.refresh()
+        assert len(reader.segments) == len(handles)
+        assert all(a is b for a, (b, _) in zip(handles, reader.segments))
+        return got
+
+    before = check([(base, [])])
+    base_handle = reader.segments[0][0]
+    top, other = (int(x) for x in before["doc_id"][:2])
+
+    up1 = pd.DataFrame({"doc_id": [top], "content": ["zz_r value"]})
+    inc.apply_changes(spark, root, _changes(spark, [
+        (top, False, "zz_r value"), (other, True, None)]), seq=1, cfg=CFG)
+    assert reader.refresh()
+    assert reader.segments[0][0] is base_handle
+    after1 = check([(base, [top, other]), (up1, [])])
+    assert top not in set(after1["doc_id"]) and other not in set(
+        after1["doc_id"])
+
+    up2 = pd.DataFrame({"doc_id": [400, top],
+                        "content": ["import def import zz_r",
+                                    "def import def value"]})
+    inc.apply_changes(spark, root, _changes(
+        spark, list(zip(up2["doc_id"], [False] * 2, up2["content"]))),
+        seq=2, cfg=CFG)
+    assert reader.refresh()
+    check([(base, [top, other, 400]), (up1, [top]), (up2, [])])
+
+    assert inc.merge_deltas(spark, root, cfg=CFG) is not None
+    assert reader.refresh()
+    assert len(reader.segments) == 2
+    assert reader.segments[0][0] is base_handle
+    after3 = check([(base, [top, other, 400]), (up2, [])])
+    assert top in set(after3["doc_id"])
+    assert pa.cpu_count() == threads
