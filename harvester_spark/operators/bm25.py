@@ -10,12 +10,16 @@ role natively:
   TakeOrderedAndProject). 100% SQL-expressible, used as the driver-oracle
   path and for ad-hoc queries without a prebuilt index.
 - :func:`query_topk_index` / :meth:`IndexHandle.topk_local` — the index.
-  Small queries run ONE zero-job driver chain on both: pyarrow read of
-  the terms' blocks → ``codec.decode_blocks`` → :func:`_block_parts`
-  (idf · ``index_build._tfnorm``) → :func:`_topk`. The scale path: parquet
-  pushdown on ``term`` → block-max upper-bound pruning (safe: provably
-  never drops a true top-k doc) → the same decode and score per Arrow
-  batch on executors → per-doc accumulation → global top-k.
+  Both, and the incremental reader, answer on the driver through ONE
+  zero-job function, :func:`driver_topk`: per segment the handle's term
+  LRU, whose misses come from one pyarrow read of their blocks →
+  ``codec.decode_blocks`` → :func:`_block_parts` (idf ·
+  ``index_build._tfnorm``), then :func:`_topk`, then one merge. One gate,
+  :data:`SMALL_QUERY_POSTINGS`, counts the postings the driver would
+  read (uncached ones). The scale path: parquet pushdown on ``term`` →
+  block-max upper-bound pruning (safe: provably never drops a true top-k
+  doc) → the same decode and score per Arrow batch on executors →
+  per-doc accumulation → global top-k.
 
 Scoring (fixed, matches the numpy oracle bit-for-bit in float64):
   idf(t)  = ln(1 + (N - df + 0.5) / (df + 0.5))          [Lucene-style]
@@ -234,12 +238,13 @@ _BLOCK_COLS = ["term", "doc_id_first", "doc_count", "deltas", "tfs", "dls"]
 
 
 def _block_parts(blocks, idf_by_term: dict[str, float], k1: float, b: float,
-                 avgdl: float) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Arrow posting blocks → ``(doc_id, part, postings per term)``, the
-    parts ``idf · _tfnorm`` (the encoder's expression, so ``part ≤ idf ·
-    block_max_tfnorm`` holds bit-exactly) grouped by term in the key order
-    of ``idf_by_term`` — query-term order on every caller, so a doc's
-    parts always sum in one order."""
+                 avgdl: float
+                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Arrow posting blocks → ``(doc_id, part, postings per term, blocks
+    per term)``, the parts ``idf · _tfnorm`` (the encoder's expression, so
+    ``part ≤ idf · block_max_tfnorm`` holds bit-exactly) grouped by term
+    in the key order of ``idf_by_term`` — query-term order on every
+    caller, so a doc's parts always sum in one order."""
     terms = list(idf_by_term)
     rank = np.asarray(pc.index_in(blocks["term"],
                                   value_set=pa.array(terms, pa.string())))
@@ -251,7 +256,8 @@ def _block_parts(blocks, idf_by_term: dict[str, float], k1: float, b: float,
     parts = idf * _tfnorm(tf.astype(np.float64), dl.astype(np.float64),
                           k1, b, avgdl)
     sizes = np.bincount(rank, weights=counts, minlength=len(terms))
-    return ids, parts, sizes.astype(np.int64)
+    return (ids, parts, sizes.astype(np.int64),
+            np.bincount(rank, minlength=len(terms)))
 
 
 def _topk(ids: np.ndarray, parts: np.ndarray, n_required: int,
@@ -336,9 +342,10 @@ class IndexHandle:
     term_cache_max_entries: int = 8_000_000
 
     def _term_parts(self, terms: list[str], info: dict[str, dict]
-                    ) -> tuple[np.ndarray, np.ndarray]:
-        """``(doc_id, part)`` of ``terms`` concatenated in their order:
-        hits from the LRU cache, all misses from one read, then cached."""
+                    ) -> tuple[np.ndarray, np.ndarray, int]:
+        """``(doc_id, part)`` of ``terms`` concatenated in their order, and
+        their block count: hits from the LRU cache, all misses from one
+        read, then cached."""
         cache = self._term_cache
         got = {t: cache[t] for t in terms if t in cache}
         for t in got:
@@ -346,12 +353,13 @@ class IndexHandle:
         missed = [t for t in terms if t not in got]
         if missed:
             k1, b, avgdl = self.meta["k1"], self.meta["b"], self.meta["avgdl"]
-            ids, parts, sizes = _block_parts(
+            ids, parts, sizes, n_blocks = _block_parts(
                 self._read_blocks(missed),
                 {t: info[t]["idf"] for t in missed}, k1, b, avgdl)
             bounds = np.cumsum(sizes)[:-1]
             for t, entry in zip(missed, zip(np.split(ids, bounds),
-                                            np.split(parts, bounds))):
+                                            np.split(parts, bounds),
+                                            n_blocks.tolist())):
                 got[t] = cache[t] = entry
                 # charge a small constant floor per cached term: rare
                 # terms decode to a handful of postings but still cost an
@@ -367,30 +375,26 @@ class IndexHandle:
                     _, old = cache.popitem(last=False)
                     self._term_cache_entries -= max(len(old[0]), 64)
         return (np.concatenate([got[t][0] for t in terms]),
-                np.concatenate([got[t][1] for t in terms]))
+                np.concatenate([got[t][1] for t in terms]),
+                sum(got[t][2] for t in terms))
 
     def topk_local(self, query: str, k: int, *, mode: str = "or",
-                   local_postings_cap: int = 2_000_000) -> pd.DataFrame:
-        """ms-latency top-k on the driver, no Spark job: the small-query
-        chain of :func:`query_topk_index` (same ids, bit-equal scores) with
-        decoded terms kept in the LRU cache. A pathological term's postings
-        (~GBs at 10^12 docs) must NOT be read on the driver: when the
-        query's uncached postings exceed ``local_postings_cap`` entries (df
+                   local_postings_cap: int | None = None) -> pd.DataFrame:
+        """ms-latency top-k on the driver, no Spark job: :func:`driver_topk`
+        on this handle, the chain and term cache :func:`query_topk_index`
+        uses (same ids, bit-equal scores), as a pandas frame. A
+        pathological term's postings (~GBs at 10^12 docs) must NOT be read
+        on the driver: when the postings the driver would read exceed
+        ``local_postings_cap`` (default :data:`SMALL_QUERY_POSTINGS`; df
         from the segment lookup — free), the query is AUTO-ROUTED to the
         distributed block-max path instead."""
-        idf_by_term, info = query_terms(self, tokenize_query(query), mode)
-        if not idf_by_term:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        present = list(idf_by_term)
-        pending = sum(int(info[t]["df"]) for t in present
-                      if t not in self._term_cache)
-        if pending > local_postings_cap:
-            return query_topk_index(self.spark, self, query, k, mode=mode,
-                                    small_query_postings=0).toPandas()
-        ids, scores = _topk(*self._term_parts(present, info),
-                            len(present) if mode == "and" else 1, None, k)
-        return pd.DataFrame({"doc_id": ids, "score": scores})
+        got = driver_topk([(self, None)], tokenize_query(query), k, mode,
+                          local_postings_cap)
+        if got is None:
+            return query_topk_index(
+                self.spark, self, query, k, mode=mode,
+                small_query_postings=local_postings_cap).toPandas()
+        return pd.DataFrame({"doc_id": got[0], "score": got[1]})
 
 
 def open_index(spark: SparkSession, index_dir: str | Path,
@@ -401,8 +405,7 @@ def open_index(spark: SparkSession, index_dir: str | Path,
 _EPS = 1.0 - 1e-12  # slack for ub-vs-decoded float comparisons
 
 
-def _localized_other_ub(blocks: DataFrame, per_term: dict[str, float],
-                        range_docs: int) -> DataFrame:
+def _localized_other_ub(blocks: DataFrame, range_docs: int) -> DataFrame:
     """Range-localized complement bounds: for every (term, doc-range)
     cell, ``other_ub`` = Σ over OTHER query terms of their max block UB
     within that range. Sharper than the global Σ maxUB because a term's
@@ -451,8 +454,7 @@ def _theta_filter_localized(blocks: DataFrame, present: list[str],
     # a local relation broadcast builds driver-side with zero scan jobs.
     # Size class is unchanged — this exact table was already broadcast.
     other_pdf = _localized_other_ub(
-        bound_blocks if bound_blocks is not None else blocks,
-        per_term, W).toPandas()
+        bound_blocks if bound_blocks is not None else blocks, W).toPandas()
     spark = blocks.sparkSession
     other = spark.createDataFrame(
         other_pdf, "term string, rid bigint, other_ub double")
@@ -560,7 +562,7 @@ def _and_range_prune(spark: SparkSession, blocks: DataFrame, rarest: str,
     # θ must be the k-th best among docs that can actually be RETURNED:
     # seeding θ from an excluded doc would overshoot the true k-th live
     # score and prune blocks holding live top-k docs
-    ids, parts, _ = _block_parts(seed, idf_by_term, k1, b, avgdl)
+    ids, parts, *_ = _block_parts(seed, idf_by_term, k1, b, avgdl)
     _, inter = _topk(ids, parts, len(present), exclude, k)
     if inter.size < k:
         return None
@@ -591,7 +593,7 @@ def _decode_agg(blocks: DataFrame, idf_by_term: dict[str, float],
     def decode(batches: Iterator[pa.RecordBatch]
                ) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            ids, parts, _ = _block_parts(batch, idf_by_term, k1, b, avgdl)
+            ids, parts, *_ = _block_parts(batch, idf_by_term, k1, b, avgdl)
             yield pa.record_batch({"doc_id": ids, "score": parts})
 
     return (blocks.select(*_BLOCK_COLS)
@@ -639,21 +641,13 @@ def _refine_theta_or(blocks: DataFrame, theta: float, k: int,
 # deletes) — tiny next to the corpus — so the cap is only a safety rail
 EXCLUDE_CAP = 2_000_000
 
-# the small-query gate: a query of at most this many postings (Σ df of its
-# present terms) scores on the driver with no Spark job. A driver budget,
-# not a tuning constant: 262k postings ≈ 3 MB of compressed blocks read +
-# ~4 MB decoded + ms of numpy, vs 10+ sequential micro-jobs (seed/θ/probe/
-# decode collects) on the distributed path
-SMALL_QUERY_POSTINGS = 262_144
-
-
-def _collect_exclude_ids(exclude_ids: DataFrame) -> np.ndarray | None:
-    """Excluded doc_ids as a driver-side array, or ``None`` when the set
-    exceeds :data:`EXCLUDE_CAP` (then callers must fall back to paths that
-    don't need it driver-side)."""
-    ids = (exclude_ids.select(F.col("doc_id").cast("long"))
-           .limit(EXCLUDE_CAP + 1).toArrow().column(0).to_numpy())
-    return None if ids.size > EXCLUDE_CAP else ids
+# the one driver-placement gate: a query whose driver would read at most
+# this many postings (Σ df of its present terms missing from the term
+# cache) scores on the driver with no Spark job. A driver budget: 2M
+# postings ≈ 32 MB decoded, 0.1–1.3 s of numpy up to 3.2 M postings and
+# +213 MB peak RSS at 3 M, where the pruned path spends 4–13 s in 9–21
+# sequential micro-jobs (seed/θ/probe/decode collects) on the same queries
+SMALL_QUERY_POSTINGS = 2_000_000
 
 
 def query_terms(handle: IndexHandle, terms: list[str], mode: str
@@ -668,20 +662,46 @@ def query_terms(handle: IndexHandle, terms: list[str], mode: str
     return {t: info[t]["idf"] for t in present}, info
 
 
-def driver_topk(handle: IndexHandle, idf_by_term: dict[str, float], k: int,
-                mode: str, exclude: np.ndarray | None
-                ) -> tuple[np.ndarray, np.ndarray, int]:
-    """The small-query chain, the serving path's (so both agree bit for
-    bit): :meth:`IndexHandle._read_blocks` → :func:`_block_parts` →
-    :func:`_topk`, ``exclude`` dropped before the cut. Returns ``(doc ids,
-    scores, blocks read)``; no Spark job."""
-    meta = handle.meta
-    blocks = handle._read_blocks(list(idf_by_term))
-    ids, parts, _ = _block_parts(blocks, idf_by_term, meta["k1"], meta["b"],
-                                 meta["avgdl"])
-    ids, scores = _topk(ids, parts, len(idf_by_term) if mode == "and" else 1,
-                        exclude, k)
-    return ids, scores, blocks.num_rows
+def driver_topk(segments: list, terms: list[str], k: int, mode: str,
+                max_postings: int | None = None
+                ) -> tuple[np.ndarray, np.ndarray, int] | None:
+    """The one driver query, over ``segments``: ``(IndexHandle,
+    exclusions)`` pairs. Per segment :func:`query_terms` → the handle's
+    term-cached :meth:`IndexHandle._term_parts` → :func:`_topk`, the
+    segment's exclusions dropped before the cut; one ``lexsort`` (score
+    desc, doc_id asc) merges the segments' lists. Returns ``(doc ids,
+    scores, blocks of the present terms, read or cached)`` with no Spark
+    job, or ``None``, reading no block, when the postings the driver would
+    read (Σ df of the present terms not in their segment's term cache)
+    exceed ``max_postings`` (default :data:`SMALL_QUERY_POSTINGS`) or an
+    exclusion array exceeds :data:`EXCLUDE_CAP`. Exclusions are an int64
+    array, ``None``, or a callable returning one, called only once the
+    postings pass."""
+    if max_postings is None:
+        max_postings = SMALL_QUERY_POSTINGS
+    work = []
+    for handle, excl in segments:
+        idf_by_term, info = query_terms(handle, terms, mode)
+        if idf_by_term:
+            work.append((handle, info, list(idf_by_term), excl))
+    if sum(int(info[t]["df"]) for h, info, present, _ in work
+           for t in present if t not in h._term_cache) > max_postings:
+        return None
+    work = [(h, info, present, excl() if callable(excl) else excl)
+            for h, info, present, excl in work]
+    if any(e is not None and e.size > EXCLUDE_CAP for *_, e in work):
+        return None
+    ids, scores, n_blocks = [np.empty(0, np.int64)], [np.empty(0)], 0
+    for handle, info, present, excl in work:
+        seg_ids, parts, seg_blocks = handle._term_parts(present, info)
+        top = _topk(seg_ids, parts, len(present) if mode == "and" else 1,
+                    excl, k)
+        ids.append(top[0])
+        scores.append(top[1])
+        n_blocks += seg_blocks
+    ids, scores = np.concatenate(ids), np.concatenate(scores)
+    order = np.lexsort((ids, -scores))[:k]
+    return ids[order], scores[order], n_blocks
 
 
 def scores_frame(spark: SparkSession, ids: np.ndarray,
@@ -729,11 +749,14 @@ def query_topk_index(spark: SparkSession,
     against it. Probe contributions are cached and reused in the final
     aggregation — nothing decodes twice.
 
-    Queries of ≤ ``small_query_postings`` postings (default
-    :data:`SMALL_QUERY_POSTINGS`) run the zero-job driver chain of
-    :func:`driver_topk` instead and return a local relation. ``exclude_ids`` — doc ids dropped
-    before the top-k cut, as a DataFrame with a ``doc_id`` column or as
-    an int64 array already on the driver (which saves its collect job).
+    Queries whose driver would read ≤ ``small_query_postings`` postings
+    (default :data:`SMALL_QUERY_POSTINGS`; postings already in the
+    handle's term cache cost nothing) run :func:`driver_topk` instead —
+    zero jobs, the handle's term cache read and filled — and return a
+    local relation. ``exclude_ids`` — doc ids dropped before the top-k
+    cut, as a DataFrame with a ``doc_id`` column (collected only after the
+    postings pass the gate) or as an int64 array already on the driver
+    (which saves its collect job).
     ``metrics_out`` (optional dict) receives block-skip accounting (count
     jobs on the pruned path).
     """
@@ -747,39 +770,34 @@ def query_topk_index(spark: SparkSession,
     if not terms:
         return tables.empty_frame(spark, SCORE_SCHEMA)
 
+    # exclusion set (tombstones) on the driver, collected lazily AT MOST
+    # once unless it came as an array: the small-query and θ-seed paths
+    # need it driver-side so that θ is the k-th best score among docs that
+    # can actually be returned (seeding from an excluded doc could
+    # overshoot and prune live top-k blocks). At most EXCLUDE_CAP + 1 ids
+    # are collected: more than the cap means it is too large for the driver
+    _exc: list = [] if isinstance(exclude_ids, DataFrame) else [exclude_ids]
+
+    def exclude_set() -> np.ndarray | None:
+        if not _exc:
+            _exc.append(exclude_ids.select(F.col("doc_id").cast("long"))
+                        .limit(EXCLUDE_CAP + 1).toArrow().column(0)
+                        .to_numpy())
+        return _exc[0]
+
+    got = driver_topk([(handle, exclude_set)], terms, k, mode,
+                      small_query_postings)
+    if got is not None:
+        ids, scores, n_blocks = got
+        if metrics_out is not None and n_blocks:  # every block is scored
+            metrics_out.update(blocks_total=n_blocks, blocks_scored=n_blocks,
+                               block_skip_ratio=0.0)
+        return scores_frame(spark, ids, scores)
     idf_by_term, info = query_terms(handle, terms, mode)
     if not idf_by_term:
         return tables.empty_frame(spark, SCORE_SCHEMA)
     present = list(idf_by_term)
     total_postings = sum(info[t]["df"] for t in present)
-
-    # exclusion set (tombstones) on the driver, collected lazily AT MOST
-    # once unless it came as an array: the small-query and θ-seed paths
-    # need it driver-side so that θ is the k-th best score among docs that
-    # can actually be returned (seeding from an excluded doc could
-    # overshoot and prune live top-k blocks)
-    _exc: list = []
-    if isinstance(exclude_ids, np.ndarray):
-        _exc.append(exclude_ids if exclude_ids.size <= EXCLUDE_CAP else None)
-
-    def exclude_set() -> np.ndarray | None:
-        if not _exc:
-            _exc.append(None if exclude_ids is None
-                        else _collect_exclude_ids(exclude_ids))
-        return _exc[0]
-
-    # small queries (candidate volume known from the dictionary) score on
-    # the driver with zero jobs
-    if small_query_postings is None:
-        small_query_postings = SMALL_QUERY_POSTINGS
-    if (0 < total_postings <= small_query_postings
-            and (exclude_ids is None or exclude_set() is not None)):
-        ids, scores, n_blocks = driver_topk(handle, idf_by_term, k, mode,
-                                            exclude_set())
-        if metrics_out is not None:  # every fetched block is scored
-            metrics_out.update(blocks_total=n_blocks, blocks_scored=n_blocks,
-                               block_skip_ratio=0.0)
-        return scores_frame(spark, ids, scores)
     if isinstance(exclude_ids, np.ndarray):
         exclude_ids = spark.createDataFrame(pa.table({"doc_id": exclude_ids}))
 
@@ -792,7 +810,7 @@ def query_topk_index(spark: SparkSession,
     if exclude_ids is not None and prune:
         # pruning with exclusions is safe only when the θ seed can be
         # cleaned of excluded docs driver-side; otherwise exactness wins
-        prune = exclude_set() is not None
+        prune = exclude_set().size <= EXCLUDE_CAP
     if metrics_out is not None:
         metrics_out["blocks_total"] = blocks.count()
 
@@ -845,7 +863,7 @@ def query_topk_index(spark: SparkSession,
         seed_n = max(32, (16 * k) // max(meta.get("block_size", 128), 1) + 2)
         seed = (blocks.orderBy(F.desc("ub")).limit(seed_n)
                 .select(*_BLOCK_COLS).toArrow())
-        ids, parts, _ = _block_parts(seed, idf_by_term, k1, b, avgdl)
+        ids, parts, *_ = _block_parts(seed, idf_by_term, k1, b, avgdl)
         _, seed_scores = _topk(ids, parts, 1, exclude_set(), k)
         if seed_scores.size >= k:
             theta = float(seed_scores[k - 1])
@@ -893,8 +911,3 @@ def query_topk_index(spark: SparkSession,
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k))
 
-
-def lookup_doc(spark: SparkSession, docs: DataFrame, doc_id: int) -> DataFrame:
-    """Exact-match doc lookup (the reference's ``db.get(id)`` / Solr id query,
-    harvester/solr_updater.py:929)."""
-    return docs.filter(F.col("doc_id") == doc_id)

@@ -25,9 +25,9 @@ equivalent:
   tombstones. Stats convention matches Lucene/Solr: documents deleted since
   the last compaction still count in N/avgdl/df until :func:`compact` runs
   (exactly how Solr behaves between commits with deletes pending merge).
-  Small queries score every segment on the driver and merge the
-  per-segment top-k there, with no Spark job; larger ones run one
-  distributed query per segment;
+  Below bm25's one gate the whole query is ``bm25.driver_topk`` over the
+  segments, with no Spark job; above it, one distributed query per
+  segment;
 - :func:`compact` — full rebuild from the live doc set; after compaction
   results are rank-identical to a from-scratch build.
 
@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from harvester_spark import tables
 from harvester_spark.operators import bm25
-from harvester_spark.operators.bm25 import SCORE_SCHEMA, tokenize_query
+from harvester_spark.operators.bm25 import tokenize_query
 from harvester_spark.operators.index_build import IndexConfig, build_index
 
 
@@ -187,8 +187,10 @@ class SegmentedReader:
     :meth:`refresh` is Lucene's ``DirectoryReader.openIfChanged``: it
     reopens only when ``last_seq``, ``segments.json``, the committed
     tombstone segments or a segment's postings commit changed, and keeps
-    the handles of unchanged segment dirs. The postings stamp catches a
-    :func:`compact`, which rebuilds ``base`` without touching the rest."""
+    the handles of unchanged segment dirs, and with them their term caches
+    (Lucene's per-segment readers): a merged, compacted or reopened segment
+    starts cold. The postings stamp catches a :func:`compact`, which
+    rebuilds ``base`` without touching the rest."""
 
     def __init__(self, spark: SparkSession, root: str | Path):
         self.spark = spark
@@ -239,33 +241,15 @@ class SegmentedReader:
     def topk(self, query: str, k: int, *, mode: str = "or") -> DataFrame:
         """:func:`query_topk_incremental` on this reader."""
         spark = self.spark
-        terms = tokenize_query(query)
-        if not terms:
-            return tables.empty_frame(spark, SCORE_SCHEMA)
-        work = []
-        small = True
-        for handle, excl in self.segments:
-            idf_by_term, info = bm25.query_terms(handle, terms, mode)
-            if idf_by_term:
-                work.append((handle, idf_by_term, excl))
-                small &= (sum(info[t]["df"] for t in idf_by_term)
-                          <= bm25.SMALL_QUERY_POSTINGS
-                          and excl.size <= bm25.EXCLUDE_CAP)
-        if not work:
-            return tables.empty_frame(spark, SCORE_SCHEMA)
-        if small:
-            tops = [bm25.driver_topk(h, idf, k, mode, excl)[:2]
-                    for h, idf, excl in work]
-            ids = np.concatenate([t[0] for t in tops])
-            scores = np.concatenate([t[1] for t in tops])
-            order = np.lexsort((ids, -scores))[:k]
-            return bm25.scores_frame(spark, ids[order], scores[order])
+        got = bm25.driver_topk(self.segments, tokenize_query(query), k, mode)
+        if got is not None:
+            return bm25.scores_frame(spark, got[0], got[1])
         # prune=True is safe with exclusions since the θ seed drops excluded
         # docs before the threshold is set (bm25.exclude_set)
         parts = [bm25.query_topk_index(spark, handle, query, k, mode=mode,
                                        exclude_ids=excl if excl.size
                                        else None)
-                 for handle, _, excl in work]
+                 for handle, excl in self.segments]
         allscores = parts[0]
         for p in parts[1:]:
             allscores = allscores.unionByName(p)
@@ -290,15 +274,16 @@ def query_topk_incremental(spark: SparkSession,
     cut — a post-limit filter would silently lose live docs ranked below
     a tombstoned one inside the segment's top-k window.
 
-    Where each side runs: when every segment passes the small-query gate
-    of :func:`~harvester_spark.operators.bm25.query_topk_index` (Σ df of
-    the present terms ≤ ``bm25.SMALL_QUERY_POSTINGS``, exclusions ≤
-    ``bm25.EXCLUDE_CAP``), each segment runs the driver chain
-    (``bm25.driver_topk``), the per-segment lists merge with one
-    ``lexsort`` (score desc, doc_id asc), and the result is a local
-    relation — no Spark job, collect included. Otherwise every segment
-    runs ``query_topk_index`` with its exclusion array, and the
-    per-segment results are unioned and sorted by Spark.
+    Where it runs: ``bm25.driver_topk`` over the reader's segments gates
+    the whole query (Σ df of the present terms missing from their
+    segment's term cache ≤ ``bm25.SMALL_QUERY_POSTINGS``, exclusions ≤
+    ``bm25.EXCLUDE_CAP``); below it each segment is scored on the driver,
+    the lists merge with one ``lexsort`` (score desc, doc_id asc), and the
+    result is a local relation — no Spark job, collect included. Otherwise
+    every segment runs ``query_topk_index`` with its exclusion array, and
+    the per-segment results are unioned and sorted by Spark. An open
+    reader keeps each segment's decoded terms across queries and
+    :meth:`SegmentedReader.refresh`; a path starts cold.
     """
     if isinstance(root, SegmentedReader):
         return root.topk(query, k, mode=mode)

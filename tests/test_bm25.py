@@ -146,12 +146,16 @@ def test_small_queries_launch_no_job_and_agree(spark, index_dir, q, k, mode):
     (cold term cache), the Spark path opened by path and on a handle all
     launch no Spark job — opening included — and return the same ids with
     bit-equal scores. ``metrics_out`` does not move a query off that
-    chain."""
+    chain. On a warm handle (``topk_local`` first) the Spark path answers
+    from the term cache: no block read, the same answer and block
+    counts."""
     from harvester_spark.operators.bm25 import open_index
 
     sc = spark.sparkContext
     group = f"small-query-{mode}-{q}"
     m: dict = {}
+    m_warm: dict = {}
+    reads = []
     sc.setJobGroup(group, "small query")
     try:
         local = open_index(spark, index_dir).topk_local(q, k, mode=mode)
@@ -159,13 +163,21 @@ def test_small_queries_launch_no_job_and_agree(spark, index_dir, q, k, mode):
                                    mode=mode).collect()
         by_handle = query_topk_index(spark, open_index(spark, index_dir), q,
                                      k, mode=mode, metrics_out=m).collect()
+        warm = open_index(spark, index_dir)
+        warm.topk_local(q, k, mode=mode)
+        read = warm._read_blocks
+        warm._read_blocks = lambda terms: reads.append(terms) or read(terms)
+        by_warm = query_topk_index(spark, warm, q, k, mode=mode,
+                                   metrics_out=m_warm).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
-    for rows in (by_path, by_handle):
+    assert reads == []
+    for rows in (by_path, by_handle, by_warm):
         assert [r["doc_id"] for r in rows] == list(local["doc_id"])
         np.testing.assert_allclose([r["score"] for r in rows],
                                    local["score"].to_numpy(), rtol=0)
+    assert m_warm == m
     if m:  # a query with no present term returns before any block read
         assert m["blocks_scored"] == m["blocks_total"] > 0
         assert m["block_skip_ratio"] == 0.0
@@ -320,14 +332,89 @@ def test_range_localized_pruning_exact(spark, index_dir, oracle, q, mode):
     assert 0.0 <= m["block_skip_ratio"] < 1.0
 
 
-def test_local_serving_hot_term_auto_fallback(spark, index_dir, oracle):
-    """A query whose uncached postings exceed local_postings_cap must route
+@pytest.fixture(scope="module")
+def gate_root(spark, corpus_df, oracle, tmp_path_factory):
+    """An incremental root over the corpus whose top hit for ``import
+    def`` was upserted into a delta, and that query's top 10 from the
+    per-segment oracle (the base without the upserted doc, plus the
+    delta)."""
+    from harvester_spark.fixtures.oracle import OracleBM25
+    from harvester_spark.streaming import incremental as inc
+
+    root = tmp_path_factory.mktemp("gate") / "root"
+    inc.init_root(spark, corpus_df, root)
+    terms = tokenize_query("import def")
+    base = oracle.topk(terms, oracle.N)
+    top, content = int(base["doc_id"].iloc[0]), "def import def value"
+    inc.apply_changes(spark, root, spark.createDataFrame(
+        [(top, False, content)], "doc_id long, deleted boolean, "
+        "content string"), seq=1)
+    delta = OracleBM25(pd.DataFrame({"doc_id": [top], "content": [content]}),
+                       content_col="content").topk(terms, 1)
+    res = pd.concat([base[base["doc_id"] != top], delta], ignore_index=True)
+    order = np.lexsort((res["doc_id"].to_numpy(), -res["score"].to_numpy()))
+    return root, res.iloc[order[:10]].reset_index(drop=True)
+
+
+@pytest.mark.parametrize("entry", ["topk_local", "index_by_handle",
+                                   "index_by_path", "incremental_by_root",
+                                   "incremental_by_reader"])
+def test_local_serving_hot_term_auto_fallback(spark, index_dir, oracle,
+                                              gate_root, monkeypatch, entry):
+    """A query whose uncached postings exceed the driver gate must route
     to the distributed path WITHOUT collecting postings driver-side (r3
-    verdict: topk_local on a 10^12-doc index would collect GBs)."""
+    verdict: topk_local on a 10^12-doc index would collect GBs) — on every
+    entry point, refused from ``df`` alone. Under the same cap a query
+    whose terms are all cached is still served on the driver (a path
+    opens a cold handle per call, so it has no warm half)."""
+    from harvester_spark.operators import bm25
     from harvester_spark.operators.bm25 import open_index
+    from harvester_spark.streaming import incremental as inc
 
     h = open_index(spark, index_dir)
     q, k = "import def", 10
+    if entry != "topk_local":
+        root, want = gate_root
+        if entry.startswith("index"):
+            want = oracle.topk(tokenize_query(q), k)
+        reader = inc.open_root(spark, root)
+        run = {"index_by_handle": lambda: query_topk_index(spark, h, q, k),
+               "index_by_path": lambda: query_topk_index(spark, index_dir,
+                                                         q, k),
+               "incremental_by_root": lambda: inc.query_topk_incremental(
+                   spark, root, q, k),
+               "incremental_by_reader": lambda: inc.query_topk_incremental(
+                   spark, reader, q, k)}[entry]
+        reads = []
+        read = bm25.IndexHandle._read_blocks
+
+        def spy(handle, terms):
+            reads.append(terms)
+            return read(handle, terms)
+
+        monkeypatch.setattr(bm25.IndexHandle, "_read_blocks", spy)
+        cap = bm25.SMALL_QUERY_POSTINGS
+        monkeypatch.setattr(bm25, "SMALL_QUERY_POSTINGS", 0)
+        assert_rank_identical(run().toPandas(), want, f"{entry} cold")
+        assert reads == []
+        if entry.endswith("by_path") or entry.endswith("by_root"):
+            return
+        monkeypatch.setattr(bm25, "SMALL_QUERY_POSTINGS", cap)
+        run().collect()  # the default gate fills the term caches
+        assert reads
+        reads.clear()
+        monkeypatch.setattr(bm25, "SMALL_QUERY_POSTINGS", 0)
+        sc = spark.sparkContext
+        sc.setJobGroup(f"gate-warm-{entry}", "warm query")
+        try:
+            got = pd.DataFrame(run().collect(), columns=["doc_id", "score"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(
+            f"gate-warm-{entry}") == []
+        assert reads == []
+        assert_rank_identical(got, want, f"{entry} warm")
+        return
 
     def _no_read(terms):
         raise AssertionError("hot-term query read postings driver-side")

@@ -570,7 +570,10 @@ def test_reader_refresh_picks_up_applies_and_merges(spark, base_docs,
     second batch and a delta merge: each ``refresh()`` reopens only what
     changed and then answers like a freshly opened reader and like the
     per-segment oracle over the live docs; a ``refresh()`` with nothing
-    changed reopens nothing."""
+    changed reopens nothing. The base keeps its term cache across every
+    refresh that keeps it (it reads no block after the first query), the
+    merged segment is read once, and after a ``compact`` the base is a new
+    handle with an empty cache."""
     import pyarrow as pa
 
     threads = pa.cpu_count()
@@ -594,8 +597,14 @@ def test_reader_refresh_picks_up_applies_and_merges(spark, base_docs,
         assert all(a is b for a, (b, _) in zip(handles, reader.segments))
         return got
 
+    def spy(handle):
+        calls, read = [], handle._read_blocks
+        handle._read_blocks = lambda terms: calls.append(terms) or read(terms)
+        return calls
+
     before = check([(base, [])])
     base_handle = reader.segments[0][0]
+    base_reads = spy(base_handle)
     top, other = (int(x) for x in before["doc_id"][:2])
 
     up1 = pd.DataFrame({"doc_id": [top], "content": ["zz_r value"]})
@@ -604,6 +613,7 @@ def test_reader_refresh_picks_up_applies_and_merges(spark, base_docs,
     assert reader.refresh()
     assert reader.segments[0][0] is base_handle
     after1 = check([(base, [top, other]), (up1, [])])
+    assert base_reads == []  # a refresh that adds a delta keeps its cache
     assert top not in set(after1["doc_id"]) and other not in set(
         after1["doc_id"])
 
@@ -620,6 +630,18 @@ def test_reader_refresh_picks_up_applies_and_merges(spark, base_docs,
     assert reader.refresh()
     assert len(reader.segments) == 2
     assert reader.segments[0][0] is base_handle
+    merged_reads = spy(reader.segments[1][0])
     after3 = check([(base, [top, other, 400]), (up2, [])])
     assert top in set(after3["doc_id"])
+    assert len(merged_reads) == 1 and base_reads == []
+
+    live = pd.concat([base[~base["doc_id"].isin([top, other])], up2],
+                     ignore_index=True)
+    inc.compact(spark, root, spark.createDataFrame(live), cfg=CFG)
+    assert reader.refresh()
+    assert len(reader.segments) == 1
+    new_base = reader.segments[0][0]
+    assert new_base is not base_handle and not new_base._term_cache
+    check([(live, [])])
+    assert base_reads == []
     assert pa.cpu_count() == threads
