@@ -706,8 +706,9 @@ def driver_topk(segments: list, terms: list[str], k: int, mode: str,
 
 def scores_frame(spark: SparkSession, ids: np.ndarray,
                  scores: np.ndarray) -> DataFrame:
-    """``(doc_id, score)`` arrays as a local relation: collecting it
-    launches no Spark job."""
+    """``(doc_id, score)`` arrays as a local relation: ``.collect()``
+    launches no Spark job, but ``.toPandas()`` of the same relation
+    launches one."""
     return spark.createDataFrame(pa.table({"doc_id": ids, "score": scores}),
                                  SCORE_SCHEMA)
 
@@ -753,7 +754,8 @@ def query_topk_index(spark: SparkSession,
     (default :data:`SMALL_QUERY_POSTINGS`; postings already in the
     handle's term cache cost nothing) run :func:`driver_topk` instead —
     zero jobs, the handle's term cache read and filled — and return a
-    local relation. ``exclude_ids`` — doc ids dropped before the top-k
+    local relation (:func:`scores_frame`: zero jobs read with
+    ``.collect()``, one job read with ``.toPandas()``). ``exclude_ids`` — doc ids dropped before the top-k
     cut, as a DataFrame with a ``doc_id`` column (collected only after the
     postings pass the gate) or as an int64 array already on the driver
     (which saves its collect job).

@@ -11,17 +11,20 @@ generalize here to corpus-scale document dedup, all DataFrame-first:
 - SimHash:       64-bit sign-sum fingerprint over xxhash64 (or md5, for
   DuckDB-replicable fingerprints) token hashes → Manku block keys →
   buckets → hamming-filtered pairs.
-- n-gram Jaccard: exact set overlap via array_intersect (verification of
-  LSH candidates, or small probe sets).
+- n-gram Jaccard: exact shingle-set overlap. MinHash candidates are
+  verified by the ``jaccard_batches`` kernel; :func:`ngram_jaccard` is
+  the Spark SQL form (array_intersect / array_union) for probe sets and
+  the kernel's test reference.
 
 Both LSH pair ops run the kernels of dedup_kernels.py in one of two
 placements, picked by corpus size against the driver budget the index
 build shares (``tables.collect_small``): on the driver over the collected
 corpus (two small jobs), or distributed, where the keyed rows are
 repartitioned and sorted on the bucket key and the same ``bucket_pairs``
-kernel streams each partition. Either way the drop
-metrics exist before the call returns: buckets over ``max_bucket`` are
-dropped, never silently.
+kernel streams each partition, and the candidate pairs joined with their
+content stream through the same ``jaccard_batches`` verifier. Either way
+the drop metrics exist before the call returns: buckets over
+``max_bucket`` are dropped, never silently.
 """
 
 from __future__ import annotations
@@ -32,6 +35,7 @@ from pyspark.sql import functions as F
 
 from harvester_spark import tables
 from harvester_spark.functions.tokenize import tokens_expr
+from harvester_spark.operators.dedup_kernels import MERSENNE_P
 
 
 def _collect_small_docs(docs: DataFrame, content_col: str, id_col: str):
@@ -55,15 +59,12 @@ def _pairs_drop_warning(metrics: dict, max_bucket: int, what: str) -> None:
             f"reduced; pass with_metrics=True for full accounting or "
             f"raise max_bucket", RuntimeWarning)
 
-# deterministic permutation parameters (seeded; public Carter-Wegman form
-# h_i(x) = (a_i * x + b_i) mod p over the xxhash64 shingle hash).
-# p = 2^31 - 1 keeps every product under 2^62 — ANSI-mode (Spark 4 default)
-# overflow-safe without try_multiply.
-MERSENNE_P = (1 << 31) - 1
-
-
 def _perm_params(num_hashes: int, seed: int = 42) -> tuple:
-    """(a, b) int64 arrays of the ``num_hashes`` permutations."""
+    """(a, b) int64 arrays of the ``num_hashes`` permutations: seeded
+    Carter-Wegman h_i(x) = (a_i * x + b_i) mod p over the xxhash64
+    shingle hash. p = ``MERSENNE_P`` = 2^31 - 1 keeps every product under
+    2^62 — ANSI-mode (Spark 4 default) overflow-safe without
+    try_multiply."""
     rng = np.random.default_rng(seed)
     a = rng.integers(1, MERSENNE_P, size=num_hashes, dtype=np.int64)
     b = rng.integers(0, MERSENNE_P, size=num_hashes, dtype=np.int64)
@@ -218,18 +219,6 @@ def _check_max_bucket(max_bucket: int) -> None:
         raise ValueError(f"max_bucket={max_bucket} must be >= 1")
 
 
-def _pairs_df(spark, rows: list, schema: str):
-    """Pair rows → DataFrame via pandas/Arrow (row-of-tuples conversion
-    measured ~1 s for 10^4-pair outputs; the Arrow path is ~ms)."""
-    import pandas as pd
-
-    names = [f.split()[0] for f in schema.split(",")]
-    if not rows:
-        return tables.empty_frame(spark, schema)
-    pdf = pd.DataFrame(rows, columns=names)
-    return spark.createDataFrame(pdf, schema)
-
-
 _PAIR_METRIC_COLS = ("dropped_buckets", "dropped_doc_entries",
                      "max_dropped_size")
 
@@ -258,9 +247,9 @@ def _collapse_identical(rows: DataFrame, key_col: str, ident_cols: tuple,
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    # MEMORY_ONLY throughout this module: per-call cache entries have no
-    # unpersist hook, so they must be evictable under LRU pressure rather
-    # than accumulating on disk across calls
+    # MEMORY_ONLY: a per-call cache entry has no unpersist hook, so it
+    # must be evictable under LRU pressure rather than accumulating on
+    # disk across calls
     ann = (rows.withColumn("rep", F.min("doc_id").over(
         Window.partitionBy(key_col))).persist(StorageLevel.MEMORY_ONLY))
     members = ann.filter(F.col("doc_id") != F.col("rep"))
@@ -315,7 +304,11 @@ def minhash_lsh_pairs(docs: DataFrame, *, content_col: str = "content",
     ``with_metrics=True`` to also receive a one-row DataFrame counting
     dropped buckets/doc-entries, otherwise a RuntimeWarning is raised
     before the call returns. If ``jaccard_threshold`` is set the
-    candidates are exactly verified with true shingle-set Jaccard.
+    candidates are exactly verified with true shingle-set Jaccard by the
+    ``dedup_kernels.jaccard_batches`` kernel, in both placements: on the
+    driver over the candidates' texts, or distributed over the candidate
+    pairs joined with both docs' content (``mapInArrow``, no cache), and
+    only pairs with jaccard ≥ ``jaccard_threshold`` are kept.
 
     BYTE-IDENTICAL documents collapse to one representative (min doc_id)
     BEFORE banding: identical content ⇒ identical signature ⇒ the whole
@@ -337,9 +330,8 @@ def minhash_lsh_pairs(docs: DataFrame, *, content_col: str = "content",
     """
     from functools import partial
 
-    from pyspark import StorageLevel
-
     from harvester_spark.operators.dedup_kernels import (_driver_pa_pool,
+                                                          jaccard_batches,
                                                           minhash_pairs_local)
 
     _check_max_bucket(max_bucket)
@@ -347,6 +339,9 @@ def minhash_lsh_pairs(docs: DataFrame, *, content_col: str = "content",
     finish = partial(_pairs_result, ident_cols=ident_cols,
                      with_metrics=with_metrics, max_bucket=max_bucket,
                      what="minhash_lsh_pairs")
+    schema = ("doc_a long, doc_b long"
+              + (", jaccard double" if jaccard_threshold is not None
+                 else ""))
     small = _collect_small_docs(docs, content_col, id_col)
     if small is not None:
         a, b = _perm_params(num_hashes, seed)
@@ -355,10 +350,8 @@ def minhash_lsh_pairs(docs: DataFrame, *, content_col: str = "content",
                 small[0], small[1], a=a, b=b, bands=bands,
                 shingle_n=shingle_n, max_bucket=max_bucket,
                 jaccard_threshold=jaccard_threshold)
-        schema = ("doc_a long, doc_b long"
-                  + (", jaccard double" if jaccard_threshold is not None
-                     else ""))
-        return finish(_pairs_df(docs.sparkSession, pairs, schema), metrics)
+        return finish(docs.sparkSession.createDataFrame(pairs, schema),
+                      metrics)
     # rep-collapse on byte identity: the content sha and the band keys
     # ride the signature kernel (hashlib sha256 hex == Spark sha2 hex over
     # the same UTF-8 bytes). Zero-token docs have no row, so they drop out
@@ -373,40 +366,23 @@ def minhash_lsh_pairs(docs: DataFrame, *, content_col: str = "content",
         reps.select(F.posexplode("keys").alias("tbl", "key"), "doc_id"),
         max_bucket=max_bucket)
     metrics.update(ident)
-    if jaccard_threshold is not None:
-        # the distinct candidate pairs feed the id semi-join and both
-        # shingle joins below; without a cache Spark recomputes them per
-        # consumer
-        pairs = pairs.persist(StorageLevel.MEMORY_ONLY)
-        # compute shingles only for docs that appear in candidate pairs —
-        # the candidate set is tiny next to the corpus, so a semi-join
-        # before the (expensive) shingle expression saves a full pass.
-        # ONE scan of the cached pairs (explode both sides), and no
-        # distinct: the broadcast left_semi join dedups for free, so the
-        # old union + distinct exchange bought nothing (guide §2.4)
-        cand_ids = pairs.select(
-            F.explode(F.array("doc_a", "doc_b")).alias("cid"))
-        docs_cand = docs.join(F.broadcast(cand_ids),
-                              docs[id_col] == cand_ids["cid"], "left_semi")
-        sh = docs_cand.select(F.col(id_col).alias("doc_id"),
-                              shingles_expr(content_col, shingle_n).alias("shs"))
-        sh = sh.persist(StorageLevel.MEMORY_ONLY)
-        pairs = (pairs
-                 .join(sh.withColumnRenamed("doc_id", "doc_a")
-                       .withColumnRenamed("shs", "shs_a"), "doc_a")
-                 .join(sh.withColumnRenamed("doc_id", "doc_b")
-                       .withColumnRenamed("shs", "shs_b"), "doc_b")
-                 .withColumn("jaccard",
-                             F.size(F.array_intersect("shs_a", "shs_b"))
-                             / F.size(F.array_union("shs_a", "shs_b")))
-                 .filter(F.col("jaccard") >= jaccard_threshold)
-                 .select("doc_a", "doc_b", "jaccard"))
-        # star members are byte-identical to their rep: jaccard is exactly
-        # 1.0 by definition — no verification pass needed
-        pairs = pairs.unionByName(
-            star_pairs.withColumn("jaccard", F.lit(1.0)))
-    else:
-        pairs = pairs.unionByName(star_pairs)
+    if jaccard_threshold is None:
+        return finish(pairs.unionByName(star_pairs), metrics)
+    # the candidates are a small broadcast next to the corpus: each join
+    # streams one corpus scan, and the kernel checks every pair row
+    def side(s):
+        return docs.select(F.col(id_col).cast("long").alias(f"doc_{s}"),
+                           F.col(content_col).alias(f"content_{s}"))
+
+    cand = side("b").join(
+        F.broadcast(side("a").join(F.broadcast(pairs), "doc_a")), "doc_b")
+    pairs = _map_kernel(
+        cand.select("doc_a", "doc_b", "content_a", "content_b"),
+        jaccard_batches, schema, shingle_n=shingle_n)
+    # star members are byte-identical to their rep: jaccard is exactly
+    # 1.0 by definition — no verification pass needed
+    pairs = pairs.filter(F.col("jaccard") >= jaccard_threshold).unionByName(
+        star_pairs.withColumn("jaccard", F.lit(1.0)))
     return finish(pairs, metrics)
 
 
@@ -531,9 +507,8 @@ def simhash_near_pairs(docs: DataFrame, *, content_col: str = "content",
             pairs, metrics = simhash_pairs_local(
                 small[0], small[1], max_hamming=k, chunks=chunks,
                 max_bucket=max_bucket, token_hash=token_hash)
-        return finish(_pairs_df(docs.sparkSession, pairs,
-                                "doc_a long, doc_b long, hamming int"),
-                      metrics)
+        return finish(docs.sparkSession.createDataFrame(
+            pairs, "doc_a long, doc_b long, hamming int"), metrics)
     reps, star_pairs, ident = _collapse_identical(fp, "simhash", ident_cols,
                                                   with_metrics)
     keyed = _map_kernel(reps.select("doc_id", "simhash"),

@@ -2,15 +2,20 @@
 
 Each step runs on executors inside ``mapInArrow`` (one partition at a
 time, threads=1) and on the driver over a collected small corpus (same
-functions, small thread pool): pyarrow tokenize → bit-exact numpy XXH64
-(or md5) → minhash signatures / simhash fingerprints → bucket keys
+functions, small thread pool): pyarrow tokenize → shingle strings
+(:func:`_shingle_strings`) → bit-exact numpy XXH64 (or md5) → minhash
+signatures / simhash fingerprints → bucket keys
 (:func:`minhash_band_keys`, :func:`simhash_block_keys`) → candidate pairs
-(:func:`bucket_pairs`, which streams rows sorted by bucket key).
+(:func:`bucket_pairs`, which streams rows sorted by bucket key) → exact
+shingle-set Jaccard of the candidates (:func:`jaccard_batches`, over the
+pairs joined with both documents' content). The driver forms return
+their pairs as ``pa.Table``.
 
 Bit-exactness contract: signatures and fingerprints are VALUE-IDENTICAL
 to the Spark SQL forms (same xxhash64 — functions/xxh64.py parity-tested
 against Spark; same Carter-Wegman arithmetic; same sha2 hex; the md5
-prefix DuckDB computes), asserted against test-local SQL references in
+prefix DuckDB computes), and the Jaccard values are float-identical to
+``dedup.ngram_jaccard``, asserted against test-local SQL references in
 tests/test_dedup.py.
 """
 
@@ -24,6 +29,8 @@ import threading
 from typing import Iterator
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from harvester_spark.functions.xxh64 import xxh64_arrow
 
@@ -36,6 +43,9 @@ DRIVER_KERNEL_THREADS = min(8, os.cpu_count() or 1)
 
 # the two token hashes simhash fingerprints can be built on
 TOKEN_HASHES = ("xxhash64", "md5")
+
+_JACCARD_SCHEMA = pa.schema([("doc_a", pa.int64()), ("doc_b", pa.int64()),
+                             ("jaccard", pa.float64())])
 
 # pairs materialized per bucket_pairs yield (bounds the kernel's output
 # buffers when one batch holds many large buckets)
@@ -60,8 +70,6 @@ def _driver_pa_pool():
     tokenize/join/cast kernels may use the idle cores. The pool is
     restored when the last concurrent user exits, so nothing else inherits
     it."""
-    import pyarrow as pa
-
     global _pa_pool_users, _pa_pool_baseline
     with _PA_POOL_LOCK:
         if _pa_pool_users == 0:
@@ -81,9 +89,6 @@ def _tokens_flat(content_arr):
     """Arrow string array → (flat tokens pa.Array, parent int64 ndarray,
     counts per row int64 ndarray). Same tokenizer as the index-build pack
     kernel (lower → split on [^a-z0-9_]+ → drop empties)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     from harvester_spark.functions.tokenize import TOKEN_SPLIT_RE
 
     nrows = len(content_arr)
@@ -102,17 +107,13 @@ def _tokens_flat(content_arr):
     return flat, pnp, counts
 
 
-def _shingle_hashes(flat, counts: np.ndarray, shingle_n: int):
-    """Flat tokens → (shingle hash ∈ [0, P) int64 ndarray, shingle parent
-    row ids int64, doc-grouped). Shingle construction matches
-    shingles_from_tokens: docs with ≥ n tokens get every n-gram position
-    (duplicates retained — min-hash is duplicate-insensitive, so the SQL
-    form's array_distinct changes nothing); docs with 1..n-1 tokens get ONE
-    whole-text shingle; zero-token docs get none. All shingles are joined
+def _shingle_strings(flat, counts: np.ndarray, shingle_n: int):
+    """Flat tokens → (shingle strings pa.Array, shingle parent row ids
+    int64 ndarray, doc-grouped). Construction matches shingles_from_tokens
+    up to its array_distinct: docs with ≥ n tokens get every n-gram
+    position (duplicates retained), docs with 1..n-1 tokens get ONE
+    whole-text shingle, zero-token docs get none. All shingles are joined
     in one pass over a ListArray of their token slices."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     npos = np.where(counts > 0, np.maximum(counts - shingle_n + 1, 1), 0)
     par = np.repeat(np.arange(counts.size), npos)
     # first token of every shingle, then every shingle's token indices
@@ -123,9 +124,7 @@ def _shingle_hashes(flat, counts: np.ndarray, shingle_n: int):
     idx = np.repeat(first - offs[:-1], length) + np.arange(offs[-1])
     lists = pa.ListArray.from_arrays(pa.array(offs, type=pa.int32()),
                                      flat.take(pa.array(idx)))
-    h = xxh64_arrow(pc.binary_join(lists, " "))
-    h %= MERSENNE_P  # in-place: h is already our private copy
-    return h, par
+    return pc.binary_join(lists, " "), par
 
 
 def _run_blocks(fn, total: int, block: int, threads: int) -> None:
@@ -229,8 +228,6 @@ def _token_hashes(flat, token_hash: str) -> np.ndarray:
     for ``"md5"`` the first 8 md5 bytes read big-endian (what DuckDB's
     ``('0x' || substr(md5(t), 1|9, 8))::BIGINT`` pair spells), hashed once
     per distinct token."""
-    import pyarrow.compute as pc
-
     if token_hash == "xxhash64":
         return xxh64_arrow(flat).view(np.uint64)
     enc = pc.dictionary_encode(flat)
@@ -244,9 +241,6 @@ def minhash_band_keys(sig: np.ndarray, bands: int) -> np.ndarray:
     """(n × bands) int64 LSH band keys from an (n × num_hashes) signature
     matrix: band i's key is xxhash64 of its ``num_hashes // bands`` values
     joined as decimal strings with ``,``."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     rows = sig.shape[1] // bands
     keys = np.empty((sig.shape[0], bands), dtype=np.int64)
     for i in range(bands):
@@ -280,7 +274,10 @@ def _minhash_sigs(content, a: np.ndarray, b: np.ndarray, shingle_n: int,
     keep = np.nonzero(counts > 0)[0]
     if keep.size == 0:
         return keep, np.empty((0, a.size), dtype=np.int64)
-    h, par = _shingle_hashes(flat, counts, shingle_n)
+    sh, par = _shingle_strings(flat, counts, shingle_n)
+    # min-hash is duplicate-insensitive: repeated shingles change nothing
+    h = xxh64_arrow(sh)
+    h %= MERSENNE_P  # in-place: h is already our private copy
     # reduceat starts: first index of each doc's shingle run (par is
     # sorted; every kept doc has ≥1 shingle)
     starts = np.nonzero(np.concatenate(([True], par[1:] != par[:-1])))[0]
@@ -319,8 +316,6 @@ def minhash_sig_batches(batches, *, a: np.ndarray, b: np.ndarray,
     array<long>), or with ``bands`` → (doc_id, csha, keys array<long>):
     the content sha256 hex and the :func:`minhash_band_keys`. One row per
     doc with ≥1 token."""
-    import pyarrow as pa
-
     for batch in batches:
         content = batch.column(1)
         keep, sig = _minhash_sigs(content, a, b, shingle_n)
@@ -342,8 +337,6 @@ def simhash_batches(batches, *, bits: int = 64,
                     token_hash: str) -> Iterator:
     """mapInArrow kernel: (doc_id, content) → (doc_id, simhash long), one
     row per doc with ≥1 token."""
-    import pyarrow as pa
-
     for batch in batches:
         keep, fp = _simhash_fps(batch.column(1), token_hash, bits)
         if keep.size:
@@ -365,8 +358,6 @@ def simhash_key_batches(batches, *, chunks: int,
                         max_hamming: int) -> Iterator:
     """mapInArrow kernel: (doc_id, simhash) → (tbl, key, doc_id, fp), one
     row per doc and :func:`simhash_block_keys` table."""
-    import pyarrow as pa
-
     for batch in batches:
         ids, fp = (c.to_numpy(zero_copy_only=False) for c in batch.columns)
         yield pa.RecordBatch.from_arrays(
@@ -471,8 +462,6 @@ def bucket_pair_batches(batches, *, max_bucket: int,
     (tbl, key, doc_id): (tbl, key, doc_id[, fp]) batches → (doc_a, doc_b
     [, hamming], dropped) batches. Pair rows have a null ``dropped``; each
     dropped bucket is one row with null ids and its size in ``dropped``."""
-    import pyarrow as pa
-
     names = ["doc_a", "doc_b", "hamming", "dropped"]
     types = [pa.int64(), pa.int64(), pa.int32(), pa.int64()]
     if max_hamming is None:
@@ -491,12 +480,49 @@ def bucket_pair_batches(batches, *, max_bucket: int,
                  for v, t in zip(vals, types)], names=names)
 
 
+def jaccard_batches(batches, *, shingle_n: int) -> Iterator:
+    """The exact Jaccard verifier of both placements: (doc_a, doc_b,
+    content_a, content_b) record batches → (doc_a, doc_b, jaccard double)
+    batches, one row per input row. jaccard = |A∩B| / |A∪B| over the two
+    docs' DISTINCT shingle strings, as one float64 division — the value
+    Spark's ``size(array_intersect) / size(array_union)`` over
+    ``shingles_expr`` gives (``dedup.ngram_jaccard``). Sets are compared by
+    the batch's dictionary codes of the strings, which are exact (shingle
+    hashes are not: they collide mod P). Both docs need ≥1 token."""
+    for batch in batches:
+        m = batch.num_rows
+        if m == 0:
+            continue
+        flat, _, counts = _tokens_flat(pa.concat_arrays(
+            [batch.column(2), batch.column(3)]))
+        sh, par = _shingle_strings(flat, counts, shingle_n)
+        enc = pc.dictionary_encode(sh)
+        n = len(enc.dictionary)
+        # one key per (pair, shingle); rows m.. hold the b sides
+        key = (par % m) * n + enc.indices.to_numpy(zero_copy_only=False)
+        ka, kb = np.unique(key[par < m]), np.unique(key[par >= m])
+        both = np.sort(np.concatenate((ka, kb)))
+        inter = np.bincount(both[1:][both[1:] == both[:-1]] // n,
+                            minlength=m)
+        union = (np.bincount(ka // n, minlength=m)
+                 + np.bincount(kb // n, minlength=m) - inter)
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0), batch.column(1), pa.array(inter / union)],
+            schema=_JACCARD_SCHEMA)
+
+
+def _pair_table(a, b, **extra):
+    """(doc_a, doc_b[, extra columns]) pa.Table — the driver pair form."""
+    return pa.table({"doc_a": pa.array(a, pa.int64()),
+                     "doc_b": pa.array(b, pa.int64()), **extra})
+
+
 def _pairs_from_keys(keys: np.ndarray, ids: np.ndarray, *, max_bucket: int,
                      fp: np.ndarray | None = None,
                      max_hamming: int | None = None):
     """Driver form of :func:`bucket_pairs` over an (n × tables) key matrix,
-    as one chunk. Returns (distinct pairs [(doc_a, doc_b[, hamming])...],
-    drop metrics dict)."""
+    as one chunk. Returns (distinct pairs pa.Table (doc_a, doc_b[,
+    hamming]), drop metrics dict)."""
     by_id = np.argsort(ids, kind="stable")
     ids, keys = ids[by_id], keys[by_id]
     fp = None if fp is None else fp[by_id]
@@ -512,8 +538,10 @@ def _pairs_from_keys(keys: np.ndarray, ids: np.ndarray, *, max_bucket: int,
                         parts or [[np.empty(0, dtype=np.int64)]] * 4)
     cols = [a, b] + ([ham] if max_hamming is not None else [])
     # hamming is a function of the pair: distinct rows = distinct pairs
-    pairs = np.unique(np.stack(cols, axis=1), axis=0).tolist()
-    return list(map(tuple, pairs)), drop_metrics(drops)
+    u = np.unique(np.stack(cols, axis=1), axis=0)
+    extra = ({} if max_hamming is None
+             else {"hamming": pa.array(u[:, 2], pa.int32())})
+    return _pair_table(u[:, 0], u[:, 1], **extra), drop_metrics(drops)
 
 
 def drop_metrics(drops: np.ndarray) -> dict:
@@ -532,11 +560,11 @@ def drop_metrics(drops: np.ndarray) -> dict:
 def _rep_collapse(kept_ids: np.ndarray, keys) -> tuple:
     """Min-id representative per equal key (vectorized: min.reduceat over
     the sorted groups; star members = rows whose id isn't their group
-    min). Returns (is_rep bool mask, star list[(rep, member)],
-    n_groups_with_extras, n_extra_docs)."""
+    min). Returns (is_rep bool mask, star pairs pa.Table (doc_a=rep,
+    doc_b=member), n_groups_with_extras)."""
     keys = np.asarray(keys)
     if keys.size == 0:
-        return np.zeros(0, dtype=bool), [], 0, 0
+        return np.zeros(0, dtype=bool), _pair_table([], []), 0
     order = np.argsort(keys, kind="stable")
     sk = keys[order]
     starts = np.nonzero(np.concatenate(([True], sk[1:] != sk[:-1])))[0]
@@ -545,8 +573,8 @@ def _rep_collapse(kept_ids: np.ndarray, keys) -> tuple:
     rep_of[order] = np.repeat(np.minimum.reduceat(kept_ids[order], starts),
                               sizes)
     member = kept_ids != rep_of
-    star = list(zip(rep_of[member].tolist(), kept_ids[member].tolist()))
-    return ~member, star, int(np.count_nonzero(sizes > 1)), len(star)
+    return (~member, _pair_table(rep_of[member], kept_ids[member]),
+            int(np.count_nonzero(sizes > 1)))
 
 
 def minhash_pairs_local(ids: np.ndarray, texts, *, a: np.ndarray,
@@ -554,59 +582,51 @@ def minhash_pairs_local(ids: np.ndarray, texts, *, a: np.ndarray,
                         max_bucket: int,
                         jaccard_threshold: float | None) -> tuple:
     """Driver placement of ``minhash_lsh_pairs`` over a collected corpus:
-    ([(doc_a, doc_b[, jaccard])...], metrics dict), value-identical to the
-    distributed path."""
-    import pyarrow as pa
-
+    (pairs pa.Table (doc_a, doc_b[, jaccard]), metrics dict),
+    value-identical to the distributed path."""
     keep, sig = _minhash_sigs(texts, a, b, shingle_n,
                               threads=DRIVER_KERNEL_THREADS)
     kept_ids = ids[keep]
-    is_rep, star, n_groups, n_extra = _rep_collapse(
+    is_rep, star, n_groups = _rep_collapse(
         kept_ids, np.asarray(_content_sha(texts, keep), dtype="S64"))
     cand, metrics = _pairs_from_keys(
         minhash_band_keys(sig[is_rep], bands), kept_ids[is_rep],
         max_bucket=max_bucket)
     metrics.update(identical_content_groups=n_groups,
-                   identical_content_extra_docs=n_extra)
+                   identical_content_extra_docs=star.num_rows)
     if jaccard_threshold is None:
-        return cand + star, metrics
-
-    # exact-verify candidates on DISTINCT shingle STRING sets (the hashes
-    # above are mod-P and could collide; the distributed verify uses
-    # shingles_expr strings, so the driver path must too)
-    row_of = dict(zip(kept_ids.tolist(), keep.tolist()))
-    cand_ids = sorted({d for pair in cand for d in pair})
-    flat, _, counts = _tokens_flat(
-        texts.take(pa.array([row_of[d] for d in cand_ids], pa.int64())))
-    toks = flat.to_pylist()
-    offs = np.cumsum(counts) - counts
-    n = shingle_n
-    sets = {}
-    for d, o, c in zip(cand_ids, offs.tolist(), counts.tolist()):
-        t = toks[o:o + c]  # < n tokens: one whole-text shingle
-        sets[d] = {" ".join(t[i:i + n]) for i in range(max(1, c - n + 1))}
-    pairs = [(x, y, len(sets[x] & sets[y]) / len(sets[x] | sets[y]))
-             for x, y in cand]
-    pairs = [p for p in pairs if p[2] >= jaccard_threshold]
-    pairs.extend((ra, rb, 1.0) for ra, rb in star)
-    return pairs, metrics
+        return pa.concat_tables([cand, star]), metrics
+    by_id = np.argsort(kept_ids)
+    batch = cand
+    for c in ("a", "b"):
+        pos = np.searchsorted(kept_ids, cand[f"doc_{c}"], sorter=by_id)
+        batch = batch.append_column(f"content_{c}",
+                                    texts.take(keep[by_id[pos]]))
+    verified = pa.Table.from_batches(jaccard_batches(
+        batch.combine_chunks().to_batches(), shingle_n=shingle_n),
+        _JACCARD_SCHEMA)
+    # star members are byte-identical to their rep: jaccard is exactly 1.0
+    star = star.append_column("jaccard", pa.array(np.ones(star.num_rows)))
+    return pa.concat_tables([
+        verified.filter(pc.field("jaccard") >= jaccard_threshold),
+        star]), metrics
 
 
 def simhash_pairs_local(ids: np.ndarray, texts, *, max_hamming: int,
                         chunks: int, max_bucket: int,
                         token_hash: str) -> tuple:
     """Driver placement of ``simhash_near_pairs`` over a collected corpus:
-    ([(doc_a, doc_b, hamming)...], metrics dict), value-identical to the
-    distributed path."""
+    (pairs pa.Table (doc_a, doc_b, hamming), metrics dict),
+    value-identical to the distributed path."""
     keep, fp = _simhash_fps(texts, token_hash,
                             threads=DRIVER_KERNEL_THREADS)
     kept_ids = ids[keep]
-    is_rep, star, n_groups, n_extra = _rep_collapse(kept_ids, fp)
+    is_rep, star, n_groups = _rep_collapse(kept_ids, fp)
     pairs, metrics = _pairs_from_keys(
         simhash_block_keys(fp[is_rep], chunks, max_hamming),
         kept_ids[is_rep], max_bucket=max_bucket, fp=fp[is_rep],
         max_hamming=max_hamming)
     metrics.update(identical_fp_groups=n_groups,
-                   identical_fp_extra_docs=n_extra)
-    pairs.extend((ra, rb, 0) for ra, rb in star)
-    return pairs, metrics
+                   identical_fp_extra_docs=star.num_rows)
+    return pa.concat_tables([pairs, star.append_column(
+        "hamming", pa.array(np.zeros(star.num_rows, np.int32)))]), metrics

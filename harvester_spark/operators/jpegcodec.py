@@ -237,14 +237,6 @@ def _extend(extra: int, cat: int) -> int:
 # encoder
 # ---------------------------------------------------------------------------
 
-def _to_blocks(chan: np.ndarray) -> np.ndarray:
-    h, w = chan.shape
-    H, W = (h + 7) // 8 * 8, (w + 7) // 8 * 8
-    padded = np.pad(chan, ((0, H - h), (0, W - w)), mode="edge")
-    return (padded.reshape(H // 8, 8, W // 8, 8).transpose(0, 2, 1, 3)
-            .reshape(-1, 8, 8)), H // 8, W // 8
-
-
 def encode_jpeg(img: np.ndarray, quality: int = 85,
                 subsample: bool = False,
                 restart_interval: int = 0) -> bytes:

@@ -14,8 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from harvester_spark.functions.tokenize import (doc_len_expr, tokens_bundle,
-                                                tokens_expr)
+from harvester_spark.functions.tokenize import tokens_bundle, tokens_expr
 
 # tiny per-language stopword sets (deterministic heuristic; matches the
 # synthetic corpus languages of the driver's documents table)
@@ -26,11 +25,6 @@ LANG_STOPWORDS: dict[str, list[str]] = {
     "de": ["der", "die", "und", "das", "ein", "eine", "ist", "von", "mit", "zu"],
     "zh": ["de", "shi", "le", "zai", "he", "you", "wo", "ta", "men", "zhe"],
 }
-
-
-def token_count_expr(content_col: str) -> Column:
-    """Whitespace+punctuation token count (the BM25 dl)."""
-    return doc_len_expr(content_col)
 
 
 _ASCII_LETTERS = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
@@ -68,20 +62,6 @@ def _token_set_count_expr(c: Column, words: list[str]) -> Column:
     alt = "|".join(words)
     return F.regexp_count(
         F.lower(c), F.lit(rf"(?<![a-z0-9_])(?:{alt})(?![a-z0-9_])"))
-
-
-def bpe_ish_token_count_expr(content_col: str) -> Column:
-    """A BPE-ish proxy count: word tokens + CJK chars + digit runs counted
-    separately — a cheap, deterministic stand-in for a real tokenizer's
-    token count (ratio ≈ chars/4 for code)."""
-    c = F.col(content_col)
-    # counts straight off the regex engine — no token arrays materialized:
-    # a token is a maximal [a-z0-9_]+ run, a long token is a maximal run
-    # of length > 8 (greedy matching makes {9,} hit each long run once)
-    words = F.regexp_count(F.lower(c), F.lit(r"[a-z0-9_]+"))
-    # every 4 chars of long identifiers add a subword
-    extra = F.regexp_count(F.lower(c), F.lit(r"[a-z0-9_]{9,}"))
-    return (words + extra).alias("bpe_ish_tokens")
 
 
 def quality_features(docs: DataFrame, *, content_col: str = "content",
@@ -186,10 +166,13 @@ def ngram_contamination(docs: DataFrame, benchmark: DataFrame, *,
     Scale shape (r6 hardening): the probe joins on ``xxhash64(shingle)``
     — 8 bytes per entry — so the broadcast side of a real decontamination
     union (tens of millions of distinct 8-grams across many benchmarks)
-    is tens of MB, not multi-GB of raw strings; a 64-bit collision inside
-    one document's hit set is the only way a count can differ from the
-    string form (~n²/2⁶⁵ per doc — negligible against the ≥-threshold
-    semantics). The corpus is scanned ONCE: ``explode_outer`` keeps
+    is tens of MB, not multi-GB of raw strings. ``n_hits`` counts
+    distinct HASHES, so a 64-bit collision can move it either way: it
+    over-counts when a doc shingle collides with a benchmark shingle the
+    doc does not share, and under-counts when two of one doc's hit
+    shingles collide (~n²/2⁶⁵ per doc — negligible against the
+    ≥-threshold semantics; both directions are tested with an injected
+    collision). The corpus is scanned ONCE: ``explode_outer`` keeps
     shingle-less docs, so the zero-fill left join the old shape paid a
     second corpus scan for is gone. Benchmarks past
     ``broadcast_max_benchmark_docs`` rows skip the broadcast hint and let

@@ -575,7 +575,10 @@ def _both_placements(spark, monkeypatch, op, docs, kwargs):
 ])
 def test_minhash_driver_path_equals_distributed(spark, monkeypatch, kwargs):
     """The small-corpus driver path must produce EXACTLY the rows (incl.
-    float-identical jaccard) and metrics of the distributed path."""
+    float-identical jaccard) and metrics of the distributed path, and on
+    both placements every verified pair's jaccard must equal the Spark SQL
+    reference ``ngram_jaccard`` (star pairs included: byte-identical docs
+    have equal shingle sets)."""
     docs = _fastpath_docs(spark)
     got, want = _both_placements(spark, monkeypatch, minhash_lsh_pairs,
                                  docs, kwargs)
@@ -587,6 +590,71 @@ def test_minhash_driver_path_equals_distributed(spark, monkeypatch, kwargs):
     assert got.columns == want.columns
     assert _rows_set(got) == _rows_set(want)
     assert len(_rows_set(got)) > 0 or kwargs.get("max_bucket") == 1
+    if kwargs["jaccard_threshold"] is None:
+        return
+    ref = _ngram_jaccard_ref(spark, docs, kwargs.get("shingle_n", 3))
+    for rows in (_rows_set(got), _rows_set(want)):
+        assert all(j == ref[(a, b)] for a, b, j in rows)
+
+
+def _ngram_jaccard_ref(spark, docs, shingle_n):
+    """{(doc_a, doc_b): jaccard} of ``ngram_jaccard`` over every a < b
+    pair of docs with ≥1 token (0/0 is undefined for the others)."""
+    from harvester_spark.functions.tokenize import tokens_expr
+
+    live = docs.filter(F.size(tokens_expr("content")) > 0)
+    return {(r["doc_a"], r["doc_b"]): r["jaccard"]
+            for r in ngram_jaccard(live, live, shingle_n=shingle_n)
+            .filter(F.col("doc_a") < F.col("doc_b")).collect()}
+
+
+# short docs (< n tokens), repeated n-grams, case, punctuation, non-ASCII
+_JACCARD_DOCS = [
+    (0, "a b a b a b a b"), (1, "A b, a B! a b"), (2, "b a b a"),
+    (3, "x"), (4, "X."), (5, "x y"), (6, "y x"),
+    (7, "the cat sat on the mat the cat sat"),
+    (8, "The Cat sat on the MAT"), (9, "café über naïve café über"),
+    (10, "Café Über naïve"), (11, "中文 tokens 中文 tokens"),
+    (12, "int i = 0; i < n; i++ { i = i + 1; }"),
+    (13, "int i=0;i<n;i++{i=i+1;}"),
+]
+
+
+@pytest.mark.parametrize("shingle_n", [1, 2, 3])
+def test_jaccard_kernel_matches_ngram_jaccard(spark, shingle_n):
+    """The one Jaccard verifier, run as the driver calls it (one batch)
+    and through ``_map_kernel`` in 3-row batches, over every pair of a
+    small edge-case set, equals ``ngram_jaccard`` exactly (== on floats).
+    Repeated n-grams make a kernel that counts duplicate shingles fail."""
+    import pyarrow as pa
+
+    from harvester_spark.operators.dedup import _map_kernel
+    from harvester_spark.operators.dedup_kernels import jaccard_batches
+
+    text = dict(_JACCARD_DOCS)
+    pairs = [(a, b) for a in text for b in text if a < b]
+    tbl = pa.table({"doc_a": [a for a, _ in pairs],
+                    "doc_b": [b for _, b in pairs],
+                    "content_a": [text[a] for a, _ in pairs],
+                    "content_b": [text[b] for _, b in pairs]})
+    docs = spark.createDataFrame(_JACCARD_DOCS, "doc_id long, content string")
+    ref = _ngram_jaccard_ref(spark, docs, shingle_n)
+    assert len(ref) == len(pairs)
+    assert any(0 < j < 1 for j in ref.values())
+    driver = pa.Table.from_batches(jaccard_batches(
+        tbl.to_batches(), shingle_n=shingle_n))
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        mapped = _map_kernel(spark.createDataFrame(tbl), jaccard_batches,
+                             "doc_a long, doc_b long, jaccard double",
+                             shingle_n=shingle_n).collect()
+    finally:
+        spark.conf.set(conf, saved)
+    for rows in (zip(*driver.to_pydict().values()), map(tuple, mapped)):
+        got = {(a, b): j for a, b, j in rows}
+        assert got == ref
 
 
 @pytest.mark.parametrize("kwargs", [

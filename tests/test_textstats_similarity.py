@@ -410,6 +410,34 @@ def test_contamination_broadcast_is_hashed_and_bounded(spark):
     assert rows[1001] == (0, False)
 
 
+def test_ngram_contamination_hash_collision_moves_hits_both_ways(
+        spark, monkeypatch):
+    """The probe counts distinct shingle HASHES, so a collision moves
+    ``n_hits`` either way: an injected hash that maps "alpha", "beta" and
+    "gamma" to one value over-counts a doc whose "gamma" matches no
+    benchmark shingle, and under-counts a doc whose two hit shingles
+    "alpha" and "beta" now count once."""
+    from harvester_spark.operators import textstats
+
+    docs = spark.createDataFrame(
+        [(0, "gamma delta"), (1, "alpha beta"), (2, "epsilon")],
+        "doc_id long, content string")
+    bench = spark.createDataFrame([(9, "alpha beta")],
+                                  "doc_id long, content string")
+
+    def hits():
+        return {r["doc_id"]: r["n_hits"]
+                for r in textstats.ngram_contamination(
+                    docs, bench, shingle_n=1).collect()}
+
+    assert hits() == {0: 0, 1: 2, 2: 0}
+    xxhash64 = F.xxhash64
+    monkeypatch.setattr(textstats.F, "xxhash64", lambda c: F.when(
+        F.col(c).isin("alpha", "beta", "gamma"), F.lit(0).cast("long"))
+        .otherwise(xxhash64(c)))
+    assert hits() == {0: 1, 1: 1, 2: 0}
+
+
 def test_translate_char_counts_match_regex_forms(spark):
     """r6: n_alpha/n_punct moved from regexp_replace to translate — the
     two must agree on punctuation, every Java \\s char, digits,
