@@ -453,11 +453,11 @@ def _theta_filter_localized(blocks: DataFrame, present: list[str],
     # subtree twice (two broadcast-build jobs scanning the postings cache);
     # a local relation broadcast builds driver-side with zero scan jobs.
     # Size class is unchanged — this exact table was already broadcast.
-    other_pdf = _localized_other_ub(
-        bound_blocks if bound_blocks is not None else blocks, W).toPandas()
-    spark = blocks.sparkSession
-    other = spark.createDataFrame(
-        other_pdf, "term string, rid bigint, other_ub double")
+    other = tables.local_frame(
+        blocks.sparkSession,
+        _localized_other_ub(bound_blocks if bound_blocks is not None
+                            else blocks, W).toArrow(),
+        "term string, rid bigint, other_ub double")
     total_ub = sum(per_term.values())
     global_other = F.create_map(*[x for t in present for x in
                                   (F.lit(t), F.lit(total_ub - per_term[t]))])
@@ -516,9 +516,10 @@ def _and_range_prune(spark: SparkSession, blocks: DataFrame, rarest: str,
     n_rng = len(rng_pdf)
     if n_rng == 0:
         return None
-    ranges = spark.createDataFrame(
-        [(int(lo), int(hi), i) for i, (lo, hi) in enumerate(
-            zip(rng_pdf["doc_id_first"], rng_pdf["doc_id_last"]))],
+    lo = rng_pdf["doc_id_first"].to_numpy(np.int64)
+    hi = rng_pdf["doc_id_last"].to_numpy(np.int64)
+    ranges = tables.local_frame(
+        spark, pa.table({"lo": lo, "hi": hi, "ridx": np.arange(n_rng)}),
         "lo long, hi long, ridx int")
 
     # per-range complement sums: max UB per (range, other term) from ONE
@@ -544,9 +545,8 @@ def _and_range_prune(spark: SparkSession, blocks: DataFrame, rarest: str,
     n_seed = min(n_rng, max(1, (4 * k) // 128 + 1,
                             int(probe_frac * n_rng)))
     top = np.argsort(-bound)[:n_seed]
-    seed_ranges = spark.createDataFrame(
-        [(int(rng_pdf["doc_id_first"].iat[i]),
-          int(rng_pdf["doc_id_last"].iat[i])) for i in top],
+    seed_ranges = tables.local_frame(
+        spark, pa.table({"slo": lo[top], "shi": hi[top]}),
         "slo long, shi long")
     seed = (blocks.join(
         F.broadcast(seed_ranges),
@@ -571,10 +571,8 @@ def _and_range_prune(spark: SparkSession, blocks: DataFrame, rarest: str,
     keep_mask = bound >= theta * _EPS - 1e-300
     if keep_mask.all():
         return None  # nothing pruned: skip the extra semi-join plumbing
-    kept = spark.createDataFrame(
-        [(int(rng_pdf["doc_id_first"].iat[i]),
-          int(rng_pdf["doc_id_last"].iat[i]))
-         for i in np.nonzero(keep_mask)[0]],
+    kept = tables.local_frame(
+        spark, pa.table({"lo": lo[keep_mask], "hi": hi[keep_mask]}),
         "lo long, hi long")
     rare_kept = blocks.filter(F.col("term") == rarest).join(
         F.broadcast(kept),
@@ -709,8 +707,8 @@ def scores_frame(spark: SparkSession, ids: np.ndarray,
     """``(doc_id, score)`` arrays as a local relation: ``.collect()``
     launches no Spark job, but ``.toPandas()`` of the same relation
     launches one."""
-    return spark.createDataFrame(pa.table({"doc_id": ids, "score": scores}),
-                                 SCORE_SCHEMA)
+    return tables.local_frame(
+        spark, pa.table({"doc_id": ids, "score": scores}), SCORE_SCHEMA)
 
 
 def query_topk_index(spark: SparkSession,
@@ -801,7 +799,8 @@ def query_topk_index(spark: SparkSession,
     present = list(idf_by_term)
     total_postings = sum(info[t]["df"] for t in present)
     if isinstance(exclude_ids, np.ndarray):
-        exclude_ids = spark.createDataFrame(pa.table({"doc_id": exclude_ids}))
+        exclude_ids = tables.local_frame(
+            spark, pa.table({"doc_id": exclude_ids}), "doc_id long")
 
     postings = (handle.postings
                 .filter(F.col("term").isin(present)))  # pushed to scan

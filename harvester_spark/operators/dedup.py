@@ -19,17 +19,20 @@ generalize here to corpus-scale document dedup, all DataFrame-first:
 Both LSH pair ops run the kernels of dedup_kernels.py in one of two
 placements, picked by corpus size against the driver budget the index
 build shares (``tables.collect_small``): on the driver over the collected
-corpus (two small jobs), or distributed, where the keyed rows are
-repartitioned and sorted on the bucket key and the same ``bucket_pairs``
-kernel streams each partition, and the candidate pairs joined with their
-content stream through the same ``jaccard_batches`` verifier. Either way
-the drop metrics exist before the call returns: buckets over
-``max_bucket`` are dropped, never silently.
+corpus (two small jobs: the probe and the collect; the pairs and the
+metrics come back as Arrow local relations, ``tables.local_frame``, so
+collecting the metrics runs no job), or distributed, where the keyed rows
+are repartitioned and sorted on the bucket key and the same
+``bucket_pairs`` kernel streams each partition, and the candidate pairs
+joined with their content stream through the same ``jaccard_batches``
+verifier. Either way the drop metrics exist before the call returns:
+buckets over ``max_bucket`` are dropped, never silently.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -232,8 +235,8 @@ def _pairs_result(pairs: DataFrame, metrics: dict, *, ident_cols: tuple,
         _pairs_drop_warning(metrics, max_bucket, what)
         return pairs
     cols = _PAIR_METRIC_COLS + ident_cols
-    return pairs, pairs.sparkSession.createDataFrame(
-        [tuple(int(metrics[c]) for c in cols)],
+    return pairs, tables.local_frame(
+        pairs.sparkSession, pa.table({c: [int(metrics[c])] for c in cols}),
         ", ".join(f"{c} long" for c in cols))
 
 
@@ -244,14 +247,14 @@ def _collapse_identical(rows: DataFrame, key_col: str, ident_cols: tuple,
     join round-trip. Returns (representative rows, star pairs
     (doc_a=rep, doc_b=member), identical-group metrics — empty unless
     ``with_metrics``)."""
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    # MEMORY_ONLY: a per-call cache entry has no unpersist hook, so it
-    # must be evictable under LRU pressure rather than accumulating on
-    # disk across calls
+    # the metric collect, the reps and the star pairs read one lazily
+    # local-checkpointed computation: its blocks belong to the RDD and are
+    # freed with it, so no call leaves a CacheManager entry behind for a
+    # later call on the same input to hit
     ann = (rows.withColumn("rep", F.min("doc_id").over(
-        Window.partitionBy(key_col))).persist(StorageLevel.MEMORY_ONLY))
+        Window.partitionBy(key_col))).localCheckpoint(eager=False))
     members = ann.filter(F.col("doc_id") != F.col("rep"))
     ident = {}
     if with_metrics:
@@ -350,7 +353,7 @@ def minhash_lsh_pairs(docs: DataFrame, *, content_col: str = "content",
                 small[0], small[1], a=a, b=b, bands=bands,
                 shingle_n=shingle_n, max_bucket=max_bucket,
                 jaccard_threshold=jaccard_threshold)
-        return finish(docs.sparkSession.createDataFrame(pairs, schema),
+        return finish(tables.local_frame(docs.sparkSession, pairs, schema),
                       metrics)
     # rep-collapse on byte identity: the content sha and the band keys
     # ride the signature kernel (hashlib sha256 hex == Spark sha2 hex over
@@ -507,8 +510,9 @@ def simhash_near_pairs(docs: DataFrame, *, content_col: str = "content",
             pairs, metrics = simhash_pairs_local(
                 small[0], small[1], max_hamming=k, chunks=chunks,
                 max_bucket=max_bucket, token_hash=token_hash)
-        return finish(docs.sparkSession.createDataFrame(
-            pairs, "doc_a long, doc_b long, hamming int"), metrics)
+        return finish(tables.local_frame(
+            docs.sparkSession, pairs, "doc_a long, doc_b long, hamming int"),
+            metrics)
     reps, star_pairs, ident = _collapse_identical(fp, "simhash", ident_cols,
                                                   with_metrics)
     keyed = _map_kernel(reps.select("doc_id", "simhash"),

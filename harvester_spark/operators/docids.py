@@ -15,8 +15,12 @@ partition), then rank within partitions and add the offset. Also derives
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from harvester_spark import tables
 
 
 def assign_doc_ids(docs: DataFrame, key_cols: list[str] | None = None, *,
@@ -42,12 +46,13 @@ def assign_doc_ids(docs: DataFrame, key_cols: list[str] | None = None, *,
     ranged = ranged.localCheckpoint(eager=True)
     counts = {r["__pid"]: r["cnt"] for r in
               ranged.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    offs_df = ranged.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "__pid int, __off long")
+    pids = sorted(counts)
+    sizes = [counts[pid] for pid in pids]
+    offs_df = tables.local_frame(
+        ranged.sparkSession,
+        pa.table({"__pid": pids,
+                  "__off": np.cumsum(sizes, dtype=np.int64) - sizes}),
+        "__pid int, __off long")
 
     w = Window.partitionBy("__pid").orderBy(*[F.col(c) for c in key_cols])
     out = (ranged.join(F.broadcast(offs_df), "__pid")

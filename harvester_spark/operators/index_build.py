@@ -78,6 +78,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
@@ -166,7 +167,6 @@ def _arrow(pdf: pd.DataFrame | None, schema: StructType):
     """A kernel's pandas output as a ``pa.Table`` of the Spark stage's
     schema (None → empty), so driver-written stages read back exactly like
     Spark-written ones."""
-    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     sch = to_arrow_schema(schema)
@@ -280,7 +280,6 @@ def pack_batch(pdf: pd.DataFrame, part_id: int) -> pd.DataFrame | None:
     int32 codes immediately after the pyarrow regex split, so grouping and
     sorting never touch python-object strings (an object-dtype lexsort is
     memory-traffic-bound and was the kernel's dominant cost)."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     from harvester_spark.functions.tokenize import TOKEN_SPLIT_RE
@@ -359,8 +358,6 @@ def build_packs(docs: DataFrame, cfg: IndexConfig, *,
     Deliberately independent of global stats (avgdl): score-related
     metadata (block_max_tfnorm) is computed at merge time, so packing is
     the FIRST stage — one pass over content, no prior scan needed."""
-    import pyarrow as pa
-
     src = docs.select(F.col(id_col).cast("long").alias("doc_id"),
                       F.col(content_col).alias("content"))
     flush_docs = cfg.pack_flush_docs
@@ -530,10 +527,11 @@ def merge_packs(packs: DataFrame, hot_salts: dict[str, int], avgdl: float,
     across s tasks instead of one.
     """
     spark = packs.sparkSession
-    hot_items = list(hot_salts.items())
-    if hot_items:
-        hot_df = F.broadcast(spark.createDataFrame(
-            hot_items, "term string, n_salts int"))
+    if hot_salts:
+        hot_df = F.broadcast(tables.local_frame(
+            spark, pa.table({"term": list(hot_salts),
+                             "n_salts": list(hot_salts.values())}),
+            "term string, n_salts int"))
         salted = (packs.join(hot_df, "term", "left")
                   .withColumn("salt",
                               F.when(F.col("n_salts").isNotNull(),
@@ -763,7 +761,6 @@ def write_index_tail(spark: SparkSession, index_dir: Path, run_id: str,
 def _driver_tail(index_dir: Path, run_id: str, stage, segment) -> None:
     """:func:`write_index_tail`'s pyarrow side: the same three stages and
     columns as its Spark aggregations."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     @functools.cache
@@ -842,12 +839,46 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str | Path, *,
     Inputs within the driver budget (``tables.collect_small``) are
     collected once and built on the driver; larger ones run the
     distributed stages. Both write the same stages."""
+    probed: dict = {}
+    small = tables.collect_small(docs, id_col, content_col, probed=probed)
+    if small is not None:
+        return _build_collected(spark, small, index_dir, cfg=cfg,
+                                run_id=run_id, force=force)
+    return _run_stages(
+        spark, index_dir, cfg, run_id, force, {"side": "distributed", **probed},
+        functools.partial(_distributed_stages, spark, docs, id_col=id_col,
+                          content_col=content_col, force=force))
+
+
+def _build_collected(spark: SparkSession, tbl, index_dir: str | Path, *,
+                     cfg: IndexConfig | None = None, run_id: str = "run0",
+                     force: bool = False) -> BuildReport:
+    """:func:`build_index`'s driver placement over an already-collected
+    ``(doc_id int64, content)`` table, with no Spark job; the report's
+    placement holds what the probe would have seen."""
+    import pyarrow.compute as pc
+
+    text_bytes = pc.sum(pc.binary_length(tbl.column("content"))).as_py()
+    return _run_stages(
+        spark, index_dir, cfg, run_id, force,
+        {"side": "driver", "docs": tbl.num_rows, "text_bytes": text_bytes or 0},
+        functools.partial(_driver_stages, tbl))
+
+
+def _run_stages(spark: SparkSession, index_dir: str | Path,
+                cfg: IndexConfig | None, run_id: str, force: bool,
+                placement: dict, stages) -> BuildReport:
+    """The body of a build after its placement is known:
+    ``stages(index_dir, cfg, stage, report)`` writes S1-S4, then the
+    shared tail S5-S7."""
     import pyarrow.parquet as pq
 
     cfg = cfg or IndexConfig()
     index_dir = Path(index_dir)
     index_dir.mkdir(parents=True, exist_ok=True)
-    report = BuildReport(run_id=run_id)
+    report = BuildReport(run_id=run_id, placement={
+        **placement, "max_docs": tables.DRIVER_MAX_DOCS,
+        "max_bytes": tables.DRIVER_MAX_BYTES})
 
     def stage(name: str, fn) -> Path:
         out = index_dir / name
@@ -869,22 +900,9 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str | Path, *,
             "layout (has ids/tfs/dls columns) — delete that directory to "
             "rebuild it under the current format")
 
-    probed: dict = {}
-    small = tables.collect_small(docs, id_col, content_col, probed=probed)
-    report.placement = {
-        "side": "distributed" if small is None else "driver", **probed,
-        "max_docs": tables.DRIVER_MAX_DOCS,
-        "max_bytes": tables.DRIVER_MAX_BYTES}
-    if small is None:
-        _distributed_stages(spark, docs, index_dir, cfg, stage, report,
-                            id_col=id_col, content_col=content_col,
-                            force=force)
-    else:
-        _driver_stages(small, index_dir, cfg, stage, report)
-
+    stages(index_dir, cfg, stage, report)
     # S5-S7 — term_ub → dictseg, and lineage
     write_index_tail(spark, index_dir, run_id, stage)
-
     return report
 
 

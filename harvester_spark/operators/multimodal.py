@@ -32,10 +32,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, FloatType, IntegerType,
                                LongType, StringType, StructField, StructType)
+
+from harvester_spark import tables
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType()),
@@ -195,7 +198,9 @@ def make_media_table(spark, n: int = 64, seed: int = 42) -> DataFrame:
             payload = rng.bytes(64 + int(rng.integers(0, 256)))
             rows.append((i, "video/mp4", bytearray(payload), None, None,
                          int(rng.integers(100, 10_000))))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return tables.local_frame(spark, pa.table(
+        {name: [r[j] for r in rows]
+         for j, name in enumerate(MEDIA_SCHEMA.names)}), MEDIA_SCHEMA)
 
 
 def _video_features(frames: list[np.ndarray], meta: dict,

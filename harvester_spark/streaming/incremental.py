@@ -31,27 +31,35 @@ equivalent:
 - :func:`compact` — full rebuild from the live doc set; after compaction
   results are rank-identical to a from-scratch build.
 
-A delta build is a normal :func:`~harvester_spark.operators.index_build.build_index`
-call: a CDC batch within the driver budget builds on the driver with no
-Spark job after its probe and collect, a larger one distributed. Delta
-merges pick their placement the same way, from the deltas' recorded
-``N`` and ``text_bytes``.
+A CDC batch within the driver budget (``tables.collect_small``, deletes
+counted as docs) is probed and collected once — two Spark jobs: its
+tombstone segment is written with pyarrow, its tallies are counted with
+pyarrow, and its delta is built on the driver by
+:func:`~harvester_spark.operators.index_build.build_index`'s driver
+placement over the same table. A larger batch writes its tombstones as a
+Spark job that also counts the tallies (``observe``) and builds its delta
+with a normal ``build_index`` call. Delta merges pick their placement the
+same way, from the deltas' recorded ``N`` and ``text_bytes``.
 """
 
 from __future__ import annotations
 
 import json
+from functools import partial
 from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from harvester_spark import tables
 from harvester_spark.operators import bm25
 from harvester_spark.operators.bm25 import tokenize_query
-from harvester_spark.operators.index_build import IndexConfig, build_index
+from harvester_spark.operators.index_build import (IndexConfig,
+                                                   _build_collected,
+                                                   build_index)
 
 
 def init_root(spark: SparkSession, docs: DataFrame, root: str | Path, *,
@@ -121,37 +129,62 @@ def apply_changes(spark: SparkSession, root: str | Path, changes: DataFrame,
     """Apply one CDC batch. ``changes``: (doc_id, deleted bool, content).
 
     Upserts = tombstone the old version + index the new one in a delta
-    (the reference's delete-then-add at solr_updater.py:914-947).
+    (the reference's delete-then-add at solr_updater.py:914-947). Every
+    changed id is tombstoned; a row whose ``deleted`` is null counts as a
+    change, not a delete, and is not indexed.
     Idempotent per ``seq``: re-applying an already-recorded seq is a no-op
     (the at-least-once + idempotent-upsert contract of the reference feed).
     Cost is O(batch): the batch's tombstones land in their own append-only
     segment (``tombstones/seq=NNNNNNNN``) — previously committed segments
     are never touched, so there is no swap window where a crash could lose
     them. Segments merge away only at :func:`compact`.
+
+    A batch within the driver budget (``tables.collect_small``) is probed
+    and collected once: the tombstone segment, the tallies and the delta
+    build (on the driver) all come from that one table, two Spark jobs in
+    all. The probe counts every change row, deletes included, so a batch
+    whose upserts alone would fit can still take the Spark form: the
+    tombstone write carries the tallies, then :func:`build_index` places
+    the delta build by its own probe.
     """
     root = Path(root)
     if seq <= last_seq(root):
         return {"seq": seq, "skipped": True}
     delta_dir = root / f"delta_{seq:08d}"
+    tomb_dir = root / "tombstones" / f"seq={seq:08d}"
 
-    # batch counters ride the tombstone write job via observe() — the
-    # reference's updated/deleted tallies (solr_updater.py:952-962,
-    # couchdb_sync_db_by_collection.py:120-131) without extra jobs
-    from pyspark.sql import Observation
-    obs = Observation()
-    counted = changes.observe(
-        obs, F.count(F.lit(1)).alias("n_changes"),
-        F.sum(F.when(F.col("deleted"), 1).otherwise(0)).alias("n_deletes"))
-
-    # every changed doc id is tombstoned out of older segments
-    tomb_new = counted.select(F.col("doc_id").cast("long").alias("doc_id"))
-    tables.write_table(tomb_new, root / "tombstones" / f"seq={seq:08d}")
-    n_changes = int(obs.get["n_changes"] or 0)
-    n_deletes = int(obs.get["n_deletes"] or 0)
-    upserts = changes.filter(~F.col("deleted")).select("doc_id", content_col)
+    batch = tables.collect_small(changes, "doc_id", content_col,
+                                 extra=("deleted",))
+    if batch is not None:
+        tables.write_arrow(batch.select(["doc_id"]), tomb_dir)
+        n_changes = batch.num_rows
+        n_deletes = pc.sum(batch.column("deleted")).as_py() or 0
+        # invert(null) is null, and filter drops null rows
+        upserts = batch.filter(pc.invert(batch.column("deleted")))
+        build = partial(_build_collected, spark,
+                        upserts.select(["doc_id", "content"]), delta_dir,
+                        cfg=cfg)
+    else:
+        # the reference's updated/deleted tallies
+        # (solr_updater.py:952-962, couchdb_sync_db_by_collection.py:
+        # 120-131) ride the tombstone write job via observe()
+        from pyspark.sql import Observation
+        obs = Observation()
+        counted = changes.observe(
+            obs, F.count(F.lit(1)).alias("n_changes"),
+            F.sum(F.when(F.col("deleted"), 1).otherwise(0))
+            .alias("n_deletes"))
+        tables.write_table(
+            counted.select(F.col("doc_id").cast("long").alias("doc_id")),
+            tomb_dir)
+        n_changes = int(obs.get["n_changes"] or 0)
+        n_deletes = int(obs.get["n_deletes"] or 0)
+        build = partial(build_index, spark,
+                        changes.filter(~F.col("deleted"))
+                        .select("doc_id", content_col), delta_dir,
+                        content_col=content_col, cfg=cfg)
     if n_changes - n_deletes > 0:
-        build_index(spark, upserts, delta_dir, content_col=content_col,
-                    cfg=cfg)
+        build()
         _write_segments(root, [d.name for d in _delta_dirs(root)]
                         + [delta_dir.name])
     # commit point: last_seq advance (a crash before this point re-applies

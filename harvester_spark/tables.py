@@ -17,8 +17,11 @@ import os
 import shutil
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 SUCCESS_MARKER = "_STAGE_SUCCESS"
 
@@ -99,11 +102,13 @@ def fits_driver(n_docs: int, n_bytes: int) -> bool:
 
 
 def collect_small(df: DataFrame, id_col: str, content_col: str, *,
-                  probed: dict | None = None):
-    """``(doc_id int64, content string)`` of ``df`` as one ``pa.Table``
-    when it fits the driver budget, else None. One bounded probe job
-    (reads at most ``DRIVER_MAX_DOCS + 1`` rows' byte lengths) plus one
-    collect. ``probed``, when given, receives the probe's ``docs`` and
+                  extra: tuple = (), probed: dict | None = None):
+    """``(doc_id int64, *extra, content string)`` of ``df`` as one
+    ``pa.Table`` when it fits the driver budget, else None. One bounded
+    probe job (reads at most ``DRIVER_MAX_DOCS + 1`` rows' byte lengths;
+    a row with null content counts as a doc of 0 bytes) plus one collect.
+    ``extra`` names columns collected as they are, between the id and the
+    content. ``probed``, when given, receives the probe's ``docs`` and
     ``text_bytes`` (lower bounds when over budget)."""
     cap = DRIVER_MAX_DOCS
     # limit().collect() executes as an INCREMENTAL take (executeTake: one
@@ -121,21 +126,26 @@ def collect_small(df: DataFrame, id_col: str, content_col: str, *,
         return None
     # the collected table stays CHUNKED (one chunk per collected batch):
     # pyarrow compute parallelizes across chunks
-    return df.select(F.col(id_col).cast("long").alias("doc_id"),
+    return df.select(F.col(id_col).cast("long").alias("doc_id"), *extra,
                      F.col(content_col).alias("content")).toArrow()
 
 
-def empty_frame(spark: SparkSession, schema) -> DataFrame:
-    """A zero-row DataFrame of ``schema`` (StructType or DDL string) built
-    from an empty Arrow table: a local relation, so collecting it launches
-    no Spark job (``createDataFrame([], schema)`` runs one)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
+def local_frame(spark: SparkSession, table: pa.Table, schema) -> DataFrame:
+    """A table built on the driver as a DataFrame of ``schema``
+    (StructType or DDL string): Spark casts ``table`` to the schema's
+    Arrow types and holds it as one Arrow local relation, so collecting it
+    launches no Spark job (``createDataFrame`` over a list of tuples runs
+    a job of Python-worker tasks to unpickle the rows, even for one row).
+    The package's only ``createDataFrame`` call."""
+    return spark.createDataFrame(table, schema)
 
+
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """A zero-row :func:`local_frame` of ``schema`` (StructType or DDL
+    string)."""
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
-    return spark.createDataFrame(to_arrow_schema(schema).empty_table(),
-                                 schema)
+    return local_frame(spark, to_arrow_schema(schema).empty_table(), schema)
 
 
 def parquet_files(path: str | Path) -> list[Path]:

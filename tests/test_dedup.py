@@ -679,6 +679,80 @@ def test_simhash_driver_path_equals_distributed(spark, monkeypatch, kwargs):
     assert _rows_set(got) == _rows_set(want)
 
 
+_METRIC_CASES = {
+    "minhash": (minhash_lsh_pairs,
+                dict(jaccard_threshold=0.3, max_bucket=2, shingle_n=1),
+                {"dropped_buckets": 7, "dropped_doc_entries": 21,
+                 "max_dropped_size": 3, "identical_content_groups": 2,
+                 "identical_content_extra_docs": 3}),
+    "simhash": (simhash_near_pairs,
+                dict(max_hamming=6, chunks=8, max_bucket=1),
+                {"dropped_buckets": 9, "dropped_doc_entries": 21,
+                 "max_dropped_size": 3, "identical_fp_groups": 3,
+                 "identical_fp_extra_docs": 4}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_METRIC_CASES))
+def test_pair_metrics_frame_on_both_placements(spark, monkeypatch, case):
+    """``with_metrics=True`` gives, on both placements, a one-row frame
+    of the same ``long`` columns in the same order with the same values;
+    on the driver placement collecting it runs no Spark job. Without
+    metrics the same drops raise the same RuntimeWarning."""
+    import warnings
+
+    op, kwargs, want = _METRIC_CASES[case]
+    docs = _fastpath_docs(spark)
+    sc = spark.sparkContext
+    warning = (f"{op.__name__}: max_bucket={kwargs['max_bucket']} dropped "
+               f"{want['dropped_buckets']} bucket(s) covering "
+               f"{want['dropped_doc_entries']} doc entries — recall is "
+               f"reduced; pass with_metrics=True for full accounting or "
+               f"raise max_bucket")
+    for side in ("driver", "distributed"):
+        if side == "distributed":
+            monkeypatch.setattr(tables, "DRIVER_MAX_DOCS", 0)
+        _, metrics = op(docs, with_metrics=True, **kwargs)
+        assert metrics.dtypes == [(c, "bigint") for c in want]
+        group = f"pair-metrics-{case}-{side}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = metrics.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert [r.asDict() for r in rows] == [want]
+        if side == "driver":
+            assert sc.statusTracker().getJobIdsForGroup(group) == []
+        with warnings.catch_warnings(record=True) as rec:
+            warnings.simplefilter("always")
+            op(docs, with_metrics=False, **kwargs)
+        assert warning in [str(x.message) for x in rec
+                           if issubclass(x.category, RuntimeWarning)]
+
+
+def test_distributed_pair_ops_leave_no_cache_entry(spark, monkeypatch):
+    """The distributed rep-collapse shares one computation between its
+    metric collect, the representatives and the star pairs without a
+    CacheManager entry: once both pair ops ran distributed and their
+    outputs were read, the session cache is still empty, and the pairs
+    equal the driver placement's."""
+    docs = _fastpath_docs(spark)
+    ops = [(minhash_lsh_pairs, dict(jaccard_threshold=0.5)),
+           (simhash_near_pairs, dict(max_hamming=6, chunks=8))]
+    want = [_rows_set(op(docs, **kw)) for op, kw in ops]
+    assert all(want)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    monkeypatch.setattr(tables, "DRIVER_MAX_DOCS", 0)
+    for (op, kw), rows in zip(ops, want):
+        for _ in range(2):  # a repeated call finds nothing cached either
+            pairs, metrics = op(docs, with_metrics=True, **kw)
+            metrics.collect()
+            assert _rows_set(pairs) == rows
+    assert cache.isEmpty()
+
+
 def test_driver_path_warns_on_drops(spark):
     """The driver fast path must keep the never-silent-drops contract."""
     import warnings

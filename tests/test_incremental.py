@@ -274,6 +274,22 @@ def test_merge_deltas_rank_identical_to_fresh_build(spark, base_docs, tmp_path,
     assert 303 not in set(res["doc_id"]) and 0 not in set(res["doc_id"])
 
 
+def _delta_stages_equal(a, b) -> None:
+    """Two index dirs hold equal stages: stats and postings meta,
+    dictionary, term_ub, and postings block for block (only the
+    build-partition id may differ)."""
+    from harvester_spark import tables
+
+    for name in ("stats", "postings"):
+        assert tables.read_meta(a / name) == tables.read_meta(b / name)
+    for name, key in (("dictionary", ["term"]), ("term_ub", ["term"]),
+                      ("postings", ["term", "salt", "block_id"])):
+        x, y = ((tables.read_arrow(d / name).to_pandas()
+                 .drop(columns=["part_id"], errors="ignore")
+                 .sort_values(key).reset_index(drop=True)) for d in (a, b))
+        pd.testing.assert_frame_equal(x, y, check_exact=True)
+
+
 def test_merge_placements_write_equal_stages(spark, base_docs, tmp_path,
                                              pin_distributed):
     """The driver merge and the distributed merge of the same deltas write
@@ -313,19 +329,90 @@ def test_merge_placements_write_equal_stages(spark, base_docs, tmp_path,
     pin_distributed()
     dist = inc.merge_deltas(spark, dist_root, cfg=CFG)
 
-    for name in ("stats", "postings"):
-        assert tables.read_meta(drv / name) == tables.read_meta(dist / name)
+    _delta_stages_equal(drv, dist)
     # live posting-bearing docs: 55 of the first delta, 302, 301 and 303
     assert tables.read_meta(drv / "stats")["N"] == 58
-    for name, key in (("dictionary", ["term"]), ("term_ub", ["term"]),
-                      ("postings", ["term", "salt", "block_id"])):
-        a, b = ((tables.read_arrow(d / name).to_pandas()
-                 .drop(columns=["part_id"], errors="ignore")
-                 .sort_values(key).reset_index(drop=True))
-                for d in (drv, dist))
-        pd.testing.assert_frame_equal(a, b, check_exact=True)
     post = tables.read_arrow(drv / "postings").to_pandas()
     assert post["salt"].max() > 0
+
+
+def test_apply_changes_placements_write_equal_segments(spark, base_docs,
+                                                       tmp_path,
+                                                       pin_distributed):
+    """The collect-once driver form of apply_changes and the Spark form
+    (the batch over the driver budget) apply the same batches alike:
+    equal tombstone ids, equal tallies, equal delta stages. The batches
+    hold upserts of new and existing ids, deletes, an empty-content
+    upsert, a null ``deleted`` row (a change, tombstoned, not indexed)
+    and an all-delete batch, each read from one parquet file as a CDC
+    batch arrives. Each driver-side apply runs two Spark jobs: the probe
+    and the collect."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from harvester_spark import tables
+
+    schema = pa.schema([("doc_id", pa.int64()), ("deleted", pa.bool_()),
+                        ("content", pa.string())])
+    batches = [
+        [(400 + i, False, f"zz_p import def w{i % 5} common") for i in range(40)]
+        + [(1, False, "zz_p updated import"), (2, True, None),
+           (3, True, None), (500, False, ""),
+           (501, None, "zz_p never indexed")],
+        [(5, True, None), (401, True, None), (502, True, "zz_p ignored")],
+        [(503, False, "zz_p late def"), (504, None, None)],
+    ]
+    drv, dist = tmp_path / "drv", tmp_path / "dist"
+    inc.init_root(spark, base_docs, drv, cfg=CFG)
+    shutil.copytree(drv, dist)
+    sc = spark.sparkContext
+    reps = {}
+    for side, root in (("driver", drv), ("distributed", dist)):
+        if side == "distributed":
+            pin_distributed()
+        for seq, rows in enumerate(batches, start=1):
+            path = tmp_path / f"batch{seq}.parquet"
+            pq.write_table(pa.Table.from_pylist(
+                [dict(zip(schema.names, r)) for r in rows], schema), path)
+            ch = spark.read.parquet(str(path))
+            group = f"apply-{side}-{seq}"
+            sc.setJobGroup(group, group)
+            try:
+                reps[side, seq] = inc.apply_changes(spark, root, ch, seq=seq,
+                                                    cfg=CFG)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            if side == "driver":
+                assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert [reps["driver", s] for s in (1, 2, 3)] == [
+        {"seq": 1, "n_changes": 45, "n_deletes": 2, "n_upserts": 43,
+         "compacted": False},
+        {"seq": 2, "n_changes": 3, "n_deletes": 3, "n_upserts": 0,
+         "compacted": False},
+        {"seq": 3, "n_changes": 2, "n_deletes": 0, "n_upserts": 2,
+         "compacted": False}]
+    for seq in (1, 2, 3):
+        assert reps["driver", seq] == reps["distributed", seq]
+        got, want = (inc._read_tombstones(r / "tombstones" / f"seq={seq:08d}")
+                     for r in (drv, dist))
+        assert got.tolist() == want.tolist() == sorted(
+            r[0] for r in batches[seq - 1])
+    assert ([d.name for d in inc._delta_dirs(drv)]
+            == [d.name for d in inc._delta_dirs(dist)]
+            == ["delta_00000001", "delta_00000003"])
+    for name in ("delta_00000001", "delta_00000003"):
+        _delta_stages_equal(drv / name, dist / name)
+    # 42 docs in the first delta: the null-deleted row is not built, the
+    # empty-content row is (a doc of length 0)
+    assert tables.read_meta(drv / "delta_00000001" / "stats")["N"] == 42
+    assert tables.read_meta(drv / "delta_00000003" / "stats")["N"] == 1
+    for q in ("zz_p", "import def", "never indexed"):
+        got, want = (inc.query_topk_incremental(spark, r, q, 20).toPandas()
+                     for r in (drv, dist))
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+        assert not {2, 3, 5, 401, 501, 502, 504} & set(got["doc_id"])
 
 
 def test_streaming_exact_dedup(spark, tmp_path):
@@ -419,8 +506,9 @@ def test_merge_crash_before_pointer_swap_is_harmless(spark, base_docs, tmp_path)
 
 
 def test_apply_changes_counters_and_auto_compact(spark, base_docs, tmp_path):
-    """apply_changes reports upsert/delete tallies (observe(), no extra
-    jobs) and can trigger the compaction policy inline."""
+    """apply_changes reports upsert/delete tallies (counted from the one
+    collected batch, no extra jobs) and can trigger the compaction policy
+    inline."""
     root = tmp_path / "root_ctr"
     inc.init_root(spark, base_docs, root, cfg=CFG)
     reps = []
