@@ -16,10 +16,13 @@ role natively:
   ``codec.decode_blocks`` → :func:`_block_parts` (idf ·
   ``index_build._tfnorm``), then :func:`_topk`, then one merge. One gate,
   :data:`SMALL_QUERY_POSTINGS`, counts the postings the driver would
-  read (uncached ones). The scale path: parquet pushdown on ``term`` →
-  block-max upper-bound pruning (safe: provably never drops a true top-k
-  doc) → the same decode and score per Arrow batch on executors →
-  per-doc accumulation → global top-k.
+  read (uncached ones). The scale path plans on the driver with no job
+  (:func:`_plan_blocks`: the query terms' block metadata, one bound
+  kernel :func:`_block_bounds` for OR and AND, θ from a decoded seed;
+  safe: provably never drops a true top-k doc), then decodes once in
+  Spark: parquet pushdown on ``term`` → the kept blocks through the same
+  decode and score per Arrow batch on executors → per-doc accumulation
+  → global top-k.
 
 Scoring (fixed, matches the numpy oracle bit-for-bit in float64):
   idf(t)  = ln(1 + (N - df + 0.5) / (df + 0.5))          [Lucene-style]
@@ -30,6 +33,7 @@ Scoring (fixed, matches the numpy oracle bit-for-bit in float64):
 
 from __future__ import annotations
 
+import itertools
 import threading
 from collections import OrderedDict, deque
 from functools import cached_property
@@ -321,12 +325,16 @@ class IndexHandle:
             self.postings.unpersist()
         self.dict_segment.close()  # parts reopen lazily on the next lookup
 
-    def _read_blocks(self, terms: list[str]) -> pa.Table:
-        """``terms``' posting blocks: ONE pyarrow scan, no Spark job."""
+    def _read_postings(self, columns: list[str], filters) -> pa.Table:
+        """``columns`` of the postings rows passing the pyarrow
+        ``filters``: ONE pyarrow scan, no Spark job."""
         return pq.read_table(tables.parquet_files(self.index_dir / "postings"),
-                             columns=_BLOCK_COLS,
-                             filters=[("term", "in", terms)],
+                             columns=columns, filters=filters,
                              partitioning=None)
+
+    def _read_blocks(self, terms: list[str]) -> pa.Table:
+        """``terms``' posting blocks, payload included."""
+        return self._read_postings(_BLOCK_COLS, [("term", "in", terms)])
 
     # -- interactive serving path ------------------------------------------
     # The reference serves queries from a long-lived Solr at ~ms latency;
@@ -404,235 +412,137 @@ def open_index(spark: SparkSession, index_dir: str | Path,
 
 _EPS = 1.0 - 1e-12  # slack for ub-vs-decoded float comparisons
 
-
-def _localized_other_ub(blocks: DataFrame, range_docs: int) -> DataFrame:
-    """Range-localized complement bounds: for every (term, doc-range)
-    cell, ``other_ub`` = Σ over OTHER query terms of their max block UB
-    within that range. Sharper than the global Σ maxUB because a term's
-    high-tf blocks cluster in doc-id ranges (and a term ABSENT from a
-    range contributes zero there). Pure plan fragment — no driver
-    collect; Catalyst folds it into the query job."""
-    W = range_docs
-    rng = blocks.select(
-        "term",
-        F.explode(F.sequence((F.col("doc_id_first") / W).cast("long"),
-                             (F.col("doc_id_last") / W).cast("long")))
-        .alias("rid"),
-        "ub")
-    per_tr = rng.groupBy("term", "rid").agg(F.max("ub").alias("mx"))
-    per_r = per_tr.groupBy("rid").agg(F.sum("mx").alias("tot"))
-    return (per_tr.join(per_r, "rid")
-            .select("term", "rid",
-                    (F.col("tot") - F.col("mx")).alias("other_ub")))
+# the block metadata the pruning plan reads: no payload column
+_META_COLS = ["term", "salt", "block_id", "doc_id_first", "doc_id_last",
+              "block_max_tfnorm"]
 
 
-def _theta_filter_localized(blocks: DataFrame, present: list[str],
-                            per_term: dict[str, float], theta: float,
-                            range_docs: int,
-                            bound_blocks: DataFrame | None = None
-                            ) -> DataFrame:
-    """Keep only blocks whose localized upper bound can reach θ.
+def _block_bounds(rank: np.ndarray, ub: np.ndarray, first: np.ndarray,
+                  last: np.ndarray, n_terms: int, mode: str
+                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one bound kernel of both modes, over blocks sorted by ``rank``
+    (their term's query position). The doc-id axis is cut at every block
+    boundary; an elementary interval's total is Σ over the terms, in query
+    order, of the largest ``ub`` among the term's blocks covering it — 0
+    for a term with none, −∞ in AND mode (no doc there has every term) —
+    with a block's own term counted at the block's own ``ub`` (a doc has
+    one posting per term; a salted term's blocks overlap). Every posting
+    block of a doc covers the doc's interval and each part is ≤ its
+    block's ``ub`` bit-exactly, so a block's bound, its best total inside
+    its span, is ≥ the score of every doc with a posting in it. Returns
+    ``(bound per block, cells, edges)``: block ``i`` spans the intervals
+    ``cells[edges[i]:edges[i + 1]]``."""
+    cuts = np.unique(np.concatenate([first, last + 1]))
+    lo = np.searchsorted(cuts, first)
+    n = np.searchsorted(cuts, last + 1) - lo
+    edges = np.concatenate([[0], np.cumsum(n)])
+    cells = np.arange(edges[-1]) - np.repeat(edges[:-1] - lo, n)
+    cell_ub = np.repeat(ub, n)
+    runs = list(itertools.pairwise(
+        edges[np.searchsorted(rank, np.arange(n_terms + 1))]))
 
-    Safety: for a doc d inside block b of term t, score(d) ≤ ub_t(b) +
-    Σ_{s≠t} maxUB_s(range(d)); d's range lies within [rid_first,
-    rid_last] of b. Blocks spanning ≤2 ranges use greatest(other at
-    rid_first, other at rid_last) — exact; wider-spanning blocks fall
-    back to the GLOBAL complement sum (safe, never sharper than truth).
-    A (term, range) pair missing from the localized table means no other
-    term has any block there → other_ub = 0.
+    def cover(t: int) -> np.ndarray:
+        c = np.full(cuts.size - 1, -np.inf if mode == "and" else 0.0)
+        np.maximum.at(c, cells[slice(*runs[t])], cell_ub[slice(*runs[t])])
+        return c
 
-    ``bound_blocks``: the block set the complement bounds are computed
-    over. When θ refinement split off an already-decoded probe slice,
-    pass the FULL pre-split set here — a doc's probe contributions are
-    real score mass; bounding the complement from the rest-only slice
-    would under-count it and prune unsafely."""
-    W = range_docs
-    # ONE collect of the (term, rid, other_ub) table, then two LOCAL
-    # relations for the rid_first/rid_last probes: referencing the lazy
-    # `other` plan from both broadcasts re-computed its two-aggregation
-    # subtree twice (two broadcast-build jobs scanning the postings cache);
-    # a local relation broadcast builds driver-side with zero scan jobs.
-    # Size class is unchanged — this exact table was already broadcast.
-    other = tables.local_frame(
-        blocks.sparkSession,
-        _localized_other_ub(bound_blocks if bound_blocks is not None
-                            else blocks, W).toArrow(),
-        "term string, rid bigint, other_ub double")
-    total_ub = sum(per_term.values())
-    global_other = F.create_map(*[x for t in present for x in
-                                  (F.lit(t), F.lit(total_ub - per_term[t]))])
-    o1 = other.select(F.col("term").alias("t1"), F.col("rid").alias("r1"),
-                      F.col("other_ub").alias("ob1"))
-    o2 = other.select(F.col("term").alias("t2"), F.col("rid").alias("r2"),
-                      F.col("other_ub").alias("ob2"))
-    rid_first = (F.col("doc_id_first") / W).cast("long")
-    rid_last = (F.col("doc_id_last") / W).cast("long")
-    joined = (blocks
-              .withColumn("__rf", rid_first).withColumn("__rl", rid_last)
-              .join(F.broadcast(o1), (F.col("term") == F.col("t1"))
-                    & (F.col("__rf") == F.col("r1")), "left")
-              .join(F.broadcast(o2), (F.col("term") == F.col("t2"))
-                    & (F.col("__rl") == F.col("r2")), "left"))
-    local = F.greatest(F.coalesce(F.col("ob1"), F.lit(0.0)),
-                       F.coalesce(F.col("ob2"), F.lit(0.0)))
-    eff_other = F.when(F.col("__rl") - F.col("__rf") <= 1, local) \
-                 .otherwise(global_other[F.col("term")])
-    return (joined.filter(F.col("ub") + eff_other
-                          >= F.lit(theta) * _EPS - 1e-300)
-            .drop("__rf", "__rl", "t1", "r1", "ob1", "t2", "r2", "ob2"))
+    # summed term by term in query order, never as a prefix sum of ±ub
+    # events, whose cancellation could round a total below a doc's score
+    total, overlapping = np.zeros(cuts.size - 1), []
+    for t, (a, z) in enumerate(runs):
+        if np.bincount(cells[a:z]).max(initial=0) > 1:
+            overlapping.append((t, total.copy()))
+        total += cover(t)
+    cell_total = total[cells]
+    for t, prefix in overlapping:  # the same sum, slot t at the block's ub
+        run = slice(*runs[t])
+        part = prefix[cells[run]] + cell_ub[run]
+        for s in range(t + 1, n_terms):
+            part += cover(s)[cells[run]]
+        cell_total[run] = part
+    return np.maximum.reduceat(cell_total, edges[:-1]), cells, edges
 
 
-def _and_range_prune(spark: SparkSession, blocks: DataFrame, rarest: str,
-                     rng_pdf: pd.DataFrame, present: list[str],
-                     idf_by_term: dict[str, float], k: int,
-                     k1: float, b: float, avgdl: float,
-                     exclude: np.ndarray | None = None,
-                     probe_frac: float = 0.0,
-                     seed_block_cap: int = 4096
-                     ) -> tuple[DataFrame, DataFrame] | None:
-    """Conjunctive θ-pruning over the rarest term's block ranges.
-
-    For each rare block range R = [lo, hi]: every intersection doc d with
-    its rare posting in R has score(d) ≤ ub_rare(R) + Σ_{s≠rare}
-    maxUB_s(s-blocks overlapping R) — d's s-block contains d ∈ R so it
-    overlaps R. θ = the k-th best FULL intersection score decoded from a
-    seed window over the best-bound ranges, a lower bound on the true
-    k-th best; ranges whose bound < θ drop with all their blocks.
-
-    θ refinement (``probe_frac`` > 0): the seed window widens from ~1
-    range to the top fraction of ranges — a doc in a seed range has
-    every posting block overlapping that range, so decoded seed scores
-    with one block per present term (nunique == n_terms) are EXACT, and
-    a wider window finds a tighter k-th best. The decode stays
-    driver-side (a few hundred block rows), capped at
-    ``seed_block_cap`` collected blocks — truncation only shrinks the
-    candidate pool, never invalidates θ. (A distributed probe was
-    measured and rejected: narrow ranges overlap so many other-term
-    blocks that the probe decoded ~half the postings before pruning.)
-
-    Returns (pruned rare blocks, surviving ranges) or None when θ cannot
-    be established (seed found < k intersection docs — fall back to the
-    plain range semi-join, still exact)."""
-    n_rng = len(rng_pdf)
-    if n_rng == 0:
-        return None
-    lo = rng_pdf["doc_id_first"].to_numpy(np.int64)
-    hi = rng_pdf["doc_id_last"].to_numpy(np.int64)
-    ranges = tables.local_frame(
-        spark, pa.table({"lo": lo, "hi": hi, "ridx": np.arange(n_rng)}),
-        "lo long, hi long, ridx int")
-
-    # per-range complement sums: max UB per (range, other term) from ONE
-    # shuffle, the final per-range sum finished driver-side over the
-    # already-collected (ranges × terms)-bounded rows — the second
-    # groupBy bought a whole extra exchange + AQE stage for a sum the
-    # driver does in microseconds
-    others_meta = (blocks.filter(F.col("term") != rarest)
-                   .select("term", "doc_id_first", "doc_id_last", "ub"))
-    per_rt = (others_meta.join(
-        F.broadcast(ranges),
-        (F.col("doc_id_last") >= F.col("lo"))
-        & (F.col("doc_id_first") <= F.col("hi")))
-        .groupBy("ridx", "term").agg(F.max("ub").alias("mx"))
-        .toPandas())
-    other_sum = np.bincount(per_rt["ridx"].to_numpy(np.int64),
-                            weights=per_rt["mx"].to_numpy(np.float64),
-                            minlength=n_rng)
-    bound = rng_pdf["ub"].to_numpy() + other_sum
-
-    # seed window: decode ALL terms' blocks overlapping the best-bound
-    # ranges, driver-side; refinement widens the window to probe_frac
-    n_seed = min(n_rng, max(1, (4 * k) // 128 + 1,
-                            int(probe_frac * n_rng)))
-    top = np.argsort(-bound)[:n_seed]
-    seed_ranges = tables.local_frame(
-        spark, pa.table({"slo": lo[top], "shi": hi[top]}),
-        "slo long, shi long")
-    seed = (blocks.join(
-        F.broadcast(seed_ranges),
-        (F.col("doc_id_last") >= F.col("slo"))
-        & (F.col("doc_id_first") <= F.col("shi")), "left_semi")
-        # deterministic cap: keep the highest-UB blocks (TakeOrdered, not
-        # an arbitrary first-seen prefix) so θ is reproducible run-to-run
-        .orderBy(F.col("ub").desc(), "term", "doc_id_first")
-        .limit(seed_block_cap)
-        .select(*_BLOCK_COLS)
-        .toArrow())
-    # a doc has one block per term, so its part count is its term count;
-    # θ must be the k-th best among docs that can actually be RETURNED:
-    # seeding θ from an excluded doc would overshoot the true k-th live
-    # score and prune blocks holding live top-k docs
-    ids, parts, *_ = _block_parts(seed, idf_by_term, k1, b, avgdl)
-    _, inter = _topk(ids, parts, len(present), exclude, k)
-    if inter.size < k:
-        return None
-    theta = float(inter[k - 1])
-
-    keep_mask = bound >= theta * _EPS - 1e-300
-    if keep_mask.all():
-        return None  # nothing pruned: skip the extra semi-join plumbing
-    kept = tables.local_frame(
-        spark, pa.table({"lo": lo[keep_mask], "hi": hi[keep_mask]}),
-        "lo long, hi long")
-    rare_kept = blocks.filter(F.col("term") == rarest).join(
-        F.broadcast(kept),
-        (F.col("doc_id_first") == F.col("lo"))
-        & (F.col("doc_id_last") == F.col("hi")), "left_semi")
-    return rare_kept, kept
+def _plan_blocks(handle: IndexHandle, idf_by_term: dict[str, float],
+                 k: int, mode: str, exclude: np.ndarray | None
+                 ) -> tuple[pa.Table, np.ndarray, np.ndarray]:
+    """The pruned path's plan, on the driver with no Spark job: the query
+    terms' block metadata (one pyarrow read, no payload column), each
+    block's :func:`_block_bounds` bound and the kept mask, ``bound ≥ θ``
+    under the ``_EPS`` slack. θ is the k-th best score, among docs not in
+    ``exclude``, of a seed decoded on the driver (one filtered pyarrow
+    read): OR, the top-``ub`` blocks (partial sums); AND, every block
+    overlapping the best-bound blocks of the term with the fewest blocks
+    (docs with a part per term: exact scores). A seed score never exceeds its doc's true score,
+    so θ ≤ the true k-th best and a dropped block holds no top-k doc. With
+    fewer than ``k`` seed docs θ = 0, which drops only the AND blocks
+    where no doc has every term. Returns ``(metadata, bound, kept)``,
+    sorted by term in query order."""
+    terms = list(idf_by_term)
+    meta = handle._read_postings(_META_COLS, [("term", "in", terms)])
+    rank = np.asarray(pc.index_in(meta["term"],
+                                  value_set=pa.array(terms, pa.string())))
+    order = np.argsort(rank, kind="stable")
+    meta, rank = meta.take(order), rank[order]
+    ub = (np.array(list(idf_by_term.values()))[rank]
+          * np.asarray(meta["block_max_tfnorm"]))
+    bound, cells, edges = _block_bounds(
+        rank, ub, np.asarray(meta["doc_id_first"]),
+        np.asarray(meta["doc_id_last"]), len(terms), mode)
+    bs = handle.meta.get("block_size", 128)
+    seed = np.zeros(rank.size, bool)
+    if mode == "or":
+        n_seed = max(32, 16 * k // bs + 2)
+        seed[np.argsort(-ub, kind="stable")[:n_seed]] = True
+    else:
+        rare = np.flatnonzero(rank == np.bincount(rank).argmin())
+        best = np.argsort(-bound[rare], kind="stable")
+        seed[rare[best[:max(1 + 4 * k // bs, rare.size // 10)]]] = True
+        # every block sharing an interval with a chosen rare block
+        hit = np.zeros(cells.max() + 1, bool)
+        hit[cells[np.repeat(seed, np.diff(edges))]] = True
+        seed = np.logical_or.reduceat(hit[cells], edges[:-1])
+    keys = (meta.filter(pa.array(seed)).group_by(["term", "salt"])
+            .aggregate([("block_id", "list")]).to_pydict())
+    blocks = handle._read_postings(_BLOCK_COLS, [
+        [("term", "=", t), ("salt", "=", s), ("block_id", "in", ids)]
+        for t, s, ids in zip(keys["term"], keys["salt"],
+                             keys["block_id_list"])])
+    k1, b, avgdl = (handle.meta[c] for c in ("k1", "b", "avgdl"))
+    ids, parts, *_ = _block_parts(blocks, idf_by_term, k1, b, avgdl)
+    _, top = _topk(ids, parts, len(terms) if mode == "and" else 1, exclude,
+                   k)
+    theta = float(top[k - 1]) if top.size >= k else 0.0
+    return meta, bound, bound >= theta * _EPS - 1e-300
 
 
 def _decode_agg(blocks: DataFrame, idf_by_term: dict[str, float],
-                k1: float, b: float, avgdl: float) -> DataFrame:
+                k1: float, b: float, avgdl: float,
+                kept: pa.Table | None = None) -> DataFrame:
     """Decode posting blocks → per-doc partial sums: (doc_id, score, nt),
-    each Arrow batch through the driver's kernel (:func:`_block_parts`).
-    nt counts decoded blocks per doc; a doc has exactly one block per
-    matched term, so nt == n_terms ⟺ every posting of the doc was in the
-    decoded set ⟺ its score is EXACT (the probe-θ safety argument)."""
+    each Arrow batch through the driver's kernel (:func:`_block_parts`),
+    only the blocks whose ``(term, salt, block_id)`` is in ``kept`` when
+    it is given. The keys ship with the function and match in the Python
+    worker: a broadcast semi-join with a local relation costs a Spark job
+    of its own. nt counts decoded blocks per doc; a doc has exactly one
+    block per matched term, so nt == n_terms ⟺ the doc has every query
+    term and each of its postings was decoded."""
+    keys = ["term", "salt", "block_id"]
+
     def decode(batches: Iterator[pa.RecordBatch]
                ) -> Iterator[pa.RecordBatch]:
         for batch in batches:
+            if kept is not None:
+                batch = pa.Table.from_batches([batch]).join(
+                    kept, keys, join_type="left semi")
             ids, parts, *_ = _block_parts(batch, idf_by_term, k1, b, avgdl)
             yield pa.record_batch({"doc_id": ids, "score": parts})
 
-    return (blocks.select(*_BLOCK_COLS)
+    cols = _BLOCK_COLS if kept is None else _BLOCK_COLS + keys[1:]
+    return (blocks.select(*cols)
             .mapInArrow(decode, SCORE_SCHEMA)
             .groupBy("doc_id").agg(F.sum("score").alias("score"),
                                    F.count("*").alias("nt")))
-
-
-def _refine_theta_or(blocks: DataFrame, theta: float, k: int,
-                     probe_frac: float, idf_by_term: dict[str, float],
-                     k1: float, b: float, avgdl: float,
-                     exclude_ids: DataFrame | None,
-                     metrics_out: dict | None
-                     ) -> tuple[float, DataFrame, DataFrame | None]:
-    """Decode-time θ refinement (OR mode): decode the top-UB slice of
-    blocks FIRST, refine θ to the k-th best partial per-doc sum, and hand
-    the remaining blocks a tighter prune bound.
-
-    Safety: every partial sum ≤ the doc's true score, so the k-th best
-    partial is ≤ the true k-th best — always a valid θ. The probe's
-    decoded contributions are cached and reused in the final aggregation
-    (pre_agg), so nothing is decoded twice.
-    Returns (θ, remaining blocks, pre-aggregated probe contributions)."""
-    cut = blocks.approxQuantile("ub", [1.0 - probe_frac], 0.01)
-    if not cut or cut[0] is None:
-        return theta, blocks, None
-    probe = blocks.filter(F.col("ub") >= cut[0])
-    rest = blocks.filter(F.col("ub") < cut[0])
-    # cached: the final aggregation reuses the probe's decoded blocks
-    probe_agg = _cache_per_query(_decode_agg(probe, idf_by_term, k1, b,
-                                             avgdl))
-    cand = probe_agg
-    if exclude_ids is not None:
-        cand = cand.join(F.broadcast(exclude_ids.select("doc_id")),
-                         "doc_id", "left_anti")
-    rows = cand.orderBy(F.desc("score")).limit(k).collect()
-    if metrics_out is not None:
-        metrics_out["blocks_probe"] = probe.count()
-    if len(rows) >= k:
-        theta = max(theta, float(rows[-1]["score"]))
-    return theta, rest, probe_agg
 
 
 # driver budget of an exclusion set: tombstone sets are O(recent
@@ -714,68 +624,54 @@ def scores_frame(spark: SparkSession, ids: np.ndarray,
 def query_topk_index(spark: SparkSession,
                      index_dir: str | Path | IndexHandle, query: str,
                      k: int, *, mode: str = "or", prune: bool = True,
-                     prune_min_postings: int = 50_000,
-                     range_docs: int = 1 << 20,
                      small_query_postings: int | None = None,
-                     refine_theta: bool = True,
-                     probe_frac: float = 0.10,
-                     refine_min_postings: int = 262_144,
                      exclude_ids: DataFrame | np.ndarray | None = None,
                      metrics_out: dict | None = None) -> DataFrame:
     """Top-k BM25 over the prebuilt index with block-max pruning.
-
-    Safety of the pruning (rank-identity guaranteed): θ is the k-th best
-    achievable score from a decoded seed — a lower bound on the true k-th
-    best. A block is pruned only when ``UB(block) + complement-UB < θ``
-    (complement bounds range-localized via :func:`_theta_filter_localized`);
-    any document with a posting in that block has true score < θ, so it
-    cannot be in the true top-k, and (contrapositive) no true top-k
-    document ever loses a block, so surviving scores are exact.
-
-    AND mode combines three exact prunes: (1) every intersection doc lies
-    inside the RAREST term's posting-block ranges, so other terms' blocks
-    missing all rare ranges drop; (2) θ from a probe window (full
-    intersection scores over the best rare ranges); (3) a rare range
-    whose ub_rare + Σ_{s≠rare} localized maxUB_s < θ drops WITH its other-
-    term blocks.
-
-    Decode-time θ refinement (``refine_theta``, queries above
-    ``refine_min_postings``): the top-UB ``probe_frac`` of blocks (OR) /
-    rare ranges (AND) are decoded FIRST; the k-th best per-doc partial
-    sum (OR — partials are lower bounds) or exact intersection score
-    (AND — probe docs are fully covered, certified by block count) is a
-    valid θ, tighter than the driver-seed θ, so late blocks prune
-    against it. Probe contributions are cached and reused in the final
-    aggregation — nothing decodes twice.
 
     Queries whose driver would read ≤ ``small_query_postings`` postings
     (default :data:`SMALL_QUERY_POSTINGS`; postings already in the
     handle's term cache cost nothing) run :func:`driver_topk` instead —
     zero jobs, the handle's term cache read and filled — and return a
     local relation (:func:`scores_frame`: zero jobs read with
-    ``.collect()``, one job read with ``.toPandas()``). ``exclude_ids`` — doc ids dropped before the top-k
-    cut, as a DataFrame with a ``doc_id`` column (collected only after the
-    postings pass the gate) or as an int64 array already on the driver
-    (which saves its collect job).
-    ``metrics_out`` (optional dict) receives block-skip accounting (count
-    jobs on the pruned path).
+    ``.collect()``, one job read with ``.toPandas()``).
+
+    Above it, the pruned path plans on the driver and decodes once in
+    Spark. :func:`_plan_blocks` reads the query terms' block metadata and
+    a θ seed with pyarrow (no job), bounds every block with
+    :func:`_block_bounds` and keeps the blocks whose bound reaches θ, a
+    lower bound on the true k-th best score (rank-identity guaranteed:
+    a dropped block holds no doc that can make the top k, and every doc
+    that can keeps all its blocks, so its score is exact). One Spark
+    chain then decodes the kept blocks (:func:`_decode_agg`, which
+    matches their ``(term, salt, block_id)`` keys), keeps the docs with
+    every term (AND), drops ``exclude_ids`` and cuts the top k.
+    ``prune=False`` is the same chain over every block, the exhaustive
+    reference; it also runs when the plan's metadata rows (Σ ⌈df /
+    block_size⌉) would exceed :data:`SMALL_QUERY_POSTINGS`, or an
+    exclusion set exceeds :data:`EXCLUDE_CAP`.
+
+    ``exclude_ids`` — doc ids dropped before the top-k cut, as a DataFrame
+    with a ``doc_id`` column (collected only when the driver needs it) or
+    as an int64 array already on the driver (which saves its collect
+    job). ``metrics_out`` (optional dict) receives ``blocks_total``,
+    ``blocks_scored`` and ``block_skip_ratio`` from the plan (or from the
+    driver's read), with no Spark job.
     """
     # ad-hoc (path) calls: no postings caching
     handle = (index_dir if isinstance(index_dir, IndexHandle)
               else IndexHandle(spark, index_dir, cache=False))
     terms = tokenize_query(query)
-    meta = handle.meta
-    k1, b, avgdl = meta["k1"], meta["b"], meta["avgdl"]
-
     if not terms:
         return tables.empty_frame(spark, SCORE_SCHEMA)
 
     # exclusion set (tombstones) on the driver, collected lazily AT MOST
-    # once unless it came as an array: the small-query and θ-seed paths
-    # need it driver-side so that θ is the k-th best score among docs that
-    # can actually be returned (seeding from an excluded doc could
-    # overshoot and prune live top-k blocks). At most EXCLUDE_CAP + 1 ids
-    # are collected: more than the cap means it is too large for the driver
+    # once unless it came as an array: the small-query path and the plan's
+    # θ seed need it driver-side so that θ is the k-th best score among
+    # docs that can actually be returned (seeding from an excluded doc
+    # could overshoot and prune live top-k blocks). At most EXCLUDE_CAP + 1
+    # ids are collected: more than the cap means it is too large for the
+    # driver
     _exc: list = [] if isinstance(exclude_ids, DataFrame) else [exclude_ids]
 
     def exclude_set() -> np.ndarray | None:
@@ -797,110 +693,41 @@ def query_topk_index(spark: SparkSession,
     if not idf_by_term:
         return tables.empty_frame(spark, SCORE_SCHEMA)
     present = list(idf_by_term)
-    total_postings = sum(info[t]["df"] for t in present)
+    # the plan holds one driver row per block: the gate's budget bounds it
+    bs = handle.meta.get("block_size", 128)
+    prune = prune and (sum(-(-int(info[t]["df"]) // bs) for t in present)
+                       <= SMALL_QUERY_POSTINGS)
+    if prune and exclude_ids is not None:
+        prune = exclude_set().size <= EXCLUDE_CAP
+        if prune:  # on the driver now: anti-join it as a local relation
+            exclude_ids = exclude_set()
     if isinstance(exclude_ids, np.ndarray):
         exclude_ids = tables.local_frame(
             spark, pa.table({"doc_id": exclude_ids}), "doc_id long")
 
-    postings = (handle.postings
-                .filter(F.col("term").isin(present)))  # pushed to scan
-    idf_map = F.create_map(*[x for t in present
-                             for x in (F.lit(t), F.lit(idf_by_term[t]))])
-    blocks = postings.withColumn("ub", idf_map[F.col("term")]
-                                 * F.col("block_max_tfnorm"))
-    if exclude_ids is not None and prune:
-        # pruning with exclusions is safe only when the θ seed can be
-        # cleaned of excluded docs driver-side; otherwise exactness wins
-        prune = exclude_set().size <= EXCLUDE_CAP
+    postings = handle.postings.filter(F.col("term").isin(present))
+    n_blocks = n_kept = 0
+    kept_keys = None
+    if prune:
+        blocks, _, kept = _plan_blocks(handle, idf_by_term, k, mode,
+                                       exclude_set())
+        n_blocks, n_kept = kept.size, int(kept.sum())
+        if n_kept == 0:  # AND: no doc has every term
+            return tables.empty_frame(spark, SCORE_SCHEMA)
+        if n_kept < n_blocks:
+            kept_keys = (blocks.select(["term", "salt", "block_id"])
+                         .filter(pa.array(kept)))
+    elif metrics_out is not None:  # every block is scored
+        n_blocks = n_kept = handle._read_postings(
+            ["term"], [("term", "in", present)]).num_rows
     if metrics_out is not None:
-        metrics_out["blocks_total"] = blocks.count()
+        metrics_out.update(blocks_total=n_blocks, blocks_scored=n_kept,
+                           block_skip_ratio=round(1.0 - n_kept / n_blocks,
+                                                  4))
 
-    # pruning pays off only when there is real volume to skip
-    pre_agg: DataFrame | None = None  # cached probe contributions (refine)
-    if (prune and mode == "and" and len(present) > 1
-            and total_postings > prune_min_postings):
-        rarest = min(present, key=lambda t: info[t]["df"])
-        rare_blocks = blocks.filter(F.col("term") == rarest)
-        # (2)+(3): θ-based rare-RANGE pruning, driver-side over the rare
-        # block metadata (small: df_rare/block_size rows)
-        max_rare_ranges = 50_000
-        n_rare_blocks = info[rarest]["df"] // meta.get("block_size", 128) + 1
-        kept = None
-        if n_rare_blocks <= max_rare_ranges:
-            rng_pdf = (rare_blocks
-                       .select("doc_id_first", "doc_id_last", "ub")
-                       .toPandas())
-            refine = (refine_theta
-                      and total_postings >= refine_min_postings)
-            kept = _and_range_prune(spark, blocks, rarest, rng_pdf, present,
-                                    idf_by_term, k, k1, b, avgdl,
-                                    exclude=exclude_set(),
-                                    probe_frac=probe_frac if refine else 0.0)
-        if kept is not None:
-            rare_blocks, ranges = kept
-        else:
-            ranges = (rare_blocks
-                      .select(F.col("doc_id_first").alias("lo"),
-                              F.col("doc_id_last").alias("hi")))
-        # (1) range semi-join: other terms' blocks must overlap a
-        # surviving rare range
-        others = blocks.filter(F.col("term") != rarest).join(
-            F.broadcast(ranges),
-            (F.col("doc_id_last") >= F.col("lo"))
-            & (F.col("doc_id_first") <= F.col("hi")),
-            "left_semi")
-        blocks = rare_blocks.unionByName(others)
-    if prune and mode == "or" and total_postings > prune_min_postings:
-        # exact per-term global UB from the segment's term_ub fold
-        per_term = {t: idf_by_term[t] * info[t]["max_tfnorm"]
-                    for t in present}
-        # θ: k-th best partial score from the top-UB blocks (driver decode
-        # of a handful of rows)
-        # r4 sweep (BENCH.md): seed_n = max(8, 4k/bs) left θ short of the
-        # pruning ceiling (or:import skip 0.9668 vs 0.9958 achievable); a
-        # 4× seed reaches the ceiling — the true top-k live in the top ~30
-        # UB blocks here — while 8×/16× add nothing. Driver cost is
-        # decoding ~4k postings: negligible against one pruned block.
-        seed_n = max(32, (16 * k) // max(meta.get("block_size", 128), 1) + 2)
-        seed = (blocks.orderBy(F.desc("ub")).limit(seed_n)
-                .select(*_BLOCK_COLS).toArrow())
-        ids, parts, *_ = _block_parts(seed, idf_by_term, k1, b, avgdl)
-        _, seed_scores = _topk(ids, parts, 1, exclude_set(), k)
-        if seed_scores.size >= k:
-            theta = float(seed_scores[k - 1])
-            all_blocks = blocks
-
-            def theta_filter(blks: DataFrame, th: float) -> DataFrame:
-                if len(present) > 1:
-                    return _theta_filter_localized(
-                        blks, present, per_term, th, range_docs,
-                        bound_blocks=all_blocks)
-                return blks.filter(F.col("ub") >= F.lit(th) * _EPS - 1e-300)
-
-            # cheap seed θ filter first; refinement then probes only the
-            # SURVIVORS' top-UB slice (probing pre-filter blocks decodes
-            # work the seed θ would have skipped for free)
-            blocks = theta_filter(blocks, theta)
-            if refine_theta and total_postings >= refine_min_postings:
-                new_theta, rest, pre_agg = _refine_theta_or(
-                    blocks, theta, k, probe_frac, idf_by_term, k1, b,
-                    avgdl, exclude_ids, metrics_out)
-                if pre_agg is not None and new_theta > theta:
-                    blocks = theta_filter(rest, new_theta)
-                elif pre_agg is not None:
-                    blocks = rest  # probe decoded; rest already filtered
-    if metrics_out is not None:
-        metrics_out["blocks_scored"] = (blocks.count()
-                                        + metrics_out.get("blocks_probe", 0))
-        tot = metrics_out["blocks_total"]
-        metrics_out["block_skip_ratio"] = round(
-            1.0 - metrics_out["blocks_scored"] / tot, 4) if tot else 0.0
-
-    agg = _decode_agg(blocks, idf_by_term, k1, b, avgdl)
-    if pre_agg is not None:
-        agg = (agg.unionByName(pre_agg)
-               .groupBy("doc_id").agg(F.sum("score").alias("score"),
-                                      F.sum("nt").alias("nt")))
+    meta = handle.meta
+    agg = _decode_agg(postings, idf_by_term, meta["k1"], meta["b"],
+                      meta["avgdl"], kept_keys)
     if mode == "and":
         agg = agg.filter(F.col("nt") == len(present))
     if exclude_ids is not None:
@@ -911,4 +738,3 @@ def query_topk_index(spark: SparkSession,
     return (agg.select("doc_id", "score")
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k))
-

@@ -277,8 +277,8 @@ class SegmentedReader:
         got = bm25.driver_topk(self.segments, tokenize_query(query), k, mode)
         if got is not None:
             return bm25.scores_frame(spark, got[0], got[1])
-        # prune=True is safe with exclusions since the θ seed drops excluded
-        # docs before the threshold is set (bm25.exclude_set)
+        # prune=True is safe with exclusions: the plan's θ seed drops the
+        # excluded docs before θ is set (bm25._plan_blocks)
         parts = [bm25.query_topk_index(spark, handle, query, k, mode=mode,
                                        exclude_ids=excl if excl.size
                                        else None)

@@ -58,7 +58,6 @@ def test_index_scorer_pruning_equals_exhaustive(spark, index_dir, query, k):
     # small_query_postings=0 forces the DISTRIBUTED decode+prune path
     # (the tiny test corpus would otherwise take the driver fast path)
     pruned = query_topk_index(spark, index_dir, query, k, prune=True,
-                              prune_min_postings=0,
                               small_query_postings=0).toPandas()
     full = query_topk_index(spark, index_dir, query, k, prune=False,
                             small_query_postings=0).toPandas()
@@ -105,8 +104,7 @@ def test_and_mode_conjunctive_pruning_exact(spark, index_dir, oracle, q):
     """Rarest-term range pruning must stay exact (membership + scores)."""
     want = oracle.topk(tokenize_query(q), 20, mode="and")
     pruned = query_topk_index(spark, index_dir, q, 20, mode="and",
-                              prune=True, prune_min_postings=0,
-                              small_query_postings=0).toPandas()
+                              prune=True, small_query_postings=0).toPandas()
     full = query_topk_index(spark, index_dir, q, 20, mode="and",
                             prune=False, small_query_postings=0).toPandas()
     assert_rank_identical(pruned, want, f"and-pruned {q!r}")
@@ -222,8 +220,8 @@ def test_postings_read_with_known_schema(spark, corpus_df, tmp_path,
 
         def pruned(h):
             return lambda: query_topk_index(
-                spark, h, "import ident_3", 10, small_query_postings=0,
-                prune_min_postings=0).collect()
+                spark, h, "import ident_3", 10,
+                small_query_postings=0).collect()
 
         known = jobs(f"first-pruned-{side}",
                      pruned(open_index(spark, d, cache=False)))
@@ -250,37 +248,21 @@ def test_tie_break_doc_id_asc(oracle):
 @pytest.mark.parametrize("mode", ["or", "and"])
 def test_theta_refinement_rank_identity(spark, index_dir, oracle, q, k,
                                         mode):
-    """Decode-time θ refinement (distributed probe + cached reuse) must
-    stay rank-identical across the whole query set, at aggressive and
-    conservative probe fractions."""
+    """The pruned path (driver plan: block bounds, seed θ, kept blocks;
+    one Spark decode) is rank-identical to the oracle across the whole
+    query set, and returns the same ids with bit-equal scores as the
+    exhaustive chain (``prune=False``)."""
     terms = tokenize_query(q)
     if mode == "and" and len(terms) < 2:
         pytest.skip("AND needs 2+ terms")
     want = oracle.topk(terms, k, mode=mode)
-    for frac in (0.05, 0.3, 0.9):
-        got = query_topk_index(spark, index_dir, q, k, mode=mode,
-                               prune=True, prune_min_postings=0,
-                               small_query_postings=0,
-                               refine_theta=True, probe_frac=frac,
-                               refine_min_postings=0,
-                               range_docs=64).toPandas()
-        assert_rank_identical(got, want, f"refine {mode} {q!r} frac={frac}")
-
-
-def test_theta_refinement_with_exclusions(spark, index_dir, oracle):
-    """Refined θ must also be seeded from non-excluded docs only."""
-    q, mode = "import def", "or"
-    want_all = oracle.topk(tokenize_query(q), 50, mode=mode)
-    excl = [int(x) for x in want_all["doc_id"].iloc[:3]]
-    want = want_all[~want_all["doc_id"].isin(excl)].head(10)
-    excl_df = spark.createDataFrame([(i,) for i in excl], "doc_id long")
-    got = query_topk_index(spark, index_dir, q, 10, mode=mode, prune=True,
-                           prune_min_postings=0, small_query_postings=0,
-                           refine_theta=True, probe_frac=0.3,
-                           refine_min_postings=0,
-                           exclude_ids=excl_df).toPandas()
-    assert_rank_identical(got, want.reset_index(drop=True),
-                          "refine+exclude")
+    got = query_topk_index(spark, index_dir, q, k, mode=mode,
+                           small_query_postings=0).toPandas()
+    assert_rank_identical(got, want, f"pruned {mode} {q!r}")
+    full = query_topk_index(spark, index_dir, q, k, mode=mode, prune=False,
+                            small_query_postings=0).toPandas()
+    assert list(got["doc_id"]) == list(full["doc_id"])
+    np.testing.assert_allclose(got["score"], full["score"], rtol=0)
 
 
 @pytest.mark.parametrize("q,mode", [("import", "or"),
@@ -297,8 +279,7 @@ def test_exclude_ids_with_pruning_exact(spark, index_dir, oracle, q, mode):
     want = want_all[~want_all["doc_id"].isin(excl)].head(10)
     excl_df = spark.createDataFrame([(i,) for i in excl], "doc_id long")
     pruned = query_topk_index(spark, index_dir, q, 10, mode=mode,
-                              prune=True, prune_min_postings=0,
-                              small_query_postings=0,
+                              prune=True, small_query_postings=0,
                               exclude_ids=excl_df).toPandas()
     full = query_topk_index(spark, index_dir, q, 10, mode=mode, prune=False,
                             small_query_postings=0,
@@ -318,18 +299,146 @@ def test_exclude_ids_with_pruning_exact(spark, index_dir, oracle, q, mode):
                                     ("value data result", "and"),
                                     ("self import", "and")])
 def test_range_localized_pruning_exact(spark, index_dir, oracle, q, mode):
-    """Range-localized UBs (small ranges force many cells + the multi-range
-    fallback) and the AND θ path (small k so a seed θ is established) must
-    stay exact, with real block skipping reported via metrics_out."""
+    """The plan's interval bounds and its θ seed (small k, so a θ is
+    established in both modes) must stay exact, with real block skipping
+    reported via metrics_out."""
     m: dict = {}
     pruned = query_topk_index(spark, index_dir, q, 3, mode=mode, prune=True,
-                              prune_min_postings=0, range_docs=64,
                               small_query_postings=0,
                               metrics_out=m).toPandas()
     want = oracle.topk(tokenize_query(q), 3, mode=mode)
     assert_rank_identical(pruned, want, f"localized {mode} {q!r}")
     assert 0 < m["blocks_scored"] <= m["blocks_total"]
     assert 0.0 <= m["block_skip_ratio"] < 1.0
+
+
+def test_block_bounds_cover_random_blocks():
+    """``_block_bounds`` on random blocks — several terms, salts whose
+    blocks overlap, both modes — is ≥ ``_EPS`` × the score of every doc
+    with a posting in the block (AND: every doc that has all the terms),
+    each score summed in query-term order."""
+    from harvester_spark.operators.bm25 import _EPS, _block_bounds
+
+    rng = np.random.default_rng(7)
+    for _ in range(200):
+        n_terms, n_docs = int(rng.integers(1, 5)), int(rng.integers(5, 300))
+        blocks = []  # (term, doc ids, parts)
+        for t in range(n_terms):
+            docs = np.sort(rng.choice(n_docs, rng.integers(1, n_docs),
+                                      replace=False))
+            salt = rng.integers(0, rng.integers(1, 4), docs.size)
+            for s in np.unique(salt):
+                ids, size = docs[salt == s], int(rng.integers(1, 6))
+                for i in range(0, ids.size, size):
+                    blocks.append((t, ids[i:i + size],
+                                   rng.random(ids[i:i + size].size)))
+        blocks.sort(key=lambda blk: blk[0])
+        parts = np.zeros((n_docs, n_terms))
+        for t, ids, p in blocks:
+            parts[ids, t] = p
+        score = np.zeros(n_docs)
+        for t in range(n_terms):  # query-term order
+            score += parts[:, t]
+        for mode in ("or", "and"):
+            bound, *_ = _block_bounds(
+                np.array([blk[0] for blk in blocks]),
+                np.array([blk[2].max() for blk in blocks]),
+                np.array([blk[1][0] for blk in blocks]),
+                np.array([blk[1][-1] for blk in blocks]), n_terms, mode)
+            for (t, ids, _), bnd in zip(blocks, bound):
+                if mode == "and":
+                    ids = ids[(parts[ids] > 0).all(axis=1)]
+                assert (bnd >= _EPS * score[ids]).all(), (mode, t, ids)
+
+
+@pytest.mark.parametrize("q,k", QUERY_SET)
+@pytest.mark.parametrize("mode", ["or", "and"])
+def test_plan_bounds_cover_exact_scores(spark, index_dir, q, k, mode):
+    """On the fixture index (salted terms included) every block's plan
+    bound is ≥ ``_EPS`` × the exact score, from ``prune=False``, of each
+    doc with a posting in the block, and the kept blocks hold the whole
+    exact top k."""
+    from harvester_spark.operators.bm25 import (_BLOCK_COLS, _EPS,
+                                                _plan_blocks, open_index,
+                                                query_terms)
+    from harvester_spark.operators.codec import decode_blocks
+
+    h = open_index(spark, index_dir, cache=False)
+    idf_by_term, _ = query_terms(h, tokenize_query(q), mode)
+    if not idf_by_term:
+        pytest.skip("no doc can match")
+    meta, bound, kept = _plan_blocks(h, idf_by_term, k, mode, None)
+    keys = ["term", "salt", "block_id"]
+    blocks = h._read_postings(_BLOCK_COLS + keys[1:],
+                              [("term", "in", list(idf_by_term))])
+    plan = {key: i for i, key in enumerate(zip(
+        *(meta[c].to_pylist() for c in keys)))}
+    row = np.array([plan[key] for key in zip(
+        *(blocks[c].to_pylist() for c in keys))])
+    assert sorted(row) == list(range(len(plan)))
+    ids, *_ = decode_blocks(*(blocks[c] for c in _BLOCK_COLS[1:]))
+    row = np.repeat(row, np.asarray(blocks["doc_count"]))
+    full = query_topk_index(spark, index_dir, q, 10**6, mode=mode,
+                            prune=False, small_query_postings=0).toPandas()
+    exact = dict(zip(full["doc_id"], full["score"]))
+    has = np.array([d in exact for d in ids])
+    score = np.array([exact.get(d, 0.0) for d in ids])
+    assert has.any()
+    assert (bound[row[has]] >= _EPS * score[has]).all()
+    top = set(full["doc_id"].iloc[:k])
+    assert kept[row[[d in top for d in ids]]].all()
+
+
+@pytest.mark.parametrize("q,mode", [("import def", "or"),
+                                    ("self import", "and")])
+def test_plan_guard_takes_exhaustive_chain(spark, index_dir, oracle,
+                                           monkeypatch, q, mode):
+    """When the plan's metadata rows (Σ ⌈df / block_size⌉) would exceed
+    ``SMALL_QUERY_POSTINGS``, the pruned call runs the exhaustive chain —
+    no plan — and still matches the oracle, every block reported scored."""
+    from harvester_spark.operators import bm25
+
+    def no_plan(*a, **kw):
+        raise AssertionError("planned above the driver budget")
+
+    monkeypatch.setattr(bm25, "SMALL_QUERY_POSTINGS", 1)
+    monkeypatch.setattr(bm25, "_plan_blocks", no_plan)
+    m: dict = {}
+    got = query_topk_index(spark, index_dir, q, 10, mode=mode,
+                           metrics_out=m).toPandas()
+    assert_rank_identical(got, oracle.topk(tokenize_query(q), 10, mode=mode),
+                          f"guard {mode} {q!r}")
+    assert m["blocks_scored"] == m["blocks_total"] > 1
+    assert m["block_skip_ratio"] == 0.0
+
+
+@pytest.mark.parametrize("mode", ["or", "and"])
+def test_pruned_metrics_launch_no_job(spark, index_dir, mode):
+    """``metrics_out`` comes from the plan: the pruned path runs as many
+    Spark jobs with it as without it (and no more than ``prune=False``),
+    with the same answer."""
+    from harvester_spark.operators.bm25 import open_index
+
+    sc = spark.sparkContext
+    q, runs = "self import", {}
+    for label, prune, m in (("full", False, None), ("plain", True, None),
+                            ("metrics", True, {})):
+        group = f"pruned-metrics-{mode}-{label}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = query_topk_index(spark, open_index(spark, index_dir,
+                                                      cache=False),
+                                    q, 3, mode=mode, prune=prune,
+                                    small_query_postings=0,
+                                    metrics_out=m).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        runs[label] = (len(sc.statusTracker().getJobIdsForGroup(group)),
+                       [(r.doc_id, r.score) for r in rows])
+    assert runs["metrics"] == runs["plain"]
+    assert runs["plain"][0] <= runs["full"][0]
+    assert runs["plain"][1] == runs["full"][1]
+    assert 0 < m["blocks_scored"] < m["blocks_total"]
 
 
 @pytest.fixture(scope="module")
@@ -485,10 +594,7 @@ def test_pruning_metrics_deterministic_across_runs(spark, index_dir):
         for _ in range(2):
             m = {}
             rows = query_topk_index(spark, index_dir, q, 10, mode=mode,
-                                    prune_min_postings=0,
                                     small_query_postings=0,
-                                    refine_min_postings=0,
-                                    range_docs=2048,
                                     metrics_out=m).collect()
             runs.append((m.get("blocks_scored"), m.get("blocks_total"),
                          [(r.doc_id, round(r.score, 9)) for r in rows]))
