@@ -34,45 +34,44 @@ def varint_sizes(values: np.ndarray) -> np.ndarray:
     return nb
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """Encode a 1-D array of non-negative ints as an LEB128 byte stream."""
+def varint_encode(values: np.ndarray, nb: np.ndarray | None = None) -> bytes:
+    """Encode a 1-D array of non-negative ints as an LEB128 byte stream;
+    ``nb``: their :func:`varint_sizes`, when the caller already has them.
+    One pass per byte position, over only the values that long."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
     if v.size == 0:
         return b""
-    # bytes needed per value: ceil(bit_length / 7), minimum 1
-    nb = np.ones(v.size, dtype=np.int64)
-    x = v >> np.uint64(7)
-    while x.any():  # ≤ 9 iterations for uint64
-        nb += (x > 0).astype(np.int64)
-        x >>= np.uint64(7)
-    offsets = np.concatenate(([0], np.cumsum(nb)))
-    total = int(offsets[-1])
-    val_idx = np.repeat(np.arange(v.size), nb)
-    byte_pos = np.arange(total) - np.repeat(offsets[:-1], nb)
-    shifted = v[val_idx] >> (np.uint64(7) * byte_pos.astype(np.uint64))
-    out = (shifted & np.uint64(0x7F)).astype(np.uint8)
-    is_last = byte_pos == (nb[val_idx] - 1)
-    out[~is_last] |= np.uint8(0x80)
-    return out.tobytes()
+    if nb is None:
+        nb = varint_sizes(v)
+    at = np.cumsum(nb) - nb                 # each value's first byte
+    out = np.empty(int(at[-1] + nb[-1]), dtype=np.uint8)
+    while True:
+        more = nb > 1
+        out[at] = (v & 0x7F).astype(np.uint8) | (more.astype(np.uint8) << 7)
+        if not more.any():
+            return out.tobytes()
+        at, v, nb = at[more] + 1, v[more] >> np.uint64(7), nb[more] - 1
 
 
 def varint_decode(buf) -> np.ndarray:
-    """Decode an LEB128 byte stream back to a uint64 array."""
+    """Decode an LEB128 byte stream back to a uint64 array: one pass over
+    every value's first byte, then one per further byte position over only
+    the values that long."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_last = (b & 0x80) == 0
-    grp = np.zeros(b.size, dtype=np.int64)
-    grp[1:] = np.cumsum(is_last)[:-1]
-    starts = np.concatenate(([0], np.nonzero(is_last)[0] + 1))[:-1]
-    pos = np.arange(b.size) - starts[grp]
-    contrib = (b & np.uint8(0x7F)).astype(np.uint64) << (
-        np.uint64(7) * pos.astype(np.uint64)
-    )
-    n_vals = int(grp[-1]) + 1
-    vals = np.zeros(n_vals, dtype=np.uint64)
-    # 7-bit groups occupy disjoint bit ranges, so addition == bitwise OR here
-    np.add.at(vals, grp, contrib)
+    ends = np.flatnonzero(b < 0x80)         # each value's last byte
+    if ends.size == b.size:                 # every value one byte (or none)
+        return b.astype(np.uint64)
+    at = np.concatenate(([0], ends[:-1] + 1))
+    vals = (b[at] & 0x7F).astype(np.uint64)
+    idx = np.flatnonzero(at < ends)
+    at = at[idx]
+    shift = np.uint64(7)
+    while idx.size:
+        at = at + 1
+        vals[idx] |= (b[at] & 0x7F).astype(np.uint64) << shift
+        more = at < ends[idx]
+        idx, at = idx[more], at[more]
+        shift += np.uint64(7)
     return vals
 
 

@@ -18,9 +18,9 @@ harvester/fetcher/controller.py:159-212, solr_updater.py:776-791):
                  lookup every query starts with
   S7 lineage     per-partition build provenance
 
-Two placements of one kernel chain (``pack_batch`` → ``_decode_packs`` →
-``_encode_blocks``), picked by input size against the driver budget the
-dedup ops share (``tables.collect_small``):
+Two placements of one kernel chain (``pack_batch`` → ``_encode_blocks``),
+picked by input size against the driver budget the dedup ops share
+(``tables.collect_small``):
 
 - **driver** (≤ 262,144 docs and 32 MB of text): the input is collected
   once, the chain runs once over it as a single pack set, and every stage
@@ -35,8 +35,10 @@ dedup ops share (``tables.collect_small``):
 
 The tail (S5-S7) runs on the driver with pyarrow up to
 ``dictseg.DRIVER_MAX_TERMS`` terms and as Spark jobs above, for either
-placement. Segment merges (:func:`build_index_from_rows` and
-:func:`write_rows_index`) reuse the same encoder and tail.
+placement. A segment merge (:func:`merge_stages`) is a build whose S1
+source is the live postings of other index dirs instead of document
+content — decoded, dead ids dropped, packed by the same pack encoder —
+so it writes through these same stages, resume included.
 
 Why packing (S1) instead of shuffling (doc_id, term, tf) rows: a code
 corpus at 10^12 files produces ~10^14 posting rows; shuffling them as rows
@@ -86,7 +88,8 @@ from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
 
 from harvester_spark import tables
 from harvester_spark.operators.codec import (BLOCK_SIZE, decode_blocks,
-                                             varint_encode, varint_sizes)
+                                             varint_decode, varint_encode,
+                                             varint_sizes)
 
 K1 = 1.2
 B = 0.75
@@ -181,22 +184,21 @@ def _arrow(pdf: pd.DataFrame | None, schema: StructType):
 # --------------------------------------------------------------------------
 
 def _slice_stream(values: np.ndarray, starts: np.ndarray,
-                  ends: np.ndarray, keep: np.ndarray | None = None
-                  ) -> list[bytes]:
+                  ends: np.ndarray) -> list[bytes]:
     """Encode ``values`` as ONE varint stream; return per-[start,end) byte
-    slices. ``keep`` masks values excluded from the stream (their size is 0
-    so offsets stay aligned)."""
-    if keep is None:
-        stream = varint_encode(values)
-        nb = varint_sizes(values) if values.size else np.empty(0, np.int64)
-    else:
-        kept = values[keep]
-        stream = varint_encode(kept)
-        nb = np.zeros(values.size, dtype=np.int64)
-        if kept.size:
-            nb[keep] = varint_sizes(kept)
-    cum = np.concatenate(([0], np.cumsum(nb)))
-    return [stream[cum[s]:cum[e]] for s, e in zip(starts, ends)]
+    slices."""
+    nb = varint_sizes(values)
+    stream = varint_encode(values, nb)
+    cum = np.concatenate(([0], np.cumsum(nb))).tolist()
+    return [stream[cum[s]:cum[e]] for s, e in zip(starts.tolist(),
+                                                 ends.tolist())]
+
+
+def _task_partition() -> int:
+    """The running Spark task's partition id (-1 outside a task)."""
+    from pyspark import TaskContext
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx else -1
 
 
 def _tfnorm(tf: np.ndarray, dl: np.ndarray, k1: float, b: float,
@@ -267,14 +269,22 @@ def idf(df: np.ndarray, n: int) -> np.ndarray:
 
 
 # --------------------------------------------------------------------------
-# S3: map-side posting packer (no shuffle; one pass over content)
+# S1: posting packers (documents or an index's live postings; no shuffle)
 # --------------------------------------------------------------------------
 
 def pack_batch(pdf: pd.DataFrame, part_id: int) -> pd.DataFrame | None:
     """The packing kernel: one pandas batch of (doc_id, content) → pack
-    rows (one per term present in the batch). Module-level so the no-Spark
-    kernel microbenchmark (bench_kernel.py) drives the EXACT code Spark
-    runs.
+    rows (one per term present in the batch): :func:`_tokenize` then
+    :func:`_encode_packs`. Module-level so the no-Spark kernel
+    microbenchmark (bench_kernel.py) drives the EXACT code Spark runs."""
+    rows = _tokenize(pdf)
+    return None if rows is None else _encode_packs(*rows, part_id)
+
+
+def _tokenize(pdf: pd.DataFrame):
+    """(doc_id, content) batch → ``(code, doc_id, tf, dl, vocab)``: one row
+    per (term, doc), sorted by (term code, doc_id); ``vocab`` maps a code
+    to its term. None when the batch holds no token.
 
     All heavy work is integer-vectorized: tokens are dictionary-encoded to
     int32 codes immediately after the pyarrow regex split, so grouping and
@@ -300,7 +310,6 @@ def pack_batch(pdf: pd.DataFrame, part_id: int) -> pd.DataFrame | None:
     if isinstance(parent, pa.ChunkedArray):
         parent = parent.combine_chunks()
     codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    vocab = denc.dictionary
     pos = parent.to_numpy(zero_copy_only=False).astype(np.int64)
     nrows = len(pdf)
 
@@ -321,52 +330,82 @@ def pack_batch(pdf: pd.DataFrame, part_id: int) -> pd.DataFrame | None:
 
     # pack order: (term-code, doc_id) — int lexsort over the reduced pairs
     order = np.lexsort((doc_ids, ucode))
-    ucode, doc_ids, tf, dl = ucode[order], doc_ids[order], tf[order], dl[order]
-    new_term = np.ones(ucode.size, dtype=bool)
-    new_term[1:] = ucode[1:] != ucode[:-1]
-    starts = np.nonzero(new_term)[0]
-    ends = np.append(starts[1:], ucode.size)
+    return (ucode[order], doc_ids[order], tf[order], dl[order],
+            denc.dictionary)
 
-    gaps = np.zeros(ucode.size, dtype=np.uint64)
-    gaps[1:] = (doc_ids[1:] - doc_ids[:-1]).astype(np.uint64)
-    terms = vocab.take(pa.array(ucode[starts], type=pa.int64())) \
-                 .to_pandas().to_numpy()
-    ids_b = _slice_stream(gaps, starts, ends, keep=~new_term)
-    tfs_b = _slice_stream(tf.astype(np.uint64), starts, ends)
-    dls_b = _slice_stream(dl.astype(np.uint64), starts, ends)
+
+def _encode_packs(code: np.ndarray, doc_id: np.ndarray, tf: np.ndarray,
+                  dl: np.ndarray, vocab, part_id: int) -> pd.DataFrame:
+    """The pack encoder: postings sorted by (term code, doc_id) → one pack
+    row per code, its term ``vocab[code]`` (a pyarrow array). A pack of
+    ``c`` postings holds ``3c - 1`` varints — its ``c - 1`` doc-id gaps,
+    ``c`` tfs, ``c`` dls — laid out in ONE stream for all packs and sliced
+    once per pack."""
+    new_term = np.ones(code.size, dtype=bool)
+    new_term[1:] = code[1:] != code[:-1]
+    starts = np.nonzero(new_term)[0]
+    c = np.diff(np.append(starts, code.size))
+    p0 = np.cumsum(3 * c - 1) - (3 * c - 1)       # a pack's first value
+    at = np.arange(code.size) - np.repeat(starts - p0, c)
+    cc = np.repeat(c, c)
+    vals = np.empty(3 * code.size - starts.size, dtype=np.uint64)
+    vals[at[1:][~new_term[1:]] - 1] = np.diff(doc_id)[~new_term[1:]]
+    vals[at + cc - 1] = tf
+    vals[at + 2 * cc - 1] = dl
+    nb = varint_sizes(vals)
+    stream = varint_encode(vals, nb)
+    cum = np.concatenate(([0], np.cumsum(nb)))
+    first, tf0, dl0 = cum[p0], cum[p0 + c - 1], cum[p0 + 2 * c - 1]
     return pd.DataFrame({
-        "term": terms,
+        "term": vocab.take(pa.array(code[starts], type=pa.int64()))
+                     .to_pandas().to_numpy(),
         "part_id": np.full(starts.size, part_id, dtype=np.int32),
-        "doc_count": (ends - starts).astype(np.int32),
+        "doc_count": c.astype(np.int32),
         "sum_tf": np.add.reduceat(tf, starts).astype(np.int64),
         "max_tf": np.maximum.reduceat(tf, starts).astype(np.int32),
-        "doc_id_first": doc_ids[starts],
-        "ids_len": np.fromiter((len(x) for x in ids_b), np.int32,
-                               len(ids_b)),
-        "tfs_len": np.fromiter((len(x) for x in tfs_b), np.int32,
-                               len(tfs_b)),
-        "payload": [b"".join(t) for t in zip(ids_b, tfs_b, dls_b)],
+        "doc_id_first": doc_id[starts],
+        "ids_len": (tf0 - first).astype(np.int32),
+        "tfs_len": (dl0 - tf0).astype(np.int32),
+        "payload": [stream[a:b] for a, b in zip(
+            first.tolist(), cum[p0 + 3 * c - 1].tolist())],
     })
 
 
-def build_packs(docs: DataFrame, cfg: IndexConfig, *,
-                id_col: str = "doc_id",
-                content_col: str = "content") -> DataFrame:
-    """docs → one pack row per (term, arrow batch): sorted doc ids +
-    tfs + dls, varint-encoded, with per-pack metadata.
+def _live_packs(blocks: pa.Table, dead: np.ndarray, part_id: int):
+    """The merge's S1 kernel: an index's posting blocks → the pack table
+    of their postings whose ids are not in ``dead``, one pack per (term,
+    salt) (a salt's blocks hold one sorted id list), through the build's
+    pack encoder."""
+    blocks = blocks.sort_by([("term", "ascending"), ("salt", "ascending"),
+                             ("doc_id_first", "ascending")])
+    counts = blocks.column("doc_count").to_numpy().astype(np.int64)
+    doc_id, tf, dl = decode_blocks(
+        blocks.column("doc_id_first").to_numpy(), counts,
+        blocks.column("deltas"), blocks.column("tfs"), blocks.column("dls"))
+    term = blocks.column("term").to_numpy()
+    salt = blocks.column("salt").to_numpy()
+    new = np.ones(term.size, dtype=bool)
+    new[1:] = (term[1:] != term[:-1]) | (salt[1:] != salt[:-1])
+    code = np.repeat(np.cumsum(new) - 1, counts)
+    live = ~np.isin(doc_id, dead)
+    if not live.any():
+        return _arrow(None, PACKED_SCHEMA)
+    return _arrow(_encode_packs(code[live], doc_id[live], tf[live], dl[live],
+                                pa.array(term[new]), part_id), PACKED_SCHEMA)
+
+
+def build_packs(src: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """(doc_id, content) rows → one pack row per (term, flushed batch):
+    sorted doc ids + tfs + dls, varint-encoded, with per-pack metadata.
 
     Deliberately independent of global stats (avgdl): score-related
     metadata (block_max_tfnorm) is computed at merge time, so packing is
     the FIRST stage — one pass over content, no prior scan needed."""
-    src = docs.select(F.col(id_col).cast("long").alias("doc_id"),
-                      F.col(content_col).alias("content"))
     flush_docs = cfg.pack_flush_docs
 
     def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pa.set_cpu_count(1)
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx else -1
+        part_id = _task_partition()
         buf: list[pd.DataFrame] = []
         buffered = 0
 
@@ -394,128 +433,72 @@ def build_packs(docs: DataFrame, cfg: IndexConfig, *,
 
 
 # --------------------------------------------------------------------------
-# S5: term-sharded merge of packs → final blocks
+# S4: term-sharded merge of packs → final blocks
 # --------------------------------------------------------------------------
 
 def _encode_blocks(pdf: pd.DataFrame, k1: float, b: float, avgdl: float,
-                   block_size: int, part_id: int) -> pd.DataFrame:
-    """Encode sorted (term, salt, doc_id, tf, dl) rows into block rows.
-    Fully vectorized (one varint stream per field, sliced per block)."""
-    n = len(pdf)
+                   block_size: int, part_id: int,
+                   postings: tuple | None = None) -> pd.DataFrame:
+    """Pack rows sorted by (term, salt, doc_id_first) → block rows: each
+    (term, salt) group's postings (``postings`` when already decoded by
+    :func:`_pack_postings`) sorted by doc id and cut every ``block_size``.
+    Groups are found on the packs, so no per-posting string is built or
+    compared; one varint stream per field, sliced per block."""
+    counts = pdf["doc_count"].to_numpy(np.int64)
+    ids, tf, dl = _pack_postings(pdf) if postings is None else postings
     term = pdf["term"].to_numpy()
-    salt = pdf["salt"].to_numpy()
-    ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-    tf = pdf["tf"].to_numpy(dtype=np.int64)
-    dl = pdf["dl"].to_numpy(dtype=np.int64)
+    salt = pdf["salt"].to_numpy(np.int32)
+    first = np.ones(term.size, dtype=bool)      # a group's first pack
+    first[1:] = (term[1:] != term[:-1]) | (salt[1:] != salt[:-1])
+    grp = np.repeat(np.cumsum(first) - 1, counts)
+    order = np.lexsort((ids, grp))
+    grp, ids, tf, dl = grp[order], ids[order], tf[order], dl[order]
 
+    n = ids.size
     new_group = np.ones(n, dtype=bool)
-    new_group[1:] = (term[1:] != term[:-1]) | (salt[1:] != salt[:-1])
-    grp = np.cumsum(new_group) - 1
-    grp_starts = np.nonzero(new_group)[0]
-    pos = np.arange(n) - grp_starts[grp]
+    new_group[1:] = grp[1:] != grp[:-1]
+    pos = np.arange(n) - np.nonzero(new_group)[0][grp]
     new_block = pos % block_size == 0
     blk_starts = np.nonzero(new_block)[0]
     blk_ends = np.append(blk_starts[1:], n)
-
+    blk_grp = grp[blk_starts]
     tfnorm = _tfnorm(tf.astype(np.float64), dl.astype(np.float64),
                      k1, b, avgdl)
-    blk_grp = grp[blk_starts]
-    ng = np.ones(blk_starts.size, dtype=bool)
-    ng[1:] = blk_grp[1:] != blk_grp[:-1]
-    first_blk = np.maximum.accumulate(
-        np.where(ng, np.arange(blk_starts.size), 0))
-
-    gaps = np.zeros(n, dtype=np.uint64)
-    gaps[1:] = (ids[1:] - ids[:-1]).astype(np.uint64)
+    # a block's gaps: every posting's but its first
+    gaps = np.diff(ids)[~new_block[1:]]
+    k = np.arange(blk_starts.size)
     return pd.DataFrame({
-        "term": term[blk_starts],
-        "salt": salt[blk_starts].astype("int32"),
-        "block_id": (np.arange(blk_starts.size) - first_blk).astype("int32"),
+        "term": term[first][blk_grp],
+        "salt": salt[first][blk_grp],
+        "block_id": (pos[blk_starts] // block_size).astype(np.int32),
         "doc_id_first": ids[blk_starts],
         "doc_id_last": ids[blk_ends - 1],
         "doc_count": (blk_ends - blk_starts).astype("int32"),
         "max_tf": np.maximum.reduceat(tf, blk_starts).astype("int32"),
         "block_max_tfnorm": np.maximum.reduceat(tfnorm, blk_starts),
-        "deltas": _slice_stream(gaps, blk_starts, blk_ends, keep=~new_block),
+        "deltas": _slice_stream(gaps, blk_starts - k, blk_ends - k - 1),
         "tfs": _slice_stream(tf.astype(np.uint64), blk_starts, blk_ends),
         "dls": _slice_stream(dl.astype(np.uint64), blk_starts, blk_ends),
         "part_id": np.full(blk_starts.size, part_id, dtype=np.int32),
     })
 
 
-def _split_payload(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pack rows with one ``payload`` cell → the ids/tfs/dls views the
-    decoder consumes. memoryview slices — no copies until the decoder's
-    single join."""
-    mv = [memoryview(p) for p in pdf["payload"]]
-    il = pdf["ids_len"].to_numpy()
-    tl = pdf["tfs_len"].to_numpy()
-    return pdf.assign(
-        ids=[m[:int(a)] for m, a in zip(mv, il)],
-        tfs=[m[int(a):int(a) + int(b)] for m, a, b in zip(mv, il, tl)],
-        dls=[m[int(a) + int(b):] for m, a, b in zip(mv, il, tl)])
-
-
-def _decode_packs(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pack rows → (term, salt, doc_id, tf, dl) rows, sorted
-    (term, salt, doc_id); the packs decode together in
-    :func:`~harvester_spark.operators.codec.decode_blocks`."""
-    counts = pdf["doc_count"].to_numpy(np.int64)
-    doc_id, tf, dl = decode_blocks(pdf["doc_id_first"], counts, pdf["ids"],
-                                   pdf["tfs"], pdf["dls"])
-
-    # rows arrive sorted by (term, salt, doc_id_first) → pack index order
-    # is already the (term, salt) order; encode terms as codes for lexsort
-    term_vals = pdf["term"].to_numpy()
-    new_key = np.ones(len(pdf), dtype=bool)
-    if len(pdf) > 1:
-        salt_vals = pdf["salt"].to_numpy()
-        new_key[1:] = ((term_vals[1:] != term_vals[:-1])
-                       | (salt_vals[1:] != salt_vals[:-1]))
-    key_code = np.cumsum(new_key) - 1
-    row_key = np.repeat(key_code, counts)
-    order = np.lexsort((doc_id, row_key))
-
-    return pd.DataFrame({
-        "term": np.repeat(term_vals, counts)[order],
-        "salt": np.repeat(pdf["salt"].to_numpy(np.int32), counts)[order],
-        "doc_id": doc_id[order],
-        "tf": tf[order],
-        "dl": dl[order],
-    })
-
-
-def _carry_merge(arranged: DataFrame, prep, k1: float, b: float,
-                 avgdl: float, block_size: int) -> DataFrame:
-    """Stream (term, salt)-sorted batches into block rows, carrying the
-    trailing group across Arrow-batch boundaries so a group is always
-    encoded whole. (Grouped-map applyInPandas would materialize one pandas
-    frame per group — collapses under millions of single-pack terms.)
-    ``prep`` maps a batch slice to sorted (term, salt, doc_id, tf, dl)."""
-
-    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx else -1
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last_t = pdf["term"].iloc[-1]
-            last_s = pdf["salt"].iloc[-1]
-            tail = (pdf["term"] == last_t) & (pdf["salt"] == last_s)
-            carry = pdf[tail]
-            body = pdf[~tail]
-            if len(body):
-                yield _encode_blocks(prep(body), k1, b, avgdl,
-                                     block_size, part_id)
-        if carry is not None and len(carry):
-            yield _encode_blocks(prep(carry.reset_index(drop=True)),
-                                 k1, b, avgdl, block_size, part_id)
-
-    return arranged.mapInPandas(merge, schema=POSTINGS_SCHEMA)
+def _pack_postings(pdf: pd.DataFrame):
+    """Pack rows → ``(doc_id, tf, dl)`` per posting, in pack order: every
+    payload decodes as ONE varint stream, split by the layout
+    :func:`_encode_packs` writes (no per-pack loop)."""
+    c = pdf["doc_count"].to_numpy(np.int64)
+    firsts = pdf["doc_id_first"].to_numpy(np.int64)
+    vals = varint_decode(b"".join(pdf["payload"])).astype(np.int64)
+    starts = np.cumsum(c) - c
+    at = np.arange(int(c.sum())) - np.repeat(starts - (np.cumsum(3 * c - 1)
+                                                       - (3 * c - 1)), c)
+    cc = np.repeat(c, c)
+    ids = vals[np.maximum(at - 1, 0)]    # a posting's gap precedes its slot
+    ids[starts] = firsts
+    cum = np.cumsum(ids)
+    return (cum - np.repeat(cum[starts] - firsts, c), vals[at + cc - 1],
+            vals[at + 2 * cc - 1])
 
 
 def merge_packs(packs: DataFrame, hot_salts: dict[str, int], avgdl: float,
@@ -546,155 +529,60 @@ def merge_packs(packs: DataFrame, hot_salts: dict[str, int], avgdl: float,
         spark.conf.get("spark.sql.shuffle.partitions"))
     arranged = (salted.repartition(num_parts, "term", "salt")
                 .sortWithinPartitions("term", "salt", "doc_id_first"))
-    return _carry_merge(arranged,
-                        lambda body: _decode_packs(_split_payload(body)),
-                        cfg.k1, cfg.b, avgdl, cfg.block_size)
 
-
-ROWS_SCHEMA = ("term string, salt int, doc_id long, tf long, dl long")
-
-
-def decode_postings(postings: DataFrame) -> DataFrame:
-    """Posting blocks → raw (term, salt, doc_id, tf, dl) rows, fully
-    vectorized (shared varint machinery with the pack decoder). The
-    building block for segment merges: an index can be re-built from its
-    own postings without touching document content."""
-    sel = postings.select("term", "salt", "doc_count", "doc_id_first",
-                          F.col("deltas").alias("ids"), "tfs", "dls")
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    # Stream the sorted pack batches into block rows, carrying the trailing
+    # (term, salt) group across Arrow-batch boundaries so a group is always
+    # encoded whole. (Grouped-map applyInPandas would materialize one
+    # pandas frame per group — collapses under millions of single-pack
+    # terms.)
+    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        part_id = _task_partition()
+        carry = None
         for pdf in batches:
-            if len(pdf):
-                yield _decode_packs(pdf)
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if not len(pdf):
+                continue
+            tail = ((pdf["term"] == pdf["term"].iloc[-1])
+                    & (pdf["salt"] == pdf["salt"].iloc[-1]))
+            carry = pdf[tail].reset_index(drop=True)
+            if not tail.all():
+                yield _encode_blocks(pdf[~tail], cfg.k1, cfg.b, avgdl,
+                                     cfg.block_size, part_id)
+        if carry is not None:
+            yield _encode_blocks(carry, cfg.k1, cfg.b, avgdl,
+                                 cfg.block_size, part_id)
 
-    return sel.mapInPandas(dec, schema=ROWS_SCHEMA)
-
-
-def rows_to_blocks(rows: DataFrame, avgdl: float,
-                   cfg: IndexConfig) -> DataFrame:
-    """Raw posting rows → final compressed blocks (one (term, salt)
-    shuffle + streaming encode). Salts are preserved, so hot-term spreading
-    carries through segment merges."""
-    spark = rows.sparkSession
-    num_parts = cfg.shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions"))
-    arranged = (rows.repartition(num_parts, "term", "salt")
-                .sortWithinPartitions("term", "salt", "doc_id"))
-    return _carry_merge(arranged, lambda body: body, cfg.k1, cfg.b, avgdl,
-                        cfg.block_size)
+    return arranged.mapInPandas(merge, schema=POSTINGS_SCHEMA)
 
 
-def build_index_from_rows(spark: SparkSession, rows: DataFrame,
-                          index_dir: str | Path, *,
-                          cfg: IndexConfig | None = None,
-                          run_id: str = "merge0",
-                          text_bytes: int | None = None) -> None:
-    """Materialize a full index directory (stats/dictionary/postings/
-    term_ub/dictseg/lineage, same layout as :func:`build_index`) from raw
-    posting rows — the distributed segment merge: no document content
-    needed. :func:`write_rows_index` is its driver placement.
-
-    Stats note: N counts distinct posting-bearing docs; a zero-token doc
-    (unqueryable either way) that was counted by its original segment's
-    build drops out of the merged stats. ``text_bytes`` (the inputs' sum,
-    an upper bound) is recorded when given."""
-    cfg = cfg or IndexConfig()
-    index_dir = Path(index_dir)
-    index_dir.mkdir(parents=True, exist_ok=True)
-
-    rows = rows.persist()
-    stats = rows.agg(
-        F.count_distinct("doc_id").alias("n"),
-        F.sum("tf").alias("total")).collect()[0]
-    n_docs = int(stats["n"] or 0)
-    avgdl = _write_stats(index_dir / "stats", n_docs,
-                         int(stats["total"] or 0), text_bytes, cfg)
-
-    dic = (rows.groupBy("term")
-           .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-           .withColumn("idf", F.log(
-               F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5)
-               / (F.col("df") + 0.5))))
-    tables.write_table(dic, index_dir / "dictionary", sort_cols=["term"])
-
-    tables.write_table(rows_to_blocks(rows, avgdl, cfg),
-                       index_dir / "postings", sort_cols=["term"],
-                       meta=_merged_meta(avgdl, n_docs, cfg))
-    rows.unpersist()
-
-    # no resume here: the caller builds into a fresh directory
-    write_index_tail(spark, index_dir, run_id,
-                     lambda name, fn: fn(index_dir / name))
+def _stats(stage, report: "BuildReport", cfg: IndexConfig, counts):
+    """S2: commit the ``stats`` stage (a meta-only table) from
+    ``counts()`` = (N, total tokens, text bytes), unless committed; returns
+    the committed (N, avgdl). ``text_bytes`` is the content size the driver
+    budget compares against when deltas merge (absent when unknown)."""
+    def s2(out: Path) -> None:
+        n_docs, total, text_bytes = counts()
+        meta = {"N": int(n_docs), "avgdl": float(total) / n_docs if n_docs
+                else 0.0, "total_tokens": int(total)}
+        if text_bytes is not None:
+            meta["text_bytes"] = int(text_bytes)
+        out.mkdir(parents=True, exist_ok=True)
+        (out / "_table_meta.json").write_text(json.dumps(
+            {**meta, "k1": cfg.k1, "b": cfg.b}))
+        (out / tables.SUCCESS_MARKER).touch()
+    meta = tables.read_meta(stage("stats", s2))
+    report.n_docs, report.avgdl = meta["N"], meta["avgdl"]
+    return meta["N"], meta["avgdl"]
 
 
-def write_rows_index(spark: SparkSession, rows: pd.DataFrame,
-                     index_dir: str | Path, *,
-                     cfg: IndexConfig | None = None, run_id: str = "merge0",
-                     text_bytes: int | None = None) -> None:
-    """:func:`build_index_from_rows` on the driver: ``rows`` is a pandas
-    frame of (term, salt, doc_id, tf, dl) sorted by (term, salt, doc_id),
-    and every stage is written with pyarrow through the same encoder and
-    the same stage layout. Salts are kept."""
-    cfg = cfg or IndexConfig()
-    index_dir = Path(index_dir)
-    index_dir.mkdir(parents=True, exist_ok=True)
-    ids = rows["doc_id"].to_numpy(np.int64)
-    tf = rows["tf"].to_numpy(np.int64)
-    n_docs = int(np.unique(ids).size)
-    avgdl = _write_stats(index_dir / "stats", n_docs, int(tf.sum()),
-                         text_bytes, cfg)
-    tables.write_arrow(
-        _dictionary_table(rows["term"].to_numpy(), np.ones(tf.size, np.int64),
-                          tf, n_docs),
-        index_dir / "dictionary")
-    tables.write_arrow(_postings_table(rows, avgdl, cfg),
-                       index_dir / "postings",
-                       meta=_merged_meta(avgdl, n_docs, cfg))
-    write_index_tail(spark, index_dir, run_id,
-                     lambda name, fn: fn(index_dir / name))
-
-
-def _merged_meta(avgdl: float, n_docs: int, cfg: IndexConfig) -> dict:
+def _postings_meta(n_docs: int, avgdl: float, cfg: IndexConfig,
+                   hot_terms: int, shard_groups: int) -> dict:
     return {"avgdl": avgdl, "N": n_docs, "k1": cfg.k1, "b": cfg.b,
-            "block_size": cfg.block_size, "merged": True}
-
-
-def _write_stats(out: Path, n_docs: int, total: int, text_bytes: int | None,
-                 cfg: IndexConfig) -> float:
-    """Commit the ``stats`` stage (a meta-only table); returns avgdl.
-    ``text_bytes`` is the content size the driver budget compares against
-    when deltas merge (absent when unknown)."""
-    avgdl = (float(total) / n_docs) if n_docs else 0.0
-    meta = {"N": int(n_docs), "avgdl": avgdl, "total_tokens": int(total)}
-    if text_bytes is not None:
-        meta["text_bytes"] = int(text_bytes)
-    out.mkdir(parents=True, exist_ok=True)
-    (out / "_table_meta.json").write_text(json.dumps(
-        {**meta, "k1": cfg.k1, "b": cfg.b}))
-    (out / tables.SUCCESS_MARKER).touch()
-    return avgdl
-
-
-def _dictionary_table(terms: np.ndarray, doc_counts: np.ndarray,
-                      sum_tfs: np.ndarray, n_docs: int):
-    """The ``dictionary`` stage from term-sorted rows of per-term partial
-    counts (packs, or one row per posting): df = Σ doc_count, cf = Σ sum_tf
-    per term, idf by the fdlibm port (bit-equal to the Spark stage)."""
-    new = np.ones(terms.size, dtype=bool)
-    new[1:] = terms[1:] != terms[:-1]
-    starts = np.nonzero(new)[0]
-    df = np.add.reduceat(doc_counts, starts)
-    return _arrow(pd.DataFrame({
-        "term": terms[starts], "df": df,
-        "cf": np.add.reduceat(sum_tfs, starts), "idf": idf(df, n_docs)}),
-        DICTIONARY_SCHEMA)
-
-
-def _postings_table(rows: pd.DataFrame, avgdl: float, cfg: IndexConfig):
-    """(term, salt, doc_id)-sorted posting rows → the ``postings`` stage as
-    one pyarrow table (part_id 0)."""
-    return _arrow(_encode_blocks(rows, cfg.k1, cfg.b, avgdl, cfg.block_size,
-                                 0) if len(rows) else None, POSTINGS_SCHEMA)
+            "block_size": cfg.block_size,
+            "salt_df_threshold": cfg.salt_df_threshold,
+            "salt_range_docs": cfg.salt_range_docs, "hot_terms": hot_terms,
+            "shard_groups": shard_groups}
 
 
 def write_index_tail(spark: SparkSession, index_dir: Path, run_id: str,
@@ -844,10 +732,11 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str | Path, *,
     if small is not None:
         return _build_collected(spark, small, index_dir, cfg=cfg,
                                 run_id=run_id, force=force)
+    cfg = cfg or IndexConfig()
     return _run_stages(
         spark, index_dir, cfg, run_id, force, {"side": "distributed", **probed},
-        functools.partial(_distributed_stages, spark, docs, id_col=id_col,
-                          content_col=content_col, force=force))
+        functools.partial(_distributed_stages, spark,
+                          *_doc_packs(spark, docs, cfg, id_col, content_col)))
 
 
 def _build_collected(spark: SparkSession, tbl, index_dir: str | Path, *,
@@ -858,11 +747,64 @@ def _build_collected(spark: SparkSession, tbl, index_dir: str | Path, *,
     placement holds what the probe would have seen."""
     import pyarrow.compute as pc
 
-    text_bytes = pc.sum(pc.binary_length(tbl.column("content"))).as_py()
+    text_bytes = pc.sum(pc.binary_length(tbl.column("content"))).as_py() or 0
+
     return _run_stages(
         spark, index_dir, cfg, run_id, force,
-        {"side": "driver", "docs": tbl.num_rows, "text_bytes": text_bytes or 0},
-        functools.partial(_driver_stages, tbl))
+        {"side": "driver", "docs": tbl.num_rows, "text_bytes": text_bytes},
+        functools.partial(_driver_stages, lambda: _arrow(
+            pack_batch(tbl.to_pandas(), 0) if tbl.num_rows else None,
+            PACKED_SCHEMA), lambda _: (tbl.num_rows, text_bytes)))
+
+
+_BLOCK_COLS = ["term", "salt", "doc_id_first", "doc_count", "deltas", "tfs",
+               "dls"]
+
+
+def merge_stages(spark: SparkSession, inputs: list[tuple[Path, np.ndarray]],
+                 side: str, cfg: IndexConfig, text_bytes: int | None):
+    """S1-S4 of a segment merge for :func:`_run_stages`: a build whose S1
+    source is the live postings of other index dirs instead of document
+    content. ``inputs`` holds ``(postings dir, dead doc ids)`` pairs; S1
+    packs each dir's live postings with :func:`_live_packs`, and from S2 on
+    ``side`` ("driver" or "distributed") runs the build's own stages.
+
+    S2 counts N as the distinct live docs that have postings (a zero-token
+    doc drops out), total tokens as Σ ``sum_tf`` and records ``text_bytes``
+    (the inputs' sum) as given."""
+    if side == "driver":
+        def packs():
+            return pa.concat_tables([
+                _live_packs(tables.read_arrow(path, _BLOCK_COLS), dead, 0)
+                for path, dead in inputs])
+
+        return functools.partial(_driver_stages, packs, lambda postings: (
+            np.unique(postings()[0]).size, text_bytes))
+
+    def live_packs(dead, batches):
+        part_id = _task_partition()
+        for batch in batches:
+            yield from _live_packs(pa.Table.from_batches([batch]), dead,
+                                   part_id).to_batches()
+
+    def write_packs(out: Path) -> None:
+        frames = [tables.read_table(spark, path).select(*_BLOCK_COLS)
+                  .mapInArrow(functools.partial(live_packs, dead),
+                              PACKED_SCHEMA) for path, dead in inputs]
+        tables.write_table(functools.reduce(DataFrame.unionByName, frames),
+                           out, compression=cfg.pack_compression)
+
+    def postings(batches):
+        for pdf in batches:
+            doc_id, tf, _ = _pack_postings(pdf)
+            yield pd.DataFrame({"doc_id": doc_id, "tf": tf})
+
+    def counts(packs: DataFrame):
+        n, total = (packs.mapInPandas(postings, "doc_id long, tf long")
+                    .agg(F.count_distinct("doc_id"), F.sum("tf")).first())
+        return n, total or 0, text_bytes
+
+    return functools.partial(_distributed_stages, spark, write_packs, counts)
 
 
 def _run_stages(spark: SparkSession, index_dir: str | Path,
@@ -906,67 +848,69 @@ def _run_stages(spark: SparkSession, index_dir: str | Path,
     return report
 
 
-def _driver_stages(tbl, index_dir: Path, cfg: IndexConfig, stage,
-                   report: BuildReport) -> None:
-    """S1-S4 on the driver over the collected ``(doc_id, content)`` table:
-    the same kernels the distributed stages wrap (``pack_batch`` →
-    ``_decode_packs`` → ``_encode_blocks``), run once over the whole input
-    as one pack set (part_id 0), and written with pyarrow. No salting: it
-    only spreads merge work across tasks, and there is one."""
+_PACK_ORDER = [("term", "ascending"), ("doc_id_first", "ascending")]
+
+
+def _driver_stages(make_packs, counts, index_dir: Path, cfg: IndexConfig,
+                   stage, report: BuildReport) -> None:
+    """S1-S4 on the driver: ``make_packs()`` gives S1's pack table (one
+    pack set, part_id 0) and ``counts(postings)`` S2's (N, text bytes),
+    where ``postings()`` decodes the packs (:func:`_pack_postings`, run at
+    most once); the kernel the distributed merge wraps (``_encode_blocks``)
+    runs once over the whole input, and every stage is written with
+    pyarrow. No salting: it only spreads merge work
+    across tasks, and there is one."""
     import pyarrow.compute as pc
 
     held = {}
 
     def s1(out: Path) -> None:
-        pk = _arrow(pack_batch(tbl.to_pandas(), 0) if tbl.num_rows else None,
-                    PACKED_SCHEMA)
-        held["packs"] = pk.sort_by([("term", "ascending"),
-                                    ("doc_id_first", "ascending")])
+        held["packs"] = make_packs().sort_by(_PACK_ORDER)
         tables.write_arrow(held["packs"], out)
     stage("packed", s1)
     # a resumed build reads back the committed packs, which may hold several
     # packs per term (a distributed S1): every consumer below folds them
     packs = held.get("packs")
     if packs is None:
-        packs = tables.read_arrow(index_dir / "packed").sort_by(
-            [("term", "ascending"), ("doc_id_first", "ascending")])
+        packs = tables.read_arrow(index_dir / "packed").sort_by(_PACK_ORDER)
 
-    def s2(out: Path) -> None:
-        text_bytes = pc.sum(pc.binary_length(tbl.column("content"))).as_py()
-        _write_stats(out, tbl.num_rows,
-                     pc.sum(packs.column("sum_tf")).as_py() or 0,
-                     text_bytes or 0, cfg)
-    st_path = stage("stats", s2)
-    stats_meta = tables.read_meta(st_path)
-    n_docs, avgdl = stats_meta["N"], stats_meta["avgdl"]
-    report.n_docs, report.avgdl = n_docs, avgdl
+    pk = functools.cache(lambda: packs.to_pandas().assign(salt=np.int32(0)))
+    postings = functools.cache(lambda: _pack_postings(pk()))
 
+    def s2():
+        n_docs, text_bytes = counts(postings)
+        return n_docs, pc.sum(packs.column("sum_tf")).as_py() or 0, text_bytes
+    n_docs, avgdl = _stats(stage, report, cfg, s2)
+
+    # S3 — df = Σ doc_count, cf = Σ sum_tf per term of the term-sorted
+    # packs; idf by the fdlibm port, bit-equal to the Spark stage
     def s3(out: Path) -> None:
-        tables.write_arrow(_dictionary_table(
-            packs.column("term").to_numpy(zero_copy_only=False),
-            packs.column("doc_count").to_numpy().astype(np.int64),
-            packs.column("sum_tf").to_numpy(), n_docs), out)
+        terms = packs.column("term").to_numpy(zero_copy_only=False)
+        new = np.ones(terms.size, dtype=bool)
+        new[1:] = terms[1:] != terms[:-1]
+        starts = np.flatnonzero(new)
+        df = np.add.reduceat(packs.column("doc_count").to_numpy()
+                             .astype(np.int64), starts)
+        tables.write_arrow(_arrow(pd.DataFrame({
+            "term": terms[starts], "df": df,
+            "cf": np.add.reduceat(packs.column("sum_tf").to_numpy(), starts),
+            "idf": idf(df, n_docs)}), DICTIONARY_SCHEMA), out)
     stage("dictionary", s3)
 
     def s4(out: Path) -> None:
-        pk = packs.to_pandas().assign(salt=np.int32(0))
-        rows = _decode_packs(_split_payload(pk)) if len(pk) else pk
-        tables.write_arrow(_postings_table(rows, avgdl, cfg), out, meta={
-            "avgdl": avgdl, "N": n_docs, "k1": cfg.k1, "b": cfg.b,
-            "block_size": cfg.block_size,
-            "salt_df_threshold": cfg.salt_df_threshold,
-            "salt_range_docs": cfg.salt_range_docs, "hot_terms": 0,
-            "shard_groups": 1})
+        blocks = (_encode_blocks(pk(), cfg.k1, cfg.b, avgdl, cfg.block_size,
+                                 0, postings()) if packs.num_rows else None)
+        tables.write_arrow(_arrow(blocks, POSTINGS_SCHEMA), out,
+                           meta=_postings_meta(n_docs, avgdl, cfg, 0, 1))
     stage("postings", s4)
 
 
-def _distributed_stages(spark: SparkSession, docs: DataFrame,
-                        index_dir: Path, cfg: IndexConfig, stage,
-                        report: BuildReport, *, id_col: str,
-                        content_col: str, force: bool) -> None:
-    """S1-S4 as Spark jobs: map-side packing, a pack shuffle by
-    (term, salt) and a streaming merge — the only placement a corpus above
-    the driver budget can take."""
+def _doc_packs(spark: SparkSession, docs: DataFrame, cfg: IndexConfig,
+               id_col: str, content_col: str):
+    """S1 and S2 of a distributed build from documents:
+    ``write_packs(out)`` packs them map-side in one pass over the content
+    (the resumable bulk checkpoint), and ``counts(packs)`` gives S2's
+    (N, total tokens, text bytes)."""
     src = docs.select(F.col(id_col).cast("long").alias("doc_id"),
                       F.col(content_col).alias("content"))
     # Input parallelism guard: a source packed into few files would
@@ -978,42 +922,44 @@ def _distributed_stages(spark: SparkSession, docs: DataFrame,
         src = src.repartition(n_input, "doc_id")
     text_bytes = F.sum(F.coalesce(F.octet_length("content"), F.lit(0)))
 
-    # S1 — packed postings (map-side; one pass over content; the resumable
-    # bulk checkpoint). The SAME write job carries observe() metrics — N
-    # (count of source rows, zero-token docs included), text bytes and
-    # total tokens (Σ pack.sum_tf) — so S2 needs NO jobs of its own on a
-    # fresh build.
+    # The S1 write job carries observe() metrics — N (count of source rows,
+    # zero-token docs included), text bytes and total tokens (Σ
+    # pack.sum_tf) — so S2 needs NO jobs of its own on a fresh build.
     from pyspark.sql import Observation
     src_obs = Observation()
     pk_obs = Observation()
+    wrote = []
 
-    def s1(out: Path) -> None:
+    def write_packs(out: Path) -> None:
         observed = src.observe(src_obs, F.count(F.lit(1)).alias("n_docs"),
                                text_bytes.alias("text_bytes"))
-        pk = build_packs(observed, cfg, content_col="content")
+        pk = build_packs(observed, cfg)
         pk = pk.observe(pk_obs, F.sum("sum_tf").alias("total_tokens"))
         tables.write_table(pk, out, compression=cfg.pack_compression)
+        wrote.append(out)
 
-    packed_was_committed = tables.is_committed(index_dir / "packed")
-    pk_path = stage("packed", s1)
+    def counts(packs: DataFrame):
+        if wrote:
+            return (src_obs.get["n_docs"], pk_obs.get["total_tokens"] or 0,
+                    src_obs.get["text_bytes"] or 0)
+        # resumed build (S1 skipped → observations never fire): two tiny jobs
+        n, nb = src.agg(F.count(F.lit(1)), text_bytes).collect()[0]
+        return n, packs.agg(F.sum("sum_tf")).collect()[0][0] or 0, nb or 0
+
+    return write_packs, counts
+
+
+def _distributed_stages(spark: SparkSession, write_packs, counts,
+                        index_dir: Path, cfg: IndexConfig, stage,
+                        report: BuildReport) -> None:
+    """S1-S4 as Spark jobs: ``write_packs(out)`` commits S1's packs and
+    ``counts(packs)`` gives S2's (N, total tokens, text bytes); then a pack
+    shuffle by (term, salt) and a streaming merge — the only placement an
+    input above the driver budget can take."""
+    pk_path = stage("packed", write_packs)
     packs = tables.read_table(spark, pk_path)
 
-    # S2 — global stats. Fresh build: free (observed during the S1 write).
-    # Resumed build (S1 skipped → observations never fire): recompute with
-    # two tiny jobs.
-    def s2(out: Path) -> None:
-        s1_ran = force or not packed_was_committed
-        if s1_ran:
-            n, nb = src_obs.get["n_docs"], src_obs.get["text_bytes"]
-            total = pk_obs.get["total_tokens"] or 0
-        else:
-            n, nb = src.agg(F.count(F.lit(1)), text_bytes).collect()[0]
-            total = packs.agg(F.sum("sum_tf")).collect()[0][0] or 0
-        _write_stats(out, n, total, nb or 0, cfg)
-    st_path = stage("stats", s2)
-    stats_meta = tables.read_meta(st_path)
-    n_docs, avgdl = stats_meta["N"], stats_meta["avgdl"]
-    report.n_docs, report.avgdl = n_docs, avgdl
+    n_docs, avgdl = _stats(stage, report, cfg, lambda: counts(packs))
 
     # S3 — dictionary from pack metadata (rows: |terms|×|partitions|, tiny
     # next to postings; partial agg absorbs the skew)
@@ -1036,12 +982,8 @@ def _distributed_stages(spark: SparkSession, docs: DataFrame,
                .select("term", "df").collect())
         hot_salts = {r["term"]: max(2, int(np.ceil(
             r["df"] / cfg.salt_range_docs))) for r in hot}
-        meta = {"avgdl": avgdl, "N": n_docs, "k1": cfg.k1, "b": cfg.b,
-                "block_size": cfg.block_size,
-                "salt_df_threshold": cfg.salt_df_threshold,
-                "salt_range_docs": cfg.salt_range_docs,
-                "hot_terms": len(hot_salts),
-                "shard_groups": cfg.postings_shard_groups}
+        meta = _postings_meta(n_docs, avgdl, cfg, len(hot_salts),
+                              cfg.postings_shard_groups)
         groups = cfg.postings_shard_groups
         if groups <= 1:
             tables.write_table(merge_packs(packs, hot_salts, avgdl, cfg),

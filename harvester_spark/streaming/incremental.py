@@ -38,8 +38,10 @@ pyarrow, and its delta is built on the driver by
 :func:`~harvester_spark.operators.index_build.build_index`'s driver
 placement over the same table. A larger batch writes its tombstones as a
 Spark job that also counts the tallies (``observe``) and builds its delta
-with a normal ``build_index`` call. Delta merges pick their placement the
-same way, from the deltas' recorded ``N`` and ``text_bytes``.
+with a normal ``build_index`` call. :func:`merge_deltas` writes through
+the same build stages, its S1 packing the deltas' live postings instead
+of content, and picks its placement from the deltas' recorded ``N`` and
+``text_bytes``; a crashed merge resumes into the same dir.
 """
 
 from __future__ import annotations
@@ -59,7 +61,8 @@ from harvester_spark.operators import bm25
 from harvester_spark.operators.bm25 import tokenize_query
 from harvester_spark.operators.index_build import (IndexConfig,
                                                    _build_collected,
-                                                   build_index)
+                                                   _run_stages, build_index,
+                                                   merge_stages)
 
 
 def init_root(spark: SparkSession, docs: DataFrame, root: str | Path, *,
@@ -330,17 +333,29 @@ def query_topk_incremental(spark: SparkSession,
 def merge_deltas(spark: SparkSession, root: str | Path, *,
                  cfg: IndexConfig | None = None) -> Path | None:
     """Size-tiered delta merge: fold ALL current delta segments into one,
-    WITHOUT document content (decode postings → drop tombstoned docs →
-    re-encode; Lucene's segment merge, content-free).
+    WITHOUT document content (Lucene's segment merge, content-free). The
+    merge is a build whose S1 source is the deltas' live postings
+    (``index_build.merge_stages``): each delta's blocks are decoded, the
+    ids tombstoned after it dropped, and the rest packed and written
+    through the build's own stages.
 
-    The merged segment's stats are recomputed from its live postings, so
-    querying it is rank-identical to a fresh index built over the same
-    live documents. Commit protocol: the merged index is fully built under
-    a new unique dir first; the single commit point is the atomic
-    ``segments.json`` swap that supersedes the old deltas. A crash before
-    the swap leaves an orphan dir and the old (still correct) segment
-    list; orphans are cleared at :func:`compact`. Old dirs are removed
-    only AFTER the swap (single-writer assumed, like the reference's
+    The merged segment's stats are recomputed from its live postings: N
+    counts the distinct live docs that have postings (a zero-token doc
+    drops out), avgdl their tokens; so querying it is rank-identical to a
+    fresh index built over the same live documents. ``text_bytes`` is the
+    inputs' sum (an upper bound: tombstoned docs still count). The merge
+    runs on the driver when the deltas' recorded ``N`` and ``text_bytes``
+    fit the driver budget (``tables.fits_driver``), distributed otherwise
+    or when a delta lacks ``text_bytes``.
+
+    Commit protocol: the merged dir is named from its input set,
+    ``delta_<last seq>_m<first seq>``, and every stage in it is an atomic
+    commit, so a re-run after a crash resumes at the first stage not
+    committed. The single commit point is the atomic ``segments.json``
+    swap that supersedes the old deltas; a crash before it leaves the old
+    (still correct) segment list. Every other delta dir is removed only
+    AFTER the swap — an orphan of an input set that changed after a crash
+    included (single-writer assumed, like the reference's
     one-worker-per-collection queue, harvester/config.py:16-23).
     Returns the merged dir (None when <2 deltas)."""
     import shutil
@@ -349,89 +364,35 @@ def merge_deltas(spark: SparkSession, root: str | Path, *,
     deltas = _delta_dirs(root)
     if len(deltas) < 2:
         return None
-    gen = len(list(root.glob("delta_*_m*"))) + 1
-    max_seq = max(_seq_of(d) for d in deltas)
-    out = root / f"delta_{max_seq:08d}_m{gen}"
+    seqs = [_seq_of(d) for d in deltas]
+    out = root / f"delta_{max(seqs):08d}_m{min(seqs):08d}"
+    tombs = [(s, _read_tombstones(p)) for p, s in _tombstone_segments(root)]
+    inputs = [(d / "postings", np.concatenate(
+        [ids for s, ids in tombs if s > seq] + [np.empty(0, np.int64)]))
+        for d, seq in zip(deltas, seqs)]
 
-    # the merged segment's text_bytes is the inputs' sum (an upper bound:
-    # tombstoned docs still count); a delta without it — written before
-    # the stats recorded it — sends the merge to the distributed side
+    # a delta without text_bytes — written before the stats recorded it —
+    # sends the merge to the distributed side
     stats = [tables.read_meta(d / "stats") for d in deltas]
     text_bytes = (sum(m["text_bytes"] for m in stats)
                   if all("text_bytes" in m for m in stats) else None)
-    if text_bytes is not None and tables.fits_driver(
-            sum(m["N"] for m in stats), text_bytes):
-        _merge_on_driver(spark, root, deltas, out, cfg=cfg,
-                         run_id=f"merge{gen}", text_bytes=text_bytes)
-    else:
-        _merge_distributed(spark, root, deltas, out, cfg=cfg,
-                           run_id=f"merge{gen}", text_bytes=text_bytes)
+    n_docs = sum(m["N"] for m in stats)
+    side = ("driver" if text_bytes is not None
+            and tables.fits_driver(n_docs, text_bytes) else "distributed")
+    cfg = cfg or IndexConfig()
+    _run_stages(spark, out, cfg, out.name, False,
+                {"side": side, "docs": n_docs, "text_bytes": text_bytes},
+                merge_stages(spark, inputs, side, cfg, text_bytes))
     # commit point: supersede the old deltas in one pointer swap
     _write_segments(root, [out.name])
-    for d in deltas:
-        shutil.rmtree(d, ignore_errors=True)
+    for d in root.glob("delta_*"):
+        if d != out:
+            shutil.rmtree(d, ignore_errors=True)
     return out
 
 
 def _seq_of(delta_dir: Path) -> int:
     return int(delta_dir.name.split("_")[1])
-
-
-def _merge_distributed(spark: SparkSession, root: Path, deltas: list[Path],
-                       out: Path, **kw) -> None:
-    """Decode every delta's postings, anti-join the ids tombstoned after
-    it, and rebuild from the union of rows as Spark jobs."""
-    from harvester_spark.operators.index_build import (build_index_from_rows,
-                                                       decode_postings)
-
-    merged = None
-    for d in deltas:
-        rows = decode_postings(tables.read_table(spark, d / "postings"))
-        segs = [str(p) for p, s in _tombstone_segments(root)
-                if s > _seq_of(d)]
-        if segs:
-            tomb = spark.read.schema("doc_id long").parquet(*segs)
-            rows = rows.join(F.broadcast(tomb), "doc_id", "left_anti")
-        merged = rows if merged is None else merged.unionByName(rows)
-    build_index_from_rows(spark, merged, out, **kw)
-
-
-def _merge_on_driver(spark: SparkSession, root: Path, deltas: list[Path],
-                     out: Path, **kw) -> None:
-    """:func:`_merge_distributed` on the driver: each delta's postings and
-    its later tombstone segments are read with pyarrow, decoded by the
-    build's block decoder, filtered with ``np.isin`` and written by the
-    same encoder (``index_build.write_rows_index``)."""
-    import pandas as pd
-
-    from harvester_spark.operators.index_build import (_decode_packs,
-                                                       write_rows_index)
-
-    by = [("term", "ascending"), ("salt", "ascending")]
-    frames = []
-    for d in deltas:
-        blocks = tables.read_arrow(
-            d / "postings", columns=["term", "salt", "doc_count",
-                                     "doc_id_first", "deltas", "tfs", "dls"])
-        if not blocks.num_rows:
-            continue
-        rows = _decode_packs(
-            blocks.sort_by(by + [("doc_id_first", "ascending")])
-            .rename_columns(["term", "salt", "doc_count", "doc_id_first",
-                             "ids", "tfs", "dls"]).to_pandas())
-        segs = [p for p, s in _tombstone_segments(root) if s > _seq_of(d)]
-        if segs:
-            dead = np.concatenate([_read_tombstones(p) for p in segs])
-            rows = rows[~np.isin(rows["doc_id"].to_numpy(), dead)]
-        if len(rows):  # an all-tombstoned delta has no typed columns left
-            frames.append(pa.Table.from_pandas(rows, preserve_index=False))
-    if frames:
-        rows = (pa.concat_tables(frames)
-                .sort_by(by + [("doc_id", "ascending")]).to_pandas())
-    else:
-        rows = pd.DataFrame({"term": [], "salt": [], "doc_id": [], "tf": [],
-                             "dl": []})
-    write_rows_index(spark, rows, out, **kw)
 
 
 def maybe_compact(spark: SparkSession, root: str | Path, *,

@@ -211,19 +211,21 @@ def test_merge_deltas_rank_identical_to_fresh_build(spark, base_docs, tmp_path,
     """Size-tiered delta merge: N delta segments fold into one WITHOUT
     content; querying the merged segment is rank-identical to a fresh
     index built over the same live docs, and incremental queries stay
-    correct afterward. On both placements; the driver merge leaves
-    pyarrow's thread pool as it was."""
+    correct afterward. On both placements, each build and the merge
+    running only that side's stages; the driver merge leaves pyarrow's
+    thread pool as it was."""
     import pyarrow as pa
 
+    from harvester_spark.operators import index_build
     from harvester_spark.operators.bm25 import query_topk_index
 
-    other = ("_merge_distributed" if build_side == "driver"
-             else "_merge_on_driver")
+    other = ("_distributed_stages" if build_side == "driver"
+             else "_driver_stages")
 
     def wrong_side(*a, **kw):
         raise AssertionError(f"{other} ran on the {build_side} side")
 
-    monkeypatch.setattr(inc, other, wrong_side)
+    monkeypatch.setattr(index_build, other, wrong_side)
     root = tmp_path / "root_merge"
     inc.init_root(spark, base_docs, root, cfg=CFG)
 
@@ -242,7 +244,8 @@ def test_merge_deltas_rank_identical_to_fresh_build(spark, base_docs, tmp_path,
     assert inc.maybe_compact(spark, root, max_deltas=3, cfg=CFG)
     assert pa.cpu_count() == threads
     deltas = inc._delta_dirs(root)
-    assert len(deltas) == 1 and "_m1" in deltas[0].name
+    # named from its input set: last and first input seq
+    assert [d.name for d in deltas] == ["delta_00000003_m00000001"]
 
     # merged segment alone == fresh build over its live docs
     live = spark.createDataFrame(
@@ -294,8 +297,10 @@ def test_merge_placements_write_equal_stages(spark, base_docs, tmp_path,
                                              pin_distributed):
     """The driver merge and the distributed merge of the same deltas write
     equal stages — stats, dictionary (idf bit for bit), term_ub, postings
-    block for block — with tombstoned docs dropped and the salts of a
-    salted delta kept."""
+    block for block — with tombstoned docs dropped, a salted first delta
+    included: the merge salts by its own placement and ``cfg``, as every
+    build does, so neither side keeps the input's salts under a ``cfg``
+    with no hot term."""
     import shutil
 
     from harvester_spark import tables
@@ -332,8 +337,11 @@ def test_merge_placements_write_equal_stages(spark, base_docs, tmp_path,
     _delta_stages_equal(drv, dist)
     # live posting-bearing docs: 55 of the first delta, 302, 301 and 303
     assert tables.read_meta(drv / "stats")["N"] == 58
-    post = tables.read_arrow(drv / "postings").to_pandas()
-    assert post["salt"].max() > 0
+    for merged in (drv, dist):
+        post = tables.read_arrow(merged / "postings").to_pandas()
+        assert post["salt"].max() == 0
+        assert post["doc_count"].sum() == tables.read_arrow(
+            merged / "dictionary").column("df").to_numpy().sum()
 
 
 def test_apply_changes_placements_write_equal_segments(spark, base_docs,
@@ -471,7 +479,8 @@ def test_progress_ticks_stateful(spark, tmp_path):
     assert set(t["key"]) == {"click"}
 
 
-def test_merge_crash_before_pointer_swap_is_harmless(spark, base_docs, tmp_path):
+def test_merge_crash_before_pointer_swap_is_harmless(spark, base_docs, tmp_path,
+                                                    monkeypatch):
     """A merge that dies after building the merged dir but BEFORE the
     segments.json swap leaves queries on the old (correct) segment list;
     re-running the merge succeeds."""
@@ -485,24 +494,84 @@ def test_merge_crash_before_pointer_swap_is_harmless(spark, base_docs, tmp_path)
     before = inc.query_topk_incremental(spark, root, "zz_mc", 10).toPandas()
     assert set(before["doc_id"]) == {2001, 2002}
 
-    # simulate the crash: an orphan merged dir exists, pointer unswapped
-    import shutil
-    from harvester_spark.operators.index_build import (build_index_from_rows,
-                                                       decode_postings)
+    # the crash: the merged dir is fully built, the pointer swap raises
+    def crash(*a):
+        raise RuntimeError("killed before the swap")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(inc, "_write_segments", crash)
+        with pytest.raises(RuntimeError, match="before the swap"):
+            inc.merge_deltas(spark, root, cfg=CFG)
     from harvester_spark import tables
-    d = inc._delta_dirs(root)[0]
-    rows = decode_postings(tables.read_table(spark, d / "postings"))
-    build_index_from_rows(spark, rows, root / "delta_00000002_m9", cfg=CFG)
+    orphan = root / "delta_00000002_m00000001"
+    assert tables.is_committed(orphan / "lineage")
 
     # queries unaffected by the orphan (pointer still lists the old deltas)
     mid = inc.query_topk_incremental(spark, root, "zz_mc", 10).toPandas()
     assert set(mid["doc_id"]) == {2001, 2002}
 
     # re-running the merge commits cleanly and removes the old deltas
-    assert inc.merge_deltas(spark, root, cfg=CFG) is not None
+    assert inc.merge_deltas(spark, root, cfg=CFG) == orphan
     after = inc.query_topk_incremental(spark, root, "zz_mc", 10).toPandas()
     assert set(after["doc_id"]) == {2001, 2002}
     assert len(inc._delta_dirs(root)) == 1
+
+
+@pytest.mark.parametrize("side", ["driver", "distributed"])
+def test_merge_resumes_after_crash_mid_stage(spark, base_docs, tmp_path,
+                                             pin_distributed, monkeypatch,
+                                             side):
+    """A merge killed mid-stage (the dictseg writer raises) leaves its
+    committed stages in the dir named from its input set; re-running
+    ``merge_deltas`` resumes into that dir, leaves those stages untouched,
+    writes the rest, and ends with the stages of an uninterrupted merge.
+    On both placements."""
+    import shutil
+
+    from harvester_spark import tables
+    from harvester_spark.operators import dictseg
+
+    root = tmp_path / "root_rs"
+    inc.init_root(spark, base_docs, root, cfg=CFG)
+    for seq, rows in enumerate([
+            [(600 + i, False, f"zz_rs import w{i % 3}") for i in range(20)],
+            [(601, False, "zz_rs updated"), (2, True, None)],
+            [(605, True, None), (620, False, "zz_rs late def")]], start=1):
+        inc.apply_changes(spark, root, _changes(spark, rows), seq=seq,
+                          cfg=CFG)
+    if side == "distributed":
+        pin_distributed()
+    clean = tmp_path / "root_rs_clean"
+    shutil.copytree(root, clean)
+    want = inc.merge_deltas(spark, clean, cfg=CFG)
+
+    def killed(*a):
+        raise RuntimeError("killed mid-stage")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(dictseg, "write_index_segment", killed)
+        with pytest.raises(RuntimeError, match="mid-stage"):
+            inc.merge_deltas(spark, root, cfg=CFG)
+    out = root / want.name
+    done = ["packed", "stats", "dictionary", "postings", "term_ub"]
+    assert [n for n in done + ["dictseg", "lineage"]
+            if tables.is_committed(out / n)] == done
+
+    def marks():
+        return {n: ((out / n / tables.SUCCESS_MARKER).stat().st_ino,
+                    (out / n / tables.SUCCESS_MARKER).stat().st_mtime_ns)
+                for n in done}
+
+    committed = marks()
+    assert inc.merge_deltas(spark, root, cfg=CFG) == out
+    assert marks() == committed
+    _delta_stages_equal(out, want)
+    assert [d.name for d in inc._delta_dirs(root)] == [out.name]
+    assert sorted(d.name for d in root.glob("delta_*")) == [out.name]
+    for q in ("zz_rs", "import def"):
+        got, exp = (inc.query_topk_incremental(spark, r, q, 10).toPandas()
+                    for r in (root, clean))
+        pd.testing.assert_frame_equal(got, exp, check_exact=True)
 
 
 def test_apply_changes_counters_and_auto_compact(spark, base_docs, tmp_path):
