@@ -133,13 +133,11 @@ PACKED_SCHEMA = StructType([
     StructField("sum_tf", LongType()),
     StructField("max_tf", IntegerType()),
     StructField("doc_id_first", LongType()),
-    # ONE binary cell per pack: varint gap stream (doc_count-1 values) ++
-    # tf stream ++ dl stream; the two split offsets ride as fixed-width
-    # ints. One cell instead of three: rare identifiers make millions of
+    # ONE binary cell per pack: varint gaps (doc_count-1 values) ++ tfs ++
+    # dls; varints delimit themselves, so doc_count alone splits it. One
+    # cell instead of three: rare identifiers make millions of
     # single-posting packs, and per-cell Arrow/Parquet overhead (offsets,
     # page metadata, shuffle framing) was 3× what it needed to be.
-    StructField("ids_len", IntegerType()),
-    StructField("tfs_len", IntegerType()),
     StructField("payload", BinaryType()),
 ])
 
@@ -355,7 +353,6 @@ def _encode_packs(code: np.ndarray, doc_id: np.ndarray, tf: np.ndarray,
     nb = varint_sizes(vals)
     stream = varint_encode(vals, nb)
     cum = np.concatenate(([0], np.cumsum(nb)))
-    first, tf0, dl0 = cum[p0], cum[p0 + c - 1], cum[p0 + 2 * c - 1]
     return pd.DataFrame({
         "term": vocab.take(pa.array(code[starts], type=pa.int64()))
                      .to_pandas().to_numpy(),
@@ -364,10 +361,8 @@ def _encode_packs(code: np.ndarray, doc_id: np.ndarray, tf: np.ndarray,
         "sum_tf": np.add.reduceat(tf, starts).astype(np.int64),
         "max_tf": np.maximum.reduceat(tf, starts).astype(np.int32),
         "doc_id_first": doc_id[starts],
-        "ids_len": (tf0 - first).astype(np.int32),
-        "tfs_len": (dl0 - tf0).astype(np.int32),
         "payload": [stream[a:b] for a, b in zip(
-            first.tolist(), cum[p0 + 3 * c - 1].tolist())],
+            cum[p0].tolist(), cum[p0 + 3 * c - 1].tolist())],
     })
 
 
