@@ -11,7 +11,9 @@ Wire format per block:
   (strictly positive — doc ids are unique and sorted);
 - ``tfs``/``dls``: varint streams of ``doc_count`` tfs / doc lengths.
 
-:func:`decode_blocks` is the one block decoder (build, merges, queries).
+:func:`decode_blocks` is the one posting-block decoder (merges, queries);
+the build's intermediate packs decode their one-stream payload with
+:func:`varint_decode` (``index_build._pack_postings``).
 
 Varint = unsigned LEB128: 7 payload bits per byte, high bit = continuation.
 """
